@@ -292,12 +292,17 @@ def _poly_gen_stats(pdf: pd.DataFrame) -> dict:
     datagen path): computed driver-side from the pandas frame the layer is
     built from — ZERO Spark probe jobs when pip_join later plans a join
     against this layer. `all_rect` replicates planner.all_rectangles
-    (closed 5-point ring, axis-parallel edges, vertices on the bbox);
+    (closed 5-point ring, axis-parallel edges, vertices on the bbox, at
+    most one ring in `ring_lens`);
     `bboxes` lets pip_join count exploded cover cells for ITS resolution
     with pure arithmetic."""
     all_rect = True
-    for xs, ys, mnx, mny, mxx, mxy in zip(pdf["xs"], pdf["ys"], pdf["minx"],
-                                          pdf["miny"], pdf["maxx"], pdf["maxy"]):
+    lens = pdf["ring_lens"] if "ring_lens" in pdf.columns else [None] * len(pdf)
+    for xs, ys, mnx, mny, mxx, mxy, rl in zip(pdf["xs"], pdf["ys"], pdf["minx"],
+                                              pdf["miny"], pdf["maxx"], pdf["maxy"], lens):
+        if rl is not None and len(rl) > 1:  # multi-ring: holes need the ray cast
+            all_rect = False
+            break
         if len(xs) != 5 or xs[0] != xs[4] or ys[0] != ys[4]:
             all_rect = False
             break

@@ -5,8 +5,9 @@ ring blocks, simhash bit sums, cosine folds) out of `F.col("name")`
 references. Construction is pure py4j traffic — hundreds of driver
 round trips, 0.1-0.6 s per query plan — and the resulting Column is
 immutable and binds by NAME at analysis time, so ONE tree serves every
-DataFrame in the process. The cache is keyed on the py4j gateway
-identity so a (theoretical) fresh JVM never sees a stale reference.
+DataFrame in the process. The cache holds a weak reference to the py4j
+gateway it was built against, so a fresh JVM never sees a stale
+reference — even one whose gateway object reuses a dead one's id().
 
 This caches expression OBJECTS, never data or results: every query still
 computes from its inputs; only the driver-side tree construction is
@@ -14,6 +15,8 @@ amortized.
 """
 
 from __future__ import annotations
+
+import weakref
 
 _COL_MEMO: dict = {}
 _COL_MEMO_GW: list = [None]
@@ -26,10 +29,11 @@ def memo_col(key: tuple, build):
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
-    gw = id(sc._gateway) if sc is not None else None
-    if _COL_MEMO_GW[0] != gw:  # fresh JVM/gateway -> drop stale trees
+    gw = sc._gateway if sc is not None else None
+    ref = _COL_MEMO_GW[0]
+    if ref is None or ref() is not gw:  # fresh JVM/gateway -> drop stale trees
         _COL_MEMO.clear()
-        _COL_MEMO_GW[0] = gw
+        _COL_MEMO_GW[0] = weakref.ref(gw) if gw is not None else (lambda: None)
     col = _COL_MEMO.get(key)
     if col is None:
         col = _COL_MEMO[key] = build()

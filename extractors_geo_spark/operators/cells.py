@@ -72,25 +72,43 @@ def cover_bbox(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int)
     Antimeridian: a box given as minx > maxx is treated as wrapping across
     the ±180 meridian and splits into two x-ranges ([x0, n-1] and [0, x1])
     instead of silently stepping a negative sequence."""
+    return F.flatten(F.transform(cover_rows(miny, maxy, res), lambda iy: F.transform(
+        _cover_ixs(minx, maxx, res), lambda ix: _cell_at(iy, ix, res))))
+
+
+def cover_rows(miny: Column, maxy: Column, res: int) -> Column:
+    """The cell rows (iy, north to south) that cover_bbox spans."""
+    # lat decreases as iy increases -> maxy gives the smaller iy
+    return F.sequence(cell_iy(maxy, res), cell_iy(miny, res))
+
+
+def cover_bbox_by_row(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int,
+                      row_values: Column) -> Column:
+    """cover_bbox's cells, each paired with its row's entry of
+    `row_values` (one per cover_rows row, in that order): an array of
+    struct<cell, value> to `inline`. `row_values` is evaluated once per
+    input row, however many cells share each value."""
+    return F.flatten(F.transform(
+        F.arrays_zip(cover_rows(miny, maxy, res).alias("iy"), row_values.alias("value")),
+        lambda r: F.transform(_cover_ixs(minx, maxx, res), lambda ix: F.struct(
+            _cell_at(r["iy"], ix, res).alias("cell"), r["value"].alias("value")))))
+
+
+def _cover_ixs(minx: Column, maxx: Column, res: int) -> Column:
     n = _grid_n(res)
     x0, x1 = cell_ix(minx, res), cell_ix(maxx, res)
-    # lat decreases as iy increases -> maxy gives the smaller iy
-    y0, y1 = cell_iy(maxy, res), cell_iy(miny, res)
     # wrap via a MODULAR index sequence, never a when()-guarded array: a
     # conditional array as a higher-order-function input drops the whole
     # expression out of codegen (measured 12x on the ngram index)
     nx = F.when(x0 <= x1, x1 - x0 + 1).otherwise(F.lit(n) - x0 + x1 + 1).cast("long")
-    xs = F.transform(
+    return F.transform(
         F.sequence(F.lit(0).cast("long"), nx - 1),
         lambda i: F.pmod(x0 + i, F.lit(n).cast("long")),
     )
-    base = F.lit(res).cast("long") * F.lit(RES_SHIFT)
-    return F.flatten(
-        F.transform(
-            F.sequence(y0, y1),
-            lambda iy: F.transform(xs, lambda ix: base + iy * F.lit(Y_SHIFT) + ix),
-        )
-    )
+
+
+def _cell_at(iy: Column, ix: Column, res: int) -> Column:
+    return F.lit(res).cast("long") * F.lit(RES_SHIFT) + iy * F.lit(Y_SHIFT) + ix
 
 
 def cell_children(cell: Column) -> Column:

@@ -7,9 +7,10 @@ records (pycsw.extractor/pycswutils.py:89-109) with a native two-phase plan:
   coarse:  polygons explode to their covering geocell set;
            points encode to their containing cell;
            equi-join on `cell` (hash-partitionable, AQE-skew-splittable)
-  refine:  exact even-odd ray cast, vectorized over the Arrow batch
-           (flat-edge-array trick: all candidate pairs' edges in one numpy
-           kernel — no per-row Python)
+  refine:  exact even-odd ray cast as one Catalyst expression (an
+           aggregate over the edges of the pair's polygon-cell row, kept
+           to those meeting the cell's latitude band) — no Python stage,
+           so the candidate pairs' vertex arrays never cross to a worker
 
 Physical strategy is chosen by plans.planner.choose_pip_strategy:
   * broadcast  — polygon side small (the common dims-vs-facts shape; the
@@ -22,13 +23,10 @@ Physical strategy is chosen by plans.planner.choose_pip_strategy:
 
 from __future__ import annotations
 
-from typing import Iterator
+import math
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import cells
 
@@ -42,14 +40,9 @@ from ..exprcache import memo_col as _memo_col
 
 def polygon_cells(polygons: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """Explode each polygon to its covering cells (bbox cover — false
-    positives removed by the exact refine)."""
-    cell = _memo_col(
-        ("poly_cells", res),
-        lambda: F.explode(
-            cells.cover_bbox(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res)
-        ),
-    )
-    return polygons.withColumn("cell", cell)
+    positives removed by the exact refine), each with the `edges` the
+    refine counts for points in that cell (see _cells_with_edges)."""
+    return polygons.select("*", _cells_with_edges(res, "ring_lens" in polygons.columns))
 
 
 def tag_point_cells(points: DataFrame, lon: str = "lon", lat: str = "lat", res: int = DEFAULT_RES) -> DataFrame:
@@ -59,69 +52,84 @@ def tag_point_cells(points: DataFrame, lon: str = "lon", lat: str = "lat", res: 
 
 
 def _cover_cells_n(minx: float, miny: float, maxx: float, maxy: float, res: int) -> int:
-    """Exact cardinality of cells.cover_bbox for a non-wrapping bbox —
-    the same clamped floor arithmetic, evaluated driver-side."""
+    """Exact cardinality of cells.cover_bbox — the same clamped floor
+    arithmetic and antimeridian wrap (minx > maxx), evaluated driver-side."""
     n = 1 << res
 
     def _ix(lon):
-        return min(max(int(np.floor((lon + 180.0) / 360.0 * n)), 0), n - 1)
+        return min(max(math.floor((lon + 180.0) / 360.0 * n), 0), n - 1)
 
     def _iy(lat):
-        return min(max(int(np.floor((90.0 - lat) / 180.0 * n)), 0), n - 1)
+        return min(max(math.floor((90.0 - lat) / 180.0 * n), 0), n - 1)
 
-    nx = _ix(maxx) - _ix(minx) + 1
+    x0, x1 = _ix(minx), _ix(maxx)
+    nx = x1 - x0 + 1 if x0 <= x1 else n - x0 + x1 + 1
     ny = _iy(miny) - _iy(maxy) + 1
     return nx * ny
 
 
+def _cells_with_edges(res: int, has_lens: bool) -> Column:
+    """Generator of (cell, edges) rows: each covering cell of the polygon,
+    with the start-vertex indexes of the edges that the ray cast of a
+    point in that cell can count. Computed once per latitude row of the
+    cover (not per cell), on the polygon side, before the join.
+
+    An edge starts at every vertex except its ring's last, so no edge
+    bridges two rings of a multi-ring geometry (multipolygon parts and
+    holes, shapefile convention, carried in `ring_lens`; NULL or empty =
+    one ring) and a ring of < 2 vertices has none. The ray cast counts an
+    edge only when the point's lat lies in [min(y1, y2), max(y1, y2)), so
+    a cell row keeps the edges whose y-range meets its latitude band —
+    judged by the same clamped cells.cell_iy the point side encodes with,
+    so no edge a point can cross is dropped."""
+
+    def build() -> Column:
+        xs, ys = F.col("xs"), F.col("ys")
+        lens = F.array(F.size(xs))
+        if has_lens:
+            rl = F.col("ring_lens").cast("array<int>")
+            lens = F.when(F.size(rl) > 0, rl).otherwise(lens)
+        # per vertex: does an edge start here? O(vertices), with no
+        # per-ring prefix sum
+        has_edge = F.flatten(F.transform(lens, lambda n: F.concat(
+            F.array_repeat(F.lit(True), n - 1), F.array_repeat(F.lit(False), F.least(n, F.lit(1))))))
+        starts = F.transform(has_edge, lambda e, i: F.when(e, i))
+
+        def in_row(i, iy):
+            y1, y2 = ys[i], ys[i + 1]
+            return (i.isNotNull() & (cells.cell_iy(F.greatest(y1, y2), res) <= iy)
+                    & (cells.cell_iy(F.least(y1, y2), res) >= iy))
+
+        per_row = F.transform(cells.cover_rows(F.col("miny"), F.col("maxy"), res),
+                              lambda iy: F.filter(starts, lambda i: in_row(i, iy)))
+        return F.inline(cells.cover_bbox_by_row(
+            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res, per_row)).alias("cell", "edges")
+
+    return _memo_col(("poly_cells_edges", res, has_lens), build)
+
+
 def _raycast_refine(joined: DataFrame, lon: str, lat: str) -> DataFrame:
-    """Exact even-odd ray cast on candidate (point, polygon) pairs.
+    """Exact even-odd ray cast on candidate (point, polygon) pairs, as one
+    Catalyst expression over the `edges` that polygon_cells (or pip_join's
+    polygon side) attached to the pair's cell — the same crossing
+    test as the DuckDB oracle (__spark_entry__._sql_flagship_pip): the
+    point is inside when an odd number of edges satisfy
+    (y1 > lat) <> (y2 > lat) AND lon < (x2 - x1) * (lat - y1) / (y2 - y1) + x1.
+    Even-odd over all rings yields the polygon-with-holes semantics."""
 
-    Vectorized across the whole Arrow batch: ragged (multi-)rings are
-    flattened to one edge array with per-row segment ids; crossings are
-    counted with a single bincount — zero per-row Python.
+    def build() -> Column:
+        xs, ys, px, py = F.col("xs"), F.col("ys"), F.col(lon), F.col(lat)
 
-    Multi-ring geometries (multipolygon parts and holes, shapefile
-    convention) pass `ring_lens`: edges bridging two rings are masked out,
-    and even-odd over all rings yields the standard polygon-with-holes
-    semantics. Single-ring callers omit the column."""
-    has_lens = "ring_lens" in joined.columns
+        def flip(odd, i):
+            x1, y1, x2, y2 = xs[i], ys[i], xs[i + 1], ys[i + 1]
+            # the division stays right of the AND: a horizontal edge's zero
+            # divisor raises under ANSI mode if it is ever evaluated
+            return odd != (((y1 > py) != (y2 > py))
+                           & (px < (x2 - x1) * (py - y1) / (y2 - y1) + x1))
 
-    @F.pandas_udf(T.BooleanType())
-    def inside(px: pd.Series, py: pd.Series, xs: pd.Series, ys: pd.Series,
-               ring_lens: pd.Series) -> pd.Series:
-        n = len(px)
-        if n == 0:
-            return pd.Series([], dtype=bool)
-        lens = np.fromiter((len(v) for v in xs), dtype=np.int64, count=n)
-        flat_x = np.concatenate([np.asarray(v, np.float64) for v in xs])
-        flat_y = np.concatenate([np.asarray(v, np.float64) for v in ys])
-        row = np.repeat(np.arange(n), lens)
-        # an edge starts at every vertex except each ring's last
-        edge_mask = np.ones(flat_x.size, dtype=bool)
-        row_starts = np.cumsum(lens) - lens
-        ring_ends = []
-        for i, rl in enumerate(ring_lens):
-            ends = np.cumsum(np.asarray(rl, np.int64)) if rl is not None and len(rl) else np.array([lens[i]])
-            ring_ends.append(row_starts[i] + ends - 1)
-        edge_mask[np.concatenate(ring_ends)] = False
-        e1 = np.nonzero(edge_mask)[0]
-        e2 = e1 + 1
-        er = row[e1]
-        x1, y1, x2, y2 = flat_x[e1], flat_y[e1], flat_x[e2], flat_y[e2]
-        ppx = px.to_numpy(np.float64)[er]
-        ppy = py.to_numpy(np.float64)[er]
-        cond = (y1 > ppy) != (y2 > ppy)
-        # over="ignore": near-horizontal edges overflow the division but a
-        # huge xin still compares correctly — suppress the log flood
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-            xin = (x2 - x1) * (ppy - y1) / (y2 - y1) + x1
-        crossing = cond & (ppx < xin)
-        counts = np.bincount(er[crossing], minlength=n)
-        return pd.Series(counts % 2 == 1)
+        return F.aggregate(F.col("edges"), F.lit(False), flip)
 
-    lens_col = F.col("ring_lens") if has_lens else F.array(F.size("xs"))
-    return joined.filter(inside(F.col(lon), F.col(lat), F.col("xs"), F.col("ys"), lens_col))
+    return joined.filter(_memo_col(("pip_refine", lon, lat), build))
 
 
 def pip_join(
@@ -142,7 +150,7 @@ def pip_join(
     """Return one row per (point, containing polygon).
 
     broadcast_polys=None lets the planner decide from the polygon count.
-    exact='auto' (default) drops the ray-cast python stage when the layer
+    exact='auto' (default) drops the per-edge ray cast when the layer
     is all axis-aligned rectangles (bbox refine is then already exact) —
     a plan rewrite, not an approximation. Pass True/False to force.
     `salt` (partitioned path only) spreads each hot cell over `salt`
@@ -186,13 +194,12 @@ def pip_join(
     geom_cols = ["xs", "ys", "minx", "miny", "maxx", "maxy"]
     if "ring_lens" in polygons.columns:
         geom_cols.append("ring_lens")
-    pcs_cell = _memo_col(
-        ("poly_cells", res),
-        lambda: F.explode(
-            cells.cover_bbox(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res)
-        ),
-    )
-    pcs = polygons.select(*poly_cols, *geom_cols, pcs_cell.alias("cell"))
+    if exact:
+        pcs_cells = _cells_with_edges(res, "ring_lens" in geom_cols)
+    else:
+        pcs_cells = _memo_col(("poly_cells", res), lambda: F.explode(cells.cover_bbox(
+            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res)).alias("cell"))
+    pcs = polygons.select(*poly_cols, *geom_cols, pcs_cells)
 
     if broadcast_polys is None:
         # poly_cells_hint (expected EXPLODED polygon-cell row count) makes
@@ -216,7 +223,7 @@ def pip_join(
     else:
         joined = pts.join(pcs.hint("shuffle_hash"), "cell")
 
-    # cheap bbox refine first (pure Catalyst, prunes before the UDF)
+    # cheap bbox refine first: prunes pairs before the per-edge ray cast
     joined = joined.filter(
         (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
         & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))

@@ -43,7 +43,7 @@ def should_broadcast(exploded_poly_cells: DataFrame, limit: int = BROADCAST_ROW_
 def all_rectangles(polygons: DataFrame) -> bool:
     """True iff every polygon is an axis-aligned rectangle equal to its
     bbox — then the Catalyst bbox refine is already EXACT and the planner
-    drops the ray-cast python stage from the PIP plan entirely.
+    drops the per-edge ray-cast refine from the PIP plan entirely.
 
     Rectangle test (no bowties): closed 5-point ring, xs/ys take exactly
     the two bbox values, and each edge is axis-parallel (consecutive

@@ -49,13 +49,11 @@ def compute_poly_stats(polygons: DataFrame, res: int = 7) -> dict:
     """Polygon-side planner stats: {'res', 'poly_cells' (exploded
     cover rows at res — the broadcast-decision number), 'all_rect'
     (True -> the bbox refine is exact and the ray-cast stage drops)}."""
-    from ..operators.pip_join import polygon_cells
+    from ..operators import cells
     from . import planner
 
-    geom = ["xs", "ys", "minx", "miny", "maxx", "maxy"]
-    if "ring_lens" in polygons.columns:
-        geom.append("ring_lens")
-    n = polygon_cells(polygons.select(*geom), res).count()
+    n = polygons.select(F.explode(cells.cover_bbox(
+        F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res))).count()
     return {"res": res, "poly_cells": int(n),
             "all_rect": planner.all_rectangles(polygons)}
 

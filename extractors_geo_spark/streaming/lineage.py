@@ -181,8 +181,11 @@ def run_with_lineage(
         # so partitionBy opens T x B files per wave — ~6.4M at 100 TB.
         # Shuffling on (bucket, salt) puts each bucket in at most
         # ceil(P/B) tasks: total files per wave ~= P (the shuffle
-        # parallelism), independent of upstream task count. The shuffle
-        # moves post-transform rows only (no fat source columns re-read).
+        # parallelism), independent of upstream task count. A partial
+        # wave sizes the shuffle to its own buckets: a resume of a few
+        # buckets runs fewer write tasks, still <= files_per_bucket files
+        # per bucket. The shuffle moves post-transform rows only (no fat
+        # source columns re-read).
         # "auto" under AQE-managed deployments is not an int (ADVICE r4 low)
         try:
             p = int(out.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -194,7 +197,7 @@ def run_with_lineage(
                 "_salt",
                 F.pmod(F.xxhash64(F.col(key_col), F.lit(17)), F.lit(files_per_bucket)),
             )
-            .repartition(n_buckets * files_per_bucket, F.col("bucket"), F.col("_salt"))
+            .repartition(len(wave) * files_per_bucket, F.col("bucket"), F.col("_salt"))
             .drop("_salt")
         )
         (

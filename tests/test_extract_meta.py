@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from extractors_geo_spark import datagen, tiff
 from extractors_geo_spark.functions import geo
 from extractors_geo_spark.operators import extract_meta
+from tests.test_tiff import FIX, needs_fixture
 
 
 def test_valid_rows_have_meta(spark, images_small):
@@ -80,11 +81,12 @@ def test_box_ring_columns(spark, images_small):
     assert len(r["ring"]) == 5
 
 
+@needs_fixture
 def test_extract_meta_on_compressed_tiled_fixture(spark):
     """Compressed/tiled re-encodes of the reference fixture flow through the
     full distributed extract_meta operator with golden extent parity
     (reference reads these via gdal.Open, preview.geotiff/geotiffutils.py:49)."""
-    raw = open("/root/reference/preview.geotiff/tests/inundation-500yr.tif", "rb").read()
+    raw = open(FIX, "rb").read()
     px = tiff.read_pixels(raw)
     variants = [
         ("plain", raw),

@@ -175,3 +175,33 @@ def test_manifest_on_subtree_filesystem(tmp_path):
     assert set(got) == {0, 3} and got[0]["rows"] == 10
     m2.unmark(0)
     assert set(m.completed()) == {3}
+
+
+def test_onepass_partial_wave_sizes_shuffle_to_its_buckets(spark, tmp_path):
+    """A resume of 4 of 16 buckets shuffles into 4 * files_per_bucket write
+    tasks (not 16 * files_per_bucket, most of them empty), and writes the
+    same rows as the fresh run."""
+    n_buckets = 16
+    df = spark.range(0, 3000, 1, 2).select(
+        F.col("id").cast("string").alias("key"), (F.col("id") * 3).alias("v"))
+    out = str(tmp_path / "outpw")
+    run_with_lineage(df, "key", out, n_buckets=n_buckets)
+    fresh = sorted(spark.read.parquet(out).collect())
+    m = LineageManifest(os.path.join(out, "_lineage"))
+    for b in range(4):
+        m.unmark(b)
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage-partial-wave", "4-of-16 resume")
+    try:
+        r = run_with_lineage(df, "key", out, n_buckets=n_buckets)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sorted(r["buckets_run"]) == [0, 1, 2, 3] and r["scans"] == 1
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    fpb = max(1, -(-p // n_buckets))
+    tracker = sc.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup("lineage-partial-wave")
+              for s in tracker.getJobInfo(j).stageIds]
+    tasks = [tracker.getStageInfo(s).numTasks for s in stages if tracker.getStageInfo(s)]
+    assert tasks and max(tasks) <= 4 * fpb, tasks
+    assert sorted(spark.read.parquet(out).collect()) == fresh

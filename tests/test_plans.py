@@ -48,10 +48,11 @@ def test_pip_join_broadcasts_and_single_python_stage(spark, images_small, polygo
     j = pip_join.pip_join(meta, polygons)
     s = explain_str(j)
     assert "BroadcastHashJoin" in s
-    # exactly one MapInPandas (decode) + one ArrowEvalPython (ray cast);
-    # formatted explain mentions each node twice (tree + detail section)
+    # exactly one python node, the decode MapInPandas (formatted explain
+    # mentions each node twice: tree + detail section); the ray cast is
+    # a Catalyst filter, not an ArrowEvalPython
     assert s.count("MapInPandas") == 2
-    assert s.count("ArrowEvalPython") == 2
+    assert "ArrowEvalPython" not in s
     # no wide shuffle anywhere in the point-side pipeline
     assert "Exchange hashpartitioning" not in s
     # bytes feed the decode but are projected away before the join
@@ -115,8 +116,8 @@ def test_observe_metrics_flow(spark, images_small):
 
 
 def test_rect_layer_skips_raycast(spark):
-    """exact='auto': an all-rectangle layer drops the python ray-cast
-    stage from the plan (bbox refine is already exact)."""
+    """exact='auto': an all-rectangle layer drops the ray-cast refine
+    from the plan (bbox refine is already exact)."""
     from extractors_geo_spark import datagen
 
     rects = spark.createDataFrame(
@@ -126,8 +127,9 @@ def test_rect_layer_skips_raycast(spark):
     )
     pts = spark.createDataFrame([("p1", 1.0, 1.0), ("p2", 3.0, 3.0)], ["image_id", "lon", "lat"])
     j = pip_join.pip_join(pts, rects, poly_cols=("poly_id",))
-    s = explain_str(j)
-    assert "ArrowEvalPython" not in s
+    # the refine is an aggregate over each pair's edges; rectangles skip it
+    refine = "aggregate(edges"
+    assert refine not in explain_str(j)
     assert [r["image_id"] for r in j.collect()] == ["p1"]
     # non-rectangular layer keeps the exact refine
     quads = spark.createDataFrame(
@@ -135,8 +137,11 @@ def test_rect_layer_skips_raycast(spark):
           "ys": [0.0, 0.0, 2.0, 2.0, 0.0], "minx": 0.0, "miny": 0.0, "maxx": 2.2, "maxy": 2.0}],
         datagen.POLY_SCHEMA,
     )
-    s2 = explain_str(pip_join.pip_join(pts, quads, poly_cols=("poly_id",)))
-    assert "ArrowEvalPython" in s2
+    # p3 lies inside the quad's bbox but right of its slanted edge
+    pts3 = pts.union(spark.createDataFrame([("p3", 2.15, 0.5)], pts.schema))
+    jq = pip_join.pip_join(pts3, quads, poly_cols=("poly_id",))
+    assert refine in explain_str(jq)
+    assert [r["image_id"] for r in jq.collect()] == ["p1"]
 
 
 def test_flagship_transform_no_joinback_single_python_stage(spark, images_small, polygons, tmp_path):

@@ -180,6 +180,38 @@ def test_rect_layer_gen_stats_detects_rectangles(spark):
     assert st["all_rect"] is True
 
 
+def test_cover_cells_n_wraps_the_antimeridian(spark):
+    """The driver-side cover count mirrors cover_bbox's wrap (minx > maxx)."""
+    from extractors_geo_spark.operators import cells
+
+    boxes = [(170.0, 10.0, -170.0, 20.0), (179.9, -5.0, -179.9, 5.0),
+             (-100.0, 30.0, -90.0, 40.0), (10.0, 0.0, 10.0, 0.0)]
+    df = spark.createDataFrame(boxes, "minx double, miny double, maxx double, maxy double")
+    for res in (4, 6):
+        want = [r[0] for r in df.select(F.size(cells.cover_bbox(
+            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res))).collect()]
+        assert [pip_join._cover_cells_n(*b, res) for b in boxes] == want
+
+
+def test_gen_stats_multi_ring_is_not_rect(spark):
+    """A 5-vertex rectangle outline split into two rings by ring_lens is not
+    a bbox-exact rectangle — the same exclusion as planner.all_rectangles."""
+    import pandas as pd
+
+    from extractors_geo_spark.plans import planner
+
+    row = {"poly_id": "m1", "name": "m1",
+           "xs": [0.0, 1.0, 1.0, 0.0, 0.0], "ys": [0.0, 0.0, 1.0, 1.0, 0.0],
+           "minx": 0.0, "miny": 0.0, "maxx": 1.0, "maxy": 1.0}
+    for lens, want in (([3, 2], False), ([5], True), (None, True)):
+        pdf = pd.DataFrame([{**row, "ring_lens": lens}])
+        df = spark.createDataFrame(
+            pdf, "poly_id string, name string, xs array<double>, ys array<double>, "
+                 "minx double, miny double, maxx double, maxy double, ring_lens array<int>")
+        assert datagen._poly_gen_stats(pdf)["all_rect"] is want
+        assert planner.all_rectangles(df) is want
+
+
 # ------------------------------------------------------------- expr memo
 def test_exprcache_reuse_is_plan_identical(spark):
     from extractors_geo_spark.exprcache import memo_col
@@ -193,3 +225,36 @@ def test_exprcache_reuse_is_plan_identical(spark):
     a = df.select(fresh.alias("c")).collect()
     b = df.select(memo1.alias("c")).collect()
     assert a == b
+
+
+def test_exprcache_drops_trees_of_a_replaced_gateway(monkeypatch):
+    """The memo follows the gateway OBJECT, not its id(): a new gateway
+    (even one that reuses a collected gateway's address) never sees trees
+    built against the old one."""
+    from types import SimpleNamespace
+
+    from pyspark import SparkContext
+
+    from extractors_geo_spark import exprcache
+
+    class Gateway:
+        pass
+
+    built = []
+
+    def build():
+        built.append(1)
+        return object()
+
+    sc = SimpleNamespace(_gateway=None)
+    monkeypatch.setattr(SparkContext, "_active_spark_context", sc)
+    monkeypatch.setattr(exprcache, "_COL_MEMO", {})
+    monkeypatch.setattr(exprcache, "_COL_MEMO_GW", [None])
+    ids = set()
+    for _ in range(3):
+        sc._gateway = None  # the old gateway dies first: its id() is free
+        sc._gateway = Gateway()
+        ids.add(id(sc._gateway))
+        first = exprcache.memo_col(("t_gw",), build)
+        assert exprcache.memo_col(("t_gw",), build) is first
+    assert len(built) == 3, ids

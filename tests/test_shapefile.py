@@ -172,6 +172,7 @@ def test_infer_epsg_real_world_prj_strings():
         assert (epsg, err) == (want_epsg, want_err), wkt[:60]
 
 
+@needs_fixture
 def test_projected_unknown_prj_is_error_not_4326(tmp_path):
     """A zip whose .prj is an unidentifiable PROJCS must error, not join
     the pipeline as lon/lat with a wrong extent."""
@@ -193,6 +194,7 @@ def test_projected_unknown_prj_is_error_not_4326(tmp_path):
     assert not parsed["features"]
 
 
+@needs_fixture
 def test_utm_prj_zip_gets_correct_epsg(tmp_path):
     import io as _io
     import zipfile as _zf
@@ -214,6 +216,7 @@ def test_utm_prj_zip_gets_correct_epsg(tmp_path):
 
 # ------------------------------------------------------------- 7z ingestion
 
+@needs_fixture
 def test_7z_shapefile_ingests_like_zip():
     """S4/P3: a 7z-packed shapefile bundle (reference mime x-7z-compressed,
     preview.geoshp/extractor_info.json:28) parses identically to the zip."""
@@ -231,6 +234,7 @@ def test_7z_shapefile_ingests_like_zip():
     assert parsed["features"][0]["rings"] == ref["features"][0]["rings"]
 
 
+@needs_fixture
 def test_corrupt_7z_errors_explicitly():
     from extractors_geo_spark.sources import sevenzip
 
@@ -241,6 +245,7 @@ def test_corrupt_7z_errors_explicitly():
     assert parsed["errors"] == ["BAD_7Z"]
 
 
+@needs_fixture
 def test_7z_ingest_distributed(spark, tmp_path):
     """ingest_zips over a directory containing BOTH containers."""
     from extractors_geo_spark.sources import sevenzip
@@ -316,6 +321,7 @@ def test_utm_layer_reprojects_to_lonlat_roundtrip():
     assert abs(minx - -122.5) < 1e-9 and abs(maxy - 37.5) < 1e-9
 
 
+@needs_fixture
 def test_unprojectable_crs_errors_not_garbage():
     """An identified-but-unsupported projected CRS must error, never join
     native meters as lon/lat. (Texas Central LCC used to be the fixture

@@ -252,7 +252,7 @@ below); per-task work is independent, which is what transfers to a real
 Plan shape (asserted by tests/test_plans.py): parquet scan (column-pruned
 to image_id/bytes/fmt/phash) -> ONE MapInPandas decode stage -> codegen'd
 filter/cell-encode projection -> BroadcastHashJoin (polygon side: 50 rows
-exploded to covering cells) -> Arrow-batched ray-cast filter -> explode to
+exploded to covering cells) -> Catalyst ray-cast filter -> explode to
 tiles -> partial+final count. No wide shuffle anywhere; bytes never leave
 the decode stage.
 
