@@ -59,7 +59,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_RG_CACHE: dict[str, int] = {}
+_RG_CACHE: dict[tuple, int] = {}
 
 
 def _scan_parallelism(path: str) -> int:
@@ -67,27 +67,34 @@ def _scan_parallelism(path: str) -> int:
     total row-group count (a row group is read by the one split holding
     its midpoint; byte-splitting a 1-row-group file yields 1 non-empty
     task). Handles both a bare file and a directory of part files.
-    Driver-side footer reads, cached — no job, no data read."""
-    if path not in _RG_CACHE:
-        try:
-            import glob
-            import os
+    Driver-side footer reads, cached — no job, no data read. The cache
+    key is the path plus each part file's name, size and mtime_ns, so a
+    table rewritten at the same path is probed again."""
+    import glob
+    import os
 
+    try:
+        files = ([path] if os.path.isfile(path)
+                 else sorted(glob.glob(f"{path}/*.parquet")))
+        stats = [(os.path.basename(f), os.stat(f)) for f in files]
+    except OSError:
+        return 1 << 30  # a part file vanished mid-listing -> assume splittable
+    key = (path, tuple((n, st.st_size, st.st_mtime_ns) for n, st in stats))
+    if key not in _RG_CACHE:
+        try:
             import pyarrow.parquet as pq
 
-            files = ([path] if os.path.isfile(path)
-                     else glob.glob(f"{path}/*.parquet"))
             if not files:
                 raise FileNotFoundError(path)
             # cap footer reads: many part files are already parallel enough
             if len(files) >= 64:
-                _RG_CACHE[path] = len(files)
+                _RG_CACHE[key] = len(files)
             else:
-                _RG_CACHE[path] = sum(
+                _RG_CACHE[key] = sum(
                     pq.ParquetFile(f).metadata.num_row_groups for f in files)
         except Exception:
-            _RG_CACHE[path] = 1 << 30  # unknown -> assume splittable
-    return _RG_CACHE[path]
+            _RG_CACHE[key] = 1 << 30  # unknown -> assume splittable
+    return _RG_CACHE[key]
 
 
 def _pt(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -784,11 +791,13 @@ def q_asof_join(spark, sf_dir):
     most recent prior-or-equal view event (DuckDB native ASOF JOIN is the
     oracle).
 
-    r8: _ptk on user_id — both branch scans of the union read the SAME
-    keyed exchange (ReusedExchange: one scan of events instead of two),
-    and hash(user_id) already satisfies the dedup window's
-    (user_id, _ts) clustering, so no exchange is added for it
-    (measured 0.72 -> 0.49 s at sf1.0)."""
+    r8: _ptk on user_id. Catalyst pushes each branch's event_type filter
+    below that repartition, so the plan scans events twice: each branch
+    is its own filtered scan and hash(user_id) exchange, with no
+    ReusedExchange. Both branches then come out hash(user_id)-partitioned,
+    which satisfies the dedup window's (user_id, _ts) clustering and the
+    union's per-user window, so no further exchange is added for either
+    (measured 0.72 -> 0.49 s at sf1.0). A single-scan shape is open."""
     from extractors_geo_spark.operators import asof
 
     ev = _ptk(spark, sf_dir, "events", "user_id")

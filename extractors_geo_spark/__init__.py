@@ -21,6 +21,46 @@ Layout:
 __version__ = "0.3.0"
 
 
+def _lazy_zipimport_invalidation():
+    """CPython 3.12's lazy zipimporter.invalidate_caches (gh-103200) on
+    older interpreters. Spark's Python worker calls
+    importlib.invalidate_caches() at the start of every task, and before
+    3.12 each zipimporter then re-parses its whole archive directory in
+    pure Python: pyspark.zip, the py4j zip and the spark-core jar, ~16
+    importers in a reused worker, before the task sees a row. Here an
+    invalidation only drops the archive from the shared directory cache,
+    and `_files` re-reads it on its next use, so a py-file rewritten or
+    added between tasks is still seen. Run at package import because
+    unpickling any engine UDF imports this package in the worker."""
+    import sys
+
+    if sys.version_info >= (3, 12):
+        return
+    import zipimport
+
+    def files(self):
+        toc = zipimport._zip_directory_cache.get(self.archive)
+        if toc is None:
+            try:
+                toc = zipimport._read_directory(self.archive)
+            except zipimport.ZipImportError:
+                return {}
+            zipimport._zip_directory_cache[self.archive] = toc
+        return toc
+
+    def invalidate_caches(self):
+        zipimport._zip_directory_cache.pop(self.archive, None)
+
+    # a data descriptor, so it also wins over the `_files` that importers
+    # created before this import hold in their instance dict; __init__'s
+    # assignment is dropped (it has already cached the directory)
+    zipimport.zipimporter._files = property(files, lambda self, value: None)
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_lazy_zipimport_invalidation()
+
+
 _API = {
         "get_spark": ("extractors_geo_spark.session", "get_spark"),
         "extract_meta": ("extractors_geo_spark.operators.extract_meta", None),

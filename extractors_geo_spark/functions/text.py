@@ -78,7 +78,9 @@ def n_tokens_ws(text: Column) -> Column:
 def n_tokens_bpe(text: Column) -> Column:
     """BPE-ish token count: alpha runs + digit runs + individual punct.
     regexp_count (r8): same matches as regexp_extract_all, but counts
-    without materializing the token array (guide §1.2 per-task work)."""
+    without materializing the token array (guide §1.2 per-task work).
+    NULL text gives NULL, not 0, like the DuckDB twin's
+    len(regexp_extract_all(NULL, ...)) in SQL_TOKENS."""
     return F.regexp_count(text, F.lit(TOKEN_REGEX)).cast("int")
 
 

@@ -39,14 +39,18 @@ def test_punct_ratio_translate_equals_regex(spark):
 
 def test_bpe_regexp_count_equals_extract_all(spark):
     df = spark.createDataFrame(
-        [("",), ("one two3 four!",), ("a1b2c3",), ("...",), ("hello, world! 42",)],
+        [("",), ("one two3 four!",), ("a1b2c3",), ("...",), ("hello, world! 42",),
+         (None,)],
         "text string")
     got = df.select(
+        "text",
         X.n_tokens_bpe(F.col("text")).alias("new"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit(X.TOKEN_REGEX), 0)).alias("old"),
     ).collect()
     for r in got:
         assert r["new"] == r["old"]
+    # NULL in, NULL out: the DuckDB twin's len(regexp_extract_all(NULL, ...))
+    assert [r["new"] for r in got if r["text"] is None] == [None]
 
 
 # ------------------------------------------------------- ngram length filter
@@ -152,6 +156,32 @@ def test_pt_repartitions_only_rowgroup_bound(spark, tmp_path):
     assert "Exchange" not in df2._sc._jvm.PythonSQLUtils.explainString(
         df2._jdf.queryExecution(), "simple")
     assert df2.count() == 10000
+
+
+def test_scan_parallelism_reprobes_a_table_rewritten_at_one_path(tmp_path):
+    """The row-group cache must not outlive the table: a table regenerated
+    in-process at the same path (file or part-file directory) is probed
+    again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    t = pa.table({"doc_id": list(range(1000))})
+    bare = str(tmp_path / "bare.parquet")
+    pq.write_table(t, bare, row_group_size=1000)
+    assert E._scan_parallelism(bare) == 1
+    pq.write_table(t, bare, row_group_size=100)
+    assert E._scan_parallelism(bare) == 10
+
+    parts = tmp_path / "parts.parquet"
+    parts.mkdir()
+    pq.write_table(t, str(parts / "part-0.parquet"), row_group_size=1000)
+    assert E._scan_parallelism(str(parts)) == 1
+    pq.write_table(t, str(parts / "part-1.parquet"), row_group_size=500)
+    assert E._scan_parallelism(str(parts)) == 3
+    (parts / "part-0.parquet").unlink()
+    assert E._scan_parallelism(str(parts)) == 2
 
 
 # -------------------------------------------- pip_join generation-time stats

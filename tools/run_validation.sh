@@ -1,10 +1,27 @@
 #!/bin/bash
-# Full local validation: oracle gate at sf0.01 + full pytest suite.
+# Full local validation, the gate a change must pass:
+#   1. the tier-1 pytest suite, run as ROADMAP.md's tier-1 command runs it;
+#   2. tools/check_oracles.py (the oracle window) at sf0.001 and sf0.01.
+# Every step runs; the exit status is non-zero if any of them failed.
+#
+# Usage: tools/run_validation.sh TESTDATA_DIR   (holding sf0.001/ and sf0.01/)
 set -u
 cd "$(dirname "$0")/.."
-{
-  python tools/check_oracles.py /root/testdata/sf0.01 2>&1 | tr '\r' '\n' | grep -E "^(OK|FAIL|rows|[0-9]+ failures)"
-  echo "===PYTEST==="
-  python -m pytest tests/ -q 2>&1 | tail -1
-} > /tmp/final_validation.log 2>&1
-tail -3 /tmp/final_validation.log
+data="${1:?usage: tools/run_validation.sh TESTDATA_DIR (holding sf0.001/ and sf0.01/)}"
+failed=()
+
+echo "=== tier-1 pytest ==="
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
+timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider \
+  || failed+=("tier-1 pytest")
+
+for sf in sf0.001 sf0.01; do
+  echo "=== oracles $sf ==="
+  python tools/check_oracles.py "$data/$sf" || failed+=("oracles $sf")
+done
+
+if (( ${#failed[@]} )); then
+  printf 'FAILED: %s\n' "${failed[@]}"
+  exit 1
+fi
+echo "validation passed"
