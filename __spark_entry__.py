@@ -1600,22 +1600,19 @@ WHERE i % 7 <> 0
 
 
 def q_h264_frames(spark, sf_dir):
-    """REAL H.264 path (..h264, ..h264_cabac): avc1 MP4s synthesized on
-    executors, frame-sampled through sample_frames with fake=False.
-    Clips rotate through four coding shapes (i mod 4): bit-exact I_PCM
-    (alternating CAVLC/CABAC slice syntax — the CABAC half exercises
-    the r7 engine flush/re-init around raw samples); CAVLC IDR+P GOPs;
-    CABAC IDR+P GOPs (r6 — context-adaptive binary arithmetic decode;
-    the i >= 12 halves of both P shapes code MULTI-REFERENCE L0 with
-    per-partition ref_idx_l0, r7);
+    """REAL H.264 path (..h264, CAVLC): avc1 MP4s synthesized on
+    executors, frame-sampled through sample_frames. Clips rotate
+    through four coding shapes (i mod 4): bit-exact I_PCM; IDR+P GOPs
+    at qp 8; IDR+P GOPs at qp 12 (the i >= 12 halves of both P shapes
+    code MULTI-REFERENCE L0 with per-partition ref_idx_l0, r7);
     IBBP GOPs with B slices + ctts display reordering (r6 —
     bi-prediction, 2-deep DPB; the i//8-odd B legs use TEMPORAL
-    direct, 8.4.1.2.3 POC scaling, r7; the CAVLC i=9/11 legs code the
-    High-profile 8x8 TRANSFORM, and the i>=16 P legs are 32-px
-    MULTI-SLICE pictures, r7). Since r7 every clip is
+    direct, 8.4.1.2.3 POC scaling, r7). The 8 <= i < 12 P legs code
+    the High-profile 8x8 TRANSFORM, and the i>=16 P legs are 32-px
+    MULTI-SLICE pictures (r7). Since r7 every clip is
     4:2:0 COLOR: chroma planes code real residuals (2x2 Hadamard DC +
-    AC, intra chroma prediction, eighth-pel chroma MC) in both entropy
-    modes; I_PCM carries raw Cb/Cr. decode==recon bit-exactness for
+    AC, intra chroma prediction, eighth-pel chroma MC); I_PCM carries
+    raw Cb/Cr. decode==recon bit-exactness for
     every path is asserted in tests/test_h264*. The oracle checks the
     (clip, frame, timestamp, dims) fan-out."""
     import numpy as np
@@ -1632,7 +1629,7 @@ def q_h264_frames(spark, sf_dir):
             for i in b["i"]:
                 i = int(i)
                 n = 2 + i % 3  # 2..4 frames at 1 fps -> duration n seconds
-                kind = i % 4  # I_PCM / CAVLC / CABAC / B-GOP
+                kind = i % 4  # I_PCM / P-GOP qp 8 / P-GOP qp 12 / B-GOP
                 # the i >= 16 P legs are 32 px tall (2 MB rows) and code
                 # MULTI-SLICE pictures (slice_rows=1, r7): one NAL per MB
                 # row, availability cut at each slice top
@@ -1646,14 +1643,10 @@ def q_h264_frames(spark, sf_dir):
                     ((cy * 17 + i * 7 + 40) % 245).astype(np.uint8),
                 ]) for f in range(n)]
                 if kind == 0:
-                    data = _mp4.write_h264_mp4(
-                        frames, fps=1,
-                        entropy="cabac" if (i // 4) % 2 else "cavlc",
-                        chromas=chromas)
+                    data = _mp4.write_h264_mp4(frames, fps=1, chromas=chromas)
                 elif kind == 3:
                     data = _mp4.write_h264_mp4(
                         frames, fps=1, qp=8, gop=4, bframes=1,
-                        entropy="cabac" if (i // 4) % 2 else "cavlc",
                         direct="temporal" if (i // 8) % 2 else "spatial",
                         chromas=chromas)
                 else:
@@ -1661,12 +1654,12 @@ def q_h264_frames(spark, sf_dir):
                     # gop 4 keeps 2 refs live, every inter partition
                     # carries ref_idx_l0
                     # the 8<=i<12 legs code the High-profile 8x8
-                    # transform (r7) in BOTH entropy modes: profile 100,
-                    # per-MB adaptive transform_size_8x8_flag
+                    # transform (r7): profile 100, per-MB adaptive
+                    # transform_size_8x8_flag
                     data = _mp4.write_h264_mp4(
-                        frames, fps=1, qp=8, gop=4 if i >= 12 else 2,
+                        frames, fps=1, qp=8 if kind == 1 else 12,
+                        gop=4 if i >= 12 else 2,
                         nrefs=2 if i >= 12 else 1,
-                        entropy="cabac" if kind == 2 else "cavlc",
                         chromas=chromas,
                         slice_rows=1 if mslice else None,
                         t8x8=kind in (1, 2) and 8 <= i < 12)
@@ -1674,7 +1667,7 @@ def q_h264_frames(spark, sf_dir):
             yield pd.DataFrame(rows, columns=["video_id", "bytes"])
 
     vids = base.mapInPandas(make, "video_id string, bytes binary")
-    return M.sample_frames(vids, every_ms=1000, fake=False).select(
+    return M.sample_frames(vids, every_ms=1000).select(
         "video_id", "frame_idx", "ts_ms", "fw", "fh")
 
 
@@ -2110,7 +2103,7 @@ def q_wav_features(spark, sf_dir):
     from extractors_geo_spark.operators import multimodal as M
 
     wavs = base.mapInPandas(make, "audio_id string, bytes binary")
-    out = M.audio_features(wavs, fake=False)
+    out = M.audio_features(wavs)
     return out.select("audio_id", "duration_s", "n_windows",
                       F.floor(F.element_at("features", 1) * 10000).cast("long").alias("e0_q"))
 
@@ -2223,7 +2216,7 @@ def q_flac_features(spark, sf_dir):
     from extractors_geo_spark.operators import multimodal as M
 
     clips = base.mapInPandas(make, "audio_id string, bytes binary")
-    out = M.audio_features(clips, fake=False)
+    out = M.audio_features(clips)
     return out.select("audio_id", "duration_s", "n_windows",
                       F.floor(F.element_at("features", 1) * 10000).cast("long").alias("e0_q"))
 
@@ -2276,7 +2269,7 @@ def q_mp3_features(spark, sf_dir):
     from extractors_geo_spark.operators import multimodal as M
 
     clips = base.mapInPandas(make, "audio_id string, bytes binary")
-    out = M.audio_features(clips, fake=False)
+    out = M.audio_features(clips)
     # mean-square of a 0.5-amplitude sine = 0.125: quantize the first
     # window's energy so the row content is assertion-grade stable
     return out.select("audio_id", "duration_s", "n_windows",
@@ -2338,7 +2331,7 @@ def q_aac_features(spark, sf_dir):
     from extractors_geo_spark.operators import multimodal as M
 
     clips = base.mapInPandas(make, "audio_id string, bytes binary")
-    out = M.audio_features(clips, fake=False)
+    out = M.audio_features(clips)
     return out.select("audio_id", "duration_s", "n_windows",
                       F.floor(F.element_at("features", 1) * 1000).cast("long").alias("e0_q"))
 
@@ -2371,7 +2364,7 @@ def q_mjpeg_frames(spark, sf_dir):
     from extractors_geo_spark.operators import multimodal as M
 
     vids = base.mapInPandas(make, "video_id string, bytes binary")
-    out = M.sample_frames(vids, every_ms=500, fake=False)
+    out = M.sample_frames(vids, every_ms=500)
     return out.select("video_id", "frame_idx", "ts_ms", "fw", "fh",
                       F.crc32("frame").alias("frame_crc"))
 

@@ -19,15 +19,8 @@ import sys
 import time
 
 import __spark_entry__ as E
+import bench
 from extractors_geo_spark.session import get_spark
-
-HEADLINE = (
-    "merc_extent", "cell_encode", "cell_density", "pip_join", "knn",
-    "tile_assign", "removal_antijoin", "catalog_upsert", "asof_join",
-    "sessionize", "band_stats", "exact_dedup", "minhash", "simhash",
-    "ngram_jaccard", "embedding_topk", "token_counts", "quality",
-    "flagship_pip", "tile_pyramid", "h264_frames",
-)
 
 
 def main() -> None:
@@ -40,7 +33,7 @@ def main() -> None:
 
     if mode == "plans":
         suffix = sys.argv[3] if len(sys.argv) > 3 else "before"
-        names = sys.argv[4:] or list(HEADLINE)
+        names = sys.argv[4:] or list(bench.HEADLINE)
         os.makedirs("plans/r08", exist_ok=True)
         for name in names:
             df = qs[name](spark, sf_dir)
@@ -53,7 +46,6 @@ def main() -> None:
         return
 
     if mode == "pipeline":
-        import bench
         n_images = int(sys.argv[2]) if len(sys.argv) > 2 else 20000
         bench.warmup(spark)
         secs = []
@@ -68,9 +60,8 @@ def main() -> None:
 
     # mode == "time"
     rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    names = sys.argv[4:] or list(HEADLINE)
+    names = sys.argv[4:] or list(bench.HEADLINE)
     # warm the python worker pool like bench.py does
-    import bench
     bench.warmup(spark)
     samples: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(rounds):

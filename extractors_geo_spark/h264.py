@@ -1,14 +1,12 @@
-"""Pure-Python H.264/AVC (ISO/IEC 14496-10) — CAVLC engine + shared
-machinery for the CABAC engine in `h264_cabac`.
+"""Pure-Python H.264/AVC (ISO/IEC 14496-10) — CAVLC engine.
 
 The coding surface, all through real AVC machinery (NAL units with
 emulation prevention, Exp-Golomb headers, SPS/PPS, IDR/non-IDR slice
-headers, avcC records for MP4 'avc1' tracks), in both entropy modes
-({CAVLC here, CABAC in h264_cabac} x {I, P, B}):
+headers, avcC records for MP4 'avc1' tracks), CAVLC entropy coding for
+I, P and B pictures (CABAC streams raise ValueError):
 
 1. **I_PCM** (mb_type 25): raw samples in the bitstream, bit-exact
-   round trip — the entropy-free floor, kept for fixtures (in CABAC
-   slices too, with the r7 engine flush/re-init around raw samples).
+   round trip — the entropy-free floor, kept for fixtures.
 2. **Intra** (r4): I_4x4 and I_16x16 macroblocks with spec intra
    prediction (9 + 4 modes), the 4x4 integer transform + Hadamard DC
    transforms, spec quantization, and full CAVLC residual coding
@@ -29,8 +27,8 @@ headers, avcC records for MP4 'avc1' tracks), in both entropy modes
    sub-macroblocks, ctts display reordering in the MP4 layer, POC-lsb
    wrap handling.
 5. **4:2:0 chroma** (r7): real chroma residuals (2x2 DC Hadamard + AC),
-   chroma intra prediction incl. plane mode, cbp_chroma in both
-   entropy modes, chroma deblocking. Gray clips stay bit-identical
+   chroma intra prediction incl. plane mode, cbp_chroma, chroma
+   deblocking. Gray clips stay bit-identical
    (flat-128 default source, cbpc=0 everywhere).
 
 6. **Weighted prediction** (r7): EXPLICIT for P slices —
@@ -39,10 +37,9 @@ headers, avcC records for MP4 'avc1' tracks), in both entropy modes
    least-squares weight estimation so fades collapse to skip runs —
    and IMPLICIT for B slices (weighted_bipred_idc 2): POC-derived
    (w0, w1) bi-prediction blending (8.4.2.3.1), pure prediction math
-   with no extra syntax, composable with spatial/temporal direct and
-   both entropy coders.
+   with no extra syntax, composable with spatial/temporal direct.
 
-7. **High-profile 8x8 transform** (r7, both entropy modes): profile_idc 100 SPS
+7. **High-profile 8x8 transform** (r7): profile_idc 100 SPS
    (4:2:0, 8-bit, flat scaling), PPS transform_8x8_mode_flag, per-MB
    transform_size_8x8_flag on 16x16/16x8/8x16 (and all-8x8-sub P_8x8)
    inter macroblocks with a coefficient-count selection gate, the 8x8
@@ -51,16 +48,12 @@ headers, avcC records for MP4 'avc1' tracks), in both entropy modes
    both sides) with quant/dequant tables DERIVED numerically from the
    basis norms (they reproduce the ISO LevelScale8x8 row
    [20,18,32,19,25,24]), and CAVLC 8x8 residuals as the spec's four
-   interleaved 4x4 runs over the 8x8 zigzag; CABAC slices code the
-   same blocks as cat-5 residuals (63-position significance folded at
-   14 — in-repo context assignment, same honesty note as the uniform
-   init) with a neighbor-conditioned transform_size_8x8_flag bin.
-   I_NxN macroblocks race an I_8x8 candidate (8.3.2.2: all nine
-   prediction modes over low-pass-filtered reference samples,
-   8.3.2.2.1) against I_4x4 on the same coefficient-count gate; pred
-   modes serialize as prev/rem pairs per 8x8 (CABAC reuses the
-   prev_i4/rem_i4 contexts). B slices carry the flag too (late r7) on
-   every non-direct shape with no sub-8x8 partitioning — direct stays
+   interleaved 4x4 runs over the 8x8 zigzag. I_NxN macroblocks race
+   an I_8x8 candidate (8.3.2.2: all nine prediction modes over
+   low-pass-filtered reference samples, 8.3.2.2.1) against I_4x4 on
+   the same coefficient-count gate; pred modes serialize as prev/rem
+   pairs per 8x8. B slices carry the flag too (late r7) on every
+   non-direct shape with no sub-8x8 partitioning — direct stays
    4x4 because the SPS writes direct_8x8_inference_flag 0 (the 7.3.5
    flag condition). In-loop deblocking composes with the 8x8 transform
    (late r7, 8.7.2): a per-picture transform-size map skips the
@@ -70,9 +63,8 @@ headers, avcC records for MP4 'avc1' tracks), in both entropy modes
 8. **Multi-slice pictures** (r7): slices covering whole MB rows
    (first_mb_in_slice = row * PicWidthInMbs), the hardware-encoder /
    error-resilience shape — one NAL per slice in the sample, neighbour
-   availability (intra prediction, nC contexts, MV prediction, CABAC
-   ctxIdxInc, skip runs / per-slice engine init) cut at each slice
-   top, for I, P AND B pictures in both entropy modes
+   availability (intra prediction, nC contexts, MV prediction, skip
+   runs) cut at each slice top, for I, P AND B pictures
    (encode_*(slice_rows=N)). Deblocking filters across slice
    boundaries (disable_deblocking_filter_idc 0 semantics).
 
@@ -83,19 +75,15 @@ Decode scope and honesty notes:
   offsets, SP/SI slices, EXPLICIT weighted bi-prediction
   (weighted_bipred_idc 1; implicit idc 2 — the x264 default — and
   single-list P weighting ARE in scope), ref-pic-list modification,
-  MMCO adaptive marking, >1 L1 reference.
+  MMCO adaptive marking, >1 L1 reference, CABAC entropy coding
+  (entropy_coding_mode_flag 1).
   `operators/multimodal.sample_frames` maps that to its documented
   well-formed-unsupported-codec stub.
-- Foreign-stream CABAC cross-decode is adjudicated permanently out of
-  scope (SURVEY §15.2): context INIT is in-repo uniform
-  (cabac_init_idc accepted but ignored), so the engine round-trips its
-  own conformant bitstreams; everything else (arithmetic engine,
-  binarizations, context increments) follows the spec.
 - The in-loop deblocking filter (8.7) IS applied for streams that
   request it (luma, all-intra bS 4/3, strong+normal filters, alpha/
   beta/tc0 threshold tables, per-MB QP averaging, I_PCM-as-QP-0);
   encode_idr_cavlc(deblock=True) produces such streams and returns the
-  filtered recon, so decode == recon stays bit-exact in both modes.
+  filtered recon, so decode == recon stays bit-exact.
 - VLC tables are transcribed from the spec; encoder and decoder share
   one copy and every table is machine-checked prefix-free, so
   round-trip self-consistency holds for ANY coefficient density
@@ -479,12 +467,12 @@ def _sps(w: int, h: int, profile: int = 66, bpoc: bool = False,
     return bytes(bw.buf)
 
 
-def _pps(deblock_ctrl: bool = False, cabac: bool = False,
+def _pps(deblock_ctrl: bool = False,
          wp: bool = False, wbidc: int = 0, t8x8: bool = False) -> bytes:
     bw = _BitWriter()
     bw.ue(0)      # pps_id
     bw.ue(0)      # sps_id
-    bw.u(1 if cabac else 0, 1)  # entropy_coding_mode: CAVLC / CABAC
+    bw.u(0, 1)    # entropy_coding_mode: CAVLC
     bw.u(0, 1)    # pic_order_present
     bw.ue(0)      # num_slice_groups_minus1
     bw.ue(0)      # num_ref_idx_l0_active_minus1
@@ -1087,7 +1075,7 @@ def _estimate_wp(src, refs, chroma=None, crefs=None, d=6):
 # Active B-slice bi-pred weights, constant per slice (one L0 + one L1
 # reference in this profile, so (w0, w1) is a slice-level pair). A
 # module global rather than a threaded parameter: the blend has ~15
-# call sites across both entropy modes' encoders AND decoders, and
+# call sites across the encoders AND decoders, and
 # every B entry point installs it unconditionally (never relies on a
 # previous slice's value), so there is no leak path. Codec calls are
 # single-threaded within a Python worker process.
@@ -1101,14 +1089,14 @@ def _set_bipred(w) -> None:
 
 # --------------------------------------- multi-slice pictures (r7, 7.3.3/7.4.3)
 # Active slice's first macroblock ROW. Neighbour availability (intra
-# prediction, nC contexts, MV prediction, CABAC ctxIdxInc) treats
+# prediction, nC contexts, MV prediction) treats
 # macroblocks above this row as unavailable — the 8.x "neighbouring
 # macroblock in a different slice" rule, specialized to the in-repo
 # restriction that slices cover whole MB rows (first_mb_in_slice is a
 # multiple of PicWidthInMbs; arbitrary offsets raise a ValueError at
 # parse). Module global by the same single-threaded-worker argument as
-# _BIPRED: every slice entry point (encoders AND decoders, both entropy
-# modes) sets it unconditionally, so no value leaks between slices.
+# _BIPRED: every slice entry point (encoders AND decoders) sets it
+# unconditionally, so no value leaks between slices.
 _SLICE_TOP = 0
 
 
@@ -1734,8 +1722,7 @@ def _eval_mb_i8(plane, smb, mx, my, qp, plane_w):
     bit-identity convention), intra-dead-zone 8x8 quantization,
     progressive in-MB reconstruction. Writes recon into `plane` (the
     caller restores the MB region if the 4x4 candidate wins) and
-    returns (total_coeffs, [(mode, q8)] in 8x8 Z order, cbp8).
-    Shared by the CAVLC and CABAC encoders."""
+    returns (total_coeffs, [(mode, q8)] in 8x8 Z order, cbp8)."""
     blocks8, cbp8, n8 = [], 0, 0
     for b8 in range(4):
         ox8, oy8 = (b8 & 1) * 8, (b8 >> 1) * 8
@@ -2802,7 +2789,7 @@ def encode_b_cavlc(gray: np.ndarray, ref0_full: np.ndarray,
 
 def encode_frames_bgop(frames: list[np.ndarray], qp: int = 10,
                        gop: int = 8, bframes: int = 1,
-                       deblock: bool = False, entropy: str = "cavlc",
+                       deblock: bool = False,
                        chromas: list | None = None,
                        direct: str = "spatial",
                        implicit_wb: bool = False,
@@ -2822,7 +2809,7 @@ def encode_frames_bgop(frames: list[np.ndarray], qp: int = 10,
     implicit_wb=True codes weighted_bipred_idc=2 in the PPS: B-slice
     bi-predictions use the POC-derived implicit weights (8.4.2.3.1) —
     a pure prediction-math change, composable with either direct
-    mode and either entropy coder."""
+    mode."""
     h, w = np.asarray(frames[0]).shape
     if w % 2 or h % 2:
         raise ValueError("4:2:0 H.264 needs even dimensions (crop unit is 2 px)")
@@ -2830,20 +2817,10 @@ def encode_frames_bgop(frames: list[np.ndarray], qp: int = 10,
         raise ValueError("bframes >= 1 (use encode_frames for P-only GOPs)")
     if direct not in ("spatial", "temporal"):
         raise ValueError(f"unknown direct mode {direct!r}")
-    if entropy not in ("cavlc", "cabac"):
-        raise ValueError(f"unknown entropy mode {entropy!r}")
-    if entropy == "cabac":
-        from . import h264_cabac as _C
-
-        enc_idr, enc_p, enc_b = (_C.encode_idr_cabac, _C.encode_p_cabac,
-                                 _C.encode_b_cabac)
-    else:
-        enc_idr, enc_p, enc_b = (encode_idr_cavlc, encode_p_cavlc,
-                                 encode_b_cavlc)
+    enc_idr, enc_p, enc_b = encode_idr_cavlc, encode_p_cavlc, encode_b_cavlc
     if chromas is not None:
         assert len(chromas) == len(frames), "one chroma pair per frame"
     avcc = build_avcc(w, h, deblock_ctrl=True, bpoc=True,
-                      cabac=entropy == "cabac",
                       wbidc=2 if implicit_wb else 0, t8x8=t8x8)
     t8kw = {"t8x8": True} if t8x8 else {}
     samples: list[bytes] = []
@@ -2952,17 +2929,15 @@ def _all_zero_quant(resid: np.ndarray, qp: int) -> bool:
 
 
 def build_avcc(w: int, h: int, deblock_ctrl: bool = False,
-               cabac: bool = False, bpoc: bool = False,
+               bpoc: bool = False,
                nrefs: int = 1, wp: bool = False, wbidc: int = 0,
                t8x8: bool = False) -> bytes:
     """avcC (AVCDecoderConfigurationRecord) for the MP4 sample entry."""
-    # Main profile: CABAC / B pictures / weighted prediction;
+    # Main profile: B pictures / weighted prediction;
     # High profile (100): the 8x8 transform (r7)
-    profile = 100 if t8x8 else \
-        77 if (cabac or bpoc or wp or wbidc) else 66
+    profile = 100 if t8x8 else 77 if (bpoc or wp or wbidc) else 66
     sps = _ep_insert(_sps(w, h, profile=profile, bpoc=bpoc, nrefs=nrefs))
-    pps = _ep_insert(_pps(deblock_ctrl, cabac=cabac, wp=wp, wbidc=wbidc,
-                          t8x8=t8x8))
+    pps = _ep_insert(_pps(deblock_ctrl, wp=wp, wbidc=wbidc, t8x8=t8x8))
     return (bytes([1, profile, 0, 20, 0xFF, 0xE1])
             + struct.pack(">H", len(sps) + 1) + bytes([0x67]) + sps
             + bytes([1]) + struct.pack(">H", len(pps) + 1) + bytes([0x68]) + pps)
@@ -2979,7 +2954,6 @@ def _pack_sample(rbsp, nal_byte: int) -> bytes:
 
 def encode_frames(frames: list[np.ndarray], qp: int | None = None,
                   deblock: bool = False, gop: int | None = None,
-                  entropy: str = "cavlc",
                   chromas: list | None = None,
                   nrefs: int = 1,
                   wp: bool = False,
@@ -2987,8 +2961,8 @@ def encode_frames(frames: list[np.ndarray], qp: int | None = None,
                   t8x8: bool = False) -> tuple[bytes, list[bytes]]:
     """Gray frames -> (avcC record, per-frame length-prefixed NAL samples
     ready for an 'avc1' MP4 track). qp=None keeps the bit-exact I_PCM
-    path; an integer qp (0..51) switches to transform coding with
-    entropy="cavlc" or "cabac" (h264_cabac, r6). gop=N emits a real
+    path; an integer qp (0..51) switches to CAVLC transform coding.
+    gop=N emits a real
     IDR+P group-of-pictures structure: every Nth frame is an IDR, the
     rest are P slices (P_SKIP / P_L0_16x16 motion compensation / intra
     fallback) predicting from the previous frame — decode with
@@ -3005,23 +2979,12 @@ def encode_frames(frames: list[np.ndarray], qp: int | None = None,
     h, w = np.asarray(frames[0]).shape
     if w % 2 or h % 2:
         raise ValueError("4:2:0 H.264 needs even dimensions (crop unit is 2 px)")
-    if entropy not in ("cavlc", "cabac"):
-        raise ValueError(f"unknown entropy mode {entropy!r}")
-    use_cabac = entropy == "cabac"
-    if use_cabac:
-        from . import h264_cabac as C
-        enc_idr, enc_p = C.encode_idr_cabac, C.encode_p_cabac
-        enc_ipcm = C.encode_idr_ipcm_cabac
-    else:
-        enc_idr, enc_p = encode_idr_cavlc, encode_p_cavlc
-        enc_ipcm = encode_idr_ipcm
+    enc_idr, enc_p = encode_idr_cavlc, encode_p_cavlc
+    enc_ipcm = encode_idr_ipcm
     if chromas is not None:
         assert len(chromas) == len(frames), "one chroma pair per frame"
-    # CABAC slice headers always carry disable_deblocking_filter_idc
-    # (h264_cabac._slice_header), so the PPS must advertise it even on
-    # the qp=None all-I_PCM path
-    avcc = build_avcc(w, h, deblock_ctrl=qp is not None or use_cabac,
-                      cabac=use_cabac, nrefs=nrefs, wp=wp, t8x8=t8x8)
+    avcc = build_avcc(w, h, deblock_ctrl=qp is not None,
+                      nrefs=nrefs, wp=wp, t8x8=t8x8)
     samples = []
     ref_full = None
     cref_full = None
@@ -3281,7 +3244,7 @@ def _b8x8_list_pass(subs, mvs0, mvs1, mx, my, dmv0, dmv1, mvd_io):
     """Walk the per-list serialization order of a B_8x8 MB (7.3.5.1:
     all mvd_l0 in sub-MB/rect order, then all mvd_l1), committing MV
     state exactly as the bitstream does — shared by all four codec
-    paths (CAVLC/CABAC x enc/dec). subs[j] = (sub_mb_type, parts);
+    paths (CAVLC enc/dec). subs[j] = (sub_mb_type, parts);
     mvd_io(li, mvp) either writes the mvd for the already-chosen mv and
     returns that mv (encoder) or reads the mvd and returns mvp + mvd
     (decoder); the result lands in parts[k][li]. Direct sub-MBs commit
@@ -3915,7 +3878,9 @@ def _parse_pps(rbsp: bytes) -> dict:
     r = _BitReader(rbsp)
     r.ue()  # pps_id
     r.ue()  # sps_id
-    cabac = r.u(1)
+    if r.u(1):
+        raise ValueError(
+            "CABAC (entropy_coding_mode_flag 1): out of decode scope")
     pic_order_present = r.u(1)
     if r.ue() != 0:  # num_slice_groups_minus1
         raise ValueError("FMO slice groups unsupported")
@@ -3935,7 +3900,7 @@ def _parse_pps(rbsp: bytes) -> dict:
         if r.u(1):
             raise ValueError("pic scaling matrices: out of decode scope")
         r.se()  # second_chroma_qp_index_offset (in-repo streams write 0)
-    return {"cabac": bool(cabac), "pic_order_present": bool(pic_order_present),
+    return {"pic_order_present": bool(pic_order_present),
             "pic_init_qp": pic_init_qp, "deblock_ctrl": bool(deblock_ctrl),
             "redundant": bool(redundant),
             "weighted_pred": bool(weighted_pred),
@@ -4599,8 +4564,7 @@ def _skip_mb(plane, ref, mx, my, nnz, cc, modes, mvs):
 
 
 def _parse_slice_header(r, sps, pps, nal_type, nal_ref_idc: int = 3) -> dict:
-    """Slice header (7.3.3) — shared by the CAVLC and CABAC (h264_cabac)
-    slice decoders; the header itself is never CABAC-coded. first_mb
+    """Slice header (7.3.3). first_mb
     lands in the returned dict (multi-slice pictures, r7); decode_sample
     validates row alignment and ordering across a picture's slices."""
     first_mb = r.ue()
@@ -4656,9 +4620,6 @@ def _parse_slice_header(r, sps, pps, nal_type, nal_ref_idc: int = 3) -> dict:
     elif nal_ref_idc:  # dec_ref_pic_marking only for reference pictures
         if r.u(1):
             raise ValueError("adaptive ref pic marking unsupported")
-    if pps["cabac"] and (is_p or is_b):
-        if r.ue() > 2:  # cabac_init_idc (the in-repo uniform init ignores it)
-            raise ValueError("bad cabac_init_idc")
     qp = pps["pic_init_qp"] + r.se()
     do_filter, off_a, off_b = True, 0, 0
     if pps["deblock_ctrl"]:
@@ -5008,15 +4969,14 @@ def decode_sample(sample: bytes, avcc: bytes, ref: np.ndarray | None = None,
     use decode_samples for GOP streams; B slices additionally take
     `ref2`/`cref2` = the future reference). 4:2:0 chroma reconstructs
     for real since r7 (intra DC/H/V prediction, 2x2 Hadamard DC + AC
-    residual, eighth-pel bilinear MC). CABAC slice data decodes via
-    h264_cabac (in-repo-profile streams, r6). P_8x8 decodes every
+    residual, eighth-pel bilinear MC). P_8x8 decodes every
     sub_mb_type shape (8x8/8x4/4x8/4x4, r7); partitioned B
     macroblocks decode every 16x8/8x16 type 4..21 (r7); B_8x8
     (mb_type 22, full Table 7-18) and TEMPORAL direct
     (direct_spatial_mv_pred_flag 0, 8.4.1.2.3 POC scaling — needs
     col_motion/pocs, threaded by decode_samples) decode since r7.
-    Out-of-profile features (high-profile tools, multiple reference
-    frames) raise ValueError — the documented well-formed-unsupported
+    Out-of-profile features (CABAC, high-profile tools beyond the 8x8
+    transform) raise ValueError — the documented well-formed-unsupported
     stub path in sample_frames."""
     sps, pps = _avcc_param_sets(avcc)
     length_size = (avcc[4] & 3) + 1
@@ -5058,27 +5018,12 @@ def decode_sample(sample: bytes, avcc: bytes, ref: np.ndarray | None = None,
     full = None
     for (typ, ref_idc, hdr, r), rows in zip(slices, ranges):
         try:
-            if pps["cabac"]:
-                from . import h264_cabac
-
-                if hdr["is_p"] and ref is None:
-                    raise ValueError("P slice without a decoded reference frame")
-                if hdr["is_b"] and (ref is None or ref2 is None):
-                    raise ValueError("B slice without both reference frames")
-                full = h264_cabac.decode_slice(r, sps, pps, hdr, ref,
-                                               hdr["is_p"], ref2=ref2,
-                                               cref=cref, cref2=cref2,
-                                               col_motion=col_motion,
-                                               pocs=pocs,
-                                               motion_out=motion_out,
-                                               rows=rows, pic=pic)
-            else:
-                full = _decode_islice(r, sps, pps, typ, ref=ref,
-                                      nal_ref_idc=ref_idc,
-                                      ref2=ref2, cref=cref, cref2=cref2,
-                                      col_motion=col_motion, pocs=pocs,
-                                      motion_out=motion_out,
-                                      hdr=hdr, rows=rows, pic=pic)
+            full = _decode_islice(r, sps, pps, typ, ref=ref,
+                                  nal_ref_idc=ref_idc,
+                                  ref2=ref2, cref=cref, cref2=cref2,
+                                  col_motion=col_motion, pocs=pocs,
+                                  motion_out=motion_out,
+                                  hdr=hdr, rows=rows, pic=pic)
         except (IndexError, TypeError, KeyError, struct.error) as e:
             # corrupted entropy payload desynced the parser: normalize to
             # the ValueError contract callers map to errors-as-data

@@ -7,8 +7,10 @@ stsz sizes, stco/co64 chunk offsets, stsc sample-to-chunk runs, stts
 time deltas, mdhd timescale) and materializes per-sample byte ranges.
 Tracks whose sample description is 'jpeg'/'mjpa'/'AVDJ' decode with the
 in-repo T.81 codec; uncompressed 'raw '/'Y800' tracks carry their pixels
-directly in the samples (VERDICT r03 #7); any other codec stays on the
-documented fake path.
+directly in the samples (VERDICT r03 #7); 'avc1'/'avc3' tracks hand
+their avcC record and samples to the H.264 decoder (..h264). Any other
+codec is a well-formed-but-unsupported track: sample_frames raises for
+it rather than inventing pixels.
 
   write_mjpeg_mp4(frames, fps): uint8 arrays -> MP4 bytes (one video
       track, codec 'jpeg', one chunk; used for fixtures AND as a real
@@ -31,9 +33,9 @@ _JPEG_FOURCC = (b"jpeg", b"mjpa", b"AVDJ", b"MJPG")
 # sample bytes ARE the pixels — the cheap real non-JPEG path (VERDICT r03 #7)
 _RAW_FOURCC = (b"raw ", b"Y800")
 # H.264: real NAL/avcC plumbing; PIXELS decode for the in-repo profile
-# (I_PCM bit-exact, CAVLC/CABAC intra + P incl. 16x8/8x16 partitions,
-# CAVLC B slices with ctts reordering) — out-of-profile samples raise
-# downstream
+# (I_PCM bit-exact, CAVLC intra + P incl. 16x8/8x16 partitions,
+# B slices with ctts reordering) — out-of-profile samples (CABAC among
+# them) raise downstream
 _AVC_FOURCC = (b"avc1", b"avc3")
 _SUPPORTED_FOURCC = _JPEG_FOURCC + _RAW_FOURCC + _AVC_FOURCC
 
@@ -485,7 +487,7 @@ def write_mp4_with_captions(frames: list, fps: int, captions: list[str],
 
 
 def write_h264_mp4(frames: list, fps: int = 10, qp: int | None = None,
-                   gop: int | None = None, entropy: str = "cavlc",
+                   gop: int | None = None,
                    bframes: int = 0, chromas: list | None = None,
                    direct: str = "spatial", nrefs: int = 1,
                    wp: bool = False, implicit_wb: bool = False,
@@ -493,12 +495,12 @@ def write_h264_mp4(frames: list, fps: int = 10, qp: int | None = None,
                    t8x8: bool = False) -> bytes:
     """Gray frames -> single-track 'avc1' MP4 whose samples are REAL
     H.264 (..h264.encode_frames): bit-exact I_PCM when qp is None,
-    CAVLC or CABAC (entropy=) at the given qp otherwise; gop=N emits a
-    real IDR+P group-of-pictures structure (motion-compensated P
-    slices). bframes=N (CAVLC, requires qp+gop) emits IBBP GOPs:
+    CAVLC at the given qp otherwise; gop=N emits a real IDR+P
+    group-of-pictures structure (motion-compensated P slices).
+    bframes=N (requires qp+gop) emits IBBP GOPs:
     samples land in DECODE order with ctts composition offsets carrying
     the display reordering (r6). chromas= (one (2, h/2, w/2) pair per
-    frame) codes REAL 4:2:0 chroma residuals (r7, CAVLC/I_PCM).
+    frame) codes REAL 4:2:0 chroma residuals (r7).
     direct="temporal" switches B direct/skip modes to the 8.4.1.2.3
     POC-scaled derivation (r7). nrefs=N (P GOPs, r7) encodes with a
     sliding window of up to N L0 references and per-partition
@@ -517,7 +519,7 @@ def write_h264_mp4(frames: list, fps: int = 10, qp: int | None = None,
         if qp is None or gop is None:
             raise ValueError("bframes needs qp and gop")
         avcc, samples, disp = _h264.encode_frames_bgop(
-            frames, qp=qp, gop=gop, bframes=bframes, entropy=entropy,
+            frames, qp=qp, gop=gop, bframes=bframes,
             chromas=chromas, direct=direct, implicit_wb=implicit_wb,
             slice_rows=slice_rows, t8x8=t8x8)
         timescale = 90000
@@ -528,7 +530,7 @@ def write_h264_mp4(frames: list, fps: int = 10, qp: int | None = None,
                              entry_extra=_box(b"avcC", avcc),
                              ctts_offsets=offsets)
     avcc, samples = _h264.encode_frames(frames, qp=qp, gop=gop,
-                                        entropy=entropy, chromas=chromas,
+                                        chromas=chromas,
                                         nrefs=nrefs, wp=wp,
                                         slice_rows=slice_rows, t8x8=t8x8)
     return _assemble_mp4(samples, w, h, fps, fourcc=b"avc1", depth=24,

@@ -3,20 +3,22 @@
 The engine treats non-TIFF payloads the way a 100 TB training-data
 pipeline does: bytes stay an opaque `binary` column, typed metadata
 travels beside them, and decode/feature stages are Arrow-batched
-mapInPandas operators whose SCHEMA, PARTITIONING and BATCH SHAPE are real
-and tested. TIFF (+BigTIFF), PNG, JPEG (baseline + progressive),
-RIFF/WAVE + FLAC audio, and MJPEG video (AVI and MP4 jpeg-codec tracks)
-decode for REAL (pure-Python codecs in ..tiff/..png/..jpeg/..flac/..avi/
-..mp4 and decode_wav below). Only mp3 audio and non-MJPEG video pixels
-are stubbed: a clearly marked NotImplementedError path plus a
-deterministic fake used by tests (`fake=True`) that derives features
-from the byte content, keeping every Spark-side contract executable.
+mapInPandas operators. Every decode is REAL (pure-Python codecs in
+..tiff/..png/..jpeg/..avi/..mp4/..h264/..flac/..mp3/..aac and
+decode_wav below): TIFF (+BigTIFF), PNG, JPEG (baseline + progressive),
+video as MJPEG (AVI and MP4 jpeg-codec tracks), uncompressed MP4
+('raw '/'Y800') and CAVLC H.264 MP4, audio as RIFF/WAVE, FLAC, mp3 and
+AAC-LC in MP4. Bytes no codec here can decode never turn into made-up
+pixels or samples: an image gets an error row (or no feature/thumbnail
+row), a malformed video or audio clip yields no rows, and a well-formed
+stream in a codec (or coding tools) the engine does not carry raises
+NotImplementedError.
 
 Operators:
   sniff_format       magic-byte detection (the reference's
                      `file -b --mime-type` check, preview.geoshp/
                      ncsa.geo.shp.py:184-189) — pure column expression
-  decode_image_meta  (w, h, channels, ok, error) per image
+  decode_image_meta  (w, h, ok, error) per image
   image_features     fixed-length float feature vector per image
   resize_image       (w, h) -> (tw, th) thumbnail bytes
   sample_frames      video bytes -> one row per sampled frame (UDTF-style
@@ -26,7 +28,6 @@ Operators:
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from typing import Iterator
 
@@ -73,16 +74,7 @@ def sniff_format(data: Column) -> Column:
     )
 
 
-def _fake_pixels(data: bytes, w: int, h: int) -> np.ndarray:
-    """Deterministic fake decode: pixels derived from a byte-content hash.
-    Stands in for the jpeg/png codec (not installed here); replace the
-    body with PIL/libjpeg on a real cluster."""
-    seed = int.from_bytes(hashlib.sha256(data).digest()[:8], "little")
-    rng = np.random.Generator(np.random.PCG64(seed))
-    return (rng.random((h, w)) * 255).astype(np.uint8)
-
-
-def _decode(data: bytes, fmt: str, fake: bool) -> tuple[np.ndarray | None, str | None]:
+def _decode(data: bytes, fmt: str) -> tuple[np.ndarray | None, str | None]:
     if fmt == "tiff":
         try:
             info = tiff.read_info(data)
@@ -99,8 +91,6 @@ def _decode(data: bytes, fmt: str, fake: bool) -> tuple[np.ndarray | None, str |
                 arr = arr[:, :, 0] if arr.shape[2] == 2 else arr[:, :, :3].mean(axis=2)
             return arr.astype(np.float64), None
         except Exception:
-            if fake:
-                return _fake_pixels(data, 16, 16).astype(np.float64), None
             return None, "bad png"
     if fmt == "jpeg":
         # REAL decode (pure-Python baseline codec in ..jpeg); luminance for
@@ -111,8 +101,6 @@ def _decode(data: bytes, fmt: str, fake: bool) -> tuple[np.ndarray | None, str |
                 arr = arr.astype(np.float64).mean(axis=2)
             return arr.astype(np.float64), None
         except Exception:
-            if fake:
-                return _fake_pixels(data, 16, 16).astype(np.float64), None
             return None, "bad jpeg"
     return None, f"unsupported format {fmt}"
 
@@ -202,7 +190,7 @@ def image_text_meta(images: DataFrame, id_col: str = "image_id") -> DataFrame:
     return images.select(F.col(id_col), "bytes").mapInPandas(run, IMAGE_TEXT_SCHEMA)
 
 
-def decode_image_meta(images: DataFrame, fake: bool = True) -> DataFrame:
+def decode_image_meta(images: DataFrame) -> DataFrame:
     """Narrow Arrow stage: bytes -> (w, h, ok, error). Bytes pruned from
     the output."""
 
@@ -212,11 +200,7 @@ def decode_image_meta(images: DataFrame, fake: bool = True) -> DataFrame:
             for iid, data in zip(b["image_id"], b["bytes"]):
                 data = bytes(data)
                 fmt = _sniff_py(data)
-                arr, err = None, None
-                try:
-                    arr, err = _decode(data, fmt, fake)
-                except NotImplementedError as ex:
-                    err = str(ex)
+                arr, err = _decode(data, fmt)
                 rows.append({
                     "image_id": iid, "fmt_sniffed": fmt,
                     "w": arr.shape[1] if arr is not None else None,
@@ -250,7 +234,7 @@ FEAT_SCHEMA = T.StructType(
 )
 
 
-def image_features(images: DataFrame, fake: bool = True) -> DataFrame:
+def image_features(images: DataFrame) -> DataFrame:
     """Fixed-length feature vector per image (histogram of pixel
     intensities — a deterministic, codec-independent featurizer; swap in a
     CNN embedding UDF on a real cluster with the same schema)."""
@@ -260,10 +244,7 @@ def image_features(images: DataFrame, fake: bool = True) -> DataFrame:
             rows = []
             for iid, data in zip(b["image_id"], b["bytes"]):
                 data = bytes(data)
-                try:
-                    arr, err = _decode(data, _sniff_py(data), fake)
-                except NotImplementedError:
-                    arr = None
+                arr, _err = _decode(data, _sniff_py(data))
                 if arr is None:
                     continue
                 finite = arr[np.isfinite(arr)]
@@ -286,7 +267,7 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize_image(images: DataFrame, tw: int = 8, th: int = 8, fake: bool = True) -> DataFrame:
+def resize_image(images: DataFrame, tw: int = 8, th: int = 8) -> DataFrame:
     """Nearest-neighbor thumbnail (same kernel as tiles.render_gray)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -294,10 +275,7 @@ def resize_image(images: DataFrame, tw: int = 8, th: int = 8, fake: bool = True)
             rows = []
             for iid, data in zip(b["image_id"], b["bytes"]):
                 data = bytes(data)
-                try:
-                    arr, err = _decode(data, _sniff_py(data), fake)
-                except NotImplementedError:
-                    arr = None
+                arr, _err = _decode(data, _sniff_py(data))
                 if arr is None:
                     continue
                 h, w = arr.shape
@@ -313,8 +291,8 @@ def resize_image(images: DataFrame, tw: int = 8, th: int = 8, fake: bool = True)
 def mp4_meta(data: bytes) -> dict:
     """Real ISO-BMFF (MP4) container parse, pure stdlib: walks the box
     tree to mvhd (timescale/duration) and the first video tkhd (w, h).
-    No frame decode — sample_frames uses this for REAL durations and
-    timestamps while frame pixels stay stubbed (no codec here)."""
+    No frame decode — sample_frames uses it to tell a well-formed MP4 in
+    an unsupported codec from malformed bytes."""
     import struct as _s
 
     def boxes(buf, start, end):
@@ -383,16 +361,18 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(videos: DataFrame, every_ms: int = 1000, fake: bool = True,
+def sample_frames(videos: DataFrame, every_ms: int = 1000,
                   id_col: str = "video_id") -> DataFrame:
     """Video -> frames (1 row in, N rows out — same explode shape as the
     tile pyramid). Frame bytes are row-major uint8 grayscale (fw x fh).
 
-    REAL end-to-end for MJPEG-in-AVI: the container parse (..avi) yields
-    per-frame JFIF bytes decoded by the in-repo JPEG codec — actual
-    pixels, actual fps-derived timestamps. MP4 inputs get REAL durations/
-    timestamps from the mvhd parse but fake pixels (no H.264 codec here);
-    other formats are fully fake (fake=True) or a clear stub error."""
+    Every frame is REAL: MJPEG-in-AVI (..avi + the in-repo JPEG codec,
+    fps-derived timestamps) and MP4 tracks in JPEG, uncompressed or
+    CAVLC H.264 (..h264) coding, with timestamps from the
+    stbl/trun sample tables. Malformed or truncated bytes yield zero
+    frames (callers anti-join ids to find them); a well-formed MP4 whose
+    codec or H.264 coding tools the engine does not carry raises
+    NotImplementedError — never made-up frames."""
 
     from .. import avi as _avi
     from .. import mp4 as _mp4
@@ -407,7 +387,7 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000, fake: bool = True,
                         parsed = _avi.read_mjpeg_avi(data)
                     except Exception:
                         # malformed crawl bytes raise struct.error/Index-
-                        # Error too — NEVER kill the job, fall through
+                        # Error too — NEVER kill the job, drop the row
                         parsed = None
                     if parsed is not None:
                         fps = parsed["fps"] or 1.0
@@ -421,7 +401,6 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000, fake: bool = True,
                                          "fw": arr.shape[1], "fh": arr.shape[0],
                                          "frame": arr.tobytes()})
                         continue
-                duration_ms = None
                 wellformed_mp4 = False
                 if len(data) > 12 and data[4:8] == b"ftyp":
                     try:
@@ -434,11 +413,11 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000, fake: bool = True,
                     except (ValueError, IndexError, struct.error, KeyError):
                         parsed = None
                     if parsed is not None and parsed.get("codec") == "h264":
-                        # REAL pixels for baseline intra streams: I_PCM
-                        # bit-exact, CAVLC I_4x4/I_16x16 entropy-decoded
-                        # (..h264, r5). CABAC / inter slices raise
-                        # ValueError -> the well-formed-unsupported
-                        # contract below (real duration either way)
+                        # REAL pixels for CAVLC streams (..h264): I_PCM
+                        # bit-exact, intra + P + B entropy-decoded.
+                        # Out-of-profile streams (CABAC among them)
+                        # raise ValueError -> the well-formed-unsupported
+                        # contract below
                         try:
                             from .. import h264 as _h264
 
@@ -464,13 +443,11 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000, fake: bool = True,
                                              "frame": arr.tobytes()})
                             continue
                         except (ValueError, IndexError, struct.error):
-                            # corrupt/unsupported sample bytes: errors-as-
-                            # data, never a task failure.  Only data-shaped
-                            # exception types are absorbed — a genuine
-                            # programming error in the codec propagates
-                            # instead of masquerading as an unsupported
-                            # stream (ADVICE r5)
-                            duration_ms = parsed["duration_ms"]
+                            # corrupt/unsupported sample bytes.  Only
+                            # data-shaped exception types are absorbed — a
+                            # genuine programming error in the codec
+                            # propagates instead of masquerading as an
+                            # unsupported stream (ADVICE r5)
                             wellformed_mp4 = True
                             parsed = None
                     if parsed is not None:
@@ -504,33 +481,21 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000, fake: bool = True,
                                          "frame": arr.tobytes()})
                         continue
                     try:
-                        # non-JPEG codec: REAL container parse still gives
-                        # real durations/timestamps; only frame PIXELS are
-                        # stubbed (no H.264/H.265 codec in this container)
-                        duration_ms = int(mp4_meta(data)["duration_s"] * 1000)
+                        mp4_meta(data)  # parses: a well-formed container
                         wellformed_mp4 = True
-                    except Exception:  # malformed boxes: fall to fake/stub
-                        duration_ms = None
-                seed = int.from_bytes(hashlib.sha256(data).digest()[:8], "little")
-                if not fake:
-                    if wellformed_mp4:
-                        # STUB: a genuinely unsupported-but-WELL-FORMED
-                        # codec. Real deployment decodes with ffmpeg here.
-                        raise NotImplementedError(
-                            "video codec not available in this container"
-                        )
-                    # malformed/truncated crawl bytes: drop the row (zero
-                    # frames) so callers can anti-join undecodable ids —
-                    # mirrors audio_features; never kills the Spark task
-                    # (ADVICE r03 medium)
-                    continue
-                if duration_ms is None:
-                    duration_ms = 2000 + seed % 8000  # 2-10 s
-                for i, ts in enumerate(range(0, duration_ms, every_ms)):
-                    rng = np.random.Generator(np.random.PCG64(seed + i))
-                    frame = (rng.random((8, 8)) * 255).astype(np.uint8)
-                    rows.append({"video_id": vid, "frame_idx": i, "ts_ms": ts,
-                                 "fw": 8, "fh": 8, "frame": frame.tobytes()})
+                    except Exception:  # malformed boxes
+                        pass
+                if wellformed_mp4:
+                    # a genuinely unsupported-but-WELL-FORMED codec (or
+                    # H.264 coding tools outside the in-repo CAVLC
+                    # profile). Real deployment decodes with ffmpeg here.
+                    raise NotImplementedError(
+                        "video codec not available in this container"
+                    )
+                # malformed/truncated crawl bytes: drop the row (zero
+                # frames) so callers can anti-join undecodable ids —
+                # mirrors audio_features; never kills the Spark task
+                # (ADVICE r03 medium)
             yield pd.DataFrame(
                 rows, columns=["video_id", "frame_idx", "ts_ms", "fw", "fh", "frame"]
             )
@@ -660,12 +625,14 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     return a, rate
 
 
-def audio_features(audios: DataFrame, fake: bool = True, id_col: str = "audio_id",
+def audio_features(audios: DataFrame, id_col: str = "audio_id",
                    window_ms: int = 100) -> DataFrame:
     """Audio -> windowed energy features (MFCC stand-in; same schema).
-    RIFF/WAVE, FLAC and in-profile mp3 inputs decode FOR REAL
-    (decode_wav / ..flac / ..mp3); other formats fall back to the
-    deterministic fake (fake=True) or a clear stub error."""
+    RIFF/WAVE, FLAC, in-profile mp3 and AAC-LC-in-MP4 inputs decode FOR
+    REAL (decode_wav / ..flac / ..mp3 / ..aac). A well-formed mp3 or
+    mp4a stream outside the in-repo codec profile raises
+    NotImplementedError; malformed bytes and unknown containers drop
+    the row (callers anti-join ids to find them)."""
 
     from .. import flac as _flac
     from .. import mp3 as _mp3
@@ -691,21 +658,14 @@ def audio_features(audios: DataFrame, fake: bool = True, id_col: str = "audio_id
 
                             tr = _mp4a.read_audio_track(data)
                             if tr["pcm"] is None:
-                                if not fake:
-                                    # well-formed mp4a OUTSIDE the in-repo
-                                    # AAC-LC profile (..aac decodes mono
-                                    # SCE + stereo CPE, long and
-                                    # EIGHT_SHORT windows, codebooks
-                                    # 0..11 for real since r6; real-world
-                                    # ISO Huffman assignments, M/S or
-                                    # intensity stereo, PNS, TNS, and
-                                    # >2ch land here): the documented
-                                    # unsupported-codec stub (real deploy:
-                                    # ffmpeg). Malformed falls to except.
-                                    raise NotImplementedError(
-                                        "AAC stream outside the in-repo codec profile"
-                                    )
-                                raise ValueError("fake fallback")
+                                # well-formed mp4a OUTSIDE the in-repo
+                                # AAC-LC profile (real-world ISO Huffman
+                                # assignments land here): the documented
+                                # unsupported-codec stub (real deploy:
+                                # ffmpeg). Malformed falls to except.
+                                raise NotImplementedError(
+                                    "AAC stream outside the in-repo codec profile"
+                                )
                             sig, rate = tr["pcm"], tr["rate"]
                         else:
                             sig, rate = _mp3.decode(data)
@@ -713,7 +673,7 @@ def audio_features(audios: DataFrame, fake: bool = True, id_col: str = "audio_id
                         raise  # well-formed unsupported codec: surfaced
                     except Exception:
                         sig = None  # malformed input (ValueError/struct.
-                        # error/IndexError): fake-fallback or drop
+                        # error/IndexError): drop
                     if sig is not None:
                         dur = sig.size / rate
                         wlen = max(int(rate * window_ms / 1000), 1)
@@ -724,38 +684,21 @@ def audio_features(audios: DataFrame, fake: bool = True, id_col: str = "audio_id
                         rows.append({"audio_id": aid, "duration_s": dur,
                                      "n_windows": n_win, "features": feat.tolist()})
                         continue
-                    if not fake:
-                        if is_mp3:
-                            try:
-                                _mp3.parse_mp3_info(data)
-                            except Exception:
-                                continue  # malformed mp3: drop the row
-                            # well-formed MPEG stream outside the in-repo
-                            # codec profile (foreign Huffman, short
-                            # blocks, bit reservoir, intensity stereo,
-                            # MPEG-2.5 — mono/stereo/M-S and MPEG-2 LSF
-                            # decode for real since r6): the same
-                            # well-formed-but-unsupported raise contract
-                            # as video codecs. STUB: a real deployment
-                            # decodes via libmad/ffmpeg here.
-                            raise NotImplementedError(
-                                "mp3 stream outside the in-repo codec profile"
-                            )
-                        continue  # dropped; callers anti-join ids to find casualties
-                if not fake:
-                    # unknown container with fake disabled: drop the row
-                    continue
-                seed = int.from_bytes(hashlib.sha256(data).digest()[:8], "little")
-                rng = np.random.Generator(np.random.PCG64(seed))
-                dur = 1.0 + (seed % 9000) / 1000.0
-                n_win = int(dur * 10)
-                sig = rng.standard_normal(n_win * 10)
-                windows = sig.reshape(n_win, 10)
-                energy = (windows ** 2).mean(axis=1)[:FEAT_DIM]
-                feat = np.zeros(FEAT_DIM, dtype=np.float32)
-                feat[: energy.size] = energy
-                rows.append({"audio_id": aid, "duration_s": dur,
-                             "n_windows": n_win, "features": feat.tolist()})
+                    if is_mp3:
+                        try:
+                            _mp3.parse_mp3_info(data)
+                        except Exception:
+                            continue  # malformed mp3: drop the row
+                        # well-formed MPEG stream outside the in-repo
+                        # codec profile (real-world ISO Huffman payloads,
+                        # MPEG-2.5): the same well-formed-but-unsupported
+                        # raise contract as video codecs. STUB: a real
+                        # deployment decodes via libmad/ffmpeg here.
+                        raise NotImplementedError(
+                            "mp3 stream outside the in-repo codec profile"
+                        )
+                # malformed bytes or an unknown container: drop the row;
+                # callers anti-join ids to find casualties
             yield pd.DataFrame(rows, columns=["audio_id", "duration_s", "n_windows", "features"])
 
     return audios.select(F.col(id_col), "bytes").mapInPandas(run, AUDIO_SCHEMA)

@@ -137,7 +137,7 @@ def test_audio_features_aac_end_to_end(spark):
     data = mp4.write_aac_mp4(sig, rate)
     df = spark.createDataFrame([("a1", bytearray(data))],
                                "audio_id string, bytes binary")
-    rows = M.audio_features(df, fake=False).collect()
+    rows = M.audio_features(df).collect()
     assert len(rows) == 1
     r = rows[0]
     # decoded length: ceil(48000/1024)=47 full AUs kept -> 48128 samples
@@ -272,7 +272,7 @@ def test_aac_wav_feature_parity_stereo(spark):
            + b"data" + _s.pack("<I", len(pcm)) + pcm)
     rows.append(("wav", bytearray(wav)))
     df = spark.createDataFrame(rows, "audio_id string, bytes binary")
-    out = {r["audio_id"]: r for r in M.audio_features(df, fake=False).collect()}
+    out = {r["audio_id"]: r for r in M.audio_features(df).collect()}
     ref = out["wav"]
     for kind in ("aac_long", "aac_short"):
         got = out[kind]
@@ -344,7 +344,7 @@ def test_ms_stereo_wav_feature_parity(spark):
     wav_bytes = MM.write_wav((st.mean(axis=1) * 32767).astype(np.int16),
                              rate) if hasattr(MM, "write_wav") else None
     df = spark.createDataFrame([("ms", aac_bytes)], ["audio_id", "bytes"])
-    out = MM.audio_features(df, fake=False).collect()
+    out = MM.audio_features(df).collect()
     assert len(out) == 1 and abs(out[0]["duration_s"] - 1.0) < 0.1
 
 
@@ -755,7 +755,7 @@ def test_multichannel_mp4_container_and_features(spark):
     assert _snr(sig[:, :5].mean(axis=1), tr["pcm"]) >= 50.0
     df = spark.createDataFrame([("a51", bytearray(data))],
                                "audio_id string, bytes binary")
-    rows = M.audio_features(df, fake=False).collect()
+    rows = M.audio_features(df).collect()
     assert len(rows) == 1
     assert abs(rows[0]["duration_s"] - 24576 / 48000) < 1e-6  # 24 AUs
     assert all(np.isfinite(rows[0]["features"]))

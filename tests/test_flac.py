@@ -72,7 +72,7 @@ def test_audio_features_decodes_flac_for_real(spark):
         [("wav", bytearray(wav)), ("flac", bytearray(fl))],
         "audio_id string, bytes binary",
     )
-    rows = {r["audio_id"]: r for r in M.audio_features(df, fake=False).collect()}
+    rows = {r["audio_id"]: r for r in M.audio_features(df).collect()}
     assert rows["flac"]["duration_s"] == rows["wav"]["duration_s"] == 2.0
     assert rows["flac"]["n_windows"] == rows["wav"]["n_windows"]
     np.testing.assert_allclose(rows["flac"]["features"], rows["wav"]["features"], rtol=1e-6)

@@ -32,14 +32,9 @@ def test_emulation_prevention_inverse():
     assert b"\x00\x00\x01" not in h264._ep_insert(b"\x00\x00\x01\x00\x00\x01")
 
 
-def test_cabac_flag_mismatch_is_errors_as_data():
-    """A CABAC-flagged PPS over CAVLC slice data (mismatched container
-    metadata) raises ValueError instead of garbling — since r6 the CABAC
-    path is real (h264_cabac), so the failure is an alignment/desync
-    error rather than an unsupported-feature stub."""
-    import struct
-
-    avcc = bytearray(h264.build_avcc(16, 16))
+def _cabac_flagged(avcc: bytes) -> bytes:
+    """The avcC with its PPS entropy_coding_mode_flag set to 1 (CABAC)."""
+    avcc = bytearray(avcc)
     # locate the PPS RBSP: 6 cfg bytes + sps_len + (1 numPPS byte + 2 len)
     (sps_len,) = struct.unpack(">H", bytes(avcc[6:8]))
     pps_off = 8 + sps_len + 1 + 2 + 1  # + NAL header byte
@@ -49,11 +44,59 @@ def test_cabac_flag_mismatch_is_errors_as_data():
     bitpos = r.pos  # entropy_coding_mode_flag position
     patched = bytearray(first)
     patched[bitpos >> 3] |= 0x80 >> (bitpos & 7)
-    avcc = bytes(avcc[:pps_off]) + h264._ep_insert(bytes(patched))
+    return bytes(avcc[:pps_off]) + h264._ep_insert(bytes(patched))
+
+
+def test_cabac_flag_mismatch_is_errors_as_data():
+    """A CABAC-flagged PPS (entropy_coding_mode_flag 1) raises ValueError
+    instead of garbling: CABAC is outside the decoder's scope, so the
+    stream takes the errors-as-data path callers map to the
+    well-formed-unsupported contract."""
+    avcc = _cabac_flagged(h264.build_avcc(16, 16))
     img = np.zeros((16, 16), np.uint8)
     _, samples = h264.encode_frames([img])
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="CABAC"):
         h264.decode_sample(samples[0], avcc)
+
+
+def test_sample_frames_cabac_clip_raises(spark):
+    """A well-formed MP4 whose avcC advertises CABAC takes sample_frames'
+    well-formed-unsupported branch: the job fails with the
+    unsupported-codec error instead of emitting frame rows. The same
+    clip with its CAVLC avcC yields real frames."""
+    from extractors_geo_spark.operators import multimodal as M
+
+    frames = [np.full((16, 16), 40 * f, np.uint8) for f in range(2)]
+    avcc, samples = h264.encode_frames(frames)
+
+    def clip(rec):
+        return bytearray(mp4._assemble_mp4(
+            samples, 16, 16, 1, fourcc=b"avc1", depth=24,
+            entry_extra=mp4._box(b"avcC", rec)))
+
+    base = spark.createDataFrame([("cavlc", clip(avcc))],
+                                 "video_id string, bytes binary")
+    assert M.sample_frames(base, every_ms=1000).count() == 2
+    df = spark.createDataFrame([("cabac", clip(_cabac_flagged(avcc)))],
+                               "video_id string, bytes binary")
+    with pytest.raises(Exception, match="video codec not available"):
+        M.sample_frames(df, every_ms=1000).collect()
+
+
+def test_h264_frames_query_matches_its_oracle(spark):
+    """The h264_frames entry of queries() against its SQL oracle on
+    DuckDB: same rows, same columns (the fan-out of clip, frame,
+    timestamp and dims over every coding shape)."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    df = E.queries()["h264_frames"](spark, "")
+    res = duckdb.connect().execute(E.SQL_H264_FRAMES)
+    cols = [d[0] for d in res.description]
+    assert sorted(df.columns) == sorted(cols)
+    got = sorted(tuple(r) for r in df.select(*cols).collect())
+    assert got == sorted(res.fetchall())
 
 
 def test_vlc_tables_prefix_free():
@@ -201,7 +244,7 @@ def test_sample_frames_cavlc_h264_end_to_end(spark):
     src = [((xx * 5 + yy * 3 + 13 * f) % 251).astype(np.uint8) for f in range(4)]
     data = mp4.write_h264_mp4(src, fps=2, qp=8)
     df = spark.createDataFrame([("hc1", bytearray(data))], "video_id string, bytes binary")
-    rows = sorted(M.sample_frames(df, every_ms=1000, fake=False).collect(),
+    rows = sorted(M.sample_frames(df, every_ms=1000).collect(),
                   key=lambda r: r["frame_idx"])
     assert [r["ts_ms"] for r in rows] == [0, 1000]
     for r in rows:
@@ -218,7 +261,7 @@ def test_sample_frames_ipcm_h264_end_to_end(spark):
     src = [((xx * 5 + yy * 3 + 13 * f) % 251).astype(np.uint8) for f in range(4)]
     data = mp4.write_h264_mp4(src, fps=2)  # 2 s clip
     df = spark.createDataFrame([("h1", bytearray(data))], "video_id string, bytes binary")
-    rows = sorted(M.sample_frames(df, every_ms=1000, fake=False).collect(),
+    rows = sorted(M.sample_frames(df, every_ms=1000).collect(),
                   key=lambda r: r["frame_idx"])
     assert [r["ts_ms"] for r in rows] == [0, 1000]
     for r in rows:
@@ -305,7 +348,7 @@ def test_sample_frames_gop_h264_end_to_end(spark):
     data = mp4.write_h264_mp4(src, fps=1, qp=8, gop=4)  # 4 s clip
     df = spark.createDataFrame([("g1", bytearray(data))],
                                "video_id string, bytes binary")
-    rows = sorted(M.sample_frames(df, every_ms=1000, fake=False).collect(),
+    rows = sorted(M.sample_frames(df, every_ms=1000).collect(),
                   key=lambda r: r["frame_idx"])
     assert [r["ts_ms"] for r in rows] == [0, 1000, 2000, 3000]
     for r in rows:
@@ -491,7 +534,7 @@ def test_sample_frames_bframes_end_to_end(spark):
     data = mp4.write_h264_mp4(frames, fps=2, qp=12, gop=8, bframes=2)
     df = spark.createDataFrame([("vb", bytearray(data))],
                                "video_id string, bytes binary")
-    out = M.sample_frames(df, every_ms=500, fake=False).collect()
+    out = M.sample_frames(df, every_ms=500).collect()
     assert len(out) == 9
     for r in out:
         arr = np.frombuffer(r["frame"], np.uint8).reshape(r["fh"], r["fw"])
@@ -501,23 +544,22 @@ def test_sample_frames_bframes_end_to_end(spark):
 
 
 def test_b_skip_and_direct_modes():
-    """r6: B_SKIP collapses static B pictures to a handful of bytes in
-    both entropy modes, and B_Direct_16x16 (spatial) round-trips
+    """r6: B_SKIP collapses static B pictures to a handful of bytes,
+    and B_Direct_16x16 (spatial) round-trips
     bit-exactly with residuals."""
     import struct
 
     yy, xx = np.mgrid[0:48, 0:64]
     img = np.clip(128 + 80 * np.sin(xx / 6), 0, 255).astype(np.uint8)
     static = [img] * 5
-    for entropy in ("cavlc", "cabac"):
-        avcc, samples, disp = h264.encode_frames_bgop(
-            static, qp=12, gop=8, bframes=2, entropy=entropy)
-        b_sizes = [len(s) for s, d in zip(samples, disp) if d in (1, 2)]
-        assert b_sizes and all(b < 40 for b in b_sizes), (entropy, b_sizes)
-        decs = h264.decode_samples(samples, avcc)
-        for d in decs:  # B recon averages the two refs: near-identical
-            mse = float(np.mean((d.astype(np.float64) - img) ** 2))
-            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
+    avcc, samples, disp = h264.encode_frames_bgop(
+        static, qp=12, gop=8, bframes=2)
+    b_sizes = [len(s) for s, d in zip(samples, disp) if d in (1, 2)]
+    assert b_sizes and all(b < 40 for b in b_sizes), b_sizes
+    decs = h264.decode_samples(samples, avcc)
+    for d in decs:  # B recon averages the two refs: near-identical
+        mse = float(np.mean((d.astype(np.float64) - img) ** 2))
+        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
     # direct WITH residual: slight global brightness change -> direct MVs
     # predict perfectly modulo a DC shift the residual carries
     brighter = np.clip(img.astype(np.int32) + 6, 0, 255).astype(np.uint8)
@@ -544,34 +586,29 @@ def test_b_skip_and_direct_modes():
 
 
 def test_fuzzed_bgop_samples_never_escape_valueerror():
-    """Corrupted B-GOP samples (both entropy modes) decode-or-ValueError,
+    """Corrupted B-GOP samples decode-or-ValueError,
     never IndexError/TypeError (errors-as-data for Spark tasks)."""
     rng = np.random.default_rng(31)
     yy, xx = np.mgrid[0:32, 0:32]
     frames = [np.clip(128 + 90 * np.sin((xx + 3 * f) / 5), 0, 255)
               .astype(np.uint8) for f in range(6)]
-    for entropy in ("cavlc", "cabac"):
-        avcc, samples, _disp = h264.encode_frames_bgop(
-            frames, qp=10, gop=8, bframes=2, entropy=entropy)
-        for _ in range(120):
-            si = int(rng.integers(0, len(samples)))
-            mut = bytearray(samples[si])
-            mut[int(rng.integers(5, len(mut)))] ^= 1 << int(rng.integers(0, 8))
-            muts = list(samples)
-            muts[si] = bytes(mut)
-            try:
-                h264.decode_samples(muts, avcc)
-            except ValueError:
-                pass
+    avcc, samples, _disp = h264.encode_frames_bgop(
+        frames, qp=10, gop=8, bframes=2)
+    for _ in range(120):
+        si = int(rng.integers(0, len(samples)))
+        mut = bytearray(samples[si])
+        mut[int(rng.integers(5, len(mut)))] ^= 1 << int(rng.integers(0, 8))
+        muts = list(samples)
+        muts[si] = bytes(mut)
+        try:
+            h264.decode_samples(muts, avcc)
+        except ValueError:
+            pass
 
 
-def test_p8x8_partitions_roundtrip_both_entropy_modes():
+def test_p8x8_partitions_roundtrip():
     """r6: P_8x8 (one 8x8 partition per sub-MB, quad motion) decodes
-    bit-exactly in CAVLC and CABAC, with the P_8x8 path exercised."""
-    import struct
-
-    from extractors_geo_spark import h264_cabac as C
-
+    bit-exactly, with the P_8x8 path exercised."""
     yy, xx = np.mgrid[0:32, 0:32]
     base = np.clip(128 + 90 * np.sin(xx / 3.5) + 20 * np.cos(yy / 5),
                    0, 255).astype(np.uint8)
@@ -586,32 +623,27 @@ def test_p8x8_partitions_roundtrip_both_entropy_modes():
         return out
 
     frames = [frame(f) for f in range(4)]
-    for cabac in (False, True):
-        avcc = h264.build_avcc(32, 32, deblock_ctrl=True, cabac=cabac)
-        enc_i = C.encode_idr_cabac if cabac else h264.encode_idr_cavlc
-        enc_p = C.encode_p_cabac if cabac else h264.encode_p_cavlc
-        target = C if cabac else h264
-        name = "_dec_mb_p8x8" if cabac else "_decode_mb_p8x8"
-        hits = []
-        orig = getattr(target, name)
+    avcc = h264.build_avcc(32, 32, deblock_ctrl=True)
+    hits = []
+    orig = h264._decode_mb_p8x8
 
-        def spy(*a, **k):
-            hits.append(1)
-            return orig(*a, **k)
+    def spy(*a, **k):
+        hits.append(1)
+        return orig(*a, **k)
 
-        setattr(target, name, spy)
-        try:
-            _, ref = enc_i(frames[0], qp=12, full_recon=True)
-            for fn, f in enumerate(frames[1:], 1):
-                prbsp, recon = enc_p(f, ref, qp=12, frame_num=fn)
-                nal = bytes([0x41]) + h264._ep_insert(prbsp)
-                d = h264.decode_sample(struct.pack(">I", len(nal)) + nal,
-                                       avcc, ref=ref, full_plane=True)
-                assert np.array_equal(d, recon), (cabac, fn)
-                ref = recon
-        finally:
-            setattr(target, name, orig)
-        assert hits, ("P_8x8 never chosen", cabac)
+    h264._decode_mb_p8x8 = spy
+    try:
+        _, ref = h264.encode_idr_cavlc(frames[0], qp=12, full_recon=True)
+        for fn, f in enumerate(frames[1:], 1):
+            prbsp, recon = h264.encode_p_cavlc(f, ref, qp=12, frame_num=fn)
+            nal = bytes([0x41]) + h264._ep_insert(prbsp)
+            d = h264.decode_sample(struct.pack(">I", len(nal)) + nal,
+                                   avcc, ref=ref, full_plane=True)
+            assert np.array_equal(d, recon), fn
+            ref = recon
+    finally:
+        h264._decode_mb_p8x8 = orig
+    assert hits, "P_8x8 never chosen"
 
 
 def test_poc_msb_wrap_derivation():
@@ -633,10 +665,10 @@ def test_poc_msb_wrap_derivation():
     assert h264._poc_msb(14, 16, 0, 16) == 0
 
 
-def test_p_sub8x8_partitions_roundtrip_both_entropy_modes():
+def test_p_sub8x8_partitions_roundtrip():
     """r7: P_8x8 sub-partitions (8x4 / 4x8 / 4x4) — frames with split
     motion INSIDE 8x8 regions force the finer shapes; decode == recon
-    bit-exact in both entropy modes, and at least one nonzero
+    bit-exact, and at least one nonzero
     sub_mb_type is actually chosen (spied on _eval_p8x8's output)."""
     rng = np.random.default_rng(23)
     # low-contrast texture: a single-MV 16x16 prediction lands BETWEEN
@@ -656,37 +688,29 @@ def test_p_sub8x8_partitions_roundtrip_both_entropy_modes():
         f2[:, x0:x0 + 4] = np.roll(base[:, x0:x0 + 4], 3, axis=0)
         f2[:, x0 + 4:x0 + 8] = np.roll(base[:, x0 + 4:x0 + 8], -3, axis=0)
     frames.append(f2)
-    import struct
+    avcc = h264.build_avcc(48, 48, deblock_ctrl=True)
+    chosen_sts = []
+    orig = h264._eval_p8x8
 
-    for cabac in (False, True):
-        if cabac:
-            from extractors_geo_spark import h264_cabac as C
-            enc_i, enc_p = C.encode_idr_cabac, C.encode_p_cabac
-        else:
-            enc_i, enc_p = h264.encode_idr_cavlc, h264.encode_p_cavlc
-        avcc = h264.build_avcc(48, 48, deblock_ctrl=True, cabac=cabac)
-        chosen_sts = []
-        orig = h264._eval_p8x8
+    def spy(*a, **k):
+        tot, parts = orig(*a, **k)
+        chosen_sts.extend(st for st, _ in parts)
+        return tot, parts
 
-        def spy(*a, **k):
-            tot, parts = orig(*a, **k)
-            chosen_sts.extend(st for st, _ in parts)
-            return tot, parts
-
-        h264._eval_p8x8 = spy
-        try:
-            _, ref = enc_i(frames[0], qp=12, full_recon=True)
-            for fn, f in enumerate(frames[1:], 1):
-                prbsp, recon = enc_p(f, ref, qp=12, frame_num=fn)
-                nal = bytes([0x41]) + h264._ep_insert(prbsp)
-                d = h264.decode_sample(struct.pack(">I", len(nal)) + nal,
-                                       avcc, ref=ref, full_plane=True)
-                assert np.array_equal(d, recon), (cabac, fn)
-                ref = recon
-        finally:
-            h264._eval_p8x8 = orig
-        assert any(st != 0 for st in chosen_sts), \
-            (cabac, "no sub-8x8 shape ever chosen", chosen_sts)
+    h264._eval_p8x8 = spy
+    try:
+        _, ref = h264.encode_idr_cavlc(frames[0], qp=12, full_recon=True)
+        for fn, f in enumerate(frames[1:], 1):
+            prbsp, recon = h264.encode_p_cavlc(f, ref, qp=12, frame_num=fn)
+            nal = bytes([0x41]) + h264._ep_insert(prbsp)
+            d = h264.decode_sample(struct.pack(">I", len(nal)) + nal,
+                                   avcc, ref=ref, full_plane=True)
+            assert np.array_equal(d, recon), fn
+            ref = recon
+    finally:
+        h264._eval_p8x8 = orig
+    assert any(st != 0 for st in chosen_sts), \
+        ("no sub-8x8 shape ever chosen", chosen_sts)
 
 
 def test_mvp_sub_parity_random_gop():
@@ -713,7 +737,7 @@ def test_mvp_sub_parity_random_gop():
         assert float(np.abs(got.astype(int) - want.astype(int)).mean()) < 8.0
 
 
-def test_b_partitioned_types_roundtrip_both_entropy_modes():
+def test_b_partitioned_types_roundtrip():
     """r7: partitioned B macroblocks (mb_type 4..21 — 16x8 / 8x16 with
     per-partition L0 / L1 / Bi). Targets whose halves track DIFFERENT
     references force them; decode == recon bit-exact, partitioned types
@@ -732,41 +756,34 @@ def test_b_partitioned_types_roundtrip_both_entropy_modes():
         tgt[y0 + 8:y0 + 16] = np.roll(r1[y0 + 8:y0 + 16], -2, axis=1)
     qp = 12
     flat = lambda v: np.full((2, h // 2, w // 2), v, np.uint8)
-    for cabac in (False, True):
-        if cabac:
-            from extractors_geo_spark import h264_cabac as C
-            enc_i, enc_p, enc_b = (C.encode_idr_cabac, C.encode_p_cabac,
-                                   C.encode_b_cabac)
-        else:
-            enc_i, enc_p, enc_b = (h264.encode_idr_cavlc,
-                                   h264.encode_p_cavlc,
-                                   h264.encode_b_cavlc)
-        _, (ry0, rc0) = enc_i(r0, qp=qp, chroma=flat(90), full_recon=True)
-        _, (ry1, rc1) = enc_p(r1, ry0, qp=qp, chroma=flat(170), cref=rc0,
-                              frame_num=1)
-        hits = []
-        orig = h264._eval_b_partitions
+    enc_i, enc_p, enc_b = (h264.encode_idr_cavlc,
+                           h264.encode_p_cavlc,
+                           h264.encode_b_cavlc)
+    _, (ry0, rc0) = enc_i(r0, qp=qp, chroma=flat(90), full_recon=True)
+    _, (ry1, rc1) = enc_p(r1, ry0, qp=qp, chroma=flat(170), cref=rc0,
+                          frame_num=1)
+    hits = []
+    orig = h264._eval_b_partitions
 
-        def spy(*a, **k):
-            out = orig(*a, **k)
-            hits.append(out[1]["mb_type"])
-            return out
+    def spy(*a, **k):
+        out = orig(*a, **k)
+        hits.append(out[1]["mb_type"])
+        return out
 
-        h264._eval_b_partitions = spy
-        try:
-            rb, (ryb, rcb) = enc_b(tgt, ry0, ry1, qp=qp, chroma=flat(128),
-                                   cref0=rc0, cref1=rc1, poc_lsb=2)
-        finally:
-            h264._eval_b_partitions = orig
-        assert hits and all(4 <= m <= 21 for m in hits), (cabac, hits)
-        avcc = h264.build_avcc(w, h, deblock_ctrl=True, bpoc=True,
-                               cabac=cabac)
-        nal = bytes([0x01]) + h264._ep_insert(rb)
-        sample = struct.pack(">I", len(nal)) + nal
-        dy, dc = h264.decode_sample(sample, avcc, ref=ry0, ref2=ry1,
-                                    cref=rc0, cref2=rc1, full_plane=True,
-                                    with_chroma=True)
-        assert np.array_equal(dy, ryb) and np.array_equal(dc, rcb), cabac
+    h264._eval_b_partitions = spy
+    try:
+        rb, (ryb, rcb) = enc_b(tgt, ry0, ry1, qp=qp, chroma=flat(128),
+                               cref0=rc0, cref1=rc1, poc_lsb=2)
+    finally:
+        h264._eval_b_partitions = orig
+    assert hits and all(4 <= m <= 21 for m in hits), hits
+    avcc = h264.build_avcc(w, h, deblock_ctrl=True, bpoc=True)
+    nal = bytes([0x01]) + h264._ep_insert(rb)
+    sample = struct.pack(">I", len(nal)) + nal
+    dy, dc = h264.decode_sample(sample, avcc, ref=ry0, ref2=ry1,
+                                cref=rc0, cref2=rc1, full_plane=True,
+                                with_chroma=True)
+    assert np.array_equal(dy, ryb) and np.array_equal(dc, rcb)
 
 
 def test_b8x8_sub_partitions_roundtrip_cavlc():
@@ -825,66 +842,6 @@ def test_b8x8_sub_partitions_roundtrip_cavlc():
     assert float(np.abs(ryb.astype(int) - tgt.astype(int)).mean()) < 4.0
 
 
-def test_b8x8_sub_partitions_roundtrip_cabac():
-    """r7: B_8x8 in CABAC entropy mode — same quadrant motion field as
-    the CAVLC twin ('1'/'0'+FL sub_mbt_b binarization, per-list grouped
-    CABAC mvds via the shared _b8x8_list_pass); decode == recon
-    bit-exact and the CABAC B_8x8 decode path actually fires."""
-    import struct
-
-    from extractors_geo_spark import h264_cabac
-
-    rng = np.random.default_rng(17)
-    w, h = 48, 32
-    base = rng.integers(100, 156, (h, w)).astype(np.uint8)
-    r0 = base
-    r1 = np.roll(base, 6, axis=0)
-    tgt = base.copy()
-    quad = [((0, 2), (1, -2)), ((1, 3), (0, -3))]
-    for my in range(h // 16):
-        for mx in range(w // 16):
-            for qy in range(2):
-                for qx in range(2):
-                    ref_i, dx = quad[qy][qx]
-                    src = r0 if ref_i == 0 else r1
-                    ys = slice(my * 16 + qy * 8, my * 16 + qy * 8 + 8)
-                    xs = slice(mx * 16 + qx * 8, mx * 16 + qx * 8 + 8)
-                    tgt[ys, xs] = np.roll(src[ys, xs], dx, axis=1)
-    qp = 12
-    flat = lambda v: np.full((2, h // 2, w // 2), v, np.uint8)
-    _, (ry0, rc0) = h264_cabac.encode_idr_cabac(r0, qp=qp,
-                                                full_recon=True,
-                                                chroma=flat(90))
-    _, (ry1, rc1) = h264_cabac.encode_p_cabac(r1, ry0, qp=qp,
-                                              chroma=flat(170),
-                                              cref=rc0, frame_num=1)
-    rb, (ryb, rcb) = h264_cabac.encode_b_cabac(tgt, ry0, ry1, qp=qp,
-                                               chroma=flat(128),
-                                               cref0=rc0, cref1=rc1,
-                                               poc_lsb=2)
-    avcc = h264.build_avcc(w, h, deblock_ctrl=True, bpoc=True,
-                           cabac=True)
-    nal = bytes([0x01]) + h264._ep_insert(rb)
-    sample = struct.pack(">I", len(nal)) + nal
-    hits = []
-    orig = h264_cabac._dec_mb_b8x8
-
-    def spy(*a, **k):
-        hits.append(1)
-        return orig(*a, **k)
-
-    h264_cabac._dec_mb_b8x8 = spy
-    try:
-        dy, dc = h264.decode_sample(sample, avcc, ref=ry0, ref2=ry1,
-                                    cref=rc0, cref2=rc1, full_plane=True,
-                                    with_chroma=True)
-    finally:
-        h264_cabac._dec_mb_b8x8 = orig
-    assert hits, "no CABAC B_8x8 macroblock decoded — gate regressed"
-    assert np.array_equal(dy, ryb) and np.array_equal(dc, rcb)
-    assert float(np.abs(ryb.astype(int) - tgt.astype(int)).mean()) < 4.0
-
-
 # ------------------------------------------------ r7: temporal direct
 def test_temporal_direct_scaling_math():
     """8.4.1.2.3 MV scaling against hand-computed values: tx/dsf
@@ -919,12 +876,10 @@ def test_temporal_direct_scaling_math():
 
 
 def test_temporal_direct_decode_equals_recon_bit_exact():
-    """Temporal-direct B slices: decode == encoder recon bit-exactly in
-    BOTH entropy modes, including a colocated P with sub-8x8 partitions
+    """Temporal-direct B slices: decode == encoder recon bit-exactly,
+    including a colocated P with sub-8x8 partitions
     (non-uniform per-4x4 col motion -> the per-block MC path)."""
     import struct
-
-    from extractors_geo_spark import h264_cabac
 
     rng = np.random.default_rng(11)
     base = rng.integers(40, 220, (48, 64)).astype(np.uint8)
@@ -938,41 +893,33 @@ def test_temporal_direct_decode_equals_recon_bit_exact():
     # halves move differently -> the P anchor codes distinct MVs, so
     # the colocated field varies MB-to-MB (and within MBs at the seam)
     f0, f1, f2 = base, shifted(2, -2), shifted(4, -4)
-    avcc_cavlc = h264.build_avcc(64, 48, deblock_ctrl=True, bpoc=True)
-    avcc_cabac = h264.build_avcc(64, 48, deblock_ctrl=True, bpoc=True,
-                                 cabac=True)
-    for entropy, avcc in (("cavlc", avcc_cavlc), ("cabac", avcc_cabac)):
-        if entropy == "cabac":
-            enc_i = h264_cabac.encode_idr_cabac
-            enc_p = h264_cabac.encode_p_cabac
-            enc_b = h264_cabac.encode_b_cabac
-        else:
-            enc_i, enc_p, enc_b = (h264.encode_idr_cavlc,
-                                   h264.encode_p_cavlc,
-                                   h264.encode_b_cavlc)
-        _, r0 = enc_i(f0, qp=10, full_recon=True, poc_lsb=0)
-        mo = []
-        _, r2 = enc_p(f2, r0, qp=10, frame_num=1, poc_lsb=4,
-                      motion_out=mo)
-        assert (mo[0][1] >= 0).any(), "P anchor coded no inter MBs"
-        pocs = (2, 0, 4)
-        rb, rec = enc_b(f1, r0, r2, qp=10, poc_lsb=2,
-                        col_motion=mo[0], pocs=pocs)
-        nal = bytes([0x01]) + h264._ep_insert(rb)
-        sample = struct.pack(">I", len(nal)) + nal
-        dec = h264.decode_sample(sample, avcc, ref=r0, ref2=r2,
-                                 full_plane=True, col_motion=mo[0],
-                                 pocs=pocs)
-        assert np.array_equal(dec, rec), entropy
-        # decoding the temporal stream WITHOUT colocated motion raises
-        with pytest.raises(ValueError, match="colocated"):
-            h264.decode_sample(sample, avcc, ref=r0, ref2=r2,
-                               full_plane=True)
+    avcc = h264.build_avcc(64, 48, deblock_ctrl=True, bpoc=True)
+    enc_i, enc_p, enc_b = (h264.encode_idr_cavlc,
+                           h264.encode_p_cavlc,
+                           h264.encode_b_cavlc)
+    _, r0 = enc_i(f0, qp=10, full_recon=True, poc_lsb=0)
+    mo = []
+    _, r2 = enc_p(f2, r0, qp=10, frame_num=1, poc_lsb=4,
+                  motion_out=mo)
+    assert (mo[0][1] >= 0).any(), "P anchor coded no inter MBs"
+    pocs = (2, 0, 4)
+    rb, rec = enc_b(f1, r0, r2, qp=10, poc_lsb=2,
+                    col_motion=mo[0], pocs=pocs)
+    nal = bytes([0x01]) + h264._ep_insert(rb)
+    sample = struct.pack(">I", len(nal)) + nal
+    dec = h264.decode_sample(sample, avcc, ref=r0, ref2=r2,
+                             full_plane=True, col_motion=mo[0],
+                             pocs=pocs)
+    assert np.array_equal(dec, rec)
+    # decoding the temporal stream WITHOUT colocated motion raises
+    with pytest.raises(ValueError, match="colocated"):
+        h264.decode_sample(sample, avcc, ref=r0, ref2=r2,
+                           full_plane=True)
 
 
 def test_temporal_direct_gop_roundtrip_and_skip():
     """encode_frames_bgop(direct="temporal"): full GOP round trip in
-    both entropy modes through decode_samples (which threads the
+    through decode_samples (which threads the
     anchor motion itself), static scenes collapse to temporal B_SKIP,
     and the bitstream genuinely differs from the spatial encode."""
     yy, xx = np.mgrid[0:48, 0:64]
@@ -983,24 +930,23 @@ def test_temporal_direct_gop_roundtrip_and_skip():
                                                    / 7.0), 0, 255),
                          np.full((24, 32), 110)]).astype(np.uint8)
                for f in range(9)]
-    for entropy in ("cavlc", "cabac"):
-        avcc, samples, disp = h264.encode_frames_bgop(
-            frames, qp=8, gop=8, bframes=2, entropy=entropy,
-            chromas=chromas, direct="temporal")
-        # every B slice header carries direct_spatial_mv_pred_flag = 0
-        sps, pps = h264._avcc_param_sets(avcc)
-        n_b = 0
-        for s in samples:
-            typ, ref_idc, hdr = h264._peek_slice(s, avcc, sps, pps)
-            if hdr["is_b"]:
-                n_b += 1
-                assert hdr["direct_spatial"] is False
-        assert n_b >= 4
-        dec = h264.decode_samples(samples, avcc, with_chroma=True)
-        for i, (y, c) in enumerate(dec):
-            assert np.abs(y.astype(int) - frames[i].astype(int)).max() <= 4
-            assert np.abs(c[0].astype(int)
-                          - chromas[i][0].astype(int)).max() <= 12
+    avcc, samples, disp = h264.encode_frames_bgop(
+        frames, qp=8, gop=8, bframes=2,
+        chromas=chromas, direct="temporal")
+    # every B slice header carries direct_spatial_mv_pred_flag = 0
+    sps, pps = h264._avcc_param_sets(avcc)
+    n_b = 0
+    for s in samples:
+        typ, ref_idc, hdr = h264._peek_slice(s, avcc, sps, pps)
+        if hdr["is_b"]:
+            n_b += 1
+            assert hdr["direct_spatial"] is False
+    assert n_b >= 4
+    dec = h264.decode_samples(samples, avcc, with_chroma=True)
+    for i, (y, c) in enumerate(dec):
+        assert np.abs(y.astype(int) - frames[i].astype(int)).max() <= 4
+        assert np.abs(c[0].astype(int)
+                      - chromas[i][0].astype(int)).max() <= 12
     # static scene: temporal direct predicts perfectly -> tiny B_SKIPs
     img = frames[0]
     avcc, samples, disp = h264.encode_frames_bgop(
@@ -1043,48 +989,42 @@ def test_temporal_direct_fuzzed_samples_never_escape_valueerror():
 
 
 # --------------------------------------------- r7: multi-reference P
-def test_multiref_p_decode_equals_recon_both_entropies():
+def test_multiref_p_decode_equals_recon():
     """P slices with num_ref_idx_l0_active = 2: per-partition
-    ref_idx_l0 (te(v) in CAVLC, neighbor-conditioned unary in CABAC),
+    ref_idx_l0 (te(v) in CAVLC),
     decode == recon bit-exact, and ref 1 is genuinely chosen."""
-    from extractors_geo_spark import h264_cabac as C
 
     rng = np.random.default_rng(21)
     base = rng.integers(30, 225, (48, 64)).astype(np.uint8)
     f0, f1, f2 = base, np.roll(base, 6, axis=1), np.roll(base, 1, axis=0)
     ch = [rng.integers(0, 256, (2, 24, 32)).astype(np.uint8)
           for _ in range(3)]
-    for ent in ("cavlc", "cabac"):
-        if ent == "cabac":
-            enc_i, enc_p = C.encode_idr_cabac, C.encode_p_cabac
-        else:
-            enc_i, enc_p = h264.encode_idr_cavlc, h264.encode_p_cavlc
-        avcc = h264.build_avcc(64, 48, deblock_ctrl=True,
-                               cabac=ent == "cabac", nrefs=2)
-        _, r0 = enc_i(f0, qp=10, full_recon=True, chroma=ch[0])
-        _, r1 = enc_p(f1, r0[0], qp=10, frame_num=1, chroma=ch[1],
-                      cref=r0[1])
-        mo = []
-        rb2, r2 = enc_p(f2, [r1[0], r0[0]], qp=10, frame_num=2,
-                        chroma=ch[2], cref=[r1[1], r0[1]], motion_out=mo)
-        assert (mo[0][1] == 1).any(), f"{ent}: ref 1 never chosen"
-        nal = bytes([0x41]) + h264._ep_insert(rb2)
-        sample = struct.pack(">I", len(nal)) + nal
-        dy, dc = h264.decode_sample(sample, avcc, ref=[r1[0], r0[0]],
-                                    cref=[r1[1], r0[1]], full_plane=True,
-                                    with_chroma=True)
-        assert np.array_equal(dy, r2[0]) and np.array_equal(dc, r2[1]), ent
-        # decoding with fewer references than the header declares raises
-        with pytest.raises(ValueError, match="reference"):
-            h264.decode_sample(sample, avcc, ref=r1[0], full_plane=True)
+    enc_i, enc_p = h264.encode_idr_cavlc, h264.encode_p_cavlc
+    avcc = h264.build_avcc(64, 48, deblock_ctrl=True,
+                           nrefs=2)
+    _, r0 = enc_i(f0, qp=10, full_recon=True, chroma=ch[0])
+    _, r1 = enc_p(f1, r0[0], qp=10, frame_num=1, chroma=ch[1],
+                  cref=r0[1])
+    mo = []
+    rb2, r2 = enc_p(f2, [r1[0], r0[0]], qp=10, frame_num=2,
+                    chroma=ch[2], cref=[r1[1], r0[1]], motion_out=mo)
+    assert (mo[0][1] == 1).any(), "ref 1 never chosen"
+    nal = bytes([0x41]) + h264._ep_insert(rb2)
+    sample = struct.pack(">I", len(nal)) + nal
+    dy, dc = h264.decode_sample(sample, avcc, ref=[r1[0], r0[0]],
+                                cref=[r1[1], r0[1]], full_plane=True,
+                                with_chroma=True)
+    assert np.array_equal(dy, r2[0]) and np.array_equal(dc, r2[1])
+    # decoding with fewer references than the header declares raises
+    with pytest.raises(ValueError, match="reference"):
+        h264.decode_sample(sample, avcc, ref=r1[0], full_plane=True)
 
 
 def test_multiref_p_partitioned_macroblocks():
     """Multi-ref ref_idx fields ride through partitioned P macroblocks
-    (16x8/8x16 and P_8x8 sub-shapes) in both entropy modes: content
+    (16x8/8x16 and P_8x8 sub-shapes): content
     with a moving seam forces partitions while the flickering
     background forces ref 1."""
-    from extractors_geo_spark import h264_cabac as C
 
     yy, xx = np.mgrid[0:48, 0:64]
 
@@ -1094,49 +1034,43 @@ def test_multiref_p_partitioned_macroblocks():
         return np.where(yy < 24, a, b).astype(np.uint8)
 
     frames = [fr(0), fr(2), fr(1)]  # frame 2 sits between its refs
-    for ent in ("cavlc", "cabac"):
-        if ent == "cabac":
-            enc_i, enc_p = C.encode_idr_cabac, C.encode_p_cabac
-        else:
-            enc_i, enc_p = h264.encode_idr_cavlc, h264.encode_p_cavlc
-        avcc = h264.build_avcc(64, 48, deblock_ctrl=True,
-                               cabac=ent == "cabac", nrefs=2)
-        _, r0 = enc_i(frames[0], qp=12, full_recon=True)
-        _, r1 = enc_p(frames[1], r0, qp=12, frame_num=1)
-        mo = []
-        rb2, r2 = enc_p(frames[2], [r1, r0], qp=12, frame_num=2,
-                        motion_out=mo)
-        assert (mo[0][1] == 1).any(), ent
-        nal = bytes([0x41]) + h264._ep_insert(rb2)
-        sample = struct.pack(">I", len(nal)) + nal
-        d = h264.decode_sample(sample, avcc, ref=[r1, r0],
-                               full_plane=True)
-        assert np.array_equal(d, r2), ent
+    enc_i, enc_p = h264.encode_idr_cavlc, h264.encode_p_cavlc
+    avcc = h264.build_avcc(64, 48, deblock_ctrl=True,
+                           nrefs=2)
+    _, r0 = enc_i(frames[0], qp=12, full_recon=True)
+    _, r1 = enc_p(frames[1], r0, qp=12, frame_num=1)
+    mo = []
+    rb2, r2 = enc_p(frames[2], [r1, r0], qp=12, frame_num=2,
+                    motion_out=mo)
+    assert (mo[0][1] == 1).any()
+    nal = bytes([0x41]) + h264._ep_insert(rb2)
+    sample = struct.pack(">I", len(nal)) + nal
+    d = h264.decode_sample(sample, avcc, ref=[r1, r0],
+                           full_plane=True)
+    assert np.array_equal(d, r2)
 
 
 def test_multiref_gop_end_to_end_flicker():
     """encode_frames(nrefs=2) through decode_samples: flickering A/B/A
     content makes the 2-back reference the perfect match — later P
     slices collapse to skip-dominated slices (< 100 bytes) and the
-    whole clip decodes at >= 45 dB in both entropy modes; nrefs=1 on
+    whole clip decodes at >= 45 dB; nrefs=1 on
     the same content stays large (the niche is real)."""
     rng = np.random.default_rng(22)
     a = rng.integers(30, 225, (48, 64)).astype(np.uint8)
     b = rng.integers(30, 225, (48, 64)).astype(np.uint8)  # independent:
     fl = [a, b, a, b, a, b]  # 1-back motion search cannot predict it
     sz1 = None
-    for ent in ("cavlc", "cabac"):
-        avcc, samples = h264.encode_frames(fl, qp=8, gop=8, entropy=ent,
-                                           nrefs=2)
-        tail = [len(s) for s in samples[2:]]
-        assert all(t < 100 for t in tail), (ent, tail)
-        for d, f in zip(h264.decode_samples(samples, avcc), fl):
-            mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
-        if ent == "cavlc":
-            sz1 = sum(len(s) for s in
-                      h264.encode_frames(fl, qp=8, gop=8, nrefs=1)[1])
-            assert sz1 > 2 * sum(len(s) for s in samples)
+    avcc, samples = h264.encode_frames(fl, qp=8, gop=8,
+                                       nrefs=2)
+    tail = [len(s) for s in samples[2:]]
+    assert all(t < 100 for t in tail), tail
+    for d, f in zip(h264.decode_samples(samples, avcc), fl):
+        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
+        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
+    sz1 = sum(len(s) for s in
+              h264.encode_frames(fl, qp=8, gop=8, nrefs=1)[1])
+    assert sz1 > 2 * sum(len(s) for s in samples)
     # mp4 end-to-end via the real sample_frames decode path
     data = mp4.write_h264_mp4(fl, fps=2, qp=8, gop=8, nrefs=2)
     parsed = mp4.read_mjpeg_mp4(data)
@@ -1153,21 +1087,20 @@ def test_multiref_fuzz_never_escapes_valueerror():
     rng = np.random.default_rng(23)
     a = rng.integers(30, 225, (32, 48)).astype(np.uint8)
     fl = [a, np.roll(a, 5, axis=1), a, np.roll(a, 2, axis=0)]
-    for ent in ("cavlc", "cabac"):
-        avcc, samples = h264.encode_frames(fl, qp=10, gop=8, entropy=ent,
-                                           nrefs=2)
-        random.seed(11)
-        for _ in range(40):
-            mut = list(samples)
-            k = random.randrange(1, len(mut))
-            s = bytearray(mut[k])
-            for _j in range(random.randint(1, 3)):
-                s[random.randrange(8, len(s))] = random.randrange(256)
-            mut[k] = bytes(s)
-            try:
-                h264.decode_samples(mut, avcc)
-            except ValueError:
-                pass
+    avcc, samples = h264.encode_frames(fl, qp=10, gop=8,
+                                       nrefs=2)
+    random.seed(11)
+    for _ in range(40):
+        mut = list(samples)
+        k = random.randrange(1, len(mut))
+        s = bytearray(mut[k])
+        for _j in range(random.randint(1, 3)):
+            s[random.randrange(8, len(s))] = random.randrange(256)
+        mut[k] = bytes(s)
+        try:
+            h264.decode_samples(mut, avcc)
+        except ValueError:
+            pass
 
 
 # ------------------------------------------ r7: weighted prediction (P)
@@ -1178,49 +1111,46 @@ def _fade_frames(n=5, shape=(48, 64), seed=7):
                     0, 255).astype(np.uint8) for i in range(n)]
 
 
-def test_weighted_prediction_fade_both_entropies():
+def test_weighted_prediction_fade():
     """encode_frames(wp=True) on a global fade: explicit per-slice
     gain/offset makes the P slices collapse (< 0.6x the unweighted
-    stream) while the decode stays >= 45 dB in both entropy modes."""
+    stream) while the decode stays >= 45 dB."""
     fl = _fade_frames()
-    for ent in ("cavlc", "cabac"):
-        avcc, samples = h264.encode_frames(fl, qp=8, gop=8, entropy=ent,
-                                           wp=True)
-        for d, f in zip(h264.decode_samples(samples, avcc), fl):
-            mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
-        sz_wp = sum(len(s) for s in samples)
-        sz_no = sum(len(s) for s in
-                    h264.encode_frames(fl, qp=8, gop=8, entropy=ent)[1])
-        assert sz_wp < 0.6 * sz_no, (ent, sz_wp, sz_no)
+    avcc, samples = h264.encode_frames(fl, qp=8, gop=8,
+                                       wp=True)
+    for d, f in zip(h264.decode_samples(samples, avcc), fl):
+        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
+        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
+    sz_wp = sum(len(s) for s in samples)
+    sz_no = sum(len(s) for s in
+                h264.encode_frames(fl, qp=8, gop=8)[1])
+    assert sz_wp < 0.6 * sz_no, (sz_wp, sz_no)
 
 
 def test_weighted_prediction_decode_equals_recon_with_chroma():
     """Explicit WP slice (luma + per-component chroma weights): decode
-    == encoder recon BIT-EXACT in both entropy modes, and the estimated
+    == encoder recon BIT-EXACT, and the estimated
     table is genuinely non-identity."""
-    from extractors_geo_spark import h264_cabac as C
 
     rng = np.random.default_rng(9)
     f0 = rng.integers(40, 200, (48, 64)).astype(np.uint8)
     f1 = np.clip(f0.astype(np.float64) * 0.72 + 12, 0, 255).astype(np.uint8)
     ch0 = rng.integers(30, 220, (2, 24, 32)).astype(np.uint8)
     ch1 = np.clip(ch0.astype(np.float64) * 0.80 + 8, 0, 255).astype(np.uint8)
-    for ent in ("cavlc", "cabac"):
-        enc_i = C.encode_idr_cabac if ent == "cabac" else h264.encode_idr_cavlc
-        enc_p = C.encode_p_cabac if ent == "cabac" else h264.encode_p_cavlc
-        avcc = h264.build_avcc(64, 48, deblock_ctrl=True,
-                               cabac=ent == "cabac", wp=True)
-        _, r0 = enc_i(f0, qp=10, full_recon=True, chroma=ch0)
-        tab = h264._estimate_wp(f1, [r0[0]], chroma=ch1, crefs=[r0[1]])
-        assert tab["luma"][0] is not None and tab["chroma"][0] is not None
-        rb1, r1 = enc_p(f1, r0[0], qp=10, frame_num=1, chroma=ch1,
-                        cref=r0[1], wp=tab)
-        nal = bytes([0x41]) + h264._ep_insert(rb1)
-        sample = struct.pack(">I", len(nal)) + nal
-        dy, dc = h264.decode_sample(sample, avcc, ref=r0[0], cref=r0[1],
-                                    full_plane=True, with_chroma=True)
-        assert np.array_equal(dy, r1[0]) and np.array_equal(dc, r1[1]), ent
+    enc_i = h264.encode_idr_cavlc
+    enc_p = h264.encode_p_cavlc
+    avcc = h264.build_avcc(64, 48, deblock_ctrl=True,
+                           wp=True)
+    _, r0 = enc_i(f0, qp=10, full_recon=True, chroma=ch0)
+    tab = h264._estimate_wp(f1, [r0[0]], chroma=ch1, crefs=[r0[1]])
+    assert tab["luma"][0] is not None and tab["chroma"][0] is not None
+    rb1, r1 = enc_p(f1, r0[0], qp=10, frame_num=1, chroma=ch1,
+                    cref=r0[1], wp=tab)
+    nal = bytes([0x41]) + h264._ep_insert(rb1)
+    sample = struct.pack(">I", len(nal)) + nal
+    dy, dc = h264.decode_sample(sample, avcc, ref=r0[0], cref=r0[1],
+                                full_plane=True, with_chroma=True)
+    assert np.array_equal(dy, r1[0]) and np.array_equal(dc, r1[1])
 
 
 def test_weighted_prediction_multiref_per_ref_weights():
@@ -1233,12 +1163,11 @@ def test_weighted_prediction_multiref_per_ref_weights():
     for i in range(1, 6):
         fl.append(np.clip(a.astype(np.float64) * (1 - 0.1 * i) + 4 * i,
                           0, 255).astype(np.uint8))
-    for ent in ("cavlc", "cabac"):
-        avcc, samples = h264.encode_frames(fl, qp=8, gop=8, entropy=ent,
-                                           nrefs=2, wp=True)
-        for d, f in zip(h264.decode_samples(samples, avcc), fl):
-            mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45, ent
+    avcc, samples = h264.encode_frames(fl, qp=8, gop=8,
+                                       nrefs=2, wp=True)
+    for d, f in zip(h264.decode_samples(samples, avcc), fl):
+        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
+        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
 
 
 def test_weighted_prediction_identity_table_roundtrip():
@@ -1302,21 +1231,20 @@ def test_weighted_prediction_fuzz_never_escapes_valueerror():
     import random
 
     fl = _fade_frames(4, shape=(32, 48), seed=23)
-    for ent in ("cavlc", "cabac"):
-        avcc, samples = h264.encode_frames(fl, qp=10, gop=8, entropy=ent,
-                                           wp=True)
-        random.seed(17)
-        for _ in range(40):
-            mut = list(samples)
-            k = random.randrange(1, len(mut))
-            s = bytearray(mut[k])
-            for _j in range(random.randint(1, 3)):
-                s[random.randrange(8, len(s))] = random.randrange(256)
-            mut[k] = bytes(s)
-            try:
-                h264.decode_samples(mut, avcc)
-            except ValueError:
-                pass
+    avcc, samples = h264.encode_frames(fl, qp=10, gop=8,
+                                       wp=True)
+    random.seed(17)
+    for _ in range(40):
+        mut = list(samples)
+        k = random.randrange(1, len(mut))
+        s = bytearray(mut[k])
+        for _j in range(random.randint(1, 3)):
+            s[random.randrange(8, len(s))] = random.randrange(256)
+        mut[k] = bytes(s)
+        try:
+            h264.decode_samples(mut, avcc)
+        except ValueError:
+            pass
 
 
 # --------------------------------- r7: implicit weighted bi-prediction (B)
@@ -1343,28 +1271,26 @@ def _fade_bgop_frames(n=7, shape=(48, 64), seed=5):
                     0, 255).astype(np.uint8) for i in range(n)]
 
 
-def test_implicit_bipred_fade_both_entropies():
+def test_implicit_bipred_fade():
     """bframes=2 on a linear fade: implicit weights interpolate the
     asymmetric B positions correctly, shrinking the stream vs the
-    plain average while decoding >= 45 dB — both entropy modes."""
+    plain average while decoding >= 45 dB."""
     fl = _fade_bgop_frames()
-    for ent in ("cavlc", "cabac"):
-        avcc, samples, _ = h264.encode_frames_bgop(
-            fl, qp=8, gop=8, bframes=2, entropy=ent, implicit_wb=True)
-        for d, f in zip(h264.decode_samples(samples, avcc), fl):
-            mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45, ent
-        sz = sum(len(s) for s in samples)
-        sz0 = sum(len(s) for s in h264.encode_frames_bgop(
-            fl, qp=8, gop=8, bframes=2, entropy=ent)[1])
-        assert sz < sz0, (ent, sz, sz0)
+    avcc, samples, _ = h264.encode_frames_bgop(
+        fl, qp=8, gop=8, bframes=2, implicit_wb=True)
+    for d, f in zip(h264.decode_samples(samples, avcc), fl):
+        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
+        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
+    sz = sum(len(s) for s in samples)
+    sz0 = sum(len(s) for s in h264.encode_frames_bgop(
+        fl, qp=8, gop=8, bframes=2)[1])
+    assert sz < sz0, (sz, sz0)
 
 
 def test_implicit_bipred_decode_equals_recon():
-    """One weighted B slice, decode == encoder recon BIT-EXACT in both
-    entropy modes (asymmetric pocs so the weights are genuinely not
+    """One weighted B slice, decode == encoder recon BIT-EXACT
+    (asymmetric pocs so the weights are genuinely not
     32/32), chroma included."""
-    from extractors_geo_spark import h264_cabac as C
 
     rng = np.random.default_rng(21)
     f0 = rng.integers(40, 200, (48, 64)).astype(np.uint8)
@@ -1374,36 +1300,34 @@ def test_implicit_bipred_decode_equals_recon():
           for k in (0, 1, 3)}
     pocs = (2, 0, 6)
     assert h264._implicit_bipred_weights(*pocs) != (32, 32)
-    for ent in ("cavlc", "cabac"):
-        enc_i = C.encode_idr_cabac if ent == "cabac" else h264.encode_idr_cavlc
-        enc_b = C.encode_b_cabac if ent == "cabac" else h264.encode_b_cavlc
-        avcc = h264.build_avcc(64, 48, deblock_ctrl=True, bpoc=True,
-                               cabac=ent == "cabac", wbidc=2)
-        _, r0 = enc_i(f0, qp=10, full_recon=True, chroma=ch[0], poc_lsb=0)
-        _, r3 = enc_i(f3, qp=10, full_recon=True, chroma=ch[3], poc_lsb=6)
-        rb, rec = enc_b(f1, r0[0], r3[0], qp=10, frame_num=1, poc_lsb=2,
-                        chroma=ch[1], cref0=r0[1], cref1=r3[1],
-                        pocs=pocs, implicit_wb=True)
-        nal = bytes([0x01]) + h264._ep_insert(rb)  # nal_ref_idc 0, type 1
-        sample = struct.pack(">I", len(nal)) + nal
-        dy, dc = h264.decode_sample(sample, avcc, ref=r0[0], ref2=r3[0],
-                                    cref=r0[1], cref2=r3[1],
-                                    full_plane=True, with_chroma=True,
-                                    pocs=pocs)
-        assert np.array_equal(dy, rec[0]) and np.array_equal(dc, rec[1]), ent
+    enc_i = h264.encode_idr_cavlc
+    enc_b = h264.encode_b_cavlc
+    avcc = h264.build_avcc(64, 48, deblock_ctrl=True, bpoc=True,
+                           wbidc=2)
+    _, r0 = enc_i(f0, qp=10, full_recon=True, chroma=ch[0], poc_lsb=0)
+    _, r3 = enc_i(f3, qp=10, full_recon=True, chroma=ch[3], poc_lsb=6)
+    rb, rec = enc_b(f1, r0[0], r3[0], qp=10, frame_num=1, poc_lsb=2,
+                    chroma=ch[1], cref0=r0[1], cref1=r3[1],
+                    pocs=pocs, implicit_wb=True)
+    nal = bytes([0x01]) + h264._ep_insert(rb)  # nal_ref_idc 0, type 1
+    sample = struct.pack(">I", len(nal)) + nal
+    dy, dc = h264.decode_sample(sample, avcc, ref=r0[0], ref2=r3[0],
+                                cref=r0[1], cref2=r3[1],
+                                full_plane=True, with_chroma=True,
+                                pocs=pocs)
+    assert np.array_equal(dy, rec[0]) and np.array_equal(dc, rec[1])
 
 
 def test_implicit_bipred_composes_with_temporal_direct():
     """direct='temporal' + implicit_wb: POC scaling drives BOTH the
     direct motion and the blend weights; whole clip decodes >= 45 dB."""
     fl = _fade_bgop_frames(7, seed=11)
-    for ent in ("cavlc", "cabac"):
-        avcc, samples, _ = h264.encode_frames_bgop(
-            fl, qp=8, gop=8, bframes=2, entropy=ent, direct="temporal",
-            implicit_wb=True)
-        for d, f in zip(h264.decode_samples(samples, avcc), fl):
-            mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45, ent
+    avcc, samples, _ = h264.encode_frames_bgop(
+        fl, qp=8, gop=8, bframes=2, direct="temporal",
+        implicit_wb=True)
+    for d, f in zip(h264.decode_samples(samples, avcc), fl):
+        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
+        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
 
 
 def test_implicit_bipred_mp4_end_to_end():
@@ -1449,21 +1373,20 @@ def test_implicit_bipred_fuzz_never_escapes_valueerror():
     import random
 
     fl = _fade_bgop_frames(5, shape=(32, 48), seed=31)
-    for ent in ("cavlc", "cabac"):
-        avcc, samples, _ = h264.encode_frames_bgop(
-            fl, qp=10, gop=8, bframes=2, entropy=ent, implicit_wb=True)
-        random.seed(19)
-        for _ in range(40):
-            mut = list(samples)
-            k = random.randrange(1, len(mut))
-            s = bytearray(mut[k])
-            for _j in range(random.randint(1, 3)):
-                s[random.randrange(8, len(s))] = random.randrange(256)
-            mut[k] = bytes(s)
-            try:
-                h264.decode_samples(mut, avcc)
-            except ValueError:
-                pass
+    avcc, samples, _ = h264.encode_frames_bgop(
+        fl, qp=10, gop=8, bframes=2, implicit_wb=True)
+    random.seed(19)
+    for _ in range(40):
+        mut = list(samples)
+        k = random.randrange(1, len(mut))
+        s = bytearray(mut[k])
+        for _j in range(random.randint(1, 3)):
+            s[random.randrange(8, len(s))] = random.randrange(256)
+        mut[k] = bytes(s)
+        try:
+            h264.decode_samples(mut, avcc)
+        except ValueError:
+            pass
 
 
 # --------------------------------- r7: multi-slice pictures
@@ -1474,63 +1397,55 @@ def _grad_frame(h=64, w=80, seed=17):
     return np.clip(base + rng.integers(-20, 20, (h, w)), 0, 255).astype(np.uint8)
 
 
-def test_multislice_idr_decode_equals_recon_both_entropies():
+def test_multislice_idr_decode_equals_recon():
     """slice_rows=1 and 2: every slice is its own NAL, neighbour
     availability stops at each slice top, and decode == encoder recon
-    BIT-EXACT (luma + chroma) in both entropy modes."""
-    from extractors_geo_spark import h264_cabac as C
-
+    BIT-EXACT (luma + chroma)."""
     f = _grad_frame()
     rng = np.random.default_rng(23)
     ch = rng.integers(30, 220, (2, 32, 40)).astype(np.uint8)
-    for ent, enc in (("cavlc", h264.encode_idr_cavlc),
-                     ("cabac", C.encode_idr_cabac)):
-        avcc = h264.build_avcc(80, 64, deblock_ctrl=True,
-                               cabac=ent == "cabac")
-        single, rec1 = enc(f, qp=10, full_recon=True, chroma=ch)
-        for srows in (1, 2):
-            rbsps, rec = enc(f, qp=10, full_recon=True, chroma=ch,
-                             slice_rows=srows)
-            assert isinstance(rbsps, list)
-            assert len(rbsps) == -(-4 // srows)  # 4 MB rows
-            sample = b"".join(
-                struct.pack(">I", len(n)) + n
-                for n in (bytes([0x65]) + h264._ep_insert(rb)
-                          for rb in rbsps))
-            dy, dc = h264.decode_sample(sample, avcc, full_plane=True,
-                                        with_chroma=True)
-            assert np.array_equal(dy, rec[0]), (ent, srows)
-            assert np.array_equal(dc, rec[1]), (ent, srows)
-        # slice-top availability actually engages: the slice_rows=1
-        # reconstruction differs from the single-slice one (prediction
-        # cannot cross the boundary on this gradient content)
-        _, rec_ms = enc(f, qp=10, full_recon=True, chroma=ch,
-                        slice_rows=1)
-        assert not np.array_equal(rec_ms[0], rec1[0]), ent
+    enc = h264.encode_idr_cavlc
+    avcc = h264.build_avcc(80, 64, deblock_ctrl=True)
+    single, rec1 = enc(f, qp=10, full_recon=True, chroma=ch)
+    for srows in (1, 2):
+        rbsps, rec = enc(f, qp=10, full_recon=True, chroma=ch,
+                         slice_rows=srows)
+        assert isinstance(rbsps, list)
+        assert len(rbsps) == -(-4 // srows)  # 4 MB rows
+        sample = b"".join(
+            struct.pack(">I", len(n)) + n
+            for n in (bytes([0x65]) + h264._ep_insert(rb)
+                      for rb in rbsps))
+        dy, dc = h264.decode_sample(sample, avcc, full_plane=True,
+                                    with_chroma=True)
+        assert np.array_equal(dy, rec[0]), srows
+        assert np.array_equal(dc, rec[1]), srows
+    # slice-top availability actually engages: the slice_rows=1
+    # reconstruction differs from the single-slice one (prediction
+    # cannot cross the boundary on this gradient content)
+    _, rec_ms = enc(f, qp=10, full_recon=True, chroma=ch, slice_rows=1)
+    assert not np.array_equal(rec_ms[0], rec1[0])
 
 
-def test_multislice_p_gop_roundtrip_both_entropies():
+def test_multislice_p_gop_roundtrip():
     """IDR+P GOP with slice_rows=2 through encode_frames/decode_samples:
     multi-NAL samples, per-slice skip runs, >= 40 dB decode."""
-    rng = np.random.default_rng(5)
     base = _grad_frame(48, 64, seed=5)
     frames = [np.roll(base, (i * 2, i * 3), (0, 1)) for i in range(5)]
-    for ent in ("cavlc", "cabac"):
-        avcc, samples, = h264.encode_frames(frames, qp=8, gop=5,
-                                            entropy=ent, slice_rows=2)
-        # every sample carries 2 NALs (3 MB rows -> rows 0-1 and 2)
-        for s in samples:
-            n_nals = 0
-            pos = 0
-            while pos + 4 <= len(s):
-                ln = int.from_bytes(s[pos:pos + 4], "big")
-                pos += 4 + ln
-                n_nals += 1
-            assert n_nals == 2, ent
-        dec = h264.decode_samples(samples, avcc)
-        for d, f in zip(dec, frames):
-            mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40, ent
+    avcc, samples = h264.encode_frames(frames, qp=8, gop=5, slice_rows=2)
+    # every sample carries 2 NALs (3 MB rows -> rows 0-1 and 2)
+    for s in samples:
+        n_nals = 0
+        pos = 0
+        while pos + 4 <= len(s):
+            ln = int.from_bytes(s[pos:pos + 4], "big")
+            pos += 4 + ln
+            n_nals += 1
+        assert n_nals == 2
+    dec = h264.decode_samples(samples, avcc)
+    for d, f in zip(dec, frames):
+        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
+        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
 
 
 def test_multislice_static_scene_skip_runs():
@@ -1554,8 +1469,7 @@ def test_multislice_static_scene_skip_runs():
 
 def test_multislice_mp4_end_to_end():
     fl = [_grad_frame(48, 64, seed=i) for i in range(4)]
-    data = mp4.write_h264_mp4(fl, fps=4, qp=8, gop=4, slice_rows=1,
-                              entropy="cabac")
+    data = mp4.write_h264_mp4(fl, fps=4, qp=8, gop=4, slice_rows=1)
     parsed = mp4.read_mjpeg_mp4(data)
     dec = h264.decode_samples(list(parsed["frames"]), parsed["avcc"])
     for d, f in zip(dec, fl):
@@ -1590,27 +1504,26 @@ def test_multislice_layout_validation():
         h264.decode_sample(pack([rbsps[0], bad]), avcc)
 
 
-def test_multislice_b_gop_both_entropies():
+def test_multislice_b_gop():
     """IBBP GOPs with slice_rows=2: I, P AND B pictures all emit
-    multi-NAL samples; whole clip decodes >= 40 dB in both entropy
-    modes (incl. temporal direct + implicit weighted bi-prediction)."""
+    multi-NAL samples; whole clip decodes >= 40 dB (incl. temporal
+    direct + implicit weighted bi-prediction)."""
     base = _grad_frame(48, 64, seed=31)
     fl = [np.roll(base, (i, 2 * i), (0, 1)) for i in range(7)]
-    for ent in ("cavlc", "cabac"):
-        avcc, samples, _ = h264.encode_frames_bgop(
-            fl, qp=8, gop=8, bframes=2, entropy=ent, slice_rows=2,
-            direct="temporal", implicit_wb=True)
-        for s in samples:
-            n_nals = 0
-            pos = 0
-            while pos + 4 <= len(s):
-                ln = int.from_bytes(s[pos:pos + 4], "big")
-                pos += 4 + ln
-                n_nals += 1
-            assert n_nals == 2, ent  # 3 MB rows -> 2 slices
-        for d, f in zip(h264.decode_samples(samples, avcc), fl):
-            mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40, ent
+    avcc, samples, _ = h264.encode_frames_bgop(
+        fl, qp=8, gop=8, bframes=2, slice_rows=2,
+        direct="temporal", implicit_wb=True)
+    for s in samples:
+        n_nals = 0
+        pos = 0
+        while pos + 4 <= len(s):
+            ln = int.from_bytes(s[pos:pos + 4], "big")
+            pos += 4 + ln
+            n_nals += 1
+        assert n_nals == 2  # 3 MB rows -> 2 slices
+    for d, f in zip(h264.decode_samples(samples, avcc), fl):
+        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
+        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
 
 
 # --------------------------------- r7: High-profile 8x8 transform (CAVLC)
@@ -1632,9 +1545,8 @@ def test_t8x8_table_closure():
 
 def test_t8x8_p_gop_decode_equals_recon():
     """High-profile (t8x8) IDR+P GOP: per-MB adaptive transform
-    selection, decode == encoder recon BIT-EXACT in BOTH entropy modes,
+    selection, decode == encoder recon BIT-EXACT,
     and the avcC carries profile 100 + the PPS transform_8x8_mode_flag."""
-    from extractors_geo_spark import h264_cabac as C
 
     rng = np.random.default_rng(7)
     yy, xx = np.mgrid[0:48, 0:64]
@@ -1644,18 +1556,14 @@ def test_t8x8_p_gop_decode_equals_recon():
     avcc = h264.build_avcc(64, 48, deblock_ctrl=True, t8x8=True)
     sps, pps = h264._avcc_param_sets(avcc)
     assert sps["profile"] == 100 and pps["t8x8"]
-    for ent, enc_i, enc_p in (
-            ("cavlc", h264.encode_idr_cavlc, h264.encode_p_cavlc),
-            ("cabac", C.encode_idr_cabac, C.encode_p_cabac)):
-        av = h264.build_avcc(64, 48, deblock_ctrl=True, t8x8=True,
-                             cabac=ent == "cabac")
-        for qp in (6, 10, 16):
-            _, ref = enc_i(frames[0], qp=qp, full_recon=True, t8x8=True)
-            rb, rec = enc_p(frames[1], ref, qp=qp, t8x8=True)
-            nal = bytes([0x41]) + h264._ep_insert(rb)
-            dy = h264.decode_sample(struct.pack(">I", len(nal)) + nal, av,
-                                    ref=ref, full_plane=True)
-            assert np.array_equal(dy, rec), (ent, qp)
+    for qp in (6, 10, 16):
+        _, ref = h264.encode_idr_cavlc(frames[0], qp=qp, full_recon=True,
+                                       t8x8=True)
+        rb, rec = h264.encode_p_cavlc(frames[1], ref, qp=qp, t8x8=True)
+        nal = bytes([0x41]) + h264._ep_insert(rb)
+        dy = h264.decode_sample(struct.pack(">I", len(nal)) + nal, avcc,
+                                ref=ref, full_plane=True)
+        assert np.array_equal(dy, rec), qp
     # whole-GOP PSNR through encode_frames/decode_samples, with chroma
     cy, cx = np.mgrid[0:24, 0:32]
     chromas = [np.stack([((cx * 9 + i) % 250).astype(np.uint8),
@@ -1692,19 +1600,6 @@ def test_t8x8_composes_with_multislice_and_multiref():
     frames = [np.roll(base, (i, 2 * i), (0, 1)) for i in range(5)]
     avcc, samples = h264.encode_frames(frames, qp=8, gop=5, t8x8=True,
                                        slice_rows=1, nrefs=2)
-    for d, f in zip(h264.decode_samples(samples, avcc), frames):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
-
-
-def test_t8x8_cabac_gop_roundtrip():
-    rng = np.random.default_rng(9)
-    yy, xx = np.mgrid[0:48, 0:64]
-    base = np.clip((xx * 3 + yy) % 256
-                   + rng.integers(-20, 20, (48, 64)), 0, 255).astype(np.uint8)
-    frames = [np.roll(base, (i, 2 * i), (0, 1)) for i in range(5)]
-    avcc, samples = h264.encode_frames(frames, qp=8, gop=5, t8x8=True,
-                                       entropy="cabac", nrefs=2)
     for d, f in zip(h264.decode_samples(samples, avcc), frames):
         mse = float(np.mean((d.astype(np.float64) - f) ** 2))
         assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
@@ -1748,26 +1643,20 @@ def test_i8x8_intra_decode_equals_recon_and_fires():
     """I_8x8 intra prediction: the per-MB I_4x4 vs I_8x8 coefficient
     race selects 8x8 on smooth/directional content, all nine 8.3.2.2
     prediction modes get exercised across the sources, and decode ==
-    encoder recon BIT-EXACT in both entropy modes at several QPs."""
-    from extractors_geo_spark import h264_cabac as C
-
-    fired = {"cavlc": 0, "cabac": 0}
+    encoder recon BIT-EXACT at several QPs."""
+    fired = []
     modes_seen = set()
-    o_cavlc, o_cabac, o_pred8 = h264._decode_mb_i8x8, C._dec_mb_i8, h264._pred8
+    o_cavlc, o_pred8 = h264._decode_mb_i8x8, h264._pred8
 
     def s_cavlc(*a, **k):
-        fired["cavlc"] += 1
+        fired.append(1)
         return o_cavlc(*a, **k)
-
-    def s_cabac(*a, **k):
-        fired["cabac"] += 1
-        return o_cabac(*a, **k)
 
     def s_pred8(plane, px, py, mode, *a):
         modes_seen.add(mode)
         return o_pred8(plane, px, py, mode, *a)
 
-    h264._decode_mb_i8x8, C._dec_mb_i8 = s_cavlc, s_cabac
+    h264._decode_mb_i8x8 = s_cavlc
     h264._pred8 = s_pred8
     try:
         rng = np.random.default_rng(5)
@@ -1782,42 +1671,36 @@ def test_i8x8_intra_decode_equals_recon_and_fires():
                     + rng.integers(-4, 4, (48, 64)), 0, 255).astype(np.uint8),
         ]
         for src in srcs:
-            for ent in ("cavlc", "cabac"):
-                for qp in (6, 10):
-                    if ent == "cavlc":
-                        rb, rec = h264.encode_idr_cavlc(
-                            src, qp=qp, full_recon=True, t8x8=True)
-                    else:
-                        rb, rec = C.encode_idr_cabac(
-                            src, qp=qp, full_recon=True, t8x8=True)
-                    av = h264.build_avcc(64, 48, deblock_ctrl=True,
-                                         t8x8=True, cabac=ent == "cabac")
-                    nal = bytes([0x65]) + h264._ep_insert(rb)
-                    dy = h264.decode_sample(
-                        struct.pack(">I", len(nal)) + nal, av,
-                        full_plane=True)
-                    assert np.array_equal(dy, rec), (ent, qp)
+            for qp in (6, 10):
+                rb, rec = h264.encode_idr_cavlc(
+                    src, qp=qp, full_recon=True, t8x8=True)
+                av = h264.build_avcc(64, 48, deblock_ctrl=True,
+                                     t8x8=True)
+                nal = bytes([0x65]) + h264._ep_insert(rb)
+                dy = h264.decode_sample(
+                    struct.pack(">I", len(nal)) + nal, av,
+                    full_plane=True)
+                assert np.array_equal(dy, rec), qp
     finally:
-        h264._decode_mb_i8x8, C._dec_mb_i8 = o_cavlc, o_cabac
+        h264._decode_mb_i8x8 = o_cavlc
         h264._pred8 = o_pred8
-    assert fired["cavlc"] > 10 and fired["cabac"] > 10
+    assert len(fired) > 10
     assert modes_seen == set(range(9))
 
 
 def test_i8x8_intra_composes_with_multislice_gop():
     """I_8x8 at slice boundaries: _mb_avail8 must gate above-row access
-    per slice. Full GOP with slice_rows=1 in both entropy modes."""
+    per slice. Full GOP with slice_rows=1."""
     rng = np.random.default_rng(23)
     yy, xx = np.mgrid[0:48, 0:64]
     base = np.clip((xx * 3 + yy * 2) % 256
                    + rng.integers(-8, 8, (48, 64)), 0, 255).astype(np.uint8)
     frames = [np.roll(base, (i, 2 * i), (0, 1)) for i in range(4)]
-    for ent in ("cavlc", "cabac"):
-        avcc, samples = h264.encode_frames(frames, qp=8, gop=4, t8x8=True,
-                                           slice_rows=1, entropy=ent)
-        for d, f in zip(h264.decode_samples(samples, avcc), frames):
-            mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40, ent
+    avcc, samples = h264.encode_frames(frames, qp=8, gop=4, t8x8=True,
+                                       slice_rows=1)
+    for d, f in zip(h264.decode_samples(samples, avcc), frames):
+        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
+        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
 
 
 def test_i8x8_gray_fixture_bits_unchanged():
@@ -1836,9 +1719,8 @@ def test_t8x8_b_slices_decode_equals_recon():
     """late r7: the 8x8 transform in B slices — eligibility excludes
     direct shapes (SPS direct_8x8_inference_flag 0) but covers
     B_L0/L1/Bi 16x16, partitioned and all-8x8 B_8x8; decode == encoder
-    recon BIT-EXACT in both entropy modes and the 8x8 residual decode
+    recon BIT-EXACT and the 8x8 residual decode
     path actually fires inside a B slice."""
-    from extractors_geo_spark import h264_cabac as C
 
     rng = np.random.default_rng(11)
     yy, xx = np.mgrid[0:48, 0:64]
@@ -1855,92 +1737,86 @@ def test_t8x8_b_slices_decode_equals_recon():
         inv8_hits.append(1)
         return orig_inv8(wd)
 
-    for ent in ("cavlc", "cabac"):
-        enc_i = h264.encode_idr_cavlc if ent == "cavlc" else C.encode_idr_cabac
-        enc_p = h264.encode_p_cavlc if ent == "cavlc" else C.encode_p_cabac
-        enc_b = h264.encode_b_cavlc if ent == "cavlc" else C.encode_b_cabac
-        _, r0 = enc_i(f0, qp=8, full_recon=True, t8x8=True)
-        _, r2 = enc_p(f2, r0, qp=8, t8x8=True)
-        rb, rec = enc_b(fb, r0, r2, qp=8, poc_lsb=2, t8x8=True)
-        av = h264.build_avcc(64, 48, deblock_ctrl=True, bpoc=True,
-                             t8x8=True, cabac=ent == "cabac")
-        nal = bytes([0x01]) + h264._ep_insert(rb)
-        sample = struct.pack(">I", len(nal)) + nal
-        inv8_hits.clear()
-        h264._inv8 = spy
-        try:
-            dy = h264.decode_sample(sample, av, ref=r0, ref2=r2,
-                                    full_plane=True)
-        finally:
-            h264._inv8 = orig_inv8
-        assert inv8_hits, f"no 8x8 residual decoded in the B slice ({ent})"
-        assert np.array_equal(dy, rec), ent
+    enc_i = h264.encode_idr_cavlc
+    enc_p = h264.encode_p_cavlc
+    enc_b = h264.encode_b_cavlc
+    _, r0 = enc_i(f0, qp=8, full_recon=True, t8x8=True)
+    _, r2 = enc_p(f2, r0, qp=8, t8x8=True)
+    rb, rec = enc_b(fb, r0, r2, qp=8, poc_lsb=2, t8x8=True)
+    av = h264.build_avcc(64, 48, deblock_ctrl=True, bpoc=True,
+                         t8x8=True)
+    nal = bytes([0x01]) + h264._ep_insert(rb)
+    sample = struct.pack(">I", len(nal)) + nal
+    inv8_hits.clear()
+    h264._inv8 = spy
+    try:
+        dy = h264.decode_sample(sample, av, ref=r0, ref2=r2,
+                                full_plane=True)
+    finally:
+        h264._inv8 = orig_inv8
+    assert inv8_hits, "no 8x8 residual decoded in the B slice"
+    assert np.array_equal(dy, rec)
 
 
 def test_t8x8_b_gop_end_to_end():
     """Full IBBP GOP with the High-profile 8x8 transform through
     encode_frames_bgop + MP4 mux + decode_samples, spatial and
-    temporal direct, both entropy modes."""
+    temporal direct."""
     rng = np.random.default_rng(7)
     yy, xx = np.mgrid[0:48, 0:64]
     base = np.clip((xx * 3 + yy * 2) % 256
                    + rng.integers(-20, 20, (48, 64)), 0, 255).astype(np.uint8)
     frames = [np.roll(base, (2 * i, 3 * i), (0, 1)) for i in range(6)]
-    for ent in ("cavlc", "cabac"):
-        for direct in ("spatial", "temporal"):
-            data = mp4.write_h264_mp4(frames, fps=2, qp=8, gop=6,
-                                      bframes=2, entropy=ent,
-                                      direct=direct, t8x8=True)
-            parsed = mp4.read_mjpeg_mp4(data)
-            for d, f in zip(h264.decode_samples(list(parsed["frames"]),
-                                                parsed["avcc"]), frames):
-                mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-                assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40, \
-                    (ent, direct)
+    for direct in ("spatial", "temporal"):
+        data = mp4.write_h264_mp4(frames, fps=2, qp=8, gop=6,
+                                  bframes=2,
+                                  direct=direct, t8x8=True)
+        parsed = mp4.read_mjpeg_mp4(data)
+        for d, f in zip(h264.decode_samples(list(parsed["frames"]),
+                                            parsed["avcc"]), frames):
+            mse = float(np.mean((d.astype(np.float64) - f) ** 2))
+            assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40, direct
 
 
 def test_t8x8_with_inloop_deblocking_decode_equals_recon():
     """late r7: 8.7 deblocking composed with the 8x8 transform — inside
     an 8x8-transformed MB the internal 4x4 edges (offsets 4/12) are not
     filtered and bS-2 'coded' status is per 8x8 block. decode ==
-    encoder recon BIT-EXACT in both entropy modes at filter-active QPs,
+    encoder recon BIT-EXACT at filter-active QPs,
     the filter demonstrably fires, and 8x8 MBs demonstrably exist."""
-    from extractors_geo_spark import h264_cabac as C
 
     rng = np.random.default_rng(29)
     yy, xx = np.mgrid[0:48, 0:64]
     base = np.clip((xx * 3 + yy * 2) % 256
                    + rng.integers(-25, 25, (48, 64)), 0, 255).astype(np.uint8)
     frames = [np.roll(base, (2 * i, 3 * i), (0, 1)) for i in range(3)]
-    for ent in ("cavlc", "cabac"):
-        enc_i = h264.encode_idr_cavlc if ent == "cavlc" else C.encode_idr_cabac
-        enc_p = h264.encode_p_cavlc if ent == "cavlc" else C.encode_p_cabac
-        for qp in (20, 28):
-            _, ref = enc_i(frames[0], qp=qp, full_recon=True, t8x8=True,
-                           deblock=True)
-            _, ref_nof = enc_i(frames[0], qp=qp, full_recon=True,
-                               t8x8=True)
-            assert not np.array_equal(ref, ref_nof), (ent, qp)  # filter on
-            t8_marks = []
-            orig_mark = h264._mark_t8
+    enc_i = h264.encode_idr_cavlc
+    enc_p = h264.encode_p_cavlc
+    for qp in (20, 28):
+        _, ref = enc_i(frames[0], qp=qp, full_recon=True, t8x8=True,
+                       deblock=True)
+        _, ref_nof = enc_i(frames[0], qp=qp, full_recon=True,
+                           t8x8=True)
+        assert not np.array_equal(ref, ref_nof), qp  # filter on
+        t8_marks = []
+        orig_mark = h264._mark_t8
 
-            def spy(mx, my):
-                t8_marks.append((mx, my))
-                orig_mark(mx, my)
+        def spy(mx, my):
+            t8_marks.append((mx, my))
+            orig_mark(mx, my)
 
-            h264._mark_t8 = spy
-            try:
-                rb, rec = enc_p(frames[1], ref, qp=qp, t8x8=True,
-                                deblock=True)
-            finally:
-                h264._mark_t8 = orig_mark
-            assert t8_marks, (ent, qp)  # 8x8 MBs present under the filter
-            av = h264.build_avcc(64, 48, deblock_ctrl=True, t8x8=True,
-                                 cabac=ent == "cabac")
-            nal = bytes([0x41]) + h264._ep_insert(rb)
-            dy = h264.decode_sample(struct.pack(">I", len(nal)) + nal, av,
-                                    ref=ref, full_plane=True)
-            assert np.array_equal(dy, rec), (ent, qp)
+        h264._mark_t8 = spy
+        try:
+            rb, rec = enc_p(frames[1], ref, qp=qp, t8x8=True,
+                            deblock=True)
+        finally:
+            h264._mark_t8 = orig_mark
+        assert t8_marks, qp  # 8x8 MBs present under the filter
+        av = h264.build_avcc(64, 48, deblock_ctrl=True, t8x8=True)
+        nal = bytes([0x41]) + h264._ep_insert(rb)
+        dy = h264.decode_sample(struct.pack(">I", len(nal)) + nal, av,
+                                ref=ref, full_plane=True)
+        assert np.array_equal(dy, rec), qp
     # whole-GOP end-to-end with the filter
     avcc, samples = h264.encode_frames(frames, qp=20, gop=3, t8x8=True,
                                        deblock=True)

@@ -195,53 +195,10 @@ def test_color_mp4_gray_pipeline_unaffected():
         assert float(np.abs(c.astype(int) - cs[i].astype(int)).mean()) < 1.0
 
 
-@pytest.mark.parametrize("qp", [6, 16, 32])
-def test_cabac_color_intra_decode_equals_recon(qp):
-    from extractors_geo_spark import h264_cabac as C
-
-    y0, c0 = _mkframe(0)
-    rbsp, (ry, rc) = C.encode_idr_cabac(y0, qp=qp, chroma=c0,
-                                        full_recon=True)
-    avcc = H.build_avcc(48, 32, deblock_ctrl=True, cabac=True)
-    dy, dc = H.decode_sample(_one_sample(rbsp), avcc, full_plane=True,
-                             with_chroma=True)
-    assert np.array_equal(dy, ry) and np.array_equal(dc, rc)
-
-
-def test_cabac_color_p_and_b_decode_equals_recon():
-    from extractors_geo_spark import h264_cabac as C
-
-    qp = 10
-    y0, c0 = _mkframe(0)
-    _, (ry0, rc0) = C.encode_idr_cabac(y0, qp=qp, chroma=c0,
-                                       full_recon=True)
-    y1, c1 = _mkframe(1)
-    rb1, (ry1, rc1) = C.encode_p_cabac(y1, ry0, qp=qp, chroma=c1,
-                                       cref=rc0)
-    avcc = H.build_avcc(48, 32, deblock_ctrl=True, cabac=True)
-    dy, dc = H.decode_sample(_one_sample(rb1, 0x41), avcc, ref=ry0,
-                             cref=rc0, full_plane=True, with_chroma=True)
-    assert np.array_equal(dy, ry1) and np.array_equal(dc, rc1)
-    y2, c2 = _mkframe(2)
-    _, (ry2, rc2) = C.encode_p_cabac(y2, ry1, qp=qp, chroma=c2, cref=rc1,
-                                     frame_num=2)
-    yb = ((y1.astype(int) + y2.astype(int)) // 2).astype(np.uint8)
-    cb = ((c1.astype(int) + c2.astype(int)) // 2).astype(np.uint8)
-    rbb, (ryb, rcb) = C.encode_b_cabac(yb, ry1, ry2, qp=qp, chroma=cb,
-                                       cref0=rc1, cref1=rc2, poc_lsb=2)
-    avccb = H.build_avcc(48, 32, deblock_ctrl=True, bpoc=True, cabac=True)
-    dy, dc = H.decode_sample(_one_sample(rbb, 0x01), avccb, ref=ry1,
-                             ref2=ry2, cref=rc1, cref2=rc2,
-                             full_plane=True, with_chroma=True)
-    assert np.array_equal(dy, ryb) and np.array_equal(dc, rcb)
-
-
-@pytest.mark.parametrize("entropy", ["cavlc", "cabac"])
-def test_color_bgop_both_entropy_modes(entropy):
+def test_color_bgop():
     ys, cs = zip(*[_mkframe(i) for i in range(9)])
     avcc, samples, _ = H.encode_frames_bgop(list(ys), qp=10, gop=4,
-                                            bframes=1, entropy=entropy,
-                                            chromas=list(cs))
+                                            bframes=1, chromas=list(cs))
     out = H.decode_samples(samples, avcc, with_chroma=True)
     for i, (y, c) in enumerate(out):
         assert float(np.abs(c.astype(int) - cs[i].astype(int)).mean()) < 1.0
@@ -265,19 +222,13 @@ def test_fuzzed_color_samples_never_escape_valueerror():
     assert raised > 0
 
 
-@pytest.mark.parametrize("entropy", ["cavlc", "cabac"])
-def test_color_deblock_decode_equals_recon(entropy):
+def test_color_deblock_decode_equals_recon():
     """In-loop filter ON at qp >= 16: chroma deblocks on both sides
     (QPc-indexed thresholds, 2-tap filter) — decode == recon bit-exact
     through IDR + P."""
     ys, cs = zip(*[_mkframe(i) for i in range(4)])
-    if entropy == "cabac":
-        from extractors_geo_spark import h264_cabac as C
-        enc_i, enc_p = C.encode_idr_cabac, C.encode_p_cabac
-    else:
-        enc_i, enc_p = H.encode_idr_cavlc, H.encode_p_cavlc
-    avcc = H.build_avcc(48, 32, deblock_ctrl=True,
-                        cabac=entropy == "cabac")
+    enc_i, enc_p = H.encode_idr_cavlc, H.encode_p_cavlc
+    avcc = H.build_avcc(48, 32, deblock_ctrl=True)
     qp = 24
     rb0, (ry0, rc0) = enc_i(ys[0], qp=qp, deblock=True, chroma=cs[0],
                             full_recon=True)
@@ -295,8 +246,7 @@ def test_color_deblock_decode_equals_recon(entropy):
     assert np.array_equal(dy, ry1) and np.array_equal(dc, rc1)
 
 
-@pytest.mark.parametrize("entropy", ["cavlc", "cabac"])
-def test_chroma_mode_search_emits_nondc_and_roundtrips(entropy):
+def test_chroma_mode_search_emits_nondc_and_roundtrips():
     """r7: the encoder picks the best chroma intra mode per MB (DC/H/V/
     plane). Planar chroma makes mode 3 win; the stream decodes == recon
     and the non-DC mode is really in the bitstream (a DC-only decode
@@ -306,11 +256,6 @@ def test_chroma_mode_search_emits_nondc_and_roundtrips(entropy):
     cy, cx = np.mgrid[0:h // 2, 0:w // 2]
     chroma = np.stack([(40 + 4 * cx + 3 * cy).astype(np.uint8),
                        (200 - 3 * cx - 2 * cy).astype(np.uint8)])
-    if entropy == "cabac":
-        from extractors_geo_spark import h264_cabac as C
-        enc = C.encode_idr_cabac
-    else:
-        enc = H.encode_idr_cavlc
     picked = []
     orig = H._pick_chroma_mode
 
@@ -321,11 +266,12 @@ def test_chroma_mode_search_emits_nondc_and_roundtrips(entropy):
 
     H._pick_chroma_mode = spy
     try:
-        rbsp, (ry, rc) = enc(y0, qp=10, chroma=chroma, full_recon=True)
+        rbsp, (ry, rc) = H.encode_idr_cavlc(y0, qp=10, chroma=chroma,
+                                            full_recon=True)
     finally:
         H._pick_chroma_mode = orig
     assert any(m != 0 for m in picked), picked
-    avcc = H.build_avcc(w, h, deblock_ctrl=True, cabac=entropy == "cabac")
+    avcc = H.build_avcc(w, h, deblock_ctrl=True)
     dy, dc = H.decode_sample(_one_sample(rbsp), avcc, full_plane=True,
                              with_chroma=True)
     assert np.array_equal(dy, ry) and np.array_equal(dc, rc)

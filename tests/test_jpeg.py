@@ -63,7 +63,7 @@ def test_distributed_decode_real_jpeg(spark):
     g = _smooth(18, 26)
     df = spark.createDataFrame(
         [("j1", bytearray(jpeg.encode(g, quality=92)))], "image_id string, bytes binary")
-    r = M.decode_image_meta(df, fake=False).collect()[0]
+    r = M.decode_image_meta(df).collect()[0]
     assert r["ok"] and (r["w"], r["h"]) == (26, 18) and r["fmt_sniffed"] == "jpeg"
 
 
@@ -117,11 +117,11 @@ def test_progressive_odd_dims_all_subsamplings():
 
 
 def test_multimodal_decodes_progressive_jpeg_for_real():
-    """VERDICT r02 #4 'done': progressive inputs no longer fall to the
-    fake path in multimodal._decode."""
+    """VERDICT r02 #4 'done': progressive inputs decode for real in
+    multimodal._decode."""
     from extractors_geo_spark.operators.multimodal import _decode
 
     g = _smooth(24, 32)
-    arr, err = _decode(jpeg.encode_progressive(g, quality=90), "jpeg", fake=False)
+    arr, err = _decode(jpeg.encode_progressive(g, quality=90), "jpeg")
     assert err is None
     assert psnr(g, arr) > 40

@@ -110,7 +110,7 @@ def test_mp3_features_match_wav_features(spark):
     df = spark.createDataFrame(
         [("wav", bytearray(wav)), ("mp3", bytearray(enc))],
         "audio_id string, bytes binary")
-    rows = {r["audio_id"]: r for r in M.audio_features(df, fake=False).collect()}
+    rows = {r["audio_id"]: r for r in M.audio_features(df).collect()}
     assert set(rows) == {"wav", "mp3"}
     fw = np.array(rows["wav"]["features"])
     fm = np.array(rows["mp3"]["features"])
@@ -129,7 +129,7 @@ def test_malformed_mp3_drops_wellformed_foreign_raises(spark):
     # malformed: sync byte then garbage -> drop
     bad = b"\xff\xfb" + b"\x01" * 16
     df = spark.createDataFrame([("bad", bytearray(bad))], "audio_id string, bytes binary")
-    assert M.audio_features(df, fake=False).count() == 0
+    assert M.audio_features(df).count() == 0
 
 
 def test_id3_tags_roundtrip_and_versions():
@@ -213,7 +213,7 @@ def test_stereo_mp3_through_audio_features(spark):
     enc = mp3.encode(st, rate, joint=True)
     df = spark.createDataFrame([("s1", bytearray(enc))],
                                "audio_id string, bytes binary")
-    rows = M.audio_features(df, fake=False).collect()
+    rows = M.audio_features(df).collect()
     assert len(rows) == 1 and rows[0]["n_windows"] >= 9
 
 

@@ -1,5 +1,7 @@
-"""Multimodal operators: schema/partitioning/batch-shape are real; the
-jpeg/png/video/audio codecs are stubbed behind deterministic fakes."""
+"""Multimodal operators over real bytes from the in-repo encoders
+(TIFF via datagen, png.encode, jpeg.encode, mp4/avi writers, WAV): schema,
+shape, explode fan-out, determinism, and how undecodable bytes are
+reported."""
 
 import numpy as np
 import pytest
@@ -13,6 +15,24 @@ def mixed(spark, images_small):
     return images_small.cache()
 
 
+@pytest.fixture(scope="module")
+def real_images(spark, mixed):
+    """Decodable images in all three formats: datagen's TIFFs plus
+    PNG and JPEG bytes from the in-repo encoders (id, w, h known)."""
+    from extractors_geo_spark import jpeg as _jpeg
+    from extractors_geo_spark import png as _png
+
+    rng = np.random.default_rng(7)
+    rows = [(r["image_id"], bytearray(r["bytes"]))
+            for r in mixed.filter(F.col("fmt") == "tiff").limit(3).collect()]
+    for i in range(3):
+        h, w = 10 + 2 * i, 20 - 2 * i
+        g = (rng.random((h, w)) * 255).astype(np.uint8)
+        rows.append((f"png{i}", bytearray(_png.encode(g))))
+        rows.append((f"jpg{i}", bytearray(_jpeg.encode(g, quality=90))))
+    return spark.createDataFrame(rows, "image_id string, bytes binary").cache()
+
+
 def test_sniff_format_expr(spark, mixed):
     out = mixed.select("fmt", M.sniff_format(F.col("bytes")).alias("sniffed"))
     rows = out.collect()
@@ -23,20 +43,26 @@ def test_sniff_format_expr(spark, mixed):
             assert r["sniffed"] == "png"
 
 
-def test_decode_image_meta(spark, mixed):
-    out = M.decode_image_meta(mixed, fake=True).cache()
-    assert out.count() == mixed.count()
+def test_decode_image_meta(spark, real_images):
+    out = M.decode_image_meta(real_images).cache()
+    assert out.count() == real_images.count()
     assert "bytes" not in out.columns
-    tiffs = out.filter(F.col("fmt_sniffed") == "tiff")
-    assert tiffs.filter(~F.col("ok")).count() == 0
-    assert tiffs.filter((F.col("w") == 16) & (F.col("h") == 16)).count() == tiffs.count()
+    assert out.filter(~F.col("ok")).count() == 0
+    rows = {r["image_id"]: r for r in out.collect()}
+    assert {r["fmt_sniffed"] for r in rows.values()} == {"tiff", "png", "jpeg"}
+    for iid, r in rows.items():
+        if r["fmt_sniffed"] == "tiff":
+            assert (r["w"], r["h"]) == (16, 16)
+        else:
+            i = int(iid[-1])
+            assert (r["w"], r["h"]) == (20 - 2 * i, 10 + 2 * i), iid
 
 
-def test_decode_garbage_png_errors_without_fake(spark, mixed):
+def test_decode_garbage_png_errors(spark, mixed):
     # datagen's pseudo-pngs are PNG magic + noise: the REAL png decoder
-    # rejects them explicitly when fake fallback is off
+    # rejects them explicitly
     pngs = mixed.filter(F.col("fmt") != "tiff").limit(2)
-    out = M.decode_image_meta(pngs, fake=False)
+    out = M.decode_image_meta(pngs)
     rows = out.collect()
     assert rows and all(r["error"] == "bad png" for r in rows)
     assert all(not r["ok"] for r in rows)
@@ -53,68 +79,97 @@ def test_decode_real_png_end_to_end(spark):
     imgs = [(f"p{i}", bytearray(_png.encode((rng.random((12, 20)) * 255).astype(np.uint8))))
             for i in range(4)]
     df = spark.createDataFrame(imgs, "image_id string, bytes binary")
-    out = M.decode_image_meta(df, fake=False).collect()
+    out = M.decode_image_meta(df).collect()
     assert all(r["ok"] and r["w"] == 20 and r["h"] == 12 and r["fmt_sniffed"] == "png"
                for r in out)
 
 
-def test_image_features_histogram(spark, mixed):
-    out = M.image_features(mixed, fake=True)
-    r = out.first()
-    feat = np.array(r["features"])
-    assert feat.shape == (M.FEAT_DIM,)
-    assert abs(feat.sum() - 1.0) < 1e-5  # normalized histogram
-    assert (feat >= 0).all()
+def test_image_features_histogram(spark, real_images, mixed):
+    rows = M.image_features(real_images).collect()
+    assert len(rows) == real_images.count()
+    for r in rows:
+        feat = np.array(r["features"])
+        assert feat.shape == (M.FEAT_DIM,)
+        assert abs(feat.sum() - 1.0) < 1e-5  # normalized histogram
+        assert (feat >= 0).all()
+    # deterministic: the same bytes give the same vector
+    again = {r["image_id"]: r["features"] for r in M.image_features(real_images).collect()}
+    assert all(again[r["image_id"]] == r["features"] for r in rows)
+    # undecodable bytes (datagen's pseudo-pngs) get no feature row
+    pngs = mixed.filter(F.col("fmt") != "tiff").limit(3)
+    assert M.image_features(pngs).count() == 0
 
 
-def test_resize_shapes(spark, mixed):
-    out = M.resize_image(mixed.limit(5), tw=4, th=6, fake=True)
-    for r in out.collect():
+def test_resize_shapes(spark, real_images):
+    rows = M.resize_image(real_images, tw=4, th=6).collect()
+    assert len(rows) == real_images.count()
+    for r in rows:
         arr = np.frombuffer(r["thumb"], dtype="<f8")
         assert arr.size == 4 * 6 and r["tw"] == 4 and r["th"] == 6
 
 
 def test_sample_frames_explode(spark):
-    vids = spark.createDataFrame(
-        [("v1", b"RIFFxxxxvideo-bytes-1"), ("v2", b"RIFFyyyyvideo-bytes-2")],
-        ["video_id", "bytes"],
-    )
-    out = M.sample_frames(vids, every_ms=500, fake=True).cache()
+    from extractors_geo_spark import mp4 as _mp4
+
+    def clip(n, seed):
+        rng = np.random.default_rng(seed)
+        return bytearray(_mp4.write_mjpeg_mp4(
+            [(rng.random((8, 16)) * 255).astype(np.uint8) for _ in range(n)],
+            fps=2))
+
+    vids = spark.createDataFrame([("v1", clip(4, 1)), ("v2", clip(7, 2))],
+                                 "video_id string, bytes binary")
+    out = M.sample_frames(vids, every_ms=500).cache()
     counts = {r["video_id"]: r["n"] for r in out.groupBy("video_id").agg(F.count("*").alias("n")).collect()}
-    assert set(counts) == {"v1", "v2"}
-    assert all(4 <= c <= 20 for c in counts.values())  # 2-10 s at 500 ms
+    assert counts == {"v1": 4, "v2": 7}  # 2 s / 3.5 s at 500 ms
     # deterministic: same input -> same frames
-    again = M.sample_frames(vids, every_ms=500, fake=True)
+    again = M.sample_frames(vids, every_ms=500)
     a = sorted((r["video_id"], r["frame_idx"], bytes(r["frame"])) for r in out.collect())
     b = sorted((r["video_id"], r["frame_idx"], bytes(r["frame"])) for r in again.collect())
     assert a == b
 
 
+def _wav(pcm: bytes, rate: int, channels: int = 1, bits: int = 16,
+         tag: int = 1) -> bytes:
+    import struct
+
+    align = channels * bits // 8
+    return (b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
+            + b"fmt " + struct.pack("<IHHIIHH", 16, tag, channels, rate,
+                                    rate * align, align, bits)
+            + b"data" + struct.pack("<I", len(pcm)) + pcm)
+
+
 def test_audio_features(spark):
-    auds = spark.createDataFrame([("a1", b"RIFFwavv"), ("a2", b"RIFFwavw")], ["audio_id", "bytes"])
-    out = M.audio_features(auds, fake=True)
-    for r in out.collect():
-        assert 1.0 <= r["duration_s"] <= 10.0
+    """Schema, shape and determinism over real WAV bytes: durations and
+    window counts follow the PCM length, feature vectors are FEAT_DIM
+    long, and bytes no decoder accepts get no row."""
+    rng = np.random.default_rng(3)
+    clips = [("a1", _wav((rng.standard_normal(8000) * 6000).astype("<i2").tobytes(), 8000)),
+             ("a2", _wav((rng.standard_normal(12000) * 6000).astype("<i2").tobytes(), 4000)),
+             ("junk", b"RIFFwavv")]
+    auds = spark.createDataFrame([(i, bytearray(b)) for i, b in clips],
+                                 "audio_id string, bytes binary")
+    rows = {r["audio_id"]: r for r in M.audio_features(auds).collect()}
+    assert set(rows) == {"a1", "a2"}
+    assert (rows["a1"]["duration_s"], rows["a1"]["n_windows"]) == (1.0, 10)
+    assert (rows["a2"]["duration_s"], rows["a2"]["n_windows"]) == (3.0, 30)
+    for r in rows.values():
         assert len(r["features"]) == M.FEAT_DIM
+    again = {r["audio_id"]: r["features"] for r in M.audio_features(auds).collect()}
+    assert all(again[k] == r["features"] for k, r in rows.items())
 
 
 def test_audio_features_real_wav(spark):
     """RIFF/WAVE decodes for real through the distributed operator: a
     440 Hz int16 sine gives exact duration, window count, and energy 0.5
     per full window."""
-    import struct
-
-    import numpy as np
-
     rate, secs = 8000, 2
     t = np.arange(rate * secs) / rate
     sig = (np.sin(2 * np.pi * 440 * t) * 32767).astype("<i2")
-    pcm = sig.tobytes()
-    hdr = (b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-           + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
-           + b"data" + struct.pack("<I", len(pcm)))
-    df = spark.createDataFrame([("a1", bytearray(hdr + pcm))], "audio_id string, bytes binary")
-    r = M.audio_features(df, fake=False).collect()[0]
+    df = spark.createDataFrame([("a1", bytearray(_wav(sig.tobytes(), rate)))],
+                               "audio_id string, bytes binary")
+    r = M.audio_features(df).collect()[0]
     assert abs(r["duration_s"] - 2.0) < 1e-9
     assert r["n_windows"] == 20  # 100 ms windows
     # mean square of a full-scale sine is 0.5
@@ -122,9 +177,6 @@ def test_audio_features_real_wav(spark):
 
 
 def test_audio_stereo_float_wav():
-    import struct
-
-    import numpy as np
     from extractors_geo_spark.operators.multimodal import decode_wav
 
     rate = 4000
@@ -132,11 +184,7 @@ def test_audio_stereo_float_wav():
     right = -left
     inter = np.empty(rate * 2, dtype="<f4")
     inter[0::2], inter[1::2] = left, right
-    pcm = inter.tobytes()
-    hdr = (b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-           + b"fmt " + struct.pack("<IHHIIHH", 16, 3, 2, rate, rate * 8, 8, 32)
-           + b"data" + struct.pack("<I", len(pcm)))
-    sig, r = decode_wav(hdr + pcm)
+    sig, r = decode_wav(_wav(inter.tobytes(), rate, channels=2, bits=32, tag=3))
     assert r == rate and sig.size == rate
     assert np.allclose(sig, 0.0, atol=1e-6)  # L/R cancel in the mono mix
 
@@ -171,23 +219,27 @@ def test_mp4_meta_real_parse():
 
 
 def test_sample_frames_real_mp4_duration(spark):
-    """MP4 timestamps come from the REAL mvhd duration, not the fake."""
-    mp4 = _mini_mp4(duration_s=3.0)
-    df = spark.createDataFrame([("v1", bytearray(mp4))], "video_id string, bytes binary")
-    rows = M.sample_frames(df, every_ms=500, fake=True).collect()
-    assert len(rows) == 6  # 3.0 s at 500 ms
+    """MP4 timestamps come from the container's sample tables: a 3.0 s
+    clip (6 frames at 2 fps) samples at every 500 ms up to its end."""
+    from extractors_geo_spark import mp4 as _mp4
+
+    data = _mp4.write_mjpeg_mp4([np.full((8, 8), 20 * f, np.uint8)
+                                 for f in range(6)], fps=2)
+    df = spark.createDataFrame([("v1", bytearray(data))], "video_id string, bytes binary")
+    rows = sorted(M.sample_frames(df, every_ms=500).collect(),
+                  key=lambda r: r["frame_idx"])
     assert [r["ts_ms"] for r in rows] == [0, 500, 1000, 1500, 2000, 2500]
 
 
 def test_sample_frames_wellformed_unsupported_codec_raises(spark):
-    """ADVICE r03: fake=False raises ONLY for a well-formed container with
-    a genuinely unsupported codec (H.264 etc.) — never for malformed bytes."""
+    """ADVICE r03: sample_frames raises ONLY for a well-formed container
+    with a genuinely unsupported codec — never for malformed bytes."""
     import pytest as _pt
 
     mp4 = _mini_mp4(duration_s=3.0)  # valid boxes, non-JPEG track
     df = spark.createDataFrame([("v1", bytearray(mp4))], "video_id string, bytes binary")
     with _pt.raises(Exception, match="NotImplementedError|codec"):
-        M.sample_frames(df, every_ms=500, fake=False).collect()
+        M.sample_frames(df, every_ms=500).collect()
 
 
 def test_gray_alpha_png_luminance_ignores_alpha():
@@ -201,7 +253,7 @@ def test_gray_alpha_png_luminance_ignores_alpha():
     gray = np.arange(64, dtype=np.uint8).reshape(8, 8)
     alpha = np.full((8, 8), 255, dtype=np.uint8)
     data = _png.encode(np.dstack([gray, alpha]))
-    arr, err = _decode(bytes(data), "png", fake=False)
+    arr, err = _decode(bytes(data), "png")
     assert err is None
     np.testing.assert_array_equal(arr, gray.astype(np.float64))
 
@@ -218,7 +270,7 @@ def test_sample_frames_mjpeg_avi_real_pixels(spark):
            for f in range(8)]
     data = _avi.write_mjpeg_avi(src, fps=2, quality=92)  # 4 s clip
     df = spark.createDataFrame([("v0", bytearray(data))], "video_id string, bytes binary")
-    rows = sorted(M.sample_frames(df, every_ms=1000, fake=False).collect(),
+    rows = sorted(M.sample_frames(df, every_ms=1000).collect(),
                   key=lambda r: r["frame_idx"])
     assert [r["ts_ms"] for r in rows] == [0, 1000, 2000, 3000]
     for r in rows:
@@ -230,13 +282,11 @@ def test_sample_frames_mjpeg_avi_real_pixels(spark):
         assert psnr > 40, (r["frame_idx"], psnr)
 
 
-def test_sample_frames_non_avi_fake_mode_unchanged(spark):
+def test_sample_frames_malformed_bytes_emit_no_frames(spark):
+    # ADVICE r03 (medium): malformed/truncated bytes DROP the row (zero
+    # frames, anti-joinable) instead of killing the task
     df = spark.createDataFrame([("vz", bytearray(b"\x00" * 64))], "video_id string, bytes binary")
-    rows = M.sample_frames(df, every_ms=1000, fake=True).collect()
-    assert rows and all((r["fw"], r["fh"]) == (8, 8) for r in rows)
-    # ADVICE r03 (medium): malformed/truncated bytes with fake=False DROP
-    # the row (zero frames, anti-joinable) instead of killing the task
-    assert M.sample_frames(df, every_ms=1000, fake=False).count() == 0
+    assert M.sample_frames(df, every_ms=1000).count() == 0
 
 
 def test_avi_rejects_non_mjpeg_stream():
@@ -264,7 +314,7 @@ def test_sample_frames_mjpeg_mp4_real_pixels(spark):
            for f in range(10)]
     data = _mp4.write_mjpeg_mp4(src, fps=5, quality=92)  # 2 s clip
     df = spark.createDataFrame([("m0", bytearray(data))], "video_id string, bytes binary")
-    rows = sorted(M.sample_frames(df, every_ms=500, fake=False).collect(),
+    rows = sorted(M.sample_frames(df, every_ms=500).collect(),
                   key=lambda r: r["frame_idx"])
     assert [r["ts_ms"] for r in rows] == [0, 500, 1000, 1500]
     for r in rows:
@@ -275,27 +325,10 @@ def test_sample_frames_mjpeg_mp4_real_pixels(spark):
         assert (99 if mse == 0 else 10 * np.log10(255**2 / mse)) > 40
 
 
-def test_sample_frames_non_jpeg_mp4_keeps_real_duration_fake_pixels(spark):
-    """A non-JPEG MP4 still gets real mvhd timestamps with fake pixels —
-    unchanged contract for codecs the engine doesn't carry."""
-    import numpy as np
-
-    from extractors_geo_spark import mp4 as _mp4
-
-    data = bytearray(_mp4.write_mjpeg_mp4(
-        [np.zeros((8, 8), np.uint8) for _ in range(6)], fps=2))  # 3 s
-    i = bytes(data).find(b"jpeg", bytes(data).find(b"stsd"))
-    data[i : i + 4] = b"avc1"
-    df = spark.createDataFrame([("h264", bytes(data))], "video_id string, bytes binary")
-    rows = M.sample_frames(df, every_ms=1000, fake=True).collect()
-    assert [r["ts_ms"] for r in sorted(rows, key=lambda r: r["ts_ms"])] == [0, 1000, 2000]
-    assert all((r["fw"], r["fh"]) == (8, 8) for r in rows)  # fake pixels
-
-
 def test_malformed_containers_never_kill_the_job(spark):
     """Review finding: truncated AVI/MP4/FLAC bytes raise struct.error/
-    IndexError, not just ValueError — all must fall through to the
-    fake/error path, never fail the Spark task."""
+    IndexError, not just ValueError — all must end as zero rows for
+    that clip, never fail the Spark task."""
     import struct as _s
 
     # truncated MP4 with a jpeg stsd but no sample-table bytes
@@ -305,13 +338,11 @@ def test_malformed_containers_never_kill_the_job(spark):
     bad_avi = b"RIFF" + _s.pack("<I", 30) + b"AVI LIST" + _s.pack("<I", 10) + b"hdrlavih" + b"\x00\x02"
     vids = spark.createDataFrame(
         [("m", bad_mp4), ("a", bad_avi)], "video_id string, bytes binary")
-    rows = M.sample_frames(vids, every_ms=1000, fake=True).collect()
-    assert rows and all((r["fw"], r["fh"]) == (8, 8) for r in rows)  # all fake
+    assert M.sample_frames(vids, every_ms=1000).count() == 0
 
     bad_flac = b"fLaC\x80"  # truncated STREAMINFO header
     auds = spark.createDataFrame([("f", bad_flac)], "audio_id string, bytes binary")
-    out = M.audio_features(auds, fake=True).collect()
-    assert len(out) == 1  # fake fallback, not a crash
+    assert M.audio_features(auds).count() == 0  # dropped, not a crash
 
 
 def test_sample_frames_rawvideo_mp4_bit_exact(spark):
@@ -325,7 +356,7 @@ def test_sample_frames_rawvideo_mp4_bit_exact(spark):
     src = [((xx * 3 + yy * 5 + 17 * f) % 251).astype(np.uint8) for f in range(6)]
     data = _mp4.write_raw_mp4(src, fps=2)  # 3 s clip
     df = spark.createDataFrame([("rv", bytearray(data))], "video_id string, bytes binary")
-    rows = sorted(M.sample_frames(df, every_ms=1000, fake=False).collect(),
+    rows = sorted(M.sample_frames(df, every_ms=1000).collect(),
                   key=lambda r: r["frame_idx"])
     assert [r["ts_ms"] for r in rows] == [0, 1000, 2000]
     for r in rows:
@@ -350,7 +381,7 @@ def test_sample_frames_fragmented_mp4(spark):
     df = spark.createDataFrame(
         [("fj", bytearray(frag_j)), ("fr", bytearray(frag_r))],
         "video_id string, bytes binary")
-    rows = M.sample_frames(df, every_ms=1000, fake=False).collect()
+    rows = M.sample_frames(df, every_ms=1000).collect()
     by = {}
     for r in rows:
         by.setdefault(r["video_id"], []).append(r)
@@ -401,10 +432,29 @@ def test_video_captions_operator(spark):
         ("wc", 0, "hello world"), ("wc", 750, "second cap")]
 
 
+def test_png_text_chunks_roundtrip():
+    import numpy as np
+    import struct as _st
+    import zlib
+
+    from extractors_geo_spark import png as _png
+
+    g = (np.arange(64, dtype=np.uint8).reshape(8, 8) * 3) % 251
+    base = _png.encode(g)
+    tagged = _png.add_text_chunks(base, {"Title": "a view", "Description": "Grüße"})
+    got = _png.read_text_chunks(tagged)
+    assert got == {"Title": "a view", "Description": "Grüße"}
+    np.testing.assert_array_equal(_png.decode(tagged), g)
+    # zTXt
+    z = _png._chunk(b"zTXt", b"Comment\x00\x00" + zlib.compress(b"note"))
+    ihdr_end = 8 + 8 + _st.unpack(">I", base[8:12])[0] + 4
+    assert _png.read_text_chunks(base[:ihdr_end] + z + base[ihdr_end:])["Comment"] == "note"
+
+
 def test_audio_features_pcm_in_mp4(spark):
     """PCM ('sowt') audio tracks inside MP4 containers decode for real:
     exact duration/windows/energy; AAC ('mp4a') raises the documented
-    stub under fake=False; malformed containers drop."""
+    stub; malformed containers drop."""
     import numpy as np
     import pytest as _pt
 
@@ -415,17 +465,17 @@ def test_audio_features_pcm_in_mp4(spark):
     pcm = (np.sin(2 * np.pi * 440 * t) * 32767).astype("<i2")
     good = _mp4.write_pcm_mp4(pcm, rate)
     df = spark.createDataFrame([("a1", bytearray(good))], "audio_id string, bytes binary")
-    r = M.audio_features(df, fake=False).collect()[0]
+    r = M.audio_features(df).collect()[0]
     assert abs(r["duration_s"] - 2.0) < 1e-9 and r["n_windows"] == 20
     assert abs(r["features"][0] - 0.5) < 1e-3
     # well-formed AAC entry -> stub raise (swap the fourcc to mp4a)
     aac = good.replace(b"sowt", b"mp4a", 1)
     df2 = spark.createDataFrame([("a2", bytearray(aac))], "audio_id string, bytes binary")
     with _pt.raises(Exception, match="AAC|NotImplementedError"):
-        M.audio_features(df2, fake=False).collect()
+        M.audio_features(df2).collect()
     # truncated container -> dropped row
     df3 = spark.createDataFrame([("a3", bytearray(good[:40]))], "audio_id string, bytes binary")
-    assert M.audio_features(df3, fake=False).count() == 0
+    assert M.audio_features(df3).count() == 0
 
 
 def test_png_text_chunks_roundtrip():

@@ -1,6 +1,7 @@
 #!/bin/bash
 # Full local validation, the gate a change must pass:
-#   1. the tier-1 pytest suite, run as ROADMAP.md's tier-1 command runs it;
+#   1. the tier-1 pytest suite, run as ROADMAP.md's tier-1 command runs it,
+#      plus --durations=15 so every run prints its 15 slowest tests;
 #   2. tools/check_oracles.py (the oracle window) at sf0.001 and sf0.01.
 # Every step runs; the exit status is non-zero if any of them failed.
 #
@@ -13,6 +14,7 @@ failed=()
 echo "=== tier-1 pytest ==="
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
 timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider \
+  --durations=15 \
   || failed+=("tier-1 pytest")
 
 for sf in sf0.001 sf0.01; do
