@@ -2073,41 +2073,6 @@ def q_jpeg_roundtrip(spark, sf_dir):
     )
 
 
-def q_wav_features(spark, sf_dir):
-    """Real RIFF/WAVE decode through audio_features: deterministic sine
-    WAVs synthesized on executors (rows-only; exact duration/energy in
-    tests/test_multimodal.py)."""
-    import struct as _s
-
-    import numpy as np
-    import pandas as pd
-
-    base = spark.range(32).select(F.col("id").alias("n"))
-
-    def make(batches):
-        for b in batches:
-            rows = []
-            for i in b["n"]:
-                i = int(i)
-                rate = 8000
-                secs = 1 + i % 3
-                t = np.arange(rate * secs) / rate
-                sig = (0.5 * np.sin(2 * np.pi * (110 + 10 * i) * t) * 32767).astype("<i2")
-                pcm = sig.tobytes()
-                wav = (b"RIFF" + _s.pack("<I", 36 + len(pcm)) + b"WAVE"
-                       + b"fmt " + _s.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
-                       + b"data" + _s.pack("<I", len(pcm)) + pcm)
-                rows.append({"audio_id": f"a{i}", "bytes": wav})
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes"])
-
-    from extractors_geo_spark.operators import multimodal as M
-
-    wavs = base.mapInPandas(make, "audio_id string, bytes binary")
-    out = M.audio_features(wavs)
-    return out.select("audio_id", "duration_s", "n_windows",
-                      F.floor(F.element_at("features", 1) * 10000).cast("long").alias("e0_q"))
-
-
 def q_lcc_forward(spark, sf_dir):
     """Lambert-conformal-conic forward (Texas Central, EPSG:32139) on the
     derived CONUS points: the REAL numpy zone code (geo.lcc_forward_np)
@@ -2188,92 +2153,6 @@ SELECT point_id,
        CAST(FLOOR({north} / 10.0 + 0.5) AS BIGINT) AS n_q
 FROM p
 """
-
-
-def q_flac_features(spark, sf_dir):
-    """Real FLAC decode through audio_features: deterministic sine clips
-    FLAC-encoded on executors (rows-only; losslessness vs the same PCM
-    through the WAV path in tests/test_multimodal.py)."""
-    import numpy as np
-    import pandas as pd
-
-    base = spark.range(16).select(F.col("id").alias("n"))
-
-    def make(batches):
-        from extractors_geo_spark import flac as _flac
-
-        for b in batches:
-            rows = []
-            for i in b["n"]:
-                i = int(i)
-                rate = 8000
-                secs = 1 + i % 3
-                t = np.arange(rate * secs) / rate
-                pcm = (0.5 * np.sin(2 * np.pi * (110 + 10 * i) * t) * 32767).astype(np.int32)
-                rows.append({"audio_id": f"f{i}", "bytes": _flac.encode(pcm, rate)})
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes"])
-
-    from extractors_geo_spark.operators import multimodal as M
-
-    clips = base.mapInPandas(make, "audio_id string, bytes binary")
-    out = M.audio_features(clips)
-    return out.select("audio_id", "duration_s", "n_windows",
-                      F.floor(F.element_at("features", 1) * 10000).cast("long").alias("e0_q"))
-
-
-def q_mp3_features(spark, sf_dir):
-    """Real Layer III decode through audio_features (VERDICT r03 #6 /
-    r5 #8): sine clips mp3-encoded on executors with the in-repo codec,
-    rotating mono / M-S joint stereo x MPEG-1 / MPEG-2 LSF (i mod 4),
-    with INTENSITY stereo replacing M/S on the MPEG-1 stereo leg since
-    r7 and the i==4 mono MPEG-1 leg carrying a transient coded with
-    adaptive MIXED BLOCKS + subblock_gain (late r7), decoded back on
-    the feature path (rows-only; WAV-parity tolerance in
-    tests/test_mp3.py)."""
-    import numpy as np
-    import pandas as pd
-
-    base = spark.range(8).select(F.col("id").alias("n"))
-
-    def make(batches):
-        from extractors_geo_spark import mp3 as _mp3
-
-        for b in batches:
-            rows = []
-            for i in b["n"]:
-                i = int(i)
-                rate = 16000 if i % 2 else 32000  # LSF / MPEG-1
-                secs = 1 + i % 2
-                t = np.arange(rate * secs) / rate
-                sig = 0.5 * np.sin(2 * np.pi * (220 + 20 * i) * t)
-                stereo = i % 4 >= 2
-                if stereo:  # joint stereo: M/S on LSF, intensity on MPEG-1
-                    sig = np.stack(
-                        [sig, 0.4 * np.sin(2 * np.pi * (330 + 20 * i) * t)],
-                        axis=1)
-                intens = stereo and i % 2 == 0
-                if i == 4:  # mono MPEG-1: adaptive mixed blocks (late r7)
-                    atk = len(sig) // 2
-                    sig[atk:atk + 300] += 0.4 * np.sin(
-                        2 * np.pi * 5000 * np.arange(300) / rate)
-                    rows.append({"audio_id": f"m{i}",
-                                 "bytes": _mp3.encode(
-                                     sig, rate, adaptive=True, mixed=True)})
-                    continue
-                rows.append({"audio_id": f"m{i}",
-                             "bytes": _mp3.encode(
-                                 sig, rate, joint=not intens,
-                                 intensity=intens)})
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes"])
-
-    from extractors_geo_spark.operators import multimodal as M
-
-    clips = base.mapInPandas(make, "audio_id string, bytes binary")
-    out = M.audio_features(clips)
-    # mean-square of a 0.5-amplitude sine = 0.125: quantize the first
-    # window's energy so the row content is assertion-grade stable
-    return out.select("audio_id", "duration_s", "n_windows",
-                      F.floor(F.element_at("features", 1) * 1000).cast("long").alias("e0_q"))
 
 
 def q_aac_features(spark, sf_dir):
@@ -2692,10 +2571,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_lsh_pairs": q_minhash_lsh_pairs,
         "tile_render_png": q_tile_render_png,
         "jpeg_roundtrip": q_jpeg_roundtrip,
-        "wav_features": q_wav_features,
         "mjpeg_frames": q_mjpeg_frames,
-        "flac_features": q_flac_features,
-        "mp3_features": q_mp3_features,
         "aac_features": q_aac_features,
     }
     # RuntimeError (not assert): the guard must survive `python -O`

@@ -79,9 +79,8 @@ def image_pipeline(spark, n_images: int) -> tuple[float, int]:
 
 
 def lineage_bench(spark, n_images: int, buckets: int) -> dict:
-    """Flagship pipeline over a STORED images table through run_with_lineage,
-    onepass vs serial: serial re-reads the full source (bytes column and
-    all) once per bucket because a hash filter can't prune parquet files."""
+    """Flagship pipeline over a STORED images table through
+    run_with_lineage: one fresh run, timed."""
     import shutil
     import tempfile
 
@@ -108,21 +107,14 @@ def lineage_bench(spark, n_images: int, buckets: int) -> dict:
         return tiles.xyz_tiles(flat, zooms=(8,), passthrough=("image_id", "poly_id"))
 
     warmup(spark)
-    out = {"images": n_images, "buckets": buckets}
-    for mode in ("onepass", "serial"):
-        df = spark.read.parquet(src)
-        dst = os.path.join(work, f"out_{mode}")
-        t0 = time.time()
-        r = run_with_lineage(df, "image_id", dst, n_buckets=buckets,
-                             transform=transform, mode=mode)
-        sec = time.time() - t0
-        out[mode] = {"seconds": round(sec, 3), "scans": r["scans"],
-                     "images_per_sec": round(n_images / sec, 1), "rows": r["rows"]}
-    out["speedup_onepass_vs_serial"] = round(
-        out["serial"]["seconds"] / out["onepass"]["seconds"], 2
-    )
+    t0 = time.time()
+    r = run_with_lineage(spark.read.parquet(src), "image_id", os.path.join(work, "out"),
+                         n_buckets=buckets, transform=transform)
+    sec = time.time() - t0
     shutil.rmtree(work, ignore_errors=True)
-    return out
+    return {"images": n_images, "buckets": buckets, "seconds": round(sec, 3),
+            "scans": r["scans"], "images_per_sec": round(n_images / sec, 1),
+            "rows": r["rows"]}
 
 
 def main() -> None:
@@ -140,8 +132,8 @@ def main() -> None:
         return
 
     if len(sys.argv) > 1 and sys.argv[1] == "--lineage-bench":
-        # resume-path cost: the SAME stored-table pipeline through
-        # run_with_lineage in onepass vs serial mode (VERDICT r02 #1)
+        # resume-path cost: the stored-table pipeline through
+        # run_with_lineage (VERDICT r02 #1)
         n_images = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
         buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 16
         print(json.dumps(lineage_bench(spark, n_images, buckets)))

@@ -83,7 +83,6 @@ _API = {
         "exif": ("extractors_geo_spark.exif", None),
         "h264": ("extractors_geo_spark.h264", None),
         "aac": ("extractors_geo_spark.aac", None),
-        "mp3": ("extractors_geo_spark.mp3", None),
         "mp4": ("extractors_geo_spark.mp4", None),
         "subtitles": ("extractors_geo_spark.subtitles", None),
         "SnapshotTable": ("extractors_geo_spark.sources.snapshot_table", "SnapshotTable"),

@@ -730,18 +730,6 @@ def wms_getmap_url(
     )
 
 
-def csw_record_url(base: Column | str, workspace: Column | str, store: Column) -> Column:
-    """CSW GetRecordById URL (pycsw.extractor/ncsa.geo.pycsw.py:278-285)."""
-    base = F.lit(base) if isinstance(base, str) else base
-    workspace = F.lit(workspace) if isinstance(workspace, str) else workspace
-    return F.concat(
-        base,
-        F.lit("?request=GetRecordById&service=CSW&version=2.0.2&elementsetname=full&id="),
-        workspace, F.lit(":"), store,
-        F.lit("&outputschema=http://www.isotc211.org/2005/gmd"),
-    )
-
-
 def csw_corners(minx3857: Column, miny3857: Column, maxx3857: Column, maxy3857: Column) -> tuple[Column, Column]:
     """CSW lower/upper corner strings: inverse-Mercator to 4326, then the
     reference's axis swap to 'lat lon' (pycsw.extractor/pycswutils.py:100-107,

@@ -109,32 +109,17 @@ def shingle_hashes_from_words(w: Column, shingle_n: int = 3) -> Column:
     return F.when(F.size(w) >= shingle_n, hs).otherwise(F.array().cast("array<bigint>"))
 
 
-def shingle_hashes(text: Column, shingle_n: int = 3) -> Column:
-    return shingle_hashes_from_words(norm_words(text), shingle_n)
-
-
 def minhash_elements(hs_mod: Column, num_hashes: int = 16) -> list[Column]:
     """Per-element signature columns. Prefer these over indexing into
-    minhash_from_hashes()'s array: element_at over a computed array
-    column re-inlines the WHOLE array expression per extraction
-    (projection collapse + no CSE across higher-order functions), i.e.
-    num_hashes x the shingle pipeline per element."""
+    one array of them: element_at over a computed array column
+    re-inlines the WHOLE array expression per extraction (projection
+    collapse + no CSE across higher-order functions), i.e. num_hashes x
+    the shingle pipeline per element."""
     sig = []
     for a, b in _affine_params(num_hashes):
         mapped = F.transform(hs_mod, lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE_P)))
         sig.append(F.array_min(mapped))
     return sig
-
-
-def minhash_from_hashes(hs_mod: Column, num_hashes: int = 16) -> Column:
-    return F.array(*minhash_elements(hs_mod, num_hashes))
-
-
-def minhash_signature(text: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """Array of num_hashes minhash values: min over shingles of
-    (a*h(s)+b) mod p, h = content_hash64. Prefer materializing
-    shingle_hashes() in a projection first (see minhash_lsh_pairs)."""
-    return minhash_from_hashes(shingle_hashes(text, shingle_n), num_hashes)
 
 
 def minhash_lsh_pairs(
@@ -225,7 +210,7 @@ def minhash_lsh_pairs(
 
 
 def word_hashes(text: Column) -> Column:
-    """Hashed word array — materialize once (see shingle_hashes note)."""
+    """Hashed word array — materialize once (see shingle_hashes_from_words note)."""
     return F.transform(norm_words(text), lambda x: content_hash64(x))
 
 

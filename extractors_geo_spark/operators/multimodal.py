@@ -4,15 +4,15 @@ The engine treats non-TIFF payloads the way a 100 TB training-data
 pipeline does: bytes stay an opaque `binary` column, typed metadata
 travels beside them, and decode/feature stages are Arrow-batched
 mapInPandas operators. Every decode is REAL (pure-Python codecs in
-..tiff/..png/..jpeg/..avi/..mp4/..h264/..flac/..mp3/..aac and
-decode_wav below): TIFF (+BigTIFF), PNG, JPEG (baseline + progressive),
-video as MJPEG (AVI and MP4 jpeg-codec tracks), uncompressed MP4
-('raw '/'Y800') and CAVLC H.264 MP4, audio as RIFF/WAVE, FLAC, mp3 and
-AAC-LC in MP4. Bytes no codec here can decode never turn into made-up
-pixels or samples: an image gets an error row (or no feature/thumbnail
-row), a malformed video or audio clip yields no rows, and a well-formed
-stream in a codec (or coding tools) the engine does not carry raises
-NotImplementedError.
+..tiff/..png/..jpeg/..avi/..mp4/..h264/..aac and decode_wav below):
+TIFF (+BigTIFF), PNG, JPEG (baseline + progressive), video as MJPEG
+(AVI and MP4 jpeg-codec tracks), uncompressed MP4 ('raw '/'Y800') and
+CAVLC H.264 MP4, audio as RIFF/WAVE and AAC-LC in MP4. Bytes no codec
+here can decode never turn into made-up pixels or samples: an image gets
+an error row (or no feature/thumbnail row), a malformed video or audio
+clip, or audio in any other container (FLAC, MPEG audio), yields no
+rows, and a well-formed stream in a codec (or coding tools) the engine
+does not carry raises NotImplementedError.
 
 Operators:
   sniff_format       magic-byte detection (the reference's
@@ -628,14 +628,11 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
 def audio_features(audios: DataFrame, id_col: str = "audio_id",
                    window_ms: int = 100) -> DataFrame:
     """Audio -> windowed energy features (MFCC stand-in; same schema).
-    RIFF/WAVE, FLAC, in-profile mp3 and AAC-LC-in-MP4 inputs decode FOR
-    REAL (decode_wav / ..flac / ..mp3 / ..aac). A well-formed mp3 or
-    mp4a stream outside the in-repo codec profile raises
-    NotImplementedError; malformed bytes and unknown containers drop
-    the row (callers anti-join ids to find them)."""
-
-    from .. import flac as _flac
-    from .. import mp3 as _mp3
+    RIFF/WAVE and AAC-LC-in-MP4 inputs decode FOR REAL (decode_wav /
+    ..aac). A well-formed mp4a stream outside the in-repo AAC-LC profile
+    raises NotImplementedError; malformed bytes and any other container
+    (FLAC, MPEG audio, ...) drop the row (callers anti-join ids to find
+    them)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -643,62 +640,39 @@ def audio_features(audios: DataFrame, id_col: str = "audio_id",
             for aid, data in zip(b[id_col], b["bytes"]):
                 data = bytes(data)
                 is_wav = data[:4] == b"RIFF" and data[8:12] == b"WAVE"
-                is_mp3 = data[:3] == b"ID3" or (
-                    len(data) > 4 and data[0] == 0xFF and (data[1] & 0xE0) == 0xE0
-                )
                 is_mp4 = len(data) > 12 and data[4:8] == b"ftyp"
-                if is_wav or data[:4] == b"fLaC" or is_mp3 or is_mp4:
-                    try:
-                        if is_wav:
-                            sig, rate = decode_wav(data)
-                        elif data[:4] == b"fLaC":
-                            sig, rate = _flac.decode(data)
-                        elif is_mp4:
-                            from .. import mp4 as _mp4a
+                if not (is_wav or is_mp4):
+                    continue  # unknown container: drop the row
+                try:
+                    if is_wav:
+                        sig, rate = decode_wav(data)
+                    else:
+                        from .. import mp4 as _mp4a
 
-                            tr = _mp4a.read_audio_track(data)
-                            if tr["pcm"] is None:
-                                # well-formed mp4a OUTSIDE the in-repo
-                                # AAC-LC profile (real-world ISO Huffman
-                                # assignments land here): the documented
-                                # unsupported-codec stub (real deploy:
-                                # ffmpeg). Malformed falls to except.
-                                raise NotImplementedError(
-                                    "AAC stream outside the in-repo codec profile"
-                                )
-                            sig, rate = tr["pcm"], tr["rate"]
-                        else:
-                            sig, rate = _mp3.decode(data)
-                    except NotImplementedError:
-                        raise  # well-formed unsupported codec: surfaced
-                    except Exception:
-                        sig = None  # malformed input (ValueError/struct.
-                        # error/IndexError): drop
-                    if sig is not None:
-                        dur = sig.size / rate
-                        wlen = max(int(rate * window_ms / 1000), 1)
-                        n_win = sig.size // wlen
-                        energy = (sig[: n_win * wlen].reshape(n_win, wlen) ** 2).mean(axis=1)[:FEAT_DIM]
-                        feat = np.zeros(FEAT_DIM, dtype=np.float32)
-                        feat[: energy.size] = energy
-                        rows.append({"audio_id": aid, "duration_s": dur,
-                                     "n_windows": n_win, "features": feat.tolist()})
-                        continue
-                    if is_mp3:
-                        try:
-                            _mp3.parse_mp3_info(data)
-                        except Exception:
-                            continue  # malformed mp3: drop the row
-                        # well-formed MPEG stream outside the in-repo
-                        # codec profile (real-world ISO Huffman payloads,
-                        # MPEG-2.5): the same well-formed-but-unsupported
-                        # raise contract as video codecs. STUB: a real
-                        # deployment decodes via libmad/ffmpeg here.
-                        raise NotImplementedError(
-                            "mp3 stream outside the in-repo codec profile"
-                        )
-                # malformed bytes or an unknown container: drop the row;
-                # callers anti-join ids to find casualties
+                        tr = _mp4a.read_audio_track(data)
+                        if tr["pcm"] is None:
+                            # well-formed mp4a OUTSIDE the in-repo
+                            # AAC-LC profile (real-world ISO Huffman
+                            # assignments land here): the documented
+                            # unsupported-codec stub (real deploy:
+                            # ffmpeg). Malformed falls to except.
+                            raise NotImplementedError(
+                                "AAC stream outside the in-repo codec profile"
+                            )
+                        sig, rate = tr["pcm"], tr["rate"]
+                except NotImplementedError:
+                    raise  # well-formed unsupported codec: surfaced
+                except Exception:
+                    continue  # malformed input (ValueError/struct.error/
+                    # IndexError): drop the row
+                dur = sig.size / rate
+                wlen = max(int(rate * window_ms / 1000), 1)
+                n_win = sig.size // wlen
+                energy = (sig[: n_win * wlen].reshape(n_win, wlen) ** 2).mean(axis=1)[:FEAT_DIM]
+                feat = np.zeros(FEAT_DIM, dtype=np.float32)
+                feat[: energy.size] = energy
+                rows.append({"audio_id": aid, "duration_s": dur,
+                             "n_windows": n_win, "features": feat.tolist()})
             yield pd.DataFrame(rows, columns=["audio_id", "duration_s", "n_windows", "features"])
 
     return audios.select(F.col(id_col), "bytes").mapInPandas(run, AUDIO_SCHEMA)

@@ -26,7 +26,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -307,11 +307,6 @@ RENDER_SCHEMA = T.StructType(
         T.StructField("png", T.BinaryType()),
     ]
 )
-
-
-def colormap_params(stats_min: Column, stats_max: Column, mean: Column, std: Column, nodata: Column):
-    """style_min/max = mu +/- 2 sigma (preview.geotiff/geotiffutils.py:163-164)."""
-    return (mean - 2 * std).alias("style_min"), (mean + 2 * std).alias("style_max")
 
 
 def render_gray(arr: np.ndarray, style_min: float, style_max: float, nodata: float | None,

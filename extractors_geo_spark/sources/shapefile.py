@@ -132,11 +132,6 @@ def infer_epsg(prj_text: str) -> tuple[int | None, str | None]:
     return None, None
 
 
-def parse_prj(prj_text: str) -> int | None:
-    """Back-compat shim over infer_epsg (None for both unknown cases)."""
-    return infer_epsg(prj_text)[0]
-
-
 def parse_shp(data: bytes) -> tuple[tuple[float, float, float, float], list[dict]]:
     """Parse a .shp: returns (file bbox, records). Each record is
     {'bbox': (..), 'rings': [[(x, y), ...], ...], 'kind': 'polygon' |

@@ -37,9 +37,7 @@ def main() -> None:
     ap.add_argument("--zooms", default="6,8,10")
     ap.add_argument("--master", default=None)
     ap.add_argument("--waves", type=int, default=1,
-                    help="onepass waves: scans per fresh run (crash loses at most buckets/waves of work)")
-    ap.add_argument("--serial", action="store_true",
-                    help="legacy bucket-by-bucket loop (B scans of the source; tiny jobs only)")
+                    help="waves: scans per fresh run (crash loses at most buckets/waves of work)")
     args = ap.parse_args()
 
     spark = get_spark(app_name="extractors_geo_pipeline", master=args.master)
@@ -65,9 +63,7 @@ def main() -> None:
                                passthrough=("image_id", "poly_id", "caption"))
 
     result = run_with_lineage(imgs, "image_id", args.out, n_buckets=args.buckets,
-                              transform=transform,
-                              mode="serial" if args.serial else "onepass",
-                              waves=args.waves)
+                              transform=transform, waves=args.waves)
     print(json.dumps(result))
     spark.stop()
 

@@ -1,7 +1,6 @@
 """AAC-LC codec: real ISO/IEC 14496-3 structure (ASC, raw_data_block,
 sections, DPCM scalefactors, 4/3-power dequant, sine-window MDCT) with
-in-repo canonical Huffman shared by encoder and decoder (same honesty
-contract as mp3). Round trips ~60+ dB SNR; out-of-profile streams raise
+in-repo canonical Huffman shared by encoder and decoder. Round trips ~60+ dB SNR; out-of-profile streams raise
 cleanly and flow to the audio_features well-formed-unsupported stub."""
 
 import numpy as np

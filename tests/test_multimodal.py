@@ -143,11 +143,14 @@ def _wav(pcm: bytes, rate: int, channels: int = 1, bits: int = 16,
 def test_audio_features(spark):
     """Schema, shape and determinism over real WAV bytes: durations and
     window counts follow the PCM length, feature vectors are FEAT_DIM
-    long, and bytes no decoder accepts get no row."""
+    long, and bytes no decoder accepts get no row: junk, and FLAC or
+    MPEG-audio streams, which are containers the engine does not carry."""
     rng = np.random.default_rng(3)
     clips = [("a1", _wav((rng.standard_normal(8000) * 6000).astype("<i2").tobytes(), 8000)),
              ("a2", _wav((rng.standard_normal(12000) * 6000).astype("<i2").tobytes(), 4000)),
-             ("junk", b"RIFFwavv")]
+             ("junk", b"RIFFwavv"),
+             ("flac", b"fLaC" + b"\x00\x00\x00\x22" + bytes(34)),
+             ("mpeg", b"\xff\xfb\x90\x64" + bytes(413))]
     auds = spark.createDataFrame([(i, bytearray(b)) for i, b in clips],
                                  "audio_id string, bytes binary")
     rows = {r["audio_id"]: r for r in M.audio_features(auds).collect()}
@@ -326,7 +329,7 @@ def test_sample_frames_mjpeg_mp4_real_pixels(spark):
 
 
 def test_malformed_containers_never_kill_the_job(spark):
-    """Review finding: truncated AVI/MP4/FLAC bytes raise struct.error/
+    """Review finding: truncated AVI/MP4/WAV bytes raise struct.error/
     IndexError, not just ValueError — all must end as zero rows for
     that clip, never fail the Spark task."""
     import struct as _s
@@ -340,8 +343,9 @@ def test_malformed_containers_never_kill_the_job(spark):
         [("m", bad_mp4), ("a", bad_avi)], "video_id string, bytes binary")
     assert M.sample_frames(vids, every_ms=1000).count() == 0
 
-    bad_flac = b"fLaC\x80"  # truncated STREAMINFO header
-    auds = spark.createDataFrame([("f", bad_flac)], "audio_id string, bytes binary")
+    # RIFF/WAVE whose data chunk size runs past the end of the bytes
+    bad_wav = _wav(bytes(200), 8000)[:-50]
+    auds = spark.createDataFrame([("w", bad_wav)], "audio_id string, bytes binary")
     assert M.audio_features(auds).count() == 0  # dropped, not a crash
 
 

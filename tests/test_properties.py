@@ -123,20 +123,6 @@ def test_state_plane_roundtrip_property(lon, lat, epsg):
     assert abs(lon2[0] - lon) < 1e-9 and abs(lat2[0] - lat) < 1e-9
 
 
-@given(st.integers(1, 3000), st.integers(0, 3))
-@settings(max_examples=25, deadline=None)
-def test_flac_roundtrip_property(n, seed):
-    import numpy as np
-
-    from extractors_geo_spark import flac
-
-    rng = np.random.default_rng(seed)
-    pcm = rng.integers(-32768, 32768, n, dtype=np.int64).astype(np.int32)
-    out, rate, bps = flac.decode_pcm(flac.encode(pcm, 8000, block_size=256))
-    assert rate == 8000 and bps == 16
-    np.testing.assert_array_equal(out[:, 0], pcm)
-
-
 @given(st.integers(4, 40), st.integers(4, 40), st.integers(0, 5),
        st.sampled_from([50, 75, 90]))
 @settings(max_examples=20, deadline=None)
