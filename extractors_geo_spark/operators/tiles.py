@@ -159,7 +159,7 @@ def xyz_tiles(meta: DataFrame, zooms: tuple[int, ...] = (6, 8, 10),
 
     All zooms are built in ONE projection (array concat + single explode),
     not a per-zoom union: a union re-evaluates the upstream pipeline once
-    per zoom — with a mapInPandas decode upstream that's zooms x the whole
+    per zoom — with a Python decode upstream that's zooms x the whole
     Arrow stage."""
     def _zoom_tiles(z, x0, x1, y0, y1):
         # antimeridian: a wrapped footprint (x0 > x1 at this zoom) covers

@@ -67,7 +67,7 @@ def run_streaming_pipeline(
     zooms: tuple[int, ...] = (8,),
 ):
     """The flagship decode -> PIP-join -> xyz-tiles chain as Structured
-    Streaming: each micro-batch runs the SAME batch operators (mapInPandas
+    Streaming: each micro-batch runs the SAME batch operators (mapInArrow
     decode, broadcast cell join, tile explode) and appends an atomic
     snapshot to the derived SnapshotTable via foreachBatch — exactly the
     reference's per-message extract-and-publish loop at micro-batch

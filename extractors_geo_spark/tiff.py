@@ -16,7 +16,7 @@ GeoTIFF tags (ModelPixelScale 33550, ModelTiepoint 33922,
 GeoKeyDirectory 34735, GeoAsciiParams 34737) and GDAL_NODATA 42113.
 
 Everything here is plain bytes->numpy so it can run inside Arrow-batched
-pandas UDFs on executors; nothing touches the driver. Deflate decode is
+UDFs on executors; nothing touches the driver. Deflate decode is
 stdlib zlib (C speed — prefer it for new data); LZW is pure Python and
 exists for reading the files the world already has.
 """
@@ -231,14 +231,15 @@ def _lzw_decode(data: bytes) -> bytes:
         if code == CLEAR:
             _reset()
             continue
-        if prev is None:
+        if code < len(table):
             entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        else:  # KwKwK case
+            if prev is not None:
+                table.append(prev + entry[:1])
+        elif code == len(table) and prev is not None:  # KwKwK case
             entry = prev + prev[:1]
             table.append(entry)
+        else:  # not in the table yet: corrupt stream, not garbage pixels
+            raise ValueError(f"LZW code {code} beyond table size {len(table)}")
         out += entry
         prev = entry
         # TIFF early change, decoder side: the table lags the encoder by one

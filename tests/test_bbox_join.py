@@ -95,3 +95,4 @@ def test_bbox_join_is_codegen_only(spark, boxes):
     l, r, _, _ = boxes
     s = explain_str(bbox_join.bbox_join(l, r))
     assert "ArrowEvalPython" not in s and "MapInPandas" not in s
+    assert "MapInArrow" not in s

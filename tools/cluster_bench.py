@@ -204,7 +204,8 @@ def main() -> None:
     eff = tp[(32, 8)] / (4 * tp[(8, 8)])
     hw_eff = hw[8] / hw[32]
     # workload-true ceilings: k independent processes of the engine's OWN
-    # per-image decode+stats (memory-bandwidth-faithful, unlike sha256)
+    # decode stage body over an Arrow batch (memory-bandwidth-faithful,
+    # unlike sha256)
     wl_eff_2_8 = wl[2] / wl[8]
     wl_eff = wl[8] / wl[32]
     md = f"""
@@ -238,7 +239,7 @@ Machine ceiling for 8 -> 32 this run (sha256 multiprocess probe): {hw_eff:.3f}
 
 The sha256 probe is ALU-only; the pipeline is Arrow/numpy
 memory-bandwidth-heavy, so the honest ceiling is k INDEPENDENT PROCESSES
-of the engine's own per-image decode+stats (fork-inherited blobs, no
+of the engine's own batch decode+stats (fork-inherited batch, no
 Spark, no shared state — nothing any engine could schedule better):
 
 | k procs | best s | ceiling vs 1/4 the procs |

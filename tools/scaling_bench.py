@@ -98,34 +98,32 @@ def _hw_work(n):
     return 1
 
 
-_WL_BLOBS: list | None = None
+_WL_BATCH = None  # pyarrow.RecordBatch of (image_id, bytes, fmt)
 
 
 def _wl_work(reps: int) -> int:
-    """One process's share of the workload probe: decode+stats over the
-    inherited blob set, `reps` passes."""
-    from extractors_geo_spark.operators.extract_meta import _decode_header
+    """One process's share of the workload probe: the engine's decode
+    stage body (decode+stats) over the inherited batch, `reps` passes."""
+    from extractors_geo_spark.operators.extract_meta import decode_batch
 
-    c = 0
     for _ in range(reps):
-        for d, f in _WL_BLOBS:
-            _decode_header(d, f, True)
-            c += 1
-    return c
+        decode_batch(_WL_BATCH, True)
+    return reps * _WL_BATCH.num_rows
 
 
 def workload_baseline(parquet_path: str, n_blobs: int = 400,
                       reps: int = 4) -> dict[int, float]:
     """Attainable-ceiling probe using THE WORKLOAD ITSELF: k independent
-    processes (fork-inherited blobs, no Spark, no shared state) each run
-    the engine's own per-image decode+stats over the same image set.
+    processes (fork-inherited batch, no Spark, no shared state) each run
+    the engine's own decode stage body (`decode_batch`: decode+stats over
+    one Arrow batch) over the same image set.
     k copies of the actual per-core work is an upper bound no engine can
     beat at k cores; unlike the sha256 probe it carries the workload's
     real memory-bandwidth and allocator footprint, so it captures the
     part of the silicon ceiling that ALU-only probes miss.
 
     Returns {k: best seconds for k*reps*n_blobs images}."""
-    global _WL_BLOBS
+    global _WL_BATCH
     import multiprocessing as mp
     import time
 
@@ -133,12 +131,10 @@ def workload_baseline(parquet_path: str, n_blobs: int = 400,
 
     import glob
     part = sorted(glob.glob(os.path.join(parquet_path, "*.parquet")))[0]
-    t = pq.ParquetFile(part).read_row_group(0, columns=["bytes", "fmt"])
-    rows = min(n_blobs, t.num_rows)
-    _WL_BLOBS = [(t.column("bytes")[i].as_py(), t.column("fmt")[i].as_py())
-                 for i in range(rows)]
+    t = pq.ParquetFile(part).read_row_group(0, columns=["image_id", "bytes", "fmt"])
+    _WL_BATCH = t.slice(0, n_blobs).combine_chunks().to_batches()[0]
     out = {}
-    ctx = mp.get_context("fork")  # children inherit _WL_BLOBS
+    ctx = mp.get_context("fork")  # children inherit _WL_BATCH
     for k in (2, 8, 32):
         best = 1e18
         for _ in range(2):
@@ -147,7 +143,7 @@ def workload_baseline(parquet_path: str, n_blobs: int = 400,
                 p.map(_wl_work, [reps] * k)
             best = min(best, time.time() - t0)
         out[k] = best
-    _WL_BLOBS = None
+    _WL_BATCH = None
     return out
 
 
@@ -250,7 +246,7 @@ below); per-task work is independent, which is what transfers to a real
 1000-executor deployment.
 
 Plan shape (asserted by tests/test_plans.py): parquet scan (column-pruned
-to image_id/bytes/fmt/phash) -> ONE MapInPandas decode stage -> codegen'd
+to image_id/bytes/fmt/phash) -> ONE MapInArrow decode stage -> codegen'd
 filter/cell-encode projection -> BroadcastHashJoin (polygon side: 50 rows
 exploded to covering cells) -> Catalyst ray-cast filter -> explode to
 tiles -> partial+final count. No wide shuffle anywhere; bytes never leave
