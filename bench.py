@@ -107,14 +107,23 @@ def lineage_bench(spark, n_images: int, buckets: int) -> dict:
         return tiles.xyz_tiles(flat, zooms=(8,), passthrough=("image_id", "poly_id"))
 
     warmup(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage-bench", "run_with_lineage")
     t0 = time.time()
-    r = run_with_lineage(spark.read.parquet(src), "image_id", os.path.join(work, "out"),
-                         n_buckets=buckets, transform=transform)
+    try:
+        r = run_with_lineage(spark.read.parquet(src), "image_id", os.path.join(work, "out"),
+                             n_buckets=buckets, transform=transform)
+    finally:
+        sc.setJobGroup(None, None)
     sec = time.time() - t0
     shutil.rmtree(work, ignore_errors=True)
+    # the write stage is the last stage the group ran (AQE sizes it)
+    tracker = sc.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup("lineage-bench")
+              for s in tracker.getJobInfo(j).stageIds]
     return {"images": n_images, "buckets": buckets, "seconds": round(sec, 3),
             "scans": r["scans"], "images_per_sec": round(n_images / sec, 1),
-            "rows": r["rows"]}
+            "rows": r["rows"], "write_tasks": tracker.getStageInfo(max(stages)).numTasks}
 
 
 def main() -> None:

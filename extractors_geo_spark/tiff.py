@@ -367,8 +367,12 @@ def read_pixels(data: bytes, info: TiffInfo | None = None) -> np.ndarray:
         tw = int(info.tags[_TILE_W][0])
         th = int(info.tags[_TILE_H][0])
         offs, cnts = info.tags[_TILE_OFF], info.tags[_TILE_CNT]
-        out = np.empty((info.height, info.width), dtype=info.dtype)
         tiles_across = (info.width + tw - 1) // tw
+        listed, need = min(len(offs), len(cnts)), tiles_across * ((info.height + th - 1) // th)
+        if listed < need:
+            # np.empty below would hand back uninitialised memory as pixels
+            raise ValueError(f"{listed} tiles listed, grid needs {need}")
+        out = np.empty((info.height, info.width), dtype=info.dtype)
         for i, (o, c) in enumerate(zip(offs, cnts)):
             ty, tx = (i // tiles_across) * th, (i % tiles_across) * tw
             t = _block(data[o : o + c], th, tw)
@@ -378,6 +382,11 @@ def read_pixels(data: bytes, info: TiffInfo | None = None) -> np.ndarray:
     offs = info.tags[_STRIP_OFF]
     cnts = info.tags[_STRIP_CNT]
     rps = int(info.tags.get(_ROWS_PER_STRIP, (info.height,))[0])
+    if rps < 1:
+        raise ValueError(f"RowsPerStrip {rps}")
+    listed, need = min(len(offs), len(cnts)), (info.height + rps - 1) // rps
+    if listed < need:
+        raise ValueError(f"{listed} strips listed, image needs {need}")
     rows = []
     for i, (o, c) in enumerate(zip(offs, cnts)):
         bh = min(rps, info.height - i * rps)

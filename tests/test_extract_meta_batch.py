@@ -346,3 +346,46 @@ def test_lzw_bad_strip_is_a_pixel_decode_error():
     got = _assert_parity(_batch(rows), True)
     assert [r["error"] for r in got] == ["pixel decode failed"] * 3
     assert all(r["meta"] is not None and r["stats"] is None for r in got)
+
+
+def _set_entry(b: bytes, tag: int, count: int | None = None, value: int | None = None) -> bytes:
+    """Rewrite one IFD entry's count and/or 4-byte value field."""
+    at, _, cnt, val = _entries(b)[tag]
+    return b[:at + 4] + struct.pack("<II", cnt if count is None else count,
+                                    val if value is None else value) + b[at + 12 :]
+
+
+def _assert_pixel_decode_failed(make) -> None:
+    """Three rasters of one layout, as a group and one by one: every row
+    keeps its meta, has NULL stats and says the pixels failed."""
+    rows = [{"image_id": f"bad{k}", "fmt": "tiff", "bytes": make(k)} for k in range(3)]
+    for batch in (_batch(rows), _batch(rows[:1])):
+        got = _assert_parity(batch, True)
+        assert all(r["error"] == "pixel decode failed" for r in got), got
+        assert all(r["meta"] is not None and r["stats"] is None for r in got)
+
+
+def _raster(k: int, shape: tuple[int, int], **kw) -> bytes:
+    return tiff.write_geotiff(np.full(shape, float(k)), origin=(-100.0 + k, 40.0),
+                              pixel_size=(0.1, 0.1), epsg=4326, **kw)
+
+
+def test_tiled_with_missing_tiles_is_a_pixel_decode_error():
+    """A 32x32 raster in 16x16 tiles lists 3 of its 4 tiles: the missing
+    tile must not decode as whatever memory the output array held."""
+    def make(k):
+        b = _raster(k, (32, 32), tile=(16, 16))
+        return _set_entry(_set_entry(b, tiff._TILE_OFF, count=3), tiff._TILE_CNT, count=3)
+    _assert_pixel_decode_failed(make)
+
+
+def test_rows_per_strip_zero_is_a_pixel_decode_error():
+    _assert_pixel_decode_failed(lambda k: _set_entry(_raster(k, (8, 8)), tiff._ROWS_PER_STRIP, value=0))
+
+
+def test_strips_short_of_the_height_are_a_pixel_decode_error():
+    """An 8-row raster in 2-row strips lists 3 of its 4 strips."""
+    def make(k):
+        b = _raster(k, (8, 8), rows_per_strip=2)
+        return _set_entry(_set_entry(b, tiff._STRIP_OFF, count=3), tiff._STRIP_CNT, count=3)
+    _assert_pixel_decode_failed(make)

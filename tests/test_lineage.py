@@ -159,8 +159,8 @@ def test_manifest_on_subtree_filesystem(tmp_path):
 
 
 def test_onepass_partial_wave_sizes_shuffle_to_its_buckets(spark, tmp_path):
-    """A resume of 4 of 16 buckets shuffles into 4 * files_per_bucket write
-    tasks (not 16 * files_per_bucket, most of them empty), and writes the
+    """A resume of 4 of 16 buckets shuffles into at most 4 * files_per_bucket
+    write tasks (not 16 * files_per_bucket, most of them empty), and writes the
     same rows as the fresh run."""
     n_buckets = 16
     df = spark.range(0, 3000, 1, 2).select(
@@ -186,3 +186,52 @@ def test_onepass_partial_wave_sizes_shuffle_to_its_buckets(spark, tmp_path):
     tasks = [tracker.getStageInfo(s).numTasks for s in stages if tracker.getStageInfo(s)]
     assert tasks and max(tasks) <= 4 * fpb, tasks
     assert sorted(spark.read.parquet(out).collect()) == fresh
+
+
+def _write_stage_tasks(sc, group: str) -> int:
+    """Task count of the last stage the job group ran: the write stage."""
+    tracker = sc.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds]
+    return tracker.getStageInfo(max(stages)).numTasks
+
+
+def test_onepass_write_tasks_follow_the_data(spark, tmp_path):
+    """The bucket shuffle has no fixed count, so AQE sizes the write
+    stage: a small 16-bucket run writes in a few tasks, not one per
+    bucket. With tiny coalescing targets the same run keeps its
+    parallelism, and either way a bucket holds <= files_per_bucket files."""
+    n_buckets = 16
+    df = spark.range(0, 4000, 1, 4).select(
+        F.col("id").cast("string").alias("key"), F.col("id").alias("v"))
+    sc = spark.sparkContext
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    fpb = max(1, -(-p // n_buckets))
+
+    def run(name: str) -> int:
+        out = str(tmp_path / name)
+        sc.setJobGroup(f"lineage-{name}", "fresh 16-bucket run")
+        try:
+            r = run_with_lineage(df, "key", out, n_buckets=n_buckets)
+        finally:
+            sc.setJobGroup(None, None)
+        assert r["rows"] == 4000 and r["scans"] == 1
+        for b in range(n_buckets):
+            files = [f for f in os.listdir(os.path.join(out, f"bucket={b}"))
+                     if f.endswith(".parquet")]
+            assert 1 <= len(files) <= fpb, (name, b, len(files), fpb)
+        return _write_stage_tasks(sc, f"lineage-{name}")
+
+    assert run("coalesced") <= sc.defaultParallelism
+    keys = ("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "16b")
+        assert run("split") > 1
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
