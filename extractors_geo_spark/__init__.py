@@ -79,7 +79,6 @@ _API = {
         "shapefile": ("extractors_geo_spark.sources.shapefile", None),
         "geojson": ("extractors_geo_spark.sources.geojson", None),
         "geopackage": ("extractors_geo_spark.sources.geopackage", None),
-        "geoparquet": ("extractors_geo_spark.sources.geoparquet", None),
         "exif": ("extractors_geo_spark.exif", None),
         "h264": ("extractors_geo_spark.h264", None),
         "aac": ("extractors_geo_spark.aac", None),

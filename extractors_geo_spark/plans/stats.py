@@ -72,19 +72,9 @@ def ingest_with_stats(table, df: DataFrame, kind: str = "points",
         raise ValueError(f"unknown stats kind {kind!r}")
     if mode == "append":
         return table.append(df, summary_extra=extra)
-    if mode != "overwrite":
-        raise ValueError(f"unknown mode {mode!r}")
-    v = table.overwrite(df)
-    # overwrite() has no summary hook; stamp the stats into the freshly
-    # written manifest the same way a commit would have
-    snap = table.snapshot(v)
-    snap["summary"] = {**snap.get("summary", {}), **extra}
-    import json
-
-    from .. import fs as xfs
-
-    xfs.replace_text(table.fs, table._snapshot_path(v), json.dumps(snap))
-    return v
+    if mode == "overwrite":
+        return table.overwrite(df, summary_extra=extra)
+    raise ValueError(f"unknown mode {mode!r}")
 
 
 def stored_cell_stats(table) -> dict | None:
@@ -132,7 +122,7 @@ def stored_poly_stats(table) -> dict | None:
 def _commits_since_rewrite(table):
     """Snapshots from the most recent OVERWRITE (the only op that
     replaces the data outright) up to the current version, oldest
-    first. Deletes / compact / apply_deletes only reduce or repack rows,
+    first. Deletes and compact only reduce or repack rows,
     so earlier appends' stats stay valid UPPER bounds across them; a
     rollback makes linear version history misleading, so the walk
     surfaces it and the readers bail to the probe."""

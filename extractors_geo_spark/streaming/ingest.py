@@ -78,12 +78,9 @@ def run_streaming_pipeline(
 
     from ..operators import extract_meta, pip_join, tiles
     from ..plans import planner
+    from .removal import applied_batch_ids
 
-    applied = set()
-    for h in table.history():
-        s = table.snapshot(h["version"]).get("summary", {})
-        if "stream_batch_id" in s:
-            applied.add(s["stream_batch_id"])
+    applied = applied_batch_ids(table)
 
     # the polygon side is FIXED for the stream's life: decide broadcast
     # and rectangle-exactness ONCE here, not with probe jobs every batch
@@ -107,13 +104,11 @@ def run_streaming_pipeline(
             (F.col("lon") + 0.008).alias("maxx"), (F.col("lat") + 0.008).alias("maxy"),
         )
         out = tiles.xyz_tiles(flat, zooms=zooms, passthrough=("image_id", "poly_id"))
-        # write directly: the DAG (decode + join) must run ONCE per batch —
-        # an isEmpty() pre-check would execute the whole pipeline twice.
-        # An empty batch commits an empty file list, which is harmless.
-        v = table.current_version() + 1
-        files = table._write_files(out, v)
-        table._commit(table.snapshot()["files"] + files, "append",
-                      {"stream_batch_id": bid})
+        # append with no pre-check: the DAG (decode + join) must run ONCE
+        # per batch — an isEmpty() pre-check would execute the whole
+        # pipeline twice. An empty batch commits an empty file list, which
+        # is harmless. A lost commit race re-runs it through append's retry.
+        table.append(out, summary_extra={"stream_batch_id": bid})
         applied.add(bid)
 
     return (

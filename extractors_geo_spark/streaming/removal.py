@@ -37,10 +37,12 @@ def removal_stream(spark: SparkSession, events_dir: str):
     )
 
 
-def _applied_batch_ids(table: SnapshotTable) -> set:
-    """One O(versions) scan of the snapshot manifests — call ONCE at stream
-    start, then maintain the set in memory (a per-micro-batch rescan is
-    O(V^2) file reads over the stream's life, all driver-side)."""
+def applied_batch_ids(table: SnapshotTable) -> set:
+    """The `stream_batch_id`s already committed to `table` — the
+    idempotency set of every foreachBatch sink. One O(versions) scan of
+    the snapshot manifests — call ONCE at stream start, then maintain the
+    set in memory (a per-micro-batch rescan is O(V^2) file reads over the
+    stream's life, all driver-side)."""
     out = set()
     for h in table.history():
         s = table.snapshot(h["version"]).get("summary", {})
@@ -70,7 +72,7 @@ def propagate_removals(
     # the checkpoint location: Spark batch ids restart at 0 for a fresh
     # checkpoint dir, so a bare integer would make a NEW stream's batches
     # collide with history and be silently skipped (ADVICE r02).
-    applied = _applied_batch_ids(table)
+    applied = applied_batch_ids(table)
 
     def on_batch(batch: DataFrame, batch_id: int) -> None:
         bid = f"{checkpoint_dir}:{batch_id}"

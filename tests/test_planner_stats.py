@@ -47,6 +47,27 @@ def test_stats_roundtrip_through_snapshot_table(spark, tmp_path):
     assert stats.stored_cell_stats(t)["rows"] == 50
 
 
+def test_overwrite_with_stats_commits_them_once(spark, tmp_path, monkeypatch):
+    """Overwrite stats ride in the commit summary: no committed snapshot
+    manifest is rewritten after the fact."""
+    from extractors_geo_spark import fs as xfs
+
+    replaced = []
+    replace_text = xfs.replace_text
+
+    def spy_replace_text(fs, path, text):
+        replaced.append(path)
+        return replace_text(fs, path, text)
+
+    monkeypatch.setattr(xfs, "replace_text", spy_replace_text)
+    t = SnapshotTable(spark, str(tmp_path / "ow"))
+    v = stats.ingest_with_stats(t, _points(spark, 50), kind="points",
+                                mode="overwrite")
+    assert [p for p in replaced if "snapshots/" in p] == []
+    assert t.snapshot(v)["operation"] == "overwrite"
+    assert stats.stored_cell_stats(t)["rows"] == 50
+
+
 def test_poly_stats_roundtrip(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "polys"))
     stats.ingest_with_stats(t, _polys(spark), kind="polygons", res=7)

@@ -204,21 +204,6 @@ def test_size_hints_skip_probe_jobs(spark):
     assert len(jobs) == 0, f"plan building ran {len(jobs)} probe jobs"
 
 
-def test_mor_read_broadcasts_deletes_no_data_shuffle(spark, tmp_path):
-    """Merge-on-read reads must broadcast the (small) equality-delete
-    side into a LeftAnti BroadcastHashJoin — the data side never
-    shuffles, which is what keeps MoR reads O(scan) at 100 TB."""
-    from extractors_geo_spark.sources.snapshot_table import SnapshotTable
-
-    t = SnapshotTable(spark, str(tmp_path / "ptbl"), bucket_key="k", n_buckets=4)
-    t.overwrite(spark.createDataFrame([(f"k{i}", i) for i in range(500)], ["k", "v"]))
-    t.delete_keys(spark.createDataFrame([("k5",), ("k7",)], ["k"]), key="k",
-                  mode="mor")
-    s = explain_str(t.read())
-    assert "BroadcastHashJoin" in s and "LeftAnti" in s
-    assert "Exchange hashpartitioning" not in s, "data side must not shuffle"
-
-
 def test_near_dup_pairs_candidate_exchange_carries_no_vectors(spark):
     """VERDICT r4 #4: the LSH candidate self-join must shuffle (id, bucket)
     only — embedding arrays join back AFTER pair dedup — and no side of the

@@ -3,7 +3,6 @@
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from extractors_geo_spark.sources.snapshot_table import SnapshotTable
 
@@ -158,62 +157,6 @@ def test_expire_snapshots_reclaims_files(spark, tmp_path):
     for v in (8, 9):
         for f in t.snapshot(v)["files"]:
             assert os.path.exists(f["path"])
-
-
-def test_merge_on_read_delete_and_sequence_semantics(spark, tmp_path):
-    """mode='mor' deletes write equality-delete files (no data rewrite);
-    reads apply them seq-aware, so a key re-inserted AFTER the delete
-    survives (Iceberg v2 sequence-number semantics)."""
-    t = SnapshotTable(spark, str(tmp_path / "mtbl"), bucket_key="k", n_buckets=4)
-    t.overwrite(spark.createDataFrame([(f"k{i}", i) for i in range(20)], ["k", "v"]))
-    files_v1 = {f["path"] for f in t.snapshot()["files"]}
-    t.delete_keys(spark.createDataFrame([("k3",), ("k7",)], ["k"]), key="k",
-                  mode="mor")
-    snap = t.snapshot()
-    # no data file rewritten, delete files recorded
-    assert {f["path"] for f in snap["files"]} == files_v1
-    assert snap["operation"] == "delete-mor" and len(snap["deletes"]) >= 1
-    got = {r["k"] for r in t.read().collect()}
-    assert got == {f"k{i}" for i in range(20)} - {"k3", "k7"}
-    # time travel to before the delete still sees everything
-    assert t.read(version=1).count() == 20
-    # re-insert k3 AFTER the delete: newer seq -> must survive
-    t.append(spark.createDataFrame([("k3", 99)], ["k", "v"]))
-    rows = {r["k"]: r["v"] for r in t.read().collect()}
-    assert rows["k3"] == 99 and "k7" not in rows
-
-
-def test_apply_deletes_folds_and_drops_delete_files(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "atbl"), bucket_key="k", n_buckets=4)
-    t.overwrite(spark.createDataFrame([(f"k{i}", i) for i in range(16)], ["k", "v"]))
-    t.delete_keys(spark.createDataFrame([("k1",), ("k5",)], ["k"]), key="k",
-                  mode="mor")
-    want = {r["k"] for r in t.read().collect()}
-    v = t.apply_deletes()
-    snap = t.snapshot(v)
-    assert snap["operation"] == "apply_deletes" and snap["deletes"] == []
-    assert {r["k"] for r in t.read().collect()} == want
-    # idempotent: nothing pending -> no new snapshot
-    assert t.apply_deletes() == v
-
-
-def test_mor_composes_with_merge_and_compact(spark, tmp_path):
-    """A rewrite path (merge/compact) must not resurrect MoR-deleted rows."""
-    t = SnapshotTable(spark, str(tmp_path / "ctbl2"), bucket_key="k", n_buckets=2)
-    t.overwrite(spark.createDataFrame(
-        [(f"k{i}", i, 1) for i in range(10)], ["k", "v", "ts"]))
-    t.delete_keys(spark.createDataFrame([("k2",), ("k8",)], ["k"]), key="k",
-                  mode="mor")
-    # merge an update to k0 (rewrites k0's bucket, which may hold k2/k8)
-    t.merge(spark.createDataFrame([("k0", 100, 2)], ["k", "v", "ts"]),
-            key="k", order_col="ts")
-    rows = {r["k"]: r["v"] for r in t.read().collect()}
-    assert rows["k0"] == 100 and "k2" not in rows and "k8" not in rows
-    # fragment then compact with a delete still pending
-    t.append(spark.createDataFrame([("k9", 9, 3)], ["k", "v", "ts"]))
-    t.compact(target_rows_per_file=1_000_000)
-    rows = {r["k"]: r["v"] for r in t.read().collect()}
-    assert "k2" not in rows and "k8" not in rows and rows["k0"] == 100
 
 
 def test_expire_snapshots_spares_inflight_generation(spark, tmp_path):
@@ -391,157 +334,30 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert got["c"] == (31, None) and got["a"] == (10, "x")
 
 
-# ------------------------------------------------- r6: positional deletes
-def test_positional_delete_by_predicate(spark, tmp_path):
-    """read(with_positions=True) -> filter -> delete_positions is a
-    DELETE WHERE with zero data-file rewrites."""
-    t = SnapshotTable(spark, str(tmp_path / "ptbl"), bucket_key="k", n_buckets=4)
-    t.overwrite(spark.createDataFrame(
-        [(f"k{i}", i) for i in range(30)], ["k", "v"]))
-    files_v1 = {f["path"] for f in t.snapshot()["files"]}
-    pos = (t.read(with_positions=True)
-           .filter(F.col("v") % 7 == 3).select("_file", "_pos"))
-    t.delete_positions(pos)
-    snap = t.snapshot()
-    assert snap["operation"] == "delete-pos"
-    assert {f["path"] for f in snap["files"]} == files_v1  # no rewrite
-    assert all(d["kind"] == "pos" for d in snap["deletes"])
-    got = {r["v"] for r in t.read().collect()}
-    assert got == {i for i in range(30) if i % 7 != 3}
-    # the hidden address columns never leak into a plain read
-    assert "_pos" not in t.read().columns and "_file" not in t.read().columns
-    # time travel to before the delete still sees everything
-    assert t.read(version=1).count() == 30
+def test_snapshot_zero_is_the_empty_table(spark, table):
+    """Version 0 is the empty table, not an alias for the latest one."""
+    table.append(spark.createDataFrame([("a", 1)], ["k", "v"]))
+    table.append(spark.createDataFrame([("b", 2)], ["k", "v"]))
+    assert table.snapshot(0)["files"] == []
+    with pytest.raises(ValueError, match="empty table"):
+        table.read(version=0)
 
 
-def test_positional_deletes_fold_and_compose(spark, tmp_path):
-    """apply_deletes folds positional + equality deletes together; a
-    later merge neither resurrects nor loses rows."""
-    t = SnapshotTable(spark, str(tmp_path / "pftbl"), bucket_key="k", n_buckets=2)
-    t.overwrite(spark.createDataFrame(
-        [(f"k{i}", i) for i in range(20)], ["k", "v"]))
-    pos = (t.read(with_positions=True)
-           .filter(F.col("v") < 3).select("_file", "_pos"))
-    t.delete_positions(pos)
-    t.delete_keys(spark.createDataFrame([("k9",)], ["k"]), key="k", mode="mor")
-    want = {f"k{i}" for i in range(3, 20)} - {"k9"}
-    assert {r["k"] for r in t.read().collect()} == want
-    v = t.apply_deletes()
-    snap = t.snapshot(v)
-    assert snap["deletes"] == []
-    assert {r["k"] for r in t.read().collect()} == want
-    # merge after the fold: upsert one key, everything else intact
-    t.merge(spark.createDataFrame([("k5", 500)], ["k", "v"]),
-            key="k", order_col="v")
-    rows = {r["k"]: r["v"] for r in t.read().collect()}
-    assert rows["k5"] == 500 and set(rows) == want
+def test_manifest_with_pending_deletes_is_refused(spark, table):
+    """A manifest from an older build that still lists merge-on-read
+    delete files must fail loudly: scanning its data files alone would
+    bring the deleted rows back."""
+    import json
 
-
-def test_delete_compact_threshold_autofolds(spark, tmp_path):
-    """VERDICT r5 #7: once the pending delete-file count reaches the
-    threshold, the next MoR delete auto-runs apply_deletes so delete
-    files cannot accumulate unboundedly."""
-    t = SnapshotTable(spark, str(tmp_path / "ttbl"), bucket_key="k",
-                      n_buckets=2, delete_compact_threshold=2)
-    t.overwrite(spark.createDataFrame(
-        [(f"k{i}", i) for i in range(12)], ["k", "v"]))
-    t.delete_keys(spark.createDataFrame([("k1",)], ["k"]), key="k", mode="mor")
-    assert len(t.snapshot()["deletes"]) == 1  # below threshold: pending
-    v = t.delete_keys(spark.createDataFrame([("k2",)], ["k"]), key="k",
-                      mode="mor")
-    snap = t.snapshot(v)
-    assert snap["operation"] == "apply_deletes" and snap["deletes"] == []
-    assert {r["k"] for r in t.read().collect()} == \
-        {f"k{i}" for i in range(12)} - {"k1", "k2"}
-
-
-def test_delete_positions_stale_after_rewrite_raises(spark, tmp_path):
-    """ADVICE r6 (medium): positions derived before a rewrite commit must
-    be rejected at commit time — silently matching nothing would let the
-    rows survive a DELETE."""
-    from extractors_geo_spark.sources.snapshot_table import StalePositions
-
-    t = SnapshotTable(spark, str(tmp_path / "stale"), bucket_key="k",
-                      n_buckets=2)
-    t.overwrite(spark.createDataFrame(
-        [(f"k{i}", i) for i in range(10)], ["k", "v"]))
-    pos = (t.read(with_positions=True)
-           .filter(F.col("v") < 4).select("_file", "_pos")
-           .collect())  # pin the addresses as of v1
-    # a rewrite lands in between: CoW delete rewrites the touched bucket
-    t.delete_keys(spark.createDataFrame([("k9",)], ["k"]), key="k")
-    stale = spark.createDataFrame(pos, ["_file", "_pos"])
-    with pytest.raises(StalePositions):
-        t.delete_positions(stale)
-    # nothing was committed; re-deriving from the current snapshot works
-    assert t.snapshot()["operation"] == "delete"
-    fresh = (t.read(with_positions=True)
-             .filter(F.col("v") < 4).select("_file", "_pos"))
-    t.delete_positions(fresh)
-    assert {r["v"] for r in t.read().collect()} == set(range(4, 9))
-
-
-def test_pos_delete_ref_files_stamped(spark, tmp_path):
-    """r7: positional delete manifest entries carry the referenced
-    data-file set so readers and apply_deletes prune without re-reading
-    the delete parquet."""
-    t = SnapshotTable(spark, str(tmp_path / "refs"), bucket_key="k",
-                      n_buckets=2)
-    t.overwrite(spark.createDataFrame(
-        [(f"k{i}", i) for i in range(10)], ["k", "v"]))
-    pos = (t.read(with_positions=True)
-           .filter(F.col("v") == 3).select("_file", "_pos"))
-    t.delete_positions(pos)
-    dels = t.snapshot()["deletes"]
-    assert dels and all(d.get("ref_files") for d in dels)
-    valid = {f["path"] for f in t.snapshot()["files"]}
-    refs = {p for d in dels for p in d["ref_files"]}
-    assert refs and refs <= valid
-    # _pos_delete_paths answers from the manifest stamp (no parquet read)
-    assert t._pos_delete_paths(dels) == refs
-
-
-def test_eq_delete_file_pruning_rules():
-    """Driver-side manifest check: seq, bucket, and key-range each prune;
-    anything unprovable stays dirty (over-approximation only)."""
-    t = SnapshotTable.__new__(SnapshotTable)  # helpers are self-free
-    f = {"path": "p", "bucket": 3, "seq": 1, "min_key": "k10", "max_key": "k19"}
-    hit = {"seq": 2, "bucket": 3, "min_key": "k15", "max_key": "k15"}
-    assert t._eq_del_hits(f, hit)
-    assert not t._eq_del_hits(f, {**hit, "seq": 1})        # not newer
-    assert not t._eq_del_hits(f, {**hit, "bucket": 4})     # other bucket
-    assert not t._eq_del_hits(f, {**hit, "min_key": "k40",
-                                  "max_key": "k99"})       # disjoint range
-    # unprovable cases stay dirty
-    assert t._eq_del_hits(f, {**hit, "min_key": None, "max_key": None})
-    assert t._eq_del_hits({**f, "bucket": None, "min_key": None,
-                           "max_key": None}, hit)
-    assert t._eq_del_hits(f, {**hit, "min_key": 5, "max_key": 9})  # mixed types
-    # positional: ref_files stamp decides; missing stamp -> dirty
-    assert t._pos_del_hits(f, {"ref_files": ["p", "q"]})
-    assert not t._pos_del_hits(f, {"ref_files": ["q"]})
-    assert t._pos_del_hits(f, {"ref_files": None})
-    assert t._pos_del_hits(f, {})
-
-
-def test_read_skips_irrelevant_delete_files(spark, tmp_path):
-    """r7 (VERDICT r06 #3): a delete confined to keys disjoint from every
-    data file leaves the read plan join-free; deletes confined to one
-    bucket anti-join only that bucket's files."""
-    t = SnapshotTable(spark, str(tmp_path / "prune"), bucket_key="k",
-                      n_buckets=4, delete_compact_threshold=0)
-    t.overwrite(spark.createDataFrame(
-        [(f"k{i:02d}", i) for i in range(40)], ["k", "v"]))
-    # keys that don't exist: every data file min/max-prunes the delete
-    t.delete_keys(spark.createDataFrame([("zz99",)], ["k"]), key="k",
-                  mode="mor")
-    df = t.read()
-    assert "LeftAnti" not in df._jdf.queryExecution().executedPlan().toString()
-    assert df.count() == 40
-    # a real delete: correct rows AND exactly one anti-join in the plan
-    t.delete_keys(spark.createDataFrame([("k05",)], ["k"]), key="k",
-                  mode="mor")
-    df2 = t.read()
-    plan = df2._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("LeftAnti") == 1
-    assert {r["v"] for r in df2.collect()} == set(range(40)) - {5}
+    table.append(spark.createDataFrame([("a", 1), ("b", 2)], ["k", "v"]))
+    snap = table.snapshot()
+    snap["deletes"] = [{"path": "/gone/delete.parquet", "kind": "eq", "seq": 2}]
+    with open(table._snapshot_path(1), "w") as fh:
+        json.dump(snap, fh)
+    with pytest.raises(ValueError, match="merge-on-read"):
+        table.read()
+    # an empty list is what older builds wrote when nothing was pending
+    snap["deletes"] = []
+    with open(table._snapshot_path(1), "w") as fh:
+        json.dump(snap, fh)
+    assert table.read().count() == 2

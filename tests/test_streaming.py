@@ -124,71 +124,6 @@ def test_windowed_activity_counts(spark, tmp_path):
     assert all(r["n"] == 1 for r in rem)
 
 
-def test_stateful_dedup_across_batches(spark, tmp_path):
-    """applyInPandasWithState: each image_id emitted at most once across
-    micro-batches (cross-batch dedup, ST1/ST2 idempotency)."""
-    import datetime
-
-    from extractors_geo_spark.streaming import stateful
-
-    events_dir = str(tmp_path / "ev")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    ts = datetime.datetime(2024, 1, 2)
-    # two files; duplicates within and across
-    spark.createDataFrame(
-        [("a", "added", ts), ("b", "added", ts), ("a", "added", ts)], EVENT_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(events_dir)
-    spark.createDataFrame(
-        [("b", "added", ts), ("c", "added", ts)], EVENT_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(events_dir)
-
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(events_dir)
-    )
-    q = (
-        stateful.stateful_dedup(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    rows = spark.read.parquet(out).collect()
-    ids = [r["image_id"] for r in rows]
-    assert sorted(ids) == ["a", "b", "c"]  # exactly once each
-
-
-def test_running_counters(spark, tmp_path):
-    import datetime
-
-    from extractors_geo_spark.streaming import stateful
-
-    events_dir = str(tmp_path / "ev")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    ts = datetime.datetime(2024, 1, 2)
-    spark.createDataFrame(
-        [("a", "added", ts), ("b", "added", ts), ("c", "removed", ts)], EVENT_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(events_dir)
-    spark.createDataFrame(
-        [("d", "added", ts)], EVENT_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(events_dir)
-
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 1).parquet(events_dir)
-    )
-    q = (
-        stateful.running_counters(stream)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    rows = spark.read.parquet(out).collect()
-    added_totals = sorted(r["total_events"] for r in rows if r["activity"] == "added")
-    assert added_totals[-1] == 3  # running total reached 3 across batches
-
-
 def test_removal_fresh_checkpoint_batch_id_collision(spark, tmp_path):
     """ADVICE r02: Spark batch ids restart at 0 for a fresh checkpoint dir;
     a bare-int idempotency key would silently skip a NEW stream's first
@@ -274,235 +209,33 @@ def test_streaming_flagship_pipeline(spark, tmp_path):
     assert len(bids) == len(set(bids)) and len(bids) >= 2
 
 
-def test_stateful_sessions_gap_and_timeout(spark, tmp_path):
-    """applyInPandasWithState sessionization: in-batch gaps close
-    sessions immediately; idle sessions drain via EVENT-TIME TIMEOUT once
-    the watermark passes last_ts + gap (bounded state)."""
-    import datetime
+def test_streaming_flagship_sink_retries_lost_commit(spark, tmp_path):
+    """The flagship sink commits through SnapshotTable.append, so a lost
+    CAS race (another writer took the version) retries on top of the
+    winner instead of failing the stream, and the batch lands once."""
+    from extractors_geo_spark import datagen
+    from extractors_geo_spark.sources.snapshot_table import CommitConflict
+    from extractors_geo_spark.streaming import ingest as ING
 
-    from pyspark.sql import types as T
+    images_dir = str(tmp_path / "imgs")
+    datagen.images_df(spark, 60, partitions=1).write.parquet(images_dir)
+    table = SnapshotTable(spark, str(tmp_path / "tiles_tbl"))
+    commit, lost = table._commit, []
 
-    from extractors_geo_spark.streaming import stateful
+    def commit_losing_first_race(*args, **kwargs):
+        if not lost:
+            lost.append(args[1])
+            raise CommitConflict("another writer took this version")
+        return commit(*args, **kwargs)
 
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    events_dir = str(tmp_path / "ev")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    base = datetime.datetime(2024, 3, 1, 12, 0, 0)
-
-    def m(minutes, sec=0):
-        return base + datetime.timedelta(minutes=minutes, seconds=sec)
-
-    # file 1: user 1 has a gap inside the batch (session A: 2 events,
-    # then 90 min silence, session B starts); user 2 one event
-    spark.createDataFrame(
-        [(m(0), 1, 1.0), (m(5), 1, 2.0), (m(95), 1, 4.0), (m(0), 2, 7.0)],
-        schema).coalesce(1).write.mode("append").parquet(events_dir)
-    # file 2: much later events from user 3 push the watermark far past
-    # user 1's and user 2's last activity -> their sessions time out
-    spark.createDataFrame(
-        [(m(600), 3, 1.0), (m(601), 3, 1.0)],
-        schema).coalesce(1).write.mode("append").parquet(events_dir)
-    # file 3: even later, so the batch containing file-2's watermark
-    # advance actually fires the timeouts
-    spark.createDataFrame(
-        [(m(1200), 3, 1.0)],
-        schema).coalesce(1).write.mode("append").parquet(events_dir)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(events_dir))
-    q = (stateful.stateful_sessions(stream, gap_seconds=1800,
-                                    watermark="1 minute")
-         .writeStream.outputMode("append").format("parquet")
-         .option("path", out).option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(240)
-    rows = {(r["user_id"], r["session_start"].minute + 60 * r["session_start"].hour):
-            (r["n_events"], r["sum_value"],
-             r["session_end"].minute + 60 * r["session_end"].hour)
-            for r in spark.read.parquet(out).collect()}
-    # user 1 session A: events at minute 0 and 5 (gap to 95 > 30 min)
-    assert rows[(1, 720)] == (2, 3.0, 725)
-    # user 1 session B (single event at 95) closed by timeout
-    assert rows[(1, 815)] == (1, 4.0, 815)
-    # user 2's single event closed by timeout
-    assert rows[(2, 720)] == (1, 7.0, 720)
-
-
-def test_stateful_sessions_late_event_extends_start(spark, tmp_path):
-    """Cross-batch OUT-OF-ORDER arrivals (ADVICE r5): an in-watermark
-    event older than the open session's start but within gap extends the
-    session BACKWARDS (session_start = min), matching the batch
-    sessionize twin; one older than gap becomes its own closed
-    single-event session."""
-    import datetime
-
-    from pyspark.sql import types as T
-
-    from extractors_geo_spark.streaming import stateful
-
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    events_dir = str(tmp_path / "ev")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    base = datetime.datetime(2024, 3, 1, 0, 0, 0)
-
-    def m(minutes):
-        return base + datetime.timedelta(minutes=minutes)
-
-    # batch 1: user 1 opens [10, 12]; user 2 opens [100]
-    spark.createDataFrame(
-        [(m(10), 1, 1.0), (m(12), 1, 1.0), (m(100), 2, 5.0)],
-        schema).coalesce(1).write.mode("append").parquet(events_dir)
-    # batch 2 (late, in-watermark): user 1 at minute 5 (within the 30-min
-    # gap of [10,12] -> extend start back to 5); user 2 at minute 10
-    # (90 min older than its open session -> own single-event session)
-    spark.createDataFrame(
-        [(m(5), 1, 2.0), (m(10), 2, 7.0)],
-        schema).coalesce(1).write.mode("append").parquet(events_dir)
-    # batches 3+4: far-future events advance the watermark + fire timeouts
-    spark.createDataFrame(
-        [(m(600), 3, 1.0)], schema).coalesce(1).write.mode("append").parquet(events_dir)
-    spark.createDataFrame(
-        [(m(1200), 3, 1.0)], schema).coalesce(1).write.mode("append").parquet(events_dir)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(events_dir))
-    q = (stateful.stateful_sessions(stream, gap_seconds=1800,
-                                    watermark="120 minutes")
-         .writeStream.outputMode("append").format("parquet")
-         .option("path", out).option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(240)
-    rows = {(r["user_id"], r["session_start"].minute + 60 * r["session_start"].hour):
-            (r["n_events"], r["sum_value"],
-             r["session_end"].minute + 60 * r["session_end"].hour)
-            for r in spark.read.parquet(out).collect()}
-    # user 1: one session extended backwards to minute 5, 3 events
-    assert rows[(1, 5)] == (3, 4.0, 12)
-    # user 2: the straggler is its own session; the open one times out
-    assert rows[(2, 10)] == (1, 7.0, 10)
-    assert rows[(2, 100)] == (1, 5.0, 100)
-
-
-def test_sessions_to_table_exactly_once_crash_replay(spark, tmp_path):
-    """VERDICT r5 #9: sessionization -> SnapshotTable sink is exactly-once.
-    Crash point simulated: the table commit for the last micro-batch
-    succeeded but the checkpoint ack (commits/N) was lost — on restart
-    Spark RE-DELIVERS that batch and the sink must skip it (no duplicate
-    sessions)."""
-    import datetime
-    import glob
-    import os
-
-    from pyspark.sql import types as T
-
-    from extractors_geo_spark.sources.snapshot_table import SnapshotTable
-    from extractors_geo_spark.streaming import stateful
-
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    events_dir = str(tmp_path / "ev")
-    ckpt = str(tmp_path / "ck")
-    root = str(tmp_path / "sessions_tbl")
-    base = datetime.datetime(2024, 3, 1, 0, 0, 0)
-
-    def m(minutes):
-        return base + datetime.timedelta(minutes=minutes)
-
-    # two session-closing phases across multiple micro-batches
-    spark.createDataFrame(
-        [(m(0), 1, 1.0), (m(5), 1, 2.0), (m(2), 2, 3.0)],
-        schema).coalesce(1).write.mode("append").parquet(events_dir)
-    spark.createDataFrame(
-        [(m(200), 1, 4.0), (m(300), 3, 1.0)],
-        schema).coalesce(1).write.mode("append").parquet(events_dir)
-    spark.createDataFrame(
-        [(m(900), 3, 1.0)], schema).coalesce(1).write.mode("append").parquet(events_dir)
-
-    table = SnapshotTable(spark, root, bucket_key="user_id")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(events_dir))
-    q = stateful.sessions_to_table(spark, stream, table, ckpt,
-                                   gap_seconds=1800, watermark="1 minute")
-    q.awaitTermination(240)
-    rows1 = sorted((r["user_id"], r["session_start"], r["n_events"], r["sum_value"])
-                   for r in table.read().collect())
-    assert rows1, "no sessions closed in phase one"
-
-    # crash simulation: drop the newest checkpoint ack so the last
-    # committed micro-batch is re-delivered on restart
-    commits = sorted(glob.glob(os.path.join(ckpt, "commits", "*")),
-                     key=lambda p: os.path.basename(p))
-    commits = [c for c in commits if not c.endswith(".tmp")]
-    os.remove(commits[-1])
-    crc = os.path.join(os.path.dirname(commits[-1]),
-                       f".{os.path.basename(commits[-1])}.crc")
-    if os.path.exists(crc):  # Hadoop local-FS checksum shadow
-        os.remove(crc)
-
-    # restart (fresh sink object: applied ids re-scanned from the table)
-    q2 = stateful.sessions_to_table(spark, stream, table, ckpt,
-                                    gap_seconds=1800, watermark="1 minute")
-    q2.awaitTermination(240)
-    rows2 = sorted((r["user_id"], r["session_start"], r["n_events"], r["sum_value"])
-                   for r in table.read().collect())
-    assert rows2 == rows1, "re-delivered batch duplicated sessions"
-    # the replayed batch was recorded exactly once in commit summaries
-    bids = [table.snapshot(h["version"]).get("summary", {}).get("stream_batch_id")
-            for h in table.history()]
-    bids = [b for b in bids if b]
-    assert len(bids) == len(set(bids))
-
-
-def test_sessionization_state_bounded_and_batches_linear(spark, tmp_path):
-    """VERDICT r06 #10: streaming sessionization under skew keeps state
-    bounded by the ACTIVE-user count (the event-time timeout drains idle
-    sessions) and micro-batch time flat — asserted from the engine's own
-    StreamingQueryProgress state metrics."""
-    import json as _json
-    import os as _os
-
-    import tools.session_bench as sb
-
-    events_dir = str(tmp_path / "events")
-    _os.makedirs(events_dir)
-    sb.gen_events(spark, events_dir, 20_000, 4, 2_000)
-    stream = (spark.readStream
-              .schema("ts timestamp, user_id long, value double")
-              .option("maxFilesPerTrigger", 1).parquet(events_dir))
-    from extractors_geo_spark.streaming.stateful import stateful_sessions
-
-    q = (stateful_sessions(stream, gap_seconds=60, watermark="30 seconds")
-         .writeStream.format("memory").queryName("sess_state_test")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
-    try:
-        q.processAllAvailable()
-        state_rows, batch_ms = [], []
-        for p in q.recentProgress:
-            d = _json.loads(p.json) if isinstance(p.json, str) else p
-            if d.get("numInputRows", 0) == 0:
-                continue
-            ops = d.get("stateOperators") or []
-            state_rows.append(int(ops[0]["numRowsTotal"]) if ops else 0)
-            batch_ms.append(int(d["batchDuration"]))
-        # state bounded by active users, never by event count
-        assert state_rows and max(state_rows) <= 2_000, state_rows
-        # no monotone blow-up: the last batch is not dramatically slower
-        # than the second (first pays JVM/python-worker warmup)
-        assert batch_ms[-1] <= 3 * max(batch_ms[1], 1), batch_ms
-        assert spark.table("sess_state_test").count() > 0
-    finally:
-        q.stop()
+    table._commit = commit_losing_first_race
+    q = ING.run_streaming_pipeline(spark, images_dir, datagen.polygons_df(spark),
+                                   table, str(tmp_path / "ck"))
+    q.awaitTermination(180)
+    assert lost == ["append"]
+    snaps = [table.snapshot(h["version"]) for h in table.history()]
+    assert [s["operation"] for s in snaps] == ["append"]
+    assert "stream_batch_id" in snaps[0]["summary"]
+    out = table.read()
+    n = out.count()
+    assert n > 0 and out.distinct().count() == n
