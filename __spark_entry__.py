@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from extractors_geo_spark import datagen
+from extractors_geo_spark.exprcache import memo_col
 from extractors_geo_spark.functions import geo, text as X
 from extractors_geo_spark.operators import (
     cells,
@@ -31,6 +32,7 @@ from extractors_geo_spark.operators import (
     similarity,
     tiles,
 )
+from extractors_geo_spark.sources import scan
 
 # ---------------------------------------------------------------------------
 # shared derived-point scheme (bit-identical in Spark and DuckDB)
@@ -46,89 +48,21 @@ _POINTS_SQL = """
 """
 
 
+def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = False,
+       keys: tuple[str, ...] = ()) -> DataFrame:
+    """Table `name` of a scale-factor directory, through the shared read
+    helper (no schema job on a repeat read; `spread`/`keys` repartition a
+    scan that cannot feed every core — see sources/scan.read)."""
+    return scan.read(spark, f"{sf_dir}/{name}.parquet", spread=spread, keys=keys)
+
+
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return li.select(
+    cols = memo_col(("q_points",), lambda: [
         (F.col("l_orderkey") * 100000 + F.col("l_linenumber")).alias("point_id"),
         (F.lit(-124.0) + (F.col("l_orderkey") * 7 + F.col("l_linenumber")) % 5700 / 100.0).alias("lon"),
         (F.lit(25.0) + (F.col("l_orderkey") * 13 + F.col("l_linenumber")) % 2400 / 100.0).alias("lat"),
-    )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-_RG_CACHE: dict[tuple, int] = {}
-
-
-def _scan_parallelism(path: str) -> int:
-    """Max scan parallelism Spark can extract from a parquet table = its
-    total row-group count (a row group is read by the one split holding
-    its midpoint; byte-splitting a 1-row-group file yields 1 non-empty
-    task). Handles both a bare file and a directory of part files.
-    Driver-side footer reads, cached — no job, no data read. The cache
-    key is the path plus each part file's name, size and mtime_ns, so a
-    table rewritten at the same path is probed again."""
-    import glob
-    import os
-
-    try:
-        files = ([path] if os.path.isfile(path)
-                 else sorted(glob.glob(f"{path}/*.parquet")))
-        stats = [(os.path.basename(f), os.stat(f)) for f in files]
-    except OSError:
-        return 1 << 30  # a part file vanished mid-listing -> assume splittable
-    key = (path, tuple((n, st.st_size, st.st_mtime_ns) for n, st in stats))
-    if key not in _RG_CACHE:
-        try:
-            import pyarrow.parquet as pq
-
-            if not files:
-                raise FileNotFoundError(path)
-            # cap footer reads: many part files are already parallel enough
-            if len(files) >= 64:
-                _RG_CACHE[key] = len(files)
-            else:
-                _RG_CACHE[key] = sum(
-                    pq.ParquetFile(f).metadata.num_row_groups for f in files)
-        except Exception:
-            _RG_CACHE[key] = 1 << 30  # unknown -> assume splittable
-    return _RG_CACHE[key]
-
-
-def _pt(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scale-adaptive parallel read for per-row-HEAVY pipelines (md5
-    shingling, regex tokenization, cosine math). When the file's row-group
-    count caps scan parallelism below the session's core count — the
-    small-file local shape — round-robin repartition right after the scan
-    so the expensive projection runs on every core instead of inside the
-    scan task (guide §2.5: unsplittable input -> repartition after read).
-    The exchanged bytes are just the raw table rows. At production scale a
-    table has >> cores row groups and this is a no-op — the condition is
-    derived from the input, never a local constant."""
-    df = _t(spark, sf_dir, name)
-    par = spark.sparkContext.defaultParallelism
-    if _scan_parallelism(f"{sf_dir}/{name}.parquet") < par:
-        df = df.repartition(par)
-    return df
-
-
-def _ptk(spark: SparkSession, sf_dir: str, name: str, *keys: str) -> DataFrame:
-    """_pt sibling for aggregation pipelines: hash-repartition on the
-    GROUP key when the scan can't parallelize, so the downstream
-    aggregate reuses this exchange (no second shuffle) and its per-group
-    work runs on every core. Measured against the round-robin form on
-    the events struct-max aggregations: round-robin made the partial
-    sort-aggregate output ~0.8 rows/row (no combine leverage) and added
-    a shuffle; keyed repartition was 0.48 s vs 0.68 s plain vs 1.8 s
-    round-robin. At production scale (splittable input) this is a no-op
-    and the aggregate plans its own exchange as usual."""
-    df = _t(spark, sf_dir, name)
-    par = spark.sparkContext.defaultParallelism
-    if _scan_parallelism(f"{sf_dir}/{name}.parquet") < par:
-        df = df.repartition(par, *[F.col(k) for k in keys])
-    return df
+    ])
+    return _t(spark, sf_dir, "lineitem").select(*cols)
 
 
 def _fq(col, scale: int):
@@ -278,14 +212,16 @@ FROM p GROUP BY 1
 
 
 def q_cell_cover(spark, sf_dir):
-    """Covering cell set of a bbox (polygon_cells coarse phase)."""
-    p = _points(spark, sf_dir).filter(F.col("point_id") % 17 == 3)
-    b = p.select("point_id", (F.col("lon") - 0.8).alias("minx"), (F.col("lat") - 0.8).alias("miny"),
-                 (F.col("lon") + 0.8).alias("maxx"), (F.col("lat") + 0.8).alias("maxy"))
-    return b.select(
-        "point_id",
-        F.explode(cells.cover_bbox(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), RES)).alias("cell"),
-    )
+    """Covering cell set of a bbox (polygon_cells coarse phase). The
+    cover tree is memoized: building it is hundreds of py4j calls."""
+    keep, box, cover = memo_col(("q_cell_cover", RES), lambda: (
+        F.col("point_id") % 17 == 3,
+        [(F.col("lon") - 0.8).alias("minx"), (F.col("lat") - 0.8).alias("miny"),
+         (F.col("lon") + 0.8).alias("maxx"), (F.col("lat") + 0.8).alias("maxy")],
+        F.explode(cells.cover_bbox(
+            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), RES)).alias("cell"),
+    ))
+    return _points(spark, sf_dir).filter(keep).select("point_id", *box).select("point_id", cover)
 
 
 def _sql_ixy(expr_lon, expr_lat, res):
@@ -310,9 +246,11 @@ FROM (SELECT point_id, {_ix0} AS ix0, {_ix1} AS ix1, {_iy0} AS iy0, {_iy1} AS iy
 
 def q_cell_children(spark, sf_dir):
     """Adaptive-split primitive: 4 children at res+1."""
-    p = _points(spark, sf_dir).filter(F.col("point_id") % 37 == 5)
-    c = cells.cell_id(F.col("lon"), F.col("lat"), RES)
-    return p.select("point_id", F.explode(cells.cell_children(c)).alias("child"))
+    keep, kids = memo_col(("q_cell_children", RES), lambda: (
+        F.col("point_id") % 37 == 5,
+        F.explode(cells.cell_children(cells.cell_id(F.col("lon"), F.col("lat"), RES))).alias("child"),
+    ))
+    return _points(spark, sf_dir).filter(keep).select("point_id", kids)
 
 
 _cix, _ciy = _sql_ixy("lon", "lat", RES)
@@ -388,17 +326,16 @@ def q_bbox_join(spark, sf_dir):
     (cell cover both sides + reference-corner dedup, no python stage)."""
     from extractors_geo_spark.operators import bbox_join
 
-    p = _points(spark, sf_dir)
-    boxes = p.select(
-        "point_id",
+    box = memo_col(("q_bbox_boxes",), lambda: [
         (F.col("lon") - (F.col("point_id") % 7 + 1) / 10.0).alias("minx"),
         (F.col("lat") - (F.col("point_id") % 5 + 1) / 10.0).alias("miny"),
         (F.col("lon") + (F.col("point_id") % 7 + 1) / 10.0).alias("maxx"),
         (F.col("lat") + (F.col("point_id") % 5 + 1) / 10.0).alias("maxy"),
-    )
+    ])
+    boxes = _points(spark, sf_dir).select("point_id", *box)
     wins = spark.createDataFrame(_WINDOWS, ["query_id", "minx", "miny", "maxx", "maxy"])
-    out = bbox_join.bbox_join(boxes, wins, res=6, l_id="point_id", broadcast_right=True)
-    return out.select("point_id", "query_id", "ix_minx", "ix_miny", "ix_maxx", "ix_maxy")
+    # output columns: point_id, query_id, ix_minx, ix_miny, ix_maxx, ix_maxy
+    return bbox_join.bbox_join(boxes, wins, res=6, l_id="point_id", broadcast_right=True)
 
 
 SQL_BBOX_JOIN = f"""
@@ -649,10 +586,10 @@ def q_removal_antijoin(spark, sf_dir):
     (ts, event_id) is unique per row, so the struct-max picks exactly the
     row_number()=1 row of the old ORDER BY ts DESC, event_id DESC window;
     a NULL last event_type keeps the user, as the old filter did.
-    _ptk: the struct buffer forces SortAggregate, so the per-group sort
+    Keyed read: the struct buffer forces SortAggregate, so the per-group sort
     must not sit in a 1-row-group scan task — the keyed repartition IS
     the aggregation exchange, run before the heavy work."""
-    ev = _ptk(spark, sf_dir, "events", "user_id")
+    ev = _t(spark, sf_dir, "events", keys=("user_id",))
     agg = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.max(F.struct("ts", "event_id", "event_type")).alias("_last"),
@@ -684,9 +621,9 @@ def q_catalog_upsert(spark, sf_dir):
     carries one combined row per user instead of every event through a
     sort + row_number window (guide §2.3/§2.4). (ts, event_id) is unique
     per row -> identical pick to the old ORDER BY ts DESC, event_id DESC.
-    _ptk as in q_removal_antijoin: the keyed repartition doubles as the
+    Keyed read as in q_removal_antijoin: the keyed repartition doubles as the
     aggregation exchange and parallelizes the SortAggregate."""
-    ev = _ptk(spark, sf_dir, "events", "user_id")
+    ev = _t(spark, sf_dir, "events", keys=("user_id",))
     agg = ev.groupBy("user_id").agg(
         F.max(F.struct("ts", "event_id", "event_type", "value")).alias("_last")
     )
@@ -791,7 +728,7 @@ def q_asof_join(spark, sf_dir):
     most recent prior-or-equal view event (DuckDB native ASOF JOIN is the
     oracle).
 
-    r8: _ptk on user_id. Catalyst pushes each branch's event_type filter
+    r8: keyed read on user_id. Catalyst pushes each branch's event_type filter
     below that repartition, so the plan scans events twice: each branch
     is its own filtered scan and hash(user_id) exchange, with no
     ReusedExchange. Both branches then come out hash(user_id)-partitioned,
@@ -800,7 +737,7 @@ def q_asof_join(spark, sf_dir):
     (measured 0.72 -> 0.49 s at sf1.0). A single-scan shape is open."""
     from extractors_geo_spark.operators import asof
 
-    ev = _ptk(spark, sf_dir, "events", "user_id")
+    ev = _t(spark, sf_dir, "events", keys=("user_id",))
     purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     views = ev.filter(F.col("event_type") == "view").select("user_id", "ts", "value", "event_id")
     out = asof.asof_join(purchases, views, key="user_id", right_cols=("value",), tie_col="event_id")
@@ -953,7 +890,7 @@ def q_lang_id(spark, sf_dir):
     """Two-stage: project the marker-hits array once, then argmax — the
     single-expression when-chain re-inlined every count combinatorially
     (measured 5.5 s -> sub-second at sf1.0)."""
-    d = _pt(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", spread=True)
     staged = d.select(X.marker_hits_array(X.words(F.col("text"))).alias("_h"))
     return (
         staged.select(X.lang_id_from_hits(F.col("_h")).alias("lang_pred"))
@@ -990,7 +927,7 @@ SELECT lang_pred, COUNT(*) AS n FROM p GROUP BY lang_pred
 
 
 def q_token_counts(spark, sf_dir):
-    d = _pt(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", spread=True)
     return d.select(
         "doc_id",
         X.n_tokens_ws(F.col("text")).alias("ws_tokens"),
@@ -1010,7 +947,7 @@ def q_quality(spark, sf_dir):
     """Two-stage shape: project words(text) once, score from the array —
     the single-expression form re-runs lower+split per component
     (21% measured win at sf1.0; see text.quality_score_from)."""
-    d = _pt(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", spread=True)
     staged = d.select("doc_id", "text", X.words(F.col("text")).alias("_w"))
     return staged.select(
         "doc_id",
@@ -1036,7 +973,7 @@ FROM documents
 
 
 def q_fingerprint(spark, sf_dir):
-    d = _pt(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", spread=True)
     return d.select("doc_id", X.fingerprint(F.col("text")).alias("fp"))
 
 
@@ -1048,7 +985,7 @@ FROM documents
 
 
 def q_exact_dedup(spark, sf_dir):
-    # deliberately _t, not _pt: one md5 per doc is too light to pay for a
+    # deliberately not spread: one md5 per doc is too light to pay for a
     # repartition exchange (measured 0.55 s plain vs 0.81 s repartitioned
     # at sf1.0, 0.18 vs 0.60 at sf0.1 — the groupBy already provides the
     # only exchange this query needs)
@@ -1070,7 +1007,7 @@ def q_corpus_clean(spark, sf_dir):
     -> per-source survivor counts + whitespace-token totals. Every stage
     reuses an operator that is ALSO individually oracle-proven (lang_id,
     quality, exact_dedup, token_counts)."""
-    d = _pt(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", spread=True)
     # stage the words array once: lang gate + quality gate + token totals
     # all derive from it (see marker_hits_array / quality_score_from)
     d = d.withColumn("_w", X.words(F.col("text")))
@@ -1125,9 +1062,7 @@ def q_minhash(spark, sf_dir):
     Per-element expressions, not sig[i] over the array — indexing a
     computed array re-inlines the whole signature per element.
     Expression trees memoized (r8): ~0.15 s of py4j construction."""
-    from extractors_geo_spark.exprcache import memo_col
-
-    d = _pt(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", spread=True)
     nw = memo_col(("q_minhash_nw",), lambda: dedup.norm_words(F.col("text")).alias("_w"))
     hs = memo_col(("q_minhash_hs",),
                   lambda: dedup.shingle_hashes_from_words(F.col("_w")).alias("_hs"))
@@ -1159,7 +1094,7 @@ SQL_MINHASH = _sql_minhash()
 def q_simhash(spark, sf_dir):
     """SimHash via the codegen explode+groupBy form (bit-identical to the
     array-fold column form; ~2x faster — folds never enter codegen)."""
-    d = _pt(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", spread=True)
     return dedup.simhash_df(d, bits=16).select(F.col("id").alias("doc_id"), "sh")
 
 
@@ -1178,7 +1113,7 @@ SQL_SIMHASH = _sql_simhash()
 
 def q_ngram_jaccard(spark, sf_dir):
     """Exact 3-gram Jaccard pairs within the same source block."""
-    d = _pt(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", spread=True)
     out = dedup.ngram_jaccard_pairs(d, block_col="source", threshold=0.2)
     return out.select("a", "b", _fq(F.col("jaccard"), 10000).alias("jac_q"))
 
@@ -1338,7 +1273,7 @@ GROUP BY label
 def q_dedup_canonical(spark, sf_dir):
     """keep_canonical end-to-end: drop the higher-id member of every
     near-dup pair (ngram-Jaccard blocked by source), return survivors."""
-    d = _pt(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", spread=True)
     pairs = dedup.ngram_jaccard_pairs(d, block_col="source", threshold=0.2)
     return dedup.keep_canonical(d, pairs, id_col="doc_id").select("doc_id")
 
@@ -1380,12 +1315,12 @@ SQL_NGRAM = _sql_ngram()
 
 def q_embedding_topk(spark, sf_dir):
     """ANN baseline: brute-force cosine top-3 for 5 query vectors.
-    Corpus side reads through _pt: the cosine math is the heavy projection
+    Corpus side is a spread read: the cosine math is the heavy projection
     and must not be glued to a 1-row-group scan task; the query side keeps
     the plain scan so vec_id < 5 pushes down."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    out = similarity.brute_topk(q, _pt(spark, sf_dir, "embeddings"), k=3)
+    out = similarity.brute_topk(q, _t(spark, sf_dir, "embeddings", spread=True), k=3)
     return out.select("query_id", "vec_id", "rank")
 
 

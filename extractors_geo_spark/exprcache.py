@@ -12,6 +12,15 @@ reference — even one whose gateway object reuses a dead one's id().
 This caches expression OBJECTS, never data or results: every query still
 computes from its inputs; only the driver-side tree construction is
 amortized.
+
+Users: pip_join, knn, tiles, dedup, similarity, bbox_join (both sides'
+antimeridian split and cover, the refine) and the cell_ops/points
+projections of the driver queries. Measured on 4 cores, warm JVM,
+sf0.01, median of 5 builds of the six benchmark queries, together with
+the session's call-site capture turned off and sources/scan's schema
+cache: 9,442 -> 1,368 py4j round trips and 3.43 -> 1.39 s of build wall;
+bbox_join 3,906 -> 149 round trips (1.02 -> 0.31 s), cell_ops
+2,884 -> 115 (0.95 -> 0.32 s).
 """
 
 from __future__ import annotations

@@ -162,13 +162,17 @@ def pip_join(
     plans.stats.stored_cell_stats / stored_poly_stats. With both
     provided, EVERY planner decision (exact, broadcast, salt) is a
     driver-side lookup — the plan builds with zero probe jobs; the
-    probes remain the fallback for stat-less inputs."""
+    probes remain the fallback for stat-less inputs. Stats taken at a
+    finer res than the join's scale `max_cell_n` by 4 per level; a
+    `poly_cells` taken at a coarser res is not a bound and is ignored."""
     from ..plans import planner
 
     if poly_stats is not None:
         if exact == "auto":
             exact = not poly_stats["all_rect"]
-        if poly_cells_hint is None:
+        # a cover at a finer res has at least as many cells as at this
+        # one, so only a count at res or finer bounds the broadcast side
+        if poly_cells_hint is None and poly_stats["res"] >= res:
             poly_cells_hint = poly_stats["poly_cells"]
     # generation-time stats riding the DataFrame (datagen.polygons_df, r8):
     # same contract as poly_stats, but the cover cardinality is counted
@@ -207,8 +211,10 @@ def pip_join(
         broadcast_polys = planner.should_broadcast(pcs, size_hint=poly_cells_hint)
     if (salt is None and not broadcast_polys and cell_stats is not None
             and cell_stats.get("max_cell_n")):
-        # stored hottest-cell bound -> salt factor with no probe job
-        s_ = planner.salt_factor(None, max_hint=cell_stats["max_cell_n"])
+        # stored hottest-cell bound -> salt factor with no probe job; a
+        # cell here holds up to 4**d cells of stats d levels finer
+        max_n = cell_stats["max_cell_n"] * 4 ** max(cell_stats["res"] - res, 0)
+        s_ = planner.salt_factor(None, max_hint=max_n)
         salt = s_ if s_ > 1 else None
 
     if broadcast_polys:

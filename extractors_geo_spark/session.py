@@ -44,6 +44,12 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         # keep big binary rows from blowing up broadcast decisions
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # PySpark's per-call call-site capture wraps every Column method
+        # and F.col: 5 py4j round trips, a Python stack walk and a failed
+        # `import IPython` each, ~30% of a spatial query's plan-build round
+        # trips. The cost is the origin (PySpark file:line) in DataFrame
+        # error contexts; errors still name the failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

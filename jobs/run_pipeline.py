@@ -25,6 +25,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from extractors_geo_spark import datagen  # noqa: E402
 from extractors_geo_spark.operators import catalog, extract_meta, pip_join, tiles
 from extractors_geo_spark.session import get_spark
+from extractors_geo_spark.sources import scan
 from extractors_geo_spark.streaming.lineage import run_with_lineage
 
 
@@ -41,8 +42,8 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark(app_name="extractors_geo_pipeline", master=args.master)
-    imgs = spark.read.parquet(args.images)
-    polys = spark.read.parquet(args.polygons) if args.polygons else datagen.polygons_df(spark)
+    imgs = scan.read(spark, args.images)
+    polys = scan.read(spark, args.polygons) if args.polygons else datagen.polygons_df(spark)
     zooms = tuple(int(z) for z in args.zooms.split(","))
 
     def transform(part):

@@ -89,6 +89,44 @@ def test_bbox_join_antimeridian_wrapped_boxes(spark):
     assert rects == [(-180.0, -170.0), (170.0, 180.0)]
 
 
+def _pieces(x0, x1):
+    return [(x0, 180.0), (-180.0, x1)] if x0 > x1 else [(x0, x1)]
+
+
+def test_bbox_join_wrapped_boxes_on_both_sides_match_brute_force(spark):
+    """Seam-crossing boxes on both sides: one row per intersecting pair of
+    non-wrapping pieces, each with that pieces' intersection rectangle."""
+    rng = np.random.default_rng(7)
+
+    def side(prefix, n):
+        rows = []
+        for i in range(n):
+            cx, w = rng.uniform(150.0, 210.0), rng.uniform(0.5, 15.0)
+            cy, h = rng.uniform(-40.0, 40.0), rng.uniform(0.5, 10.0)
+            x0, x1 = ((cx - w + 180.0) % 360.0) - 180.0, ((cx + w + 180.0) % 360.0) - 180.0
+            rows.append((f"{prefix}{i:03d}", float(x0), float(cy - h), float(x1), float(cy + h)))
+        return rows
+
+    lefts, rights = side("L", 120), side("R", 40)
+    assert sum(x0 > x1 for _, x0, _, x1, _ in lefts) > 10
+    assert sum(x0 > x1 for _, x0, _, x1, _ in rights) > 5
+    want = []
+    for li, lx0, ly0, lx1, ly1 in lefts:
+        for rj, rx0, ry0, rx1, ry1 in rights:
+            if not (ly0 <= ry1 and ly1 >= ry0):
+                continue
+            for a0, a1 in _pieces(lx0, lx1):
+                for b0, b1 in _pieces(rx0, rx1):
+                    if a0 <= b1 and a1 >= b0:
+                        want.append((li, rj, max(a0, b0), max(ly0, ry0),
+                                     min(a1, b1), min(ly1, ry1)))
+    l = spark.createDataFrame(lefts, ["image_id", "minx", "miny", "maxx", "maxy"])
+    r = spark.createDataFrame(rights, ["query_id", "minx", "miny", "maxx", "maxy"])
+    for res in (4, 6):
+        got = [tuple(x) for x in bbox_join.bbox_join(l, r, res=res).collect()]
+        assert sorted(got) == sorted(want)
+
+
 def test_bbox_join_is_codegen_only(spark, boxes):
     from tests.test_plans import explain_str
 

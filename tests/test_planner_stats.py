@@ -84,8 +84,10 @@ def test_salt_factor_hint_runs_no_job():
 
 def test_pip_join_with_stats_builds_plan_with_zero_probe_jobs(spark, tmp_path):
     """The judge's Done criterion: with stored stats, building the
-    pip_join plan triggers NO Spark action (count/collect) — every
-    planner decision is a metadata lookup."""
+    pip_join plan starts NO Spark job (a probe, a schema inference or any
+    other implicit one) — every planner decision is a metadata lookup."""
+    from tests.test_scan import jobs_started
+
     pts_t = SnapshotTable(spark, str(tmp_path / "p2"))
     stats.ingest_with_stats(pts_t, _points(spark), kind="points", res=7)
     poly_t = SnapshotTable(spark, str(tmp_path / "g2"))
@@ -107,10 +109,12 @@ def test_pip_join_with_stats_builds_plan_with_zero_probe_jobs(spark, tmp_path):
 
     DataFrame.count, DataFrame.collect = spy_count, spy_collect
     try:
-        out = P.pip_join(pts, polys, cell_stats=cst, poly_stats=pst)
+        out, n_jobs = jobs_started(
+            spark, lambda: P.pip_join(pts, polys, cell_stats=cst, poly_stats=pst))
     finally:
         DataFrame.count, DataFrame.collect = orig_count, orig_collect
     assert calls == [], f"probe jobs ran during planning: {calls}"
+    assert n_jobs == 0, f"{n_jobs} Spark job(s) started during planning"
     # the plan still computes the right answer
     assert out.count() > 0
     # and matches the probe-planned result exactly
@@ -118,6 +122,48 @@ def test_pip_join_with_stats_builds_plan_with_zero_probe_jobs(spark, tmp_path):
     got = {(r["image_id"], r["poly_id"]) for r in out.collect()}
     want = {(r["image_id"], r["poly_id"]) for r in base.collect()}
     assert got == want
+
+
+def test_pip_join_scales_finer_cell_stats_to_its_res(spark, monkeypatch):
+    """A res-6 cell holds up to 4 res-7 cells: a res-7 hottest-cell bound
+    salts a res-6 join as if 4x hotter; stats at the join's own res or
+    coarser are used as stored."""
+    seen = []
+    salt_factor = planner.salt_factor
+
+    def spy(density, target_rows_per_task=2_000_000, max_hint=None):
+        seen.append(max_hint)
+        return salt_factor(density, target_rows_per_task, max_hint)
+
+    monkeypatch.setattr(planner, "salt_factor", spy)
+    pts, polys = _points(spark), _polys(spark)
+    for st_res in (7, 6, 5):
+        out = P.pip_join(pts, polys, res=6, broadcast_polys=False,
+                         cell_stats={"res": st_res, "max_cell_n": 1_200_000,
+                                     "n_cells": 1, "rows": 1_200_000})
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("salt" in plan) == (st_res == 7)
+    assert seen == [4_800_000, 1_200_000, 1_200_000]
+
+
+def test_pip_join_ignores_coarser_poly_cells(spark, monkeypatch):
+    """A cover counted at a coarser res than the join's is not a bound on
+    its polygon side: the broadcast decision falls back to the probe."""
+    hints = []
+    should_broadcast = planner.should_broadcast
+
+    def spy(pcs, limit=planner.BROADCAST_ROW_LIMIT, size_hint=None):
+        hints.append(size_hint)
+        return should_broadcast(pcs, limit, size_hint)
+
+    monkeypatch.setattr(planner, "should_broadcast", spy)
+    pts, polys = _points(spark), _polys(spark)
+    want = {(r["image_id"], r["poly_id"]) for r in P.pip_join(pts, polys, res=6).collect()}
+    outs = [P.pip_join(pts, polys, res=6, poly_stats={
+        "res": st_res, "poly_cells": 3_000_000, "all_rect": True}) for st_res in (5, 6, 7)]
+    # the first call is the stat-less reference: a probe
+    assert hints == [None, None, 3_000_000, 3_000_000]
+    assert {(r["image_id"], r["poly_id"]) for r in outs[0].collect()} == want
 
 
 def test_pip_join_stats_salt_applies_on_partitioned_path(spark):

@@ -130,16 +130,16 @@ def test_struct_max_equals_window_pick(spark):
     assert got == want
 
 
-# ---------------------------------------------------- _pt / _ptk scan helper
+# ------------------------------------------- scan.read(spread=True) helper
 def test_pt_repartitions_only_rowgroup_bound(spark, tmp_path):
-    import __spark_entry__ as E
+    from extractors_geo_spark.sources import scan
 
     par = spark.sparkContext.defaultParallelism
     one = os.path.join(str(tmp_path), "one")
     os.makedirs(one)
     spark.range(0, 10000, 1, 1).withColumnRenamed("id", "doc_id") \
         .coalesce(1).write.mode("overwrite").parquet(os.path.join(one, "documents.parquet"))
-    df = E._pt(spark, one, "documents")
+    df = scan.read(spark, os.path.join(one, "documents.parquet"), spread=True)
     assert df.rdd.getNumPartitions() == par
     assert df.count() == 10000
 
@@ -151,8 +151,8 @@ def test_pt_repartitions_only_rowgroup_bound(spark, tmp_path):
     pq.write_table(pa.table({"doc_id": list(range(10000))}),
                    os.path.join(many, "documents.parquet"), row_group_size=100)
     # a single file with 100 row groups (>= cores) -> the scan already
-    # parallelizes; _pt must NOT add an exchange
-    df2 = E._pt(spark, many, "documents")
+    # parallelizes; the spread read must NOT add an exchange
+    df2 = scan.read(spark, os.path.join(many, "documents.parquet"), spread=True)
     assert "Exchange" not in df2._sc._jvm.PythonSQLUtils.explainString(
         df2._jdf.queryExecution(), "simple")
     assert df2.count() == 10000
@@ -165,23 +165,23 @@ def test_scan_parallelism_reprobes_a_table_rewritten_at_one_path(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import __spark_entry__ as E
+    from extractors_geo_spark.sources import scan
 
     t = pa.table({"doc_id": list(range(1000))})
     bare = str(tmp_path / "bare.parquet")
     pq.write_table(t, bare, row_group_size=1000)
-    assert E._scan_parallelism(bare) == 1
+    assert scan.scan_parallelism(bare) == 1
     pq.write_table(t, bare, row_group_size=100)
-    assert E._scan_parallelism(bare) == 10
+    assert scan.scan_parallelism(bare) == 10
 
     parts = tmp_path / "parts.parquet"
     parts.mkdir()
     pq.write_table(t, str(parts / "part-0.parquet"), row_group_size=1000)
-    assert E._scan_parallelism(str(parts)) == 1
+    assert scan.scan_parallelism(str(parts)) == 1
     pq.write_table(t, str(parts / "part-1.parquet"), row_group_size=500)
-    assert E._scan_parallelism(str(parts)) == 3
+    assert scan.scan_parallelism(str(parts)) == 3
     (parts / "part-0.parquet").unlink()
-    assert E._scan_parallelism(str(parts)) == 2
+    assert scan.scan_parallelism(str(parts)) == 2
 
 
 # -------------------------------------------- pip_join generation-time stats
