@@ -2090,66 +2090,6 @@ FROM p
 """
 
 
-def q_aac_features(spark, sf_dir):
-    """Real AAC-LC decode through audio_features (VERDICT r04 #6 / r5 #3):
-    sine clips AAC-encoded into mp4a MP4s on executors with the in-repo
-    codec (..aac), rotating mono-SCE / stereo-CPE x long / EIGHT_SHORT
-    windows (i mod 4) with per-band MID/SIDE stereo on every other
-    stereo clip, INTENSITY stereo on the i%8==7 leg, TNS over a
-    transient-bearing clip on the i%8==4 leg, COMBINED M/S+TNS on the
-    i%8==6 stereo leg (late r7 tool combination), a 5.1 MULTICHANNEL
-    clip (SCE+CPE+CPE+LFE, short full-band windows over a long-window
-    LFE) on the i%8==5 leg (r7), and a channelConfiguration-0
-    PCE-DEFINED layout on the i==8 leg (late r7),
-    entropy-decoded back on the feature path
-    (rows-only; ~60 dB SNR + WAV feature parity in tests/test_aac.py)."""
-    import numpy as np
-    import pandas as pd
-
-    base = spark.range(12).select(F.col("id").alias("n"))
-
-    def make(batches):
-        from extractors_geo_spark import mp4 as _mp4
-
-        for b in batches:
-            rows = []
-            for i in b["n"]:
-                i = int(i)
-                rate = 48000
-                secs = 1 + i % 2
-                t = np.arange(rate * secs) / rate
-                sig = 0.5 * np.sin(2 * np.pi * (220 + 20 * i) * t)
-                if i % 8 in (4, 6):  # TNS legs: attacks so the gate engages
-                    rng = np.random.default_rng(i)
-                    for p in range(3000, sig.size - 300, 9600):
-                        sig[p:p + 300] += (rng.normal(0, 0.4, 300)
-                                           * np.exp(-np.arange(300) / 40.0))
-                if i % 8 == 5:  # 5.1 multichannel (r7): SCE+CPE+CPE+LFE
-                    sig = np.stack(
-                        [sig]
-                        + [0.35 * np.sin(2 * np.pi * (330 + 40 * c + 10 * i)
-                                         * t) for c in range(4)]
-                        + [0.3 * np.sin(2 * np.pi * 40 * t)], axis=1)
-                elif i % 4 >= 2:  # stereo CPE
-                    sig = np.stack(
-                        [sig, 0.4 * np.sin(2 * np.pi * (440 + 20 * i) * t)],
-                        axis=1)
-                rows.append({"audio_id": f"a{i}",
-                             "bytes": _mp4.write_aac_mp4(
-                                 sig, rate, short=bool(i % 2),
-                                 ms=i % 8 == 6, intensity=i % 8 == 7,
-                                 tns=i % 8 in (4, 6),  # i==6: M/S+TNS
-                                 pce=i == 8)})  # config-0 PCE leg (r7)
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes"])
-
-    from extractors_geo_spark.operators import multimodal as M
-
-    clips = base.mapInPandas(make, "audio_id string, bytes binary")
-    out = M.audio_features(clips)
-    return out.select("audio_id", "duration_s", "n_windows",
-                      F.floor(F.element_at("features", 1) * 1000).cast("long").alias("e0_q"))
-
-
 def q_mjpeg_frames(spark, sf_dir):
     """REAL video path: MJPEG-in-AVI clips synthesized on executors, frame
     pixels decoded by the in-repo JPEG codec through sample_frames
@@ -2501,13 +2441,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_pyramid": q_tile_pyramid,
         "tile_slice": q_tile_slice,
         # --- past the driver window: rows-only (no SQL oracle) real image /
-        # audio / approximate pipelines, verified by pytest goldens ---
+        # video / approximate pipelines, verified by pytest goldens ---
         "ann_lsh": q_ann_lsh,
         "minhash_lsh_pairs": q_minhash_lsh_pairs,
         "tile_render_png": q_tile_render_png,
         "jpeg_roundtrip": q_jpeg_roundtrip,
         "mjpeg_frames": q_mjpeg_frames,
-        "aac_features": q_aac_features,
     }
     # RuntimeError (not assert): the guard must survive `python -O`
     if tuple(reg)[:50] != DRIVER_WINDOW:

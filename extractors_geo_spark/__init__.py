@@ -81,7 +81,6 @@ _API = {
         "geopackage": ("extractors_geo_spark.sources.geopackage", None),
         "exif": ("extractors_geo_spark.exif", None),
         "h264": ("extractors_geo_spark.h264", None),
-        "aac": ("extractors_geo_spark.aac", None),
         "mp4": ("extractors_geo_spark.mp4", None),
         "subtitles": ("extractors_geo_spark.subtitles", None),
         "SnapshotTable": ("extractors_geo_spark.sources.snapshot_table", "SnapshotTable"),

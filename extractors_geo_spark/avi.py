@@ -1,10 +1,10 @@
 """Pure-stdlib MJPEG-in-AVI container codec (RIFF 'AVI ' with 'MJPG'
 video stream; public Microsoft AVI RIFF + OpenDML specs).
 
-Gives the video leg of the multimodal path one fully REAL format the way
-decode_wav did for audio: frames are whole JFIF images (decoded by
-..jpeg, which handles baseline AND progressive), the container is a flat
-RIFF chunk walk — no ffmpeg, no binary deps.
+Gives the video leg of the multimodal path one fully REAL format:
+frames are whole JFIF images (decoded by ..jpeg, which handles baseline
+AND progressive), the container is a flat RIFF chunk walk — no ffmpeg,
+no binary deps.
 
   write_mjpeg_avi(frames, fps): list of uint8 arrays -> AVI bytes
       (each frame JPEG-encoded; gray (h, w) or RGB (h, w, 3)).

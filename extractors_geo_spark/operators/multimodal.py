@@ -1,18 +1,17 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Multimodal columns: image/video as opaque binary + typed metadata.
 
 The engine treats non-TIFF payloads the way a 100 TB training-data
 pipeline does: bytes stay an opaque `binary` column, typed metadata
 travels beside them, and decode/feature stages are Arrow-batched
 mapInPandas operators. Every decode is REAL (pure-Python codecs in
-..tiff/..png/..jpeg/..avi/..mp4/..h264/..aac and decode_wav below):
-TIFF (+BigTIFF), PNG, JPEG (baseline + progressive), video as MJPEG
-(AVI and MP4 jpeg-codec tracks), uncompressed MP4 ('raw '/'Y800') and
-CAVLC H.264 MP4, audio as RIFF/WAVE and AAC-LC in MP4. Bytes no codec
-here can decode never turn into made-up pixels or samples: an image gets
-an error row (or no feature/thumbnail row), a malformed video or audio
-clip, or audio in any other container (FLAC, MPEG audio), yields no
-rows, and a well-formed stream in a codec (or coding tools) the engine
-does not carry raises NotImplementedError.
+..tiff/..png/..jpeg/..avi/..mp4/..h264): TIFF (+BigTIFF), PNG, JPEG
+(baseline + progressive), video as MJPEG (AVI and MP4 jpeg-codec
+tracks), uncompressed MP4 ('raw '/'Y800') and CAVLC H.264 MP4, and
+tx3g caption tracks. Bytes no codec here can decode never turn into
+made-up pixels: an image gets an error row (or no feature/thumbnail
+row), a malformed video clip yields no rows, and a well-formed stream
+in a codec (or coding tools) the engine does not carry raises
+NotImplementedError.
 
 Operators:
   sniff_format       magic-byte detection (the reference's
@@ -23,7 +22,6 @@ Operators:
   resize_image       (w, h) -> (tw, th) thumbnail bytes
   sample_frames      video bytes -> one row per sampled frame (UDTF-style
                      1->N explode, like the tile pyramid)
-  audio_features     audio bytes -> (duration_s, n_windows, mfcc-ish vec)
 """
 
 from __future__ import annotations
@@ -48,7 +46,7 @@ MAGIC = {
     "tiff_be": b"MM\x00*",
     "bigtiff_le": b"II+\x00",  # BigTIFF (version 43)
     "bigtiff_be": b"MM\x00+",
-    "riff": b"RIFF",  # wav/avi container
+    "riff": b"RIFF",  # avi container
     "zip": b"PK\x03\x04",
     "sevenz": b"7z\xbc\xaf\x27\x1c",  # application/x-7z-compressed (P3)
 }
@@ -293,45 +291,29 @@ def mp4_meta(data: bytes) -> dict:
     tree to mvhd (timescale/duration) and the first video tkhd (w, h).
     No frame decode — sample_frames uses it to tell a well-formed MP4 in
     an unsupported codec from malformed bytes."""
-    import struct as _s
-
-    def boxes(buf, start, end):
-        pos = start
-        while pos + 8 <= end:
-            (size,) = _s.unpack(">I", buf[pos : pos + 4])
-            typ = buf[pos + 4 : pos + 8]
-            hdr = 8
-            if size == 1:
-                (size,) = _s.unpack(">Q", buf[pos + 8 : pos + 16])
-                hdr = 16
-            elif size == 0:
-                size = end - pos
-            if size < hdr or pos + size > end:
-                raise ValueError("malformed MP4 box")
-            yield typ, pos + hdr, pos + size
-            pos += size
+    from .. import mp4 as _mp4
 
     if len(data) < 12 or data[4:8] != b"ftyp":
         raise ValueError("not an MP4")
     out = {"duration_s": None, "width": None, "height": None, "n_tracks": 0}
-    for typ, b0, b1 in boxes(data, 0, len(data)):
+    for typ, b0, b1 in _mp4._walk(data, 0, len(data)):
         if typ != b"moov":
             continue
-        for t2, c0, c1 in boxes(data, b0, b1):
+        for t2, c0, c1 in _mp4._walk(data, b0, b1):
             if t2 == b"mvhd":
                 ver = data[c0]
                 if ver == 1:
-                    ts, dur = _s.unpack(">IQ", data[c0 + 20 : c0 + 32])
+                    ts, dur = struct.unpack(">IQ", data[c0 + 20 : c0 + 32])
                 else:
-                    ts, dur = _s.unpack(">II", data[c0 + 12 : c0 + 20])
+                    ts, dur = struct.unpack(">II", data[c0 + 12 : c0 + 20])
                 out["duration_s"] = dur / ts if ts else None
             elif t2 == b"trak":
                 out["n_tracks"] += 1
-                for t3, d0, d1 in boxes(data, c0, c1):
+                for t3, d0, d1 in _mp4._walk(data, c0, c1):
                     if t3 == b"tkhd":
                         ver = data[d0]
                         off = d0 + (96 if ver == 1 else 84)
-                        w, h = _s.unpack(">II", data[off - 8 : off])
+                        w, h = struct.unpack(">II", data[off - 8 : off])
                         # 16.16 fixed point; first non-zero wins (video track)
                         if w and h and out["width"] is None:
                             out["width"], out["height"] = w >> 16, h >> 16
@@ -339,10 +321,8 @@ def mp4_meta(data: bytes) -> dict:
         raise ValueError("no mvhd in MP4")
     if out["duration_s"] == 0:
         # fragmented (DASH) file: mvhd carries 0; sum moof/trun durations
-        from .. import mp4 as _mp4f
-
         try:
-            parsed = _mp4f.read_mjpeg_mp4(data)
+            parsed = _mp4.read_mjpeg_mp4(data)
             out["duration_s"] = parsed["duration_ms"] / 1000.0
         except ValueError:
             pass  # non-decodable codec: duration stays 0 (still parsed)
@@ -394,7 +374,12 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000,
                         duration_ms = int(parsed["n_frames"] * 1000 / fps)
                         for i, ts in enumerate(range(0, duration_ms, every_ms)):
                             fi = min(int(ts * fps / 1000), parsed["n_frames"] - 1)
-                            arr = _jpeg.decode(parsed["frames"][fi])
+                            try:
+                                arr = _jpeg.decode(parsed["frames"][fi])
+                            except (ValueError, IndexError, struct.error):
+                                # corrupt JPEG frame: stop sampling this
+                                # video, keep the frames decoded so far
+                                break
                             if arr.ndim == 3:
                                 arr = arr.astype(np.float64).mean(axis=2).astype(np.uint8)
                             rows.append({"video_id": vid, "frame_idx": i, "ts_ms": ts,
@@ -480,11 +465,18 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000,
                                          "fw": arr.shape[1], "fh": arr.shape[0],
                                          "frame": arr.tobytes()})
                         continue
-                    try:
-                        mp4_meta(data)  # parses: a well-formed container
-                        wellformed_mp4 = True
-                    except Exception:  # malformed boxes
-                        pass
+                    if not wellformed_mp4:
+                        try:
+                            # parses, and no track is in a codec the
+                            # readers decode: a well-formed container in a
+                            # codec the engine lacks. A supported track
+                            # that failed to read has malformed tables.
+                            mp4_meta(data)
+                            wellformed_mp4 = not any(
+                                fourcc in _mp4._SUPPORTED_FOURCC
+                                for *_spans, fourcc, _ts in _mp4._tracks(data))
+                        except Exception:  # malformed boxes
+                            pass
                 if wellformed_mp4:
                     # a genuinely unsupported-but-WELL-FORMED codec (or
                     # H.264 coding tools outside the in-repo CAVLC
@@ -493,9 +485,8 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000,
                         "video codec not available in this container"
                     )
                 # malformed/truncated crawl bytes: drop the row (zero
-                # frames) so callers can anti-join undecodable ids —
-                # mirrors audio_features; never kills the Spark task
-                # (ADVICE r03 medium)
+                # frames) so callers can anti-join undecodable ids;
+                # never kills the Spark task (ADVICE r03 medium)
             yield pd.DataFrame(
                 rows, columns=["video_id", "frame_idx", "ts_ms", "fw", "fh", "frame"]
             )
@@ -566,113 +557,3 @@ def sidecar_captions(docs: DataFrame, id_col: str = "video_id",
             yield pd.DataFrame(rows, columns=["video_id", "start_ms", "end_ms", "caption"])
 
     return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(run, SIDECAR_SCHEMA)
-
-
-AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("audio_id", T.StringType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("n_windows", T.IntegerType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
-    """RIFF/WAVE PCM decode, pure stdlib+numpy: 8/16/32-bit int and 32/64
-    float PCM, any channel count (averaged to mono). Returns
-    (float64 samples in [-1, 1], sample_rate)."""
-    import struct as _s
-
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    pos = 12
-    fmt = None
-    pcm = None
-    n = len(data)
-    while pos + 8 <= n:
-        cid = data[pos : pos + 4]
-        (size,) = _s.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + size]
-        if len(body) < size:
-            raise ValueError("truncated WAV chunk")
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-        if cid == b"fmt ":
-            if len(body) < 16:
-                raise ValueError("short fmt chunk")
-            tag, channels, rate, _br, _ba, bits = _s.unpack("<HHIIHH", body[:16])
-            fmt = (tag, channels, rate, bits)
-        elif cid == b"data":
-            pcm = body
-    if fmt is None or pcm is None:
-        raise ValueError("missing fmt/data chunk")
-    tag, channels, rate, bits = fmt
-    if tag == 1:  # integer PCM
-        if bits == 8:
-            a = (np.frombuffer(pcm, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-        elif bits == 16:
-            a = np.frombuffer(pcm, dtype="<i2").astype(np.float64) / 32768.0
-        elif bits == 32:
-            a = np.frombuffer(pcm, dtype="<i4").astype(np.float64) / 2147483648.0
-        else:
-            raise ValueError(f"unsupported PCM bits {bits}")
-    elif tag == 3:  # IEEE float
-        a = np.frombuffer(pcm, dtype="<f4" if bits == 32 else "<f8").astype(np.float64)
-    else:
-        raise ValueError(f"unsupported WAV format tag {tag}")
-    if channels > 1:
-        a = a[: (a.size // channels) * channels].reshape(-1, channels).mean(axis=1)
-    return a, rate
-
-
-def audio_features(audios: DataFrame, id_col: str = "audio_id",
-                   window_ms: int = 100) -> DataFrame:
-    """Audio -> windowed energy features (MFCC stand-in; same schema).
-    RIFF/WAVE and AAC-LC-in-MP4 inputs decode FOR REAL (decode_wav /
-    ..aac). A well-formed mp4a stream outside the in-repo AAC-LC profile
-    raises NotImplementedError; malformed bytes and any other container
-    (FLAC, MPEG audio, ...) drop the row (callers anti-join ids to find
-    them)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for aid, data in zip(b[id_col], b["bytes"]):
-                data = bytes(data)
-                is_wav = data[:4] == b"RIFF" and data[8:12] == b"WAVE"
-                is_mp4 = len(data) > 12 and data[4:8] == b"ftyp"
-                if not (is_wav or is_mp4):
-                    continue  # unknown container: drop the row
-                try:
-                    if is_wav:
-                        sig, rate = decode_wav(data)
-                    else:
-                        from .. import mp4 as _mp4a
-
-                        tr = _mp4a.read_audio_track(data)
-                        if tr["pcm"] is None:
-                            # well-formed mp4a OUTSIDE the in-repo
-                            # AAC-LC profile (real-world ISO Huffman
-                            # assignments land here): the documented
-                            # unsupported-codec stub (real deploy:
-                            # ffmpeg). Malformed falls to except.
-                            raise NotImplementedError(
-                                "AAC stream outside the in-repo codec profile"
-                            )
-                        sig, rate = tr["pcm"], tr["rate"]
-                except NotImplementedError:
-                    raise  # well-formed unsupported codec: surfaced
-                except Exception:
-                    continue  # malformed input (ValueError/struct.error/
-                    # IndexError): drop the row
-                dur = sig.size / rate
-                wlen = max(int(rate * window_ms / 1000), 1)
-                n_win = sig.size // wlen
-                energy = (sig[: n_win * wlen].reshape(n_win, wlen) ** 2).mean(axis=1)[:FEAT_DIM]
-                feat = np.zeros(FEAT_DIM, dtype=np.float32)
-                feat[: energy.size] = energy
-                rows.append({"audio_id": aid, "duration_s": dur,
-                             "n_windows": n_win, "features": feat.tolist()})
-            yield pd.DataFrame(rows, columns=["audio_id", "duration_s", "n_windows", "features"])
-
-    return audios.select(F.col(id_col), "bytes").mapInPandas(run, AUDIO_SCHEMA)

@@ -1,5 +1,5 @@
 """Multimodal operators over real bytes from the in-repo encoders
-(TIFF via datagen, png.encode, jpeg.encode, mp4/avi writers, WAV): schema,
+(TIFF via datagen, png.encode, jpeg.encode, mp4/avi writers): schema,
 shape, explode fan-out, determinism, and how undecodable bytes are
 reported."""
 
@@ -127,69 +127,6 @@ def test_sample_frames_explode(spark):
     a = sorted((r["video_id"], r["frame_idx"], bytes(r["frame"])) for r in out.collect())
     b = sorted((r["video_id"], r["frame_idx"], bytes(r["frame"])) for r in again.collect())
     assert a == b
-
-
-def _wav(pcm: bytes, rate: int, channels: int = 1, bits: int = 16,
-         tag: int = 1) -> bytes:
-    import struct
-
-    align = channels * bits // 8
-    return (b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-            + b"fmt " + struct.pack("<IHHIIHH", 16, tag, channels, rate,
-                                    rate * align, align, bits)
-            + b"data" + struct.pack("<I", len(pcm)) + pcm)
-
-
-def test_audio_features(spark):
-    """Schema, shape and determinism over real WAV bytes: durations and
-    window counts follow the PCM length, feature vectors are FEAT_DIM
-    long, and bytes no decoder accepts get no row: junk, and FLAC or
-    MPEG-audio streams, which are containers the engine does not carry."""
-    rng = np.random.default_rng(3)
-    clips = [("a1", _wav((rng.standard_normal(8000) * 6000).astype("<i2").tobytes(), 8000)),
-             ("a2", _wav((rng.standard_normal(12000) * 6000).astype("<i2").tobytes(), 4000)),
-             ("junk", b"RIFFwavv"),
-             ("flac", b"fLaC" + b"\x00\x00\x00\x22" + bytes(34)),
-             ("mpeg", b"\xff\xfb\x90\x64" + bytes(413))]
-    auds = spark.createDataFrame([(i, bytearray(b)) for i, b in clips],
-                                 "audio_id string, bytes binary")
-    rows = {r["audio_id"]: r for r in M.audio_features(auds).collect()}
-    assert set(rows) == {"a1", "a2"}
-    assert (rows["a1"]["duration_s"], rows["a1"]["n_windows"]) == (1.0, 10)
-    assert (rows["a2"]["duration_s"], rows["a2"]["n_windows"]) == (3.0, 30)
-    for r in rows.values():
-        assert len(r["features"]) == M.FEAT_DIM
-    again = {r["audio_id"]: r["features"] for r in M.audio_features(auds).collect()}
-    assert all(again[k] == r["features"] for k, r in rows.items())
-
-
-def test_audio_features_real_wav(spark):
-    """RIFF/WAVE decodes for real through the distributed operator: a
-    440 Hz int16 sine gives exact duration, window count, and energy 0.5
-    per full window."""
-    rate, secs = 8000, 2
-    t = np.arange(rate * secs) / rate
-    sig = (np.sin(2 * np.pi * 440 * t) * 32767).astype("<i2")
-    df = spark.createDataFrame([("a1", bytearray(_wav(sig.tobytes(), rate)))],
-                               "audio_id string, bytes binary")
-    r = M.audio_features(df).collect()[0]
-    assert abs(r["duration_s"] - 2.0) < 1e-9
-    assert r["n_windows"] == 20  # 100 ms windows
-    # mean square of a full-scale sine is 0.5
-    assert abs(r["features"][0] - 0.5) < 1e-3
-
-
-def test_audio_stereo_float_wav():
-    from extractors_geo_spark.operators.multimodal import decode_wav
-
-    rate = 4000
-    left = np.linspace(-1, 1, rate).astype("<f4")
-    right = -left
-    inter = np.empty(rate * 2, dtype="<f4")
-    inter[0::2], inter[1::2] = left, right
-    sig, r = decode_wav(_wav(inter.tobytes(), rate, channels=2, bits=32, tag=3))
-    assert r == rate and sig.size == rate
-    assert np.allclose(sig, 0.0, atol=1e-6)  # L/R cancel in the mono mix
 
 
 def _mini_mp4(duration_s=4.0, timescale=1000, w=320, h=240):
@@ -328,25 +265,90 @@ def test_sample_frames_mjpeg_mp4_real_pixels(spark):
         assert (99 if mse == 0 else 10 * np.log10(255**2 / mse)) > 40
 
 
+def _broken_sample_tables(data: bytes, last: bool = False) -> dict:
+    """Copies of an MP4 with one sample-table fault each, in its first
+    track (last=True: its last track): a required table renamed to a
+    'skip' box, the mdhd timescale set to 0, the first chunk offset set
+    to the end of the bytes."""
+    import struct
+
+    from extractors_geo_spark import mp4 as _mp4
+
+    moov = _mp4._find(data, 0, len(data), b"moov")[0]
+    at = data.rindex if last else (lambda typ: data.index(typ, moov))
+
+    def put(i, b):
+        return data[:i] + b + data[i + len(b):]
+
+    out = {f"no {t.decode()}": put(at(t), b"skip")
+           for t in (b"stsz", b"stco", b"stsc", b"stts")}
+    # mdhd payload: version/flags, creation and modification times, timescale
+    out["timescale 0"] = put(at(b"mdhd") + 16, bytes(4))
+    # stco payload: version/flags, entry count, first chunk offset
+    out["offset past end"] = put(at(b"stco") + 12, struct.pack(">I", len(data)))
+    return out
+
+
+def test_mp4_readers_reject_malformed_sample_tables():
+    """Both MP4 readers raise ValueError on a missing stsz/stco/stsc/stts,
+    a zero timescale and a chunk past the end of the bytes, instead of a
+    TypeError, a ZeroDivisionError or quietly empty samples. So does a
+    fragmented clip whose trun sample size runs past the end."""
+    import struct
+
+    from extractors_geo_spark import mp4 as _mp4
+
+    frames = [np.full((8, 8), 40 * f, np.uint8) for f in range(3)]
+    frag = bytearray(_mp4.write_fragmented_mp4(frames, fps=2, codec=b"raw ",
+                                               frames_per_fragment=2))
+    assert len(_mp4.read_mjpeg_mp4(bytes(frag))["frames"]) == 3
+    # first moof's trun payload: version/flags, count, data offset, sizes
+    struct.pack_into(">I", frag, frag.index(b"trun") + 16, len(frag))
+    with pytest.raises(ValueError):
+        _mp4.read_mjpeg_mp4(bytes(frag))
+    video = _mp4.write_mjpeg_mp4(frames, fps=2)
+    caps = _mp4.write_mp4_with_captions(frames, fps=2, captions=["a", "b"])
+    assert len(_mp4.read_mjpeg_mp4(video)["frames"]) == 3
+    assert [t for _ms, t in _mp4.read_caption_track(caps)] == ["a", "b"]
+    for read, data, last in ((_mp4.read_mjpeg_mp4, video, False),
+                             (_mp4.read_caption_track, caps, True)):
+        broken = _broken_sample_tables(data, last)
+        assert len(broken) == 6
+        for bad in broken.values():
+            with pytest.raises(ValueError):
+                read(bad)
+
+
 def test_malformed_containers_never_kill_the_job(spark):
-    """Review finding: truncated AVI/MP4/WAV bytes raise struct.error/
+    """Review finding: truncated AVI/MP4 bytes raise struct.error/
     IndexError, not just ValueError — all must end as zero rows for
-    that clip, never fail the Spark task."""
+    that clip, never fail the Spark task. So must MP4 sample tables that
+    lack stsz or carry a zero timescale. A corrupt JPEG frame inside a
+    well-formed AVI ends sampling there: only the frames before it."""
     import struct as _s
+
+    from extractors_geo_spark import avi as _avi
+    from extractors_geo_spark import mp4 as _mp4
 
     # truncated MP4 with a jpeg stsd but no sample-table bytes
     bad_mp4 = (b"\x00\x00\x00\x14ftypisom\x00\x00\x02\x00isom"
                + b"\x00\x00\x00\x10moov\x00\x00\x00\x08trak")
     # AVI with an undersized avih
     bad_avi = b"RIFF" + _s.pack("<I", 30) + b"AVI LIST" + _s.pack("<I", 10) + b"hdrlavih" + b"\x00\x02"
+    broken = _broken_sample_tables(_mp4.write_mjpeg_mp4(
+        [np.full((8, 8), 40 * f, np.uint8) for f in range(3)], fps=2))
+    # 4-frame, 2 fps AVI whose frame 1 is an SOI marker followed by zeros
+    avi = _avi.write_mjpeg_avi(
+        [np.full((8, 8), 40 * f, np.uint8) for f in range(4)], fps=2)
+    f1 = _avi.read_mjpeg_avi(avi)["frames"][1]
+    i = avi.index(f1)
+    corrupt_avi = avi[: i + 2] + bytes(len(f1) - 2) + avi[i + len(f1):]
     vids = spark.createDataFrame(
-        [("m", bad_mp4), ("a", bad_avi)], "video_id string, bytes binary")
-    assert M.sample_frames(vids, every_ms=1000).count() == 0
-
-    # RIFF/WAVE whose data chunk size runs past the end of the bytes
-    bad_wav = _wav(bytes(200), 8000)[:-50]
-    auds = spark.createDataFrame([("w", bad_wav)], "audio_id string, bytes binary")
-    assert M.audio_features(auds).count() == 0  # dropped, not a crash
+        [("m", bad_mp4), ("a", bad_avi), ("stsz", broken["no stsz"]),
+         ("ts0", broken["timescale 0"]), ("c", corrupt_avi)],
+        "video_id string, bytes binary")
+    rows = M.sample_frames(vids, every_ms=500).collect()
+    assert [(r["video_id"], r["frame_idx"], r["ts_ms"]) for r in rows] == [("c", 0, 0)]
 
 
 def test_sample_frames_rawvideo_mp4_bit_exact(spark):
@@ -434,52 +436,6 @@ def test_video_captions_operator(spark):
     rows = sorted(M.video_captions(df).collect(), key=lambda r: r["ts_ms"])
     assert [(r["video_id"], r["ts_ms"], r["caption"]) for r in rows] == [
         ("wc", 0, "hello world"), ("wc", 750, "second cap")]
-
-
-def test_png_text_chunks_roundtrip():
-    import numpy as np
-    import struct as _st
-    import zlib
-
-    from extractors_geo_spark import png as _png
-
-    g = (np.arange(64, dtype=np.uint8).reshape(8, 8) * 3) % 251
-    base = _png.encode(g)
-    tagged = _png.add_text_chunks(base, {"Title": "a view", "Description": "Grüße"})
-    got = _png.read_text_chunks(tagged)
-    assert got == {"Title": "a view", "Description": "Grüße"}
-    np.testing.assert_array_equal(_png.decode(tagged), g)
-    # zTXt
-    z = _png._chunk(b"zTXt", b"Comment\x00\x00" + zlib.compress(b"note"))
-    ihdr_end = 8 + 8 + _st.unpack(">I", base[8:12])[0] + 4
-    assert _png.read_text_chunks(base[:ihdr_end] + z + base[ihdr_end:])["Comment"] == "note"
-
-
-def test_audio_features_pcm_in_mp4(spark):
-    """PCM ('sowt') audio tracks inside MP4 containers decode for real:
-    exact duration/windows/energy; AAC ('mp4a') raises the documented
-    stub; malformed containers drop."""
-    import numpy as np
-    import pytest as _pt
-
-    from extractors_geo_spark import mp4 as _mp4
-
-    rate = 8000
-    t = np.arange(rate * 2) / rate
-    pcm = (np.sin(2 * np.pi * 440 * t) * 32767).astype("<i2")
-    good = _mp4.write_pcm_mp4(pcm, rate)
-    df = spark.createDataFrame([("a1", bytearray(good))], "audio_id string, bytes binary")
-    r = M.audio_features(df).collect()[0]
-    assert abs(r["duration_s"] - 2.0) < 1e-9 and r["n_windows"] == 20
-    assert abs(r["features"][0] - 0.5) < 1e-3
-    # well-formed AAC entry -> stub raise (swap the fourcc to mp4a)
-    aac = good.replace(b"sowt", b"mp4a", 1)
-    df2 = spark.createDataFrame([("a2", bytearray(aac))], "audio_id string, bytes binary")
-    with _pt.raises(Exception, match="AAC|NotImplementedError"):
-        M.audio_features(df2).collect()
-    # truncated container -> dropped row
-    df3 = spark.createDataFrame([("a3", bytearray(good[:40]))], "audio_id string, bytes binary")
-    assert M.audio_features(df3).count() == 0
 
 
 def test_png_text_chunks_roundtrip():
