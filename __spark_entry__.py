@@ -19,6 +19,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from extractors_geo_spark import datagen
 from extractors_geo_spark.exprcache import memo_col
@@ -32,6 +33,7 @@ from extractors_geo_spark.operators import (
     similarity,
     tiles,
 )
+from extractors_geo_spark.session import local_table
 from extractors_geo_spark.sources import scan
 
 # ---------------------------------------------------------------------------
@@ -277,20 +279,14 @@ _RECTS = [
 
 def q_pip_join(spark, sf_dir):
     """J2: point-in-polygon join via the real pip_join operator (geocell
-    coarse + exact ray cast) against a rectangle layer; the oracle states
-    the same containment declaratively."""
+    coarse + exact ray cast) of the derived points against the `_RECTS`
+    layer, a LocalRelation typed `datagen.POLY_SCHEMA` with `attrs` NULL;
+    the oracle states the same containment declaratively."""
     p = _points(spark, sf_dir)
-    polys = spark.createDataFrame(
-        [
-            {
-                "poly_id": pid, "name": pid,
-                "xs": [x0, x1, x1, x0, x0], "ys": [y0, y0, y1, y1, y0],
-                "minx": x0, "miny": y0, "maxx": x1, "maxy": y1,
-            }
-            for pid, x0, y0, x1, y1 in _RECTS
-        ],
-        datagen.POLY_SCHEMA,
-    )
+    polys = local_table(spark, [
+        (pid, pid, [x0, x1, x1, x0, x0], [y0, y0, y1, y1, y0], x0, y0, x1, y1, None)
+        for pid, x0, y0, x1, y1 in _RECTS
+    ], datagen.POLY_SCHEMA)
     # literal rectangle layer: broadcast is trivially right and bbox
     # refine is already exact for rects -> both probe jobs skipped
     out = pip_join.pip_join(
@@ -309,6 +305,11 @@ FROM p JOIN r ON p.lon > r.x0 AND p.lon < r.x1 AND p.lat > r.y0 AND p.lat < r.y1
 
 
 _KNN_QUERIES = [(f"q{i:02d}", -123.455 + 2.71 * i, 25.955 + 0.83 * i) for i in range(20)]
+_KNN_SCHEMA = T.StructType([
+    T.StructField("query_id", T.StringType()),
+    T.StructField("lon", T.DoubleType()),
+    T.StructField("lat", T.DoubleType()),
+])
 
 
 _WINDOWS = [
@@ -319,11 +320,16 @@ _WINDOWS = [
     ("w4", -90.005, 36.005, -70.005, 49.005),
     ("w5", -124.005, 38.005, -100.005, 49.005),
 ]
+_WINDOW_SCHEMA = T.StructType(
+    [T.StructField("query_id", T.StringType())]
+    + [T.StructField(c, T.DoubleType()) for c in ("minx", "miny", "maxx", "maxy")]
+)
 
 
 def q_bbox_join(spark, sf_dir):
-    """J1 general form: footprint-vs-window bbox intersection range join
-    (cell cover both sides + reference-corner dedup, no python stage)."""
+    """J1 general form: bbox intersection range join of per-point
+    footprints against the `_WINDOWS` LocalRelation (cell cover both sides
+    + reference-corner dedup, no python stage)."""
     from extractors_geo_spark.operators import bbox_join
 
     box = memo_col(("q_bbox_boxes",), lambda: [
@@ -333,7 +339,7 @@ def q_bbox_join(spark, sf_dir):
         (F.col("lat") + (F.col("point_id") % 5 + 1) / 10.0).alias("maxy"),
     ])
     boxes = _points(spark, sf_dir).select("point_id", *box)
-    wins = spark.createDataFrame(_WINDOWS, ["query_id", "minx", "miny", "maxx", "maxy"])
+    wins = local_table(spark, _WINDOWS, _WINDOW_SCHEMA)
     # output columns: point_id, query_id, ix_minx, ix_miny, ix_maxx, ix_maxy
     return bbox_join.bbox_join(boxes, wins, res=6, l_id="point_id", broadcast_right=True)
 
@@ -356,10 +362,11 @@ FROM b JOIN w ON b.minx <= w.maxx AND b.maxx >= w.minx AND b.miny <= w.maxy AND 
 
 
 def q_knn(spark, sf_dir):
-    """J5: grid kNN (cell-ring candidates + window top-k) vs brute-force
-    SQL ranking."""
+    """J5: grid kNN (cell-ring candidates + window top-k) of the
+    `_KNN_QUERIES` LocalRelation against the derived points, vs
+    brute-force SQL ranking."""
     p = _points(spark, sf_dir)
-    q = spark.createDataFrame(_KNN_QUERIES, ["query_id", "lon", "lat"])
+    q = local_table(spark, _KNN_QUERIES, _KNN_SCHEMA)
     out = knn.knn_join(q, p, k=3, res=7, ring=1, t_id="point_id",
                        q_size_hint=len(_KNN_QUERIES))
     return out.select("query_id", "point_id", "rank")

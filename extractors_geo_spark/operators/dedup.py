@@ -20,8 +20,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import content_hash64
+from ..session import local_table
 
 MERSENNE_P = (1 << 31) - 1  # keeps a*h+b < 2^62: no int64 overflow under ANSI
 # Deterministic affine-map parameters (public small-prime construction).
@@ -389,7 +391,11 @@ def ngram_jaccard_pairs(
         .select("a", "b", "jaccard")
     )
     if return_dropped:
-        empty = d.sparkSession.createDataFrame([], "blk int, g long, df long")
+        empty = local_table(d.sparkSession, [], T.StructType([
+            T.StructField("blk", T.IntegerType()),
+            T.StructField("g", T.LongType()),
+            T.StructField("df", T.LongType()),
+        ]))
         return pairs, (dropped if dropped is not None else empty)
     return pairs
 

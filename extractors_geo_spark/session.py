@@ -4,13 +4,20 @@ Local-mode testing uses local[N] threads, but every config here is chosen
 for multi-executor scale: AQE on (runtime skew-split + partition coalesce),
 Arrow on (all Python crossings are vectorized), shuffle partitions sized to
 the parallelism rather than the 200 default.
+
+`local_table` builds the driver-side literal tables (query layers, empty
+results) that the engine puts into plans.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -56,3 +63,20 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_table(spark: SparkSession, rows: Iterable[Sequence], schema: StructType) -> DataFrame:
+    """A literal table of `rows` (tuples in `schema` order) as a
+    LocalRelation: the rows ride inside the plan, so running it starts no
+    Python worker. `spark.createDataFrame(<list>)` instead parallelizes
+    the list into a PythonRDD, a Python-worker job on every execution of
+    every plan that reads it. An Arrow table takes the LocalRelation path
+    below `spark.sql.execution.arrow.localRelationThreshold`, whatever the
+    `arrow.pyspark` settings are."""
+    names = schema.names
+    rows = list(rows)
+    if any(len(r) != len(names) for r in rows):
+        raise ValueError(f"local_table: every row needs {len(names)} values {names}")
+    table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
