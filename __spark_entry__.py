@@ -1547,9 +1547,7 @@ def q_h264_frames(spark, sf_dir):
     through four coding shapes (i mod 4): bit-exact I_PCM; IDR+P GOPs
     at qp 8; IDR+P GOPs at qp 12 (the i >= 12 halves of both P shapes
     code MULTI-REFERENCE L0 with per-partition ref_idx_l0, r7);
-    IBBP GOPs with B slices + ctts display reordering (r6 —
-    bi-prediction, 2-deep DPB; the i//8-odd B legs use TEMPORAL
-    direct, 8.4.1.2.3 POC scaling, r7). The 8 <= i < 12 P legs code
+    all-IDR CAVLC clips at qp 8. The 8 <= i < 12 P legs code
     the High-profile 8x8 TRANSFORM, and the i>=16 P legs are 32-px
     MULTI-SLICE pictures (r7). Since r7 every clip is
     4:2:0 COLOR: chroma planes code real residuals (2x2 Hadamard DC +
@@ -1571,7 +1569,7 @@ def q_h264_frames(spark, sf_dir):
             for i in b["i"]:
                 i = int(i)
                 n = 2 + i % 3  # 2..4 frames at 1 fps -> duration n seconds
-                kind = i % 4  # I_PCM / P-GOP qp 8 / P-GOP qp 12 / B-GOP
+                kind = i % 4  # I_PCM / P-GOP qp 8 / P-GOP qp 12 / all-IDR
                 # the i >= 16 P legs are 32 px tall (2 MB rows) and code
                 # MULTI-SLICE pictures (slice_rows=1, r7): one NAL per MB
                 # row, availability cut at each slice top
@@ -1587,10 +1585,8 @@ def q_h264_frames(spark, sf_dir):
                 if kind == 0:
                     data = _mp4.write_h264_mp4(frames, fps=1, chromas=chromas)
                 elif kind == 3:
-                    data = _mp4.write_h264_mp4(
-                        frames, fps=1, qp=8, gop=4, bframes=1,
-                        direct="temporal" if (i // 8) % 2 else "spatial",
-                        chromas=chromas)
+                    data = _mp4.write_h264_mp4(frames, fps=1, qp=8,
+                                               chromas=chromas)
                 else:
                     # i >= 12 clips code multi-reference P GOPs (r7):
                     # gop 4 keeps 2 refs live, every inter partition

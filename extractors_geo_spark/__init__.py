@@ -15,7 +15,7 @@ Layout:
               dedup, similarity, catalog)
   plans/      planner functions (broadcast-vs-partitioned, salting, splitting)
   sources/    table loaders
-  streaming/  per-partition lineage + checkpoint/resume, removal propagation
+  streaming/  per-partition lineage + checkpoint/resume
 """
 
 __version__ = "0.3.0"
@@ -85,7 +85,6 @@ _API = {
         "subtitles": ("extractors_geo_spark.subtitles", None),
         "SnapshotTable": ("extractors_geo_spark.sources.snapshot_table", "SnapshotTable"),
         "run_with_lineage": ("extractors_geo_spark.streaming.lineage", "run_with_lineage"),
-        "propagate_removals": ("extractors_geo_spark.streaming.removal", "propagate_removals"),
 }
 
 

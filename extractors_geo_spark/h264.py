@@ -3,7 +3,7 @@
 The coding surface, all through real AVC machinery (NAL units with
 emulation prevention, Exp-Golomb headers, SPS/PPS, IDR/non-IDR slice
 headers, avcC records for MP4 'avc1' tracks), CAVLC entropy coding for
-I, P and B pictures (CABAC streams raise ValueError):
+I and P pictures (CABAC streams and B slices raise ValueError):
 
 1. **I_PCM** (mb_type 25): raw samples in the bitstream, bit-exact
    round trip — the entropy-free floor, kept for fixtures.
@@ -21,25 +21,17 @@ I, P and B pictures (CABAC streams raise ValueError):
    per-partition ref_idx_l0 (sliding-window DPB, nrefs<=16), inter CBP
    mapping, dead-zone quantization, intra-in-P fallback, inter bS
    deblocking. Static scenes collapse to ~10-byte all-skip frames.
-4. **B slices** (r6-r7): IBBP GOPs with bi-prediction (2-deep DPB),
-   B_SKIP + B_Direct_16x16 in spatial AND temporal (8.4.1.2.3
-   POC-scaled) direct modes, partitioned B (mb_type 4..21) and B_8x8
-   sub-macroblocks, ctts display reordering in the MP4 layer, POC-lsb
-   wrap handling.
-5. **4:2:0 chroma** (r7): real chroma residuals (2x2 DC Hadamard + AC),
+4. **4:2:0 chroma** (r7): real chroma residuals (2x2 DC Hadamard + AC),
    chroma intra prediction incl. plane mode, cbp_chroma, chroma
    deblocking. Gray clips stay bit-identical
    (flat-128 default source, cbpc=0 everywhere).
 
-6. **Weighted prediction** (r7): EXPLICIT for P slices —
+5. **Weighted prediction** (r7): EXPLICIT for P slices —
    pred_weight_table in the slice header, per-reference luma/chroma
    gain+offset applied after interpolation (8.4.2.3.2) incl. P_SKIP,
-   least-squares weight estimation so fades collapse to skip runs —
-   and IMPLICIT for B slices (weighted_bipred_idc 2): POC-derived
-   (w0, w1) bi-prediction blending (8.4.2.3.1), pure prediction math
-   with no extra syntax, composable with spatial/temporal direct.
+   least-squares weight estimation so fades collapse to skip runs.
 
-7. **High-profile 8x8 transform** (r7): profile_idc 100 SPS
+6. **High-profile 8x8 transform** (r7): profile_idc 100 SPS
    (4:2:0, 8-bit, flat scaling), PPS transform_8x8_mode_flag, per-MB
    transform_size_8x8_flag on 16x16/16x8/8x16 (and all-8x8-sub P_8x8)
    inter macroblocks with a coefficient-count selection gate, the 8x8
@@ -52,19 +44,16 @@ I, P and B pictures (CABAC streams raise ValueError):
    an I_8x8 candidate (8.3.2.2: all nine prediction modes over
    low-pass-filtered reference samples, 8.3.2.2.1) against I_4x4 on
    the same coefficient-count gate; pred modes serialize as prev/rem
-   pairs per 8x8. B slices carry the flag too (late r7) on every
-   non-direct shape with no sub-8x8 partitioning — direct stays
-   4x4 because the SPS writes direct_8x8_inference_flag 0 (the 7.3.5
-   flag condition). In-loop deblocking composes with the 8x8 transform
+   pairs per 8x8. In-loop deblocking composes with the 8x8 transform
    (late r7, 8.7.2): a per-picture transform-size map skips the
    internal 4x4 edges (offsets 4/12) of 8x8-transformed MBs and tests
    bS-2 "coded" status per 8x8 block. The 8x8 profile is COMPLETE.
 
-8. **Multi-slice pictures** (r7): slices covering whole MB rows
+7. **Multi-slice pictures** (r7): slices covering whole MB rows
    (first_mb_in_slice = row * PicWidthInMbs), the hardware-encoder /
    error-resilience shape — one NAL per slice in the sample, neighbour
    availability (intra prediction, nC contexts, MV prediction, skip
-   runs) cut at each slice top, for I, P AND B pictures
+   runs) cut at each slice top, for I and P pictures
    (encode_*(slice_rows=N)). Deblocking filters across slice
    boundaries (disable_deblocking_filter_idc 0 semantics).
 
@@ -72,13 +61,14 @@ Decode scope and honesty notes:
 - Remaining out-of-scope shapes raise a clear ValueError: high-profile
   tools beyond the 8x8 transform + I_8x8 intra above (scaling matrices,
   >8-bit, 4:2:2/4:4:4), FMO, slices at non-row-aligned first_mb
-  offsets, SP/SI slices, EXPLICIT weighted bi-prediction
-  (weighted_bipred_idc 1; implicit idc 2 — the x264 default — and
-  single-list P weighting ARE in scope), ref-pic-list modification,
-  MMCO adaptive marking, >1 L1 reference, CABAC entropy coding
-  (entropy_coding_mode_flag 1).
+  offsets, SP/SI slices, B slices (bi-prediction, direct modes and
+  weighted_bipred_idc with them), ref-pic-list modification, MMCO
+  adaptive marking, CABAC entropy coding (entropy_coding_mode_flag 1).
   `operators/multimodal.sample_frames` maps that to its documented
   well-formed-unsupported-codec stub.
+- decode_samples decodes a stream in decode order through one
+  sliding-window reference list; only reference pictures
+  (nal_ref_idc != 0) enter it.
 - The in-loop deblocking filter (8.7) IS applied for streams that
   request it (luma, all-intra bS 4/3, strong+normal filters, alpha/
   beta/tc0 threshold tables, per-MB QP averaging, I_PCM-as-QP-0);
@@ -169,20 +159,6 @@ class _BitReader:
         b = self.data[self.pos >> 3 : (self.pos >> 3) + n]
         self.pos += 8 * n
         return b
-
-    def more_data(self) -> bool:
-        """more_rbsp_data(): true while bits remain BEFORE the final '1'
-        (the rbsp_stop_bit)."""
-        last_one = -1
-        for i in range(len(self.data) - 1, -1, -1):
-            if self.data[i]:
-                byte = self.data[i]
-                low = 0
-                while not (byte >> low) & 1:
-                    low += 1
-                last_one = 8 * i + (7 - low)
-                break
-        return self.pos < last_one
 
 
 def _ep_insert(rbsp: bytes) -> bytes:
@@ -421,8 +397,7 @@ def _read_vlc(r: "_BitReader", dec: dict):
 
 
 # ------------------------------------------------------------------ encoder
-def _sps(w: int, h: int, profile: int = 66, bpoc: bool = False,
-         nrefs: int = 1) -> bytes:
+def _sps(w: int, h: int, profile: int = 66, nrefs: int = 1) -> bytes:
     mbw = -(-w // 16)
     mbh = -(-h // 16)
     bw = _BitWriter()
@@ -437,16 +412,10 @@ def _sps(w: int, h: int, profile: int = 66, bpoc: bool = False,
         bw.u(0, 1)  # qpprime_y_zero_transform_bypass
         bw.u(0, 1)  # seq_scaling_matrix_present (flat 16 scaling)
     bw.ue(0)      # log2_max_frame_num_minus4 -> frame_num is u(4)
-    if bpoc:
-        # B-enabled streams carry explicit picture order (display can
-        # differ from decode order): poc_type 0, 16-bit poc_lsb
-        bw.ue(0)
-        bw.ue(12)  # log2_max_pic_order_cnt_lsb_minus4 -> u(16)
-    else:
-        bw.ue(2)  # pic_order_cnt_type 2 (order = decode order)
-    # max_num_ref_frames: 2-deep DPB for B streams, nrefs-deep for
-    # multi-reference P streams (r7), 0 for the 1-ref/I-only default
-    bw.ue(max(2 if bpoc else 0, nrefs if nrefs > 1 else 0))
+    bw.ue(2)      # pic_order_cnt_type 2 (order = decode order)
+    # max_num_ref_frames: nrefs-deep for multi-reference P streams
+    # (r7), 0 for the 1-ref/I-only default
+    bw.ue(nrefs if nrefs > 1 else 0)
     bw.u(0, 1)    # gaps_in_frame_num_value_allowed
     bw.ue(mbw - 1)
     bw.ue(mbh - 1)
@@ -468,7 +437,7 @@ def _sps(w: int, h: int, profile: int = 66, bpoc: bool = False,
 
 
 def _pps(deblock_ctrl: bool = False,
-         wp: bool = False, wbidc: int = 0, t8x8: bool = False) -> bytes:
+         wp: bool = False, t8x8: bool = False) -> bytes:
     bw = _BitWriter()
     bw.ue(0)      # pps_id
     bw.ue(0)      # sps_id
@@ -478,7 +447,7 @@ def _pps(deblock_ctrl: bool = False,
     bw.ue(0)      # num_ref_idx_l0_active_minus1
     bw.ue(0)      # num_ref_idx_l1_active_minus1
     bw.u(1 if wp else 0, 1)  # weighted_pred (P slices, explicit, r7)
-    bw.u(wbidc, 2)  # weighted_bipred_idc (2 = implicit B weights, r7)
+    bw.u(0, 2)    # weighted_bipred_idc (B slices are out of scope)
     bw.se(0)      # pic_init_qp_minus26
     bw.se(0)      # pic_init_qs_minus26
     bw.se(0)      # chroma_qp_index_offset
@@ -592,7 +561,7 @@ def _unscan8_sub(runs: list) -> np.ndarray:
 
 
 # Active PPS transform_8x8_mode_flag (multi-site, same single-threaded
-# module-global convention as _SLICE_TOP/_BIPRED: every slice entry sets
+# module-global convention as _SLICE_TOP: every slice entry sets
 # it, encoder and decoder alike).
 _T8 = False
 
@@ -1071,22 +1040,6 @@ def _estimate_wp(src, refs, chroma=None, crefs=None, d=6):
     return {"ld": d, "cd": d, "luma": out_l, "chroma": out_c}
 
 
-# --------------------------------- implicit weighted bi-prediction (8.4.2.3.1)
-# Active B-slice bi-pred weights, constant per slice (one L0 + one L1
-# reference in this profile, so (w0, w1) is a slice-level pair). A
-# module global rather than a threaded parameter: the blend has ~15
-# call sites across the encoders AND decoders, and
-# every B entry point installs it unconditionally (never relies on a
-# previous slice's value), so there is no leak path. Codec calls are
-# single-threaded within a Python worker process.
-_BIPRED: tuple | None = None
-
-
-def _set_bipred(w) -> None:
-    global _BIPRED
-    _BIPRED = w
-
-
 # --------------------------------------- multi-slice pictures (r7, 7.3.3/7.4.3)
 # Active slice's first macroblock ROW. Neighbour availability (intra
 # prediction, nC contexts, MV prediction) treats
@@ -1094,9 +1047,10 @@ def _set_bipred(w) -> None:
 # macroblock in a different slice" rule, specialized to the in-repo
 # restriction that slices cover whole MB rows (first_mb_in_slice is a
 # multiple of PicWidthInMbs; arbitrary offsets raise a ValueError at
-# parse). Module global by the same single-threaded-worker argument as
-# _BIPRED: every slice entry point (encoders AND decoders) sets it
-# unconditionally, so no value leaks between slices.
+# parse). A module global rather than a threaded parameter: every slice
+# entry point (encoders AND decoders) sets it unconditionally, so no
+# value leaks between slices, and codec calls are single-threaded
+# within a Python worker process.
 _SLICE_TOP = 0
 
 
@@ -1105,56 +1059,22 @@ def _set_slice_top(row: int) -> None:
     _SLICE_TOP = row
 
 
-def _implicit_bipred_weights(cur_poc: int, poc0: int, poc1: int) -> tuple:
-    """8.4.2.3.1 implicit mode: (w0, w1) with logWD = 5 derived from POC
-    distances — the same tb/td/DistScaleFactor math temporal direct
-    uses (8.4.1.2.3). Degenerate geometry (references sharing a POC, or
-    w1 outside [-64, 128]) falls back to the (32, 32) default exactly
-    as the spec directs; long-term references don't exist in this
-    profile so that guard is vacuous."""
-    td = min(127, max(-128, poc1 - poc0))
-    if td == 0:
-        return (32, 32)
-    tb = min(127, max(-128, cur_poc - poc0))
-    tx = _div_trunc(16384 + abs(td) // 2, td)
-    dsf = min(1023, max(-1024, (tb * tx + 32) >> 6))
-    w1 = dsf >> 2
-    if w1 < -64 or w1 > 128:
-        return (32, 32)
-    return (64 - w1, w1)
-
-
-def _biblend(a, b):
-    """Bi-predictive sample blend under the active slice weights
-    (8.4.2.3.2): default = (a + b + 1) >> 1; implicit (w0, w1) = the
-    logWD-5 weighted average. Offsets are 0 and w0 + w1 == 64 in
-    implicit mode, so the default IS the w0 = w1 = 32 special case
-    bit-exactly. Inputs are interpolator outputs, already clipped to
-    [0, 255]; negative implicit weights can overshoot, hence Clip1."""
-    if _BIPRED is None:
-        return (a + b + 1) >> 1
-    w0, w1 = _BIPRED
-    return np.clip((a * w0 + b * w1 + 32) >> 6, 0, 255)
-
-
 class _ChromaState:
     """Per-slice chroma decode state: recon planes (start at mid-grey,
     as intra DC prediction with no neighbours yields), per-component AC
     TotalCoeff grid for CAVLC nC, and the reference chroma planes for
     inter slices."""
 
-    def __init__(self, mbw, mbh, ref=None, ref2=None):
+    def __init__(self, mbw, mbh, ref=None):
         self.planes = np.full((2, mbh * 8, mbw * 8), 128, np.uint8)
         self.nnz = np.zeros((2, mbh * 2, mbw * 2), np.int32)
         # `ref` may be one (2, h/2, w/2) plane pair or an L0 LIST of
         # them (multi-reference P slices, r7); refl is the list view
         self.refl = _ref_list(ref) if ref is not None else None
-        self.ref = self.refl[0] if self.refl else None
-        self.ref2 = ref2
 
-    def mc(self, ci, mx, my, mv, which=0, ridx=0, wp=None):
-        ref = self.ref2 if which == 1 else self.refl[ridx]
-        return _interp_chroma(ref[ci], mx * 8, my * 8, mv[0], mv[1], wp=wp)
+    def mc(self, ci, mx, my, mv, ridx=0, wp=None):
+        return _interp_chroma(self.refl[ridx][ci], mx * 8, my * 8, mv[0],
+                              mv[1], wp=wp)
 
     def store(self, ci, mx, my, block):
         self.planes[ci, my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = \
@@ -1804,7 +1724,6 @@ def _slice_ranges(mbh: int, slice_rows: int | None) -> list:
 
 def encode_idr_cavlc(gray: np.ndarray, qp: int = 10, max_coeffs: int = 16,
                      deblock: bool = False, full_recon: bool = False,
-                     poc_lsb: int | None = None,
                      chroma: np.ndarray | None = None,
                      slice_rows: int | None = None,
                      t8x8: bool = False):
@@ -1848,8 +1767,6 @@ def encode_idr_cavlc(gray: np.ndarray, qp: int = 10, max_coeffs: int = 16,
         bw.ue(0)      # pps_id
         bw.u(0, 4)    # frame_num
         bw.ue(0)      # idr_pic_id
-        if poc_lsb is not None:  # poc_type-0 SPS (B-enabled streams)
-            bw.u(poc_lsb & 0xFFFF, 16)
         bw.u(0, 1)    # no_output_of_prior_pics
         bw.u(0, 1)    # long_term_reference
         bw.se(qp - 26)  # slice_qp_delta (pic_init_qp is 26)
@@ -2093,10 +2010,8 @@ def _pred_mode_for_encoded(modes, bx, by, blk, mx, my):
 def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
                    max_coeffs: int = 16, frame_num: int = 1,
                    search: int = 8, deblock: bool = False,
-                   poc_lsb: int | None = None,
                    chroma: np.ndarray | None = None,
                    cref: np.ndarray | None = None,
-                   motion_out: list | None = None,
                    wp: dict | None = None,
                    slice_rows: int | None = None,
                    t8x8: bool = False):
@@ -2176,8 +2091,6 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
         bw.ue(5)      # slice_type: P (all slices in picture)
         bw.ue(0)      # pps_id
         bw.u(frame_num & 0xF, 4)
-        if poc_lsb is not None:  # poc_type-0 SPS (B-enabled streams)
-            bw.u(poc_lsb & 0xFFFF, 16)
         if nrefs > 1:  # multi-reference L0 (r7)
             bw.u(1, 1)  # num_ref_idx_active_override_flag
             bw.ue(nrefs - 1)
@@ -2416,505 +2329,14 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
     if deblock and qp >= 16:
         out_plane = _deblock_luma_inter(plane, qp_map, nnz, mvs, t8=t8m)
         crec = _deblock_chroma(crec, qp_map, nnz=nnz, mvs=mvs, t8=t8m)
-    if motion_out is not None:
-        motion_out.append((mvs.mv.copy(), mvs.ref.copy()))
     if chroma is None:
         return rb, out_plane
     return rb, (out_plane, crec)
 
 
-def _eval_b_partitions(mvs0, mvs1, ref0_full, ref1_full, smb, mx, my,
-                       search):
-    """Pick the best partitioned-B shape: for 16x8 and 8x16, each
-    partition independently takes the cheapest of L0 / L1 / Bi (decision
-    phase only — no state commits; the serializer re-derives predictors
-    in the per-list bitstream order). Returns (total_sad, info) with
-    info = {ptype, modes (m0, m1), mv0 [per part], mv1 [per part],
-    preds [per part 2D]}."""
-    best = None
-    for ptype, geom in _PART_GEOM.items():
-        tot = 0
-        modes_p = []
-        mv0s, mv1s, preds = [], [], []
-        for idx, (ox, oy, w, h) in enumerate(geom):
-            tgt = smb[oy:oy + h, ox:ox + w]
-            mvp0 = mvs0.mvp_part(mx, my, ptype, idx)
-            s0, mv_0, p0 = _search_block(ref0_full, tgt, mx * 16 + ox,
-                                         my * 16 + oy, mvp0, search)
-            mvp1 = mvs1.mvp_part(mx, my, ptype, idx)
-            s1, mv_1, p1 = _search_block(ref1_full, tgt, mx * 16 + ox,
-                                         my * 16 + oy, mvp1, search)
-            bi = _biblend(p0, p1)
-            sbi = int(np.abs(tgt - bi).sum())
-            mode = min(((s0, 0), (s1, 1), (sbi, 2)))[1]
-            modes_p.append(mode)
-            mv0s.append(mv_0 if mode in (0, 2) else None)
-            mv1s.append(mv_1 if mode in (1, 2) else None)
-            preds.append((p0, p1, bi)[mode])
-            tot += (s0, s1, sbi)[mode]
-        # Table 7-14: mb_type from (m0, m1, geometry)
-        order = ((0, 0), (1, 1), (0, 1), (1, 0), (0, 2), (1, 2), (2, 0),
-                 (2, 1), (2, 2))
-        base = 4 + 2 * order.index((modes_p[0], modes_p[1]))
-        mbt = base + (1 if ptype == "8x16" else 0)
-        info = {"ptype": ptype, "modes": tuple(modes_p), "mb_type": mbt,
-                "mv0": mv0s, "mv1": mv1s, "preds": preds}
-        if best is None or tot < best[0]:
-            best = (tot, info)
-    return best
-
-
-def encode_b_cavlc(gray: np.ndarray, ref0_full: np.ndarray,
-                   ref1_full: np.ndarray, qp: int = 10,
-                   max_coeffs: int = 16, frame_num: int = 1,
-                   search: int = 8, poc_lsb: int = 0,
-                   chroma: np.ndarray | None = None,
-                   cref0: np.ndarray | None = None,
-                   cref1: np.ndarray | None = None,
-                   col_motion=None, pocs=None, implicit_wb=False,
-                   slice_rows=None, t8x8: bool = False):
-    """One gray frame -> (B-slice RBSP, FULL recon plane). Per MB the
-    encoder picks the cheapest of B_L0_16x16 / B_L1_16x16 / B_Bi_16x16
-    (bi-prediction averages the two MC blocks) with an I_4x4 fallback on
-    SAD failure; no B_SKIP/direct modes are emitted. B pictures are
-    NON-REFERENCE (nal_ref_idc 0) and always disable the in-loop filter
-    in-slice, so decode == recon holds without two-list bS rules.
-    col_motion = the L1 anchor's (mv, ref) 4x4 motion field plus pocs =
-    (cur, poc0, poc1) switches direct/skip modes to TEMPORAL direct
-    (8.4.1.2.3, direct_spatial_mv_pred_flag = 0). implicit_wb=True
-    (PPS weighted_bipred_idc 2, r7) blends every bi-prediction with the
-    POC-derived implicit weights instead of the plain average — no new
-    syntax, only the 8.4.2.3.1 prediction math — which makes temporally
-    asymmetric B pictures (and linear fades) predict far better.
-    t8x8=True (High-profile PPS, late r7): per-MB adaptive 8x8
-    transform on B_L0/L1/Bi 16x16, partitioned 16x8/8x16, and B_8x8
-    with all-8x8 non-direct subs — direct shapes stay 4x4 because the
-    SPS writes direct_8x8_inference_flag 0 (7.3.5 flag condition);
-    the I_NxN fallback races I_8x8 like any intra MB."""
-    if implicit_wb:
-        if pocs is None:
-            raise ValueError("implicit_wb needs pocs=(cur, poc0, poc1)")
-        _set_bipred(_implicit_bipred_weights(*pocs))
-    else:
-        _set_bipred(None)
-    a = np.asarray(gray, np.uint8)
-    h, w = a.shape
-    mbw = -(-w // 16)
-    mbh = -(-h // 16)
-    assert ref0_full.shape == ref1_full.shape == (mbh * 16, mbw * 16)
-    src = np.pad(a, ((0, mbh * 16 - h), (0, mbw * 16 - w)), mode="edge")
-    plane = np.zeros((mbh * 16, mbw * 16), np.uint8)
-    plane_w = mbw * 16
-    nnz = np.zeros((mbh * 4, mbw * 4), np.int32)
-    modes = np.full((mbh * 4, mbw * 4), -1, np.int32)
-    mvs0 = _MvState(mbw, mbh)
-    mvs1 = _MvState(mbw, mbh)
-    csrc = _pad_chroma(chroma, mbw, mbh, h, w)
-    if cref0 is None:
-        cref0 = np.full((2, mbh * 8, mbw * 8), 128, np.uint8)
-    if cref1 is None:
-        cref1 = np.full((2, mbh * 8, mbw * 8), 128, np.uint8)
-    crec = np.full((2, mbh * 8, mbw * 8), 128, np.uint8)
-    nnz_c = np.zeros((2, mbh * 2, mbw * 2), np.int32)
-    ch = (csrc, crec, nnz_c)
-
-    def cmc1(cref, mv):
-        return np.stack([_interp_chroma(cref[ci], mx * 8, my * 8, *mv)
-                         for ci in range(2)])
-
-    tf = None
-    if col_motion is not None:
-        tf = _temporal_fields(col_motion[0], col_motion[1], *pocs)
-
-    def _slice_bw(first_row):
-        bw = _BitWriter()
-        bw.ue(first_row * mbw)  # first_mb_in_slice (multi-slice, r7)
-        bw.ue(6)      # slice_type: B (all slices in picture)
-        bw.ue(0)      # pps_id
-        bw.u(frame_num & 0xF, 4)
-        bw.u(poc_lsb & 0xFFFF, 16)  # pic_order_cnt_lsb (poc_type 0 SPS)
-        bw.u(0 if tf is not None else 1, 1)  # direct_spatial_mv_pred_flag
-        bw.u(0, 1)    # num_ref_idx_active_override_flag
-        bw.u(0, 1)    # ref_pic_list_modification_flag_l0
-        bw.u(0, 1)    # ref_pic_list_modification_flag_l1
-        # nal_ref_idc = 0: no dec_ref_pic_marking
-        bw.se(qp - 26)
-        bw.ue(1)      # disable_deblocking_filter_idc (always off for B)
-        return bw
-
-    _set_t8(t8x8)  # High-profile PPS (late r7): B MBs carry the flag too
-    starts = dict(_slice_ranges(mbh, slice_rows))
-    rbsps = []
-    bw = None
-    pending_skips = 0
-    for my in range(mbh):
-        if my in starts:  # new slice at this MB row (multi-slice, r7)
-            if bw is not None:
-                if pending_skips:
-                    bw.ue(pending_skips)  # trailing skip run
-                    pending_skips = 0
-                bw.rbsp_trailing()
-                rbsps.append(bytes(bw.buf))
-            _set_slice_top(my)
-            bw = _slice_bw(my)
-        for mx in range(mbw):
-            smb = src[my * 16:my * 16 + 16, mx * 16:mx * 16 + 16].astype(np.int32)
-            # --- direct first: B_SKIP when its residual is zero
-            dmv0, dmv1 = _b_direct_mvs(mvs0, mvs1, mx, my, tf)
-            dpred = _b_direct_pred(ref0_full, ref1_full, mx, my, dmv0, dmv1)
-            dcpred = _b_chroma_direct_enc(cref0, cref1, mx, my, dmv0, dmv1)
-            csrc_mb = csrc[:, my * 8:my * 8 + 8, mx * 8:mx * 8 + 8]
-            if _all_zero_quant(smb - dpred, qp) and \
-                    _chroma_zero(csrc_mb, dcpred, qp):
-                pending_skips += 1
-                plane[my * 16:my * 16 + 16, mx * 16:mx * 16 + 16] = \
-                    np.clip(dpred, 0, 255).astype(np.uint8)
-                for ci in range(2):
-                    crec[ci, my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = \
-                        np.clip(dcpred[ci], 0, 255).astype(np.uint8)
-                nnz[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = 0
-                nnz_c[:, my * 2:my * 2 + 2, mx * 2:mx * 2 + 2] = 0
-                _b_commit_direct(mvs0, mvs1, mx, my, dmv0, dmv1)
-                modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = -1
-                continue
-            sad_d = int(np.abs(smb - dpred).sum())
-            mvp0 = mvs0.mvp_16x16(mx, my)
-            sad0, mv0, pred0 = _search_block(ref0_full, smb, mx * 16, my * 16,
-                                             mvp0, search)
-            mvp1 = mvs1.mvp_16x16(mx, my)
-            sad1, mv1, pred1 = _search_block(ref1_full, smb, mx * 16, my * 16,
-                                             mvp1, search)
-            bi = _biblend(pred0, pred1)
-            sad_bi = int(np.abs(smb - bi).sum())
-            # direct wins ties: it costs no mvd bits
-            cand = min(((sad_d, 0), (sad0, 1), (sad1, 2), (sad_bi, 3)))
-            if cand[0] > 28 * 256:  # nothing predicts it: intra fallback
-                bw.ue(pending_skips)
-                pending_skips = 0
-                _encode_mb_i4(bw, smb.astype(np.uint8), plane, mx, my, qp,
-                              nnz, modes, max_coeffs, plane_w, ch,
-                              mb_type_code=23)
-                mvs0.set_mb(mx, my, (0, 0), -1)
-                mvs1.set_mb(mx, my, (0, 0), -1)
-                continue
-            mb_type = cand[1]
-            bpart = None
-            b8 = None
-            if cand[0] > 6 * 256:  # partitions must clearly win (bits)
-                tot_p, pinfo = _eval_b_partitions(
-                    mvs0, mvs1, ref0_full, ref1_full, smb, mx, my, search)
-                if tot_p < 0.92 * cand[0]:
-                    bpart = pinfo
-                # B_8x8 carries the most side bits (4 sub types + up to
-                # 16 mvd pairs per list): it must clearly beat both
-                tot_8, subs_8 = _eval_b8x8(
-                    mvs0, mvs1, ref0_full, ref1_full, smb, mx, my,
-                    search, dmv0, dmv1, dpred)
-                if tot_8 < 0.80 * min(cand[0], tot_p):
-                    b8, bpart = subs_8, None
-            if b8:
-                # prediction needs only the chosen MVs (parts are filled
-                # by _eval_b8x8); state commits happen at serialization
-                pred, cpred = _b8x8_pred(b8, ref0_full, ref1_full, cref0,
-                                         cref1, mx, my, dmv0, dmv1)
-            elif bpart:
-                geom = _PART_GEOM[bpart["ptype"]]
-                pred = np.zeros((16, 16), np.int32)
-                cpred = np.zeros((2, 8, 8), np.int32)
-                for idx, (ox, oy, w_, h_) in enumerate(geom):
-                    pred[oy:oy + h_, ox:ox + w_] = bpart["preds"][idx]
-                    cps = []
-                    for mv_i, cref in ((bpart["mv0"][idx], cref0),
-                                       (bpart["mv1"][idx], cref1)):
-                        if mv_i is None:
-                            continue
-                        cps.append(np.stack([
-                            _interp_chroma(cref[ci], mx * 8 + ox // 2,
-                                           my * 8 + oy // 2, mv_i[0],
-                                           mv_i[1], w_ // 2, h_ // 2)
-                            for ci in range(2)]))
-                    cp = cps[0] if len(cps) == 1 else \
-                        _biblend(cps[0], cps[1])
-                    cpred[:, oy // 2:(oy + h_) // 2,
-                          ox // 2:(ox + w_) // 2] = cp
-            else:
-                pred = (dpred, pred0, pred1, bi)[mb_type]
-                if mb_type == 0:
-                    cpred = dcpred
-                elif mb_type == 1:
-                    cpred = cmc1(cref0, mv0)
-                elif mb_type == 2:
-                    cpred = cmc1(cref1, mv1)
-                else:
-                    cpred = _biblend(cmc1(cref0, mv0), cmc1(cref1, mv1))
-            blocks = []
-            cbp = 0
-            out = pred.copy()
-            for blk in range(16):
-                ox, oy = _BLK_XY[blk]
-                lv = _thin(_quant4(_fwd4(smb[oy:oy + 4, ox:ox + 4]
-                                         - pred[oy:oy + 4, ox:ox + 4]),
-                                   qp, intra=False), max_coeffs)
-                tc = int(np.count_nonzero(lv))
-                if tc:
-                    cbp |= 1 << (blk >> 2)
-                blocks.append((lv, tc))
-                out[oy:oy + 4, ox:ox + 4] += _inv4(_dequant4(lv, qp)).astype(np.int32)
-            # 8x8-transform eligibility (7.3.5 with the SPS's
-            # direct_8x8_inference_flag 0): every non-direct shape with
-            # no sub-8x8 partitioning
-            t8_shape = t8x8 and (
-                all(st8 in (1, 2, 3) for st8, _ in b8) if b8
-                else True if bpart else mb_type != 0)
-            use8 = False
-            if t8_shape:
-                # same coefficient-count race as the P/I twins
-                blocks8 = []
-                cbp8 = 0
-                out8 = pred.copy()
-                for k8 in range(4):
-                    oy8, ox8 = (k8 >> 1) * 8, (k8 & 1) * 8
-                    q8 = _quant8(_fwd8(smb[oy8:oy8 + 8, ox8:ox8 + 8]
-                                       - pred[oy8:oy8 + 8, ox8:ox8 + 8]),
-                                 qp)
-                    if np.any(q8):
-                        cbp8 |= 1 << k8
-                        out8[oy8:oy8 + 8, ox8:ox8 + 8] += \
-                            _inv8(_dequant8(q8, qp)).astype(np.int64)
-                    blocks8.append(q8)
-                n8 = sum(int(np.count_nonzero(q)) for q in blocks8)
-                use8 = n8 <= sum(tc for _lv, tc in blocks)
-            if use8:
-                cbp, out = cbp8, out8
-                _mark_t8(mx, my)
-            cbpc, comps = _encode_chroma_mb(csrc_mb, cpred, qp, intra=False)
-            bw.ue(pending_skips)
-            pending_skips = 0
-            if b8:
-                bw.ue(22)  # B_8x8 (7.3.5: sub_mb_pred follows)
-                for st8, _parts in b8:
-                    bw.ue(st8)
-
-                def mvd_io(_li, mv_i, mvp_i):
-                    bw.se(mv_i[0] - mvp_i[0])
-                    bw.se(mv_i[1] - mvp_i[1])
-                    return mv_i
-
-                _b8x8_list_pass(b8, mvs0, mvs1, mx, my, dmv0, dmv1, mvd_io)
-            elif bpart:
-                # mvds grouped BY LIST (7.3.5.1) with per-list progressive
-                # commits — the decoder's exact predictor order
-                bw.ue(bpart["mb_type"])
-                geom = _PART_GEOM[bpart["ptype"]]
-                for li, (mvsx, mvlist) in enumerate(
-                        ((mvs0, bpart["mv0"]), (mvs1, bpart["mv1"]))):
-                    for idx, (ox, oy, w_, h_) in enumerate(geom):
-                        mv_i = mvlist[idx]
-                        if mv_i is None:
-                            continue
-                        mvp_i = mvsx.mvp_part(mx, my, bpart["ptype"], idx)
-                        bw.se(mv_i[0] - mvp_i[0])
-                        bw.se(mv_i[1] - mvp_i[1])
-                        mvsx.set_rect(mx * 4 + ox // 4, my * 4 + oy // 4,
-                                      w_ // 4, h_ // 4, mv_i, 0)
-                    for idx, (ox, oy, w_, h_) in enumerate(geom):
-                        if mvlist[idx] is None:
-                            mvsx.set_rect(mx * 4 + ox // 4,
-                                          my * 4 + oy // 4,
-                                          w_ // 4, h_ // 4, (0, 0), -1)
-            else:
-                bw.ue(mb_type)
-                if mb_type in (1, 3):
-                    bw.se(mv0[0] - mvp0[0])
-                    bw.se(mv0[1] - mvp0[1])
-                if mb_type in (2, 3):
-                    bw.se(mv1[0] - mvp1[0])
-                    bw.se(mv1[1] - mvp1[1])
-            bw.ue(_CBP_INTER_INV[cbp | (cbpc << 4)])
-            if t8_shape and (cbp & 15):
-                bw.u(1 if use8 else 0, 1)  # transform_size_8x8_flag
-            if cbp | cbpc:
-                bw.se(0)  # mb_qp_delta
-            if use8:  # four 8x8 blocks, CAVLC-interleaved 4x4 runs
-                for k8 in range(4):
-                    cells = [(my * 4 + (k8 >> 1) * 2 + (k >> 1),
-                              mx * 4 + (k8 & 1) * 2 + (k & 1))
-                             for k in range(4)]
-                    if cbp & (1 << k8):
-                        runs = _scan8_sub(blocks8[k8])
-                        for k, (by, bx) in enumerate(cells):
-                            nc = _nc_luma(nnz, bx, by)
-                            _encode_residual(bw, [int(v) for v in runs[k]],
-                                             nc)
-                            nnz[by, bx] = int(np.count_nonzero(runs[k]))
-                    else:
-                        for by, bx in cells:
-                            nnz[by, bx] = 0
-            else:
-                for blk in range(16):
-                    ox, oy = _BLK_XY[blk]
-                    bx, by = mx * 4 + ox // 4, my * 4 + oy // 4
-                    lv, tc = blocks[blk]
-                    if cbp & (1 << (blk >> 2)):
-                        nc = _nc_luma(nnz, bx, by)
-                        _encode_residual(bw, _scan16(lv), nc)
-                    nnz[by, bx] = tc
-            _write_chroma_residual(bw, cbpc, comps, nnz_c, mx, my)
-            for ci in range(2):
-                crec[ci, my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = \
-                    comps[ci]["recon"]
-            np.clip(out, 0, 255, out)
-            plane[my * 16:my * 16 + 16, mx * 16:mx * 16 + 16] = out.astype(np.uint8)
-            if bpart or b8:
-                pass  # committed per list during mvd serialization
-            elif mb_type == 0:
-                _b_commit_direct(mvs0, mvs1, mx, my, dmv0, dmv1)
-            else:
-                mvs0.set_mb(mx, my, mv0 if mb_type in (1, 3) else (0, 0),
-                            0 if mb_type in (1, 3) else -1)
-                mvs1.set_mb(mx, my, mv1 if mb_type in (2, 3) else (0, 0),
-                            0 if mb_type in (2, 3) else -1)
-            modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = -1
-    if pending_skips:
-        bw.ue(pending_skips)  # trailing skip run
-    bw.rbsp_trailing()
-    rbsps.append(bytes(bw.buf))
-    _set_slice_top(0)
-    _set_t8(False)
-    rb = rbsps[0] if slice_rows is None else rbsps
-    if chroma is None:
-        return rb, plane
-    return rb, (plane, crec)
-
-
-def encode_frames_bgop(frames: list[np.ndarray], qp: int = 10,
-                       gop: int = 8, bframes: int = 1,
-                       deblock: bool = False,
-                       chromas: list | None = None,
-                       direct: str = "spatial",
-                       implicit_wb: bool = False,
-                       slice_rows: int | None = None,
-                       t8x8: bool = False
-                       ) -> tuple[bytes, list[bytes], list[int]]:
-    """Gray frames -> (avcC, DECODE-ORDER length-prefixed samples,
-    display index per sample). Real IBBP-style GOPs: reference frames
-    (IDR every `gop` display frames, P in between) are coded first, the
-    `bframes` B pictures between each reference pair follow, predicting
-    from BOTH surrounding references (L0 past / L1 future). Feed the
-    display indices to the MP4 muxer as composition offsets (ctts);
-    decode with decode_samples (returns display order). direct
-    selects the B-slice direct/skip derivation: "spatial" (8.4.1.2.2
-    shape, default) or "temporal" (8.4.1.2.3: the future anchor's
-    motion scaled by POC distances, direct_spatial_mv_pred_flag=0).
-    implicit_wb=True codes weighted_bipred_idc=2 in the PPS: B-slice
-    bi-predictions use the POC-derived implicit weights (8.4.2.3.1) —
-    a pure prediction-math change, composable with either direct
-    mode."""
-    h, w = np.asarray(frames[0]).shape
-    if w % 2 or h % 2:
-        raise ValueError("4:2:0 H.264 needs even dimensions (crop unit is 2 px)")
-    if bframes < 1:
-        raise ValueError("bframes >= 1 (use encode_frames for P-only GOPs)")
-    if direct not in ("spatial", "temporal"):
-        raise ValueError(f"unknown direct mode {direct!r}")
-    enc_idr, enc_p, enc_b = encode_idr_cavlc, encode_p_cavlc, encode_b_cavlc
-    if chromas is not None:
-        assert len(chromas) == len(frames), "one chroma pair per frame"
-    avcc = build_avcc(w, h, deblock_ctrl=True, bpoc=True,
-                      wbidc=2 if implicit_wb else 0, t8x8=t8x8)
-    t8kw = {"t8x8": True} if t8x8 else {}
-    samples: list[bytes] = []
-    display: list[int] = []
-    recons: dict[int, object] = {}  # display idx -> FULL recon (refs)
-    crecons: dict[int, np.ndarray] = {}  # display idx -> chroma recon
-    motions: dict[int, tuple] = {}  # display idx -> anchor 4x4 motion
-    temporal = direct == "temporal"
-    mbw, mbh = -(-w // 16), -(-h // 16)
-    intra_motion = (np.zeros((mbh * 4, mbw * 4, 2), np.int32),
-                    np.full((mbh * 4, mbw * 4), -1, np.int32))
-    frame_num = 0
-
-    def emit(rbsp, idr, ref_pic, disp):
-        nal_ref_idc = (3 if idr else 2) if ref_pic else 0
-        typ = 5 if idr else 1
-        samples.append(_pack_sample(rbsp, (nal_ref_idc << 5) | typ))
-        display.append(disp)
-
-    n = len(frames)
-    prev_ref_disp = None
-    i = 0
-    while i < n:
-        if i % gop == 0:  # closed-GOP IDR; B frames never cross it
-            if chromas is None:
-                rbsp, recon = enc_idr(frames[i], qp=qp, deblock=deblock,
-                                      full_recon=True, poc_lsb=2 * i,
-                                      slice_rows=slice_rows, **t8kw)
-            else:
-                rbsp, (recon, crec) = enc_idr(
-                    frames[i], qp=qp, deblock=deblock, full_recon=True,
-                    poc_lsb=2 * i, chroma=chromas[i],
-                    slice_rows=slice_rows, **t8kw)
-                crecons[i] = crec
-            frame_num = 1
-            emit(rbsp, True, True, i)
-            recons[i] = recon
-            motions[i] = intra_motion
-            prev_ref_disp = i
-            i += 1
-            continue
-        # last display position of the current GOP is always a reference,
-        # so B pictures stay strictly inside the GOP
-        gop_last = min(n - 1, (prev_ref_disp // gop) * gop + gop - 1)
-        nxt = min(prev_ref_disp + bframes + 1, gop_last)
-        mo: list = []
-        if chromas is None:
-            rbsp, recon = enc_p(frames[nxt], recons[prev_ref_disp],
-                                qp=qp, frame_num=frame_num,
-                                deblock=deblock, poc_lsb=2 * nxt,
-                                motion_out=mo, slice_rows=slice_rows,
-                                **t8kw)
-        else:
-            rbsp, (recon, crec) = enc_p(
-                frames[nxt], recons[prev_ref_disp], qp=qp,
-                frame_num=frame_num, deblock=deblock, poc_lsb=2 * nxt,
-                chroma=chromas[nxt], cref=crecons[prev_ref_disp],
-                motion_out=mo, slice_rows=slice_rows, **t8kw)
-            crecons[nxt] = crec
-        motions[nxt] = mo[0]
-        frame_num = (frame_num + 1) & 0xF
-        emit(rbsp, False, True, nxt)
-        recons[nxt] = recon
-        # B pictures between the two references (display order)
-        for b in range(prev_ref_disp + 1, nxt):
-            tkw = {}
-            if temporal:
-                tkw["col_motion"] = motions[nxt]
-            if temporal or implicit_wb:
-                tkw["pocs"] = (2 * b, 2 * prev_ref_disp, 2 * nxt)
-            if implicit_wb:
-                tkw["implicit_wb"] = True
-            tkw["slice_rows"] = slice_rows
-            tkw.update(t8kw)
-            if chromas is None:
-                rbsp, _brec = enc_b(frames[b], recons[prev_ref_disp],
-                                    recons[nxt], qp=qp,
-                                    frame_num=frame_num, poc_lsb=2 * b,
-                                    **tkw)
-            else:
-                rbsp, _brec = enc_b(
-                    frames[b], recons[prev_ref_disp], recons[nxt], qp=qp,
-                    frame_num=frame_num, poc_lsb=2 * b, chroma=chromas[b],
-                    cref0=crecons[prev_ref_disp], cref1=crecons[nxt],
-                    **tkw)
-            emit(rbsp, False, False, b)
-        prev_ref_disp = nxt
-        i = nxt + 1
-    return avcc, samples, display
-
-
 def _chroma_zero(csrc_mb, cpred, qp) -> bool:
     """True iff the MB's chroma residual quantizes to nothing (cbpc 0) —
-    the extra gate P_SKIP/B_SKIP need now that chroma codes for real."""
+    the extra gate P_SKIP needs now that chroma codes for real."""
     cbpc, _ = _encode_chroma_mb(csrc_mb, cpred, qp, intra=False)
     return cbpc == 0
 
@@ -2929,15 +2351,14 @@ def _all_zero_quant(resid: np.ndarray, qp: int) -> bool:
 
 
 def build_avcc(w: int, h: int, deblock_ctrl: bool = False,
-               bpoc: bool = False,
-               nrefs: int = 1, wp: bool = False, wbidc: int = 0,
+               nrefs: int = 1, wp: bool = False,
                t8x8: bool = False) -> bytes:
     """avcC (AVCDecoderConfigurationRecord) for the MP4 sample entry."""
-    # Main profile: B pictures / weighted prediction;
-    # High profile (100): the 8x8 transform (r7)
-    profile = 100 if t8x8 else 77 if (bpoc or wp or wbidc) else 66
-    sps = _ep_insert(_sps(w, h, profile=profile, bpoc=bpoc, nrefs=nrefs))
-    pps = _ep_insert(_pps(deblock_ctrl, wp=wp, wbidc=wbidc, t8x8=t8x8))
+    # Main profile: weighted prediction; High profile (100): the 8x8
+    # transform (r7)
+    profile = 100 if t8x8 else 77 if wp else 66
+    sps = _ep_insert(_sps(w, h, profile=profile, nrefs=nrefs))
+    pps = _ep_insert(_pps(deblock_ctrl, wp=wp, t8x8=t8x8))
     return (bytes([1, profile, 0, 20, 0xFF, 0xE1])
             + struct.pack(">H", len(sps) + 1) + bytes([0x67]) + sps
             + bytes([1]) + struct.pack(">H", len(pps) + 1) + bytes([0x68]) + pps)
@@ -3102,16 +2523,6 @@ _P_SUB_GEOM = {
 # finer shapes carry more mvd bits: they must beat 8x8 by these margins
 _P_SUB_GATE = {1: 0.85, 2: 0.85, 3: 0.70}
 
-# Table 7-18 B sub_mb_type: value -> (shape key into _P_SUB_GEOM, mode)
-# with mode 0 = L0, 1 = L1, 2 = Bi; value 0 = B_Direct_8x8 (spatial).
-_B_SUB_INFO = {1: (0, 0), 2: (0, 1), 3: (0, 2), 4: (1, 0), 5: (2, 0),
-               6: (1, 1), 7: (2, 1), 8: (1, 2), 9: (2, 2), 10: (3, 0),
-               11: (3, 1), 12: (3, 2)}
-_B_SUB_OF = {v: k for k, v in _B_SUB_INFO.items()}
-# per-shape SAD gates for B sub-partitions (finer shapes and Bi carry
-# more mvd bits than 8x8 single-list, so they must win by a margin)
-_B8_SHAPE_GATE = {0: 0.95, 1: 0.80, 2: 0.80, 3: 0.65}
-
 
 def _eval_p8x8(mvs, ref_full, smb, mx, my, search):
     """Try P_8x8 picking, per 8x8 sub-macroblock, the best of
@@ -3158,165 +2569,6 @@ def _eval_p8x8(mvs, ref_full, smb, mx, my, search):
     mvs.mv[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = save_mv
     mvs.ref[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = save_ref
     return tot, parts
-
-
-def _eval_b8x8(mvs0, mvs1, ref0_full, ref1_full, smb, mx, my, search,
-               dmv0, dmv1, dpred):
-    """Decision phase for B_8x8 (mb_type 22): per 8x8 sub-macroblock
-    the cheapest of B_Direct_8x8 / {8x8, 8x4, 4x8, 4x4} x {L0, L1, Bi}
-    (Table 7-18). Probes commit progressively into BOTH lists and are
-    rolled back; the serializer then re-derives every predictor in the
-    per-list bitstream order (mv fixed, mvd adapts — same contract as
-    the partitioned-B encoder). Returns (total_sad, subs) with subs[j]
-    = (sub_mb_type, parts) and parts[k] = [mv0, mv1] (None = list
-    unused; direct sub-MBs carry parts = [])."""
-    sl = (slice(my * 4, my * 4 + 4), slice(mx * 4, mx * 4 + 4))
-    saves = [(m.mv[sl].copy(), m.ref[sl].copy()) for m in (mvs0, mvs1)]
-    tot, subs = 0, []
-    for (ox8, oy8) in _P8_GEOM:
-        tgt8 = smb[oy8:oy8 + 8, ox8:ox8 + 8]
-        sad_dir = int(np.abs(tgt8 - dpred[oy8:oy8 + 8, ox8:ox8 + 8]).sum())
-        best = (sad_dir, 0, [])  # direct wins ties: no mvd bits
-        for shape, rects in _P_SUB_GEOM.items():
-            snaps = [(m.mv[sl].copy(), m.ref[sl].copy())
-                     for m in (mvs0, mvs1)]
-            stot = [0, 0, 0]  # L0 / L1 / Bi totals over the shape
-            rinfo = []
-            for (ox, oy, w, h) in rects:
-                gx, gy = ox8 + ox, oy8 + oy
-                tgt = smb[gy:gy + h, gx:gx + w]
-                mvp0 = mvs0.mvp_sub(mx * 4 + gx // 4, my * 4 + gy // 4,
-                                    w // 4)
-                s0, mv_0, p0 = _search_block(ref0_full, tgt, mx * 16 + gx,
-                                             my * 16 + gy, mvp0, search)
-                mvp1 = mvs1.mvp_sub(mx * 4 + gx // 4, my * 4 + gy // 4,
-                                    w // 4)
-                s1, mv_1, p1 = _search_block(ref1_full, tgt, mx * 16 + gx,
-                                             my * 16 + gy, mvp1, search)
-                sbi = int(np.abs(tgt - _biblend(p0, p1)).sum())
-                stot[0] += s0
-                stot[1] += s1
-                stot[2] += sbi
-                rinfo.append((mv_0, mv_1))
-                # probe commits see both lists (the serializer re-derives
-                # true per-list predictors later; mv stays fixed)
-                mvs0.set_rect(mx * 4 + gx // 4, my * 4 + gy // 4,
-                              w // 4, h // 4, mv_0, 0)
-                mvs1.set_rect(mx * 4 + gx // 4, my * 4 + gy // 4,
-                              w // 4, h // 4, mv_1, 0)
-            for m, (smv, sref) in zip((mvs0, mvs1), snaps):
-                m.mv[sl] = smv
-                m.ref[sl] = sref
-            for mode in range(3):
-                gate = _B8_SHAPE_GATE[shape] * (0.92 if mode == 2 else 1.0)
-                if stot[mode] < gate * best[0]:
-                    parts = [[mv_0 if mode in (0, 2) else None,
-                              mv_1 if mode in (1, 2) else None]
-                             for (mv_0, mv_1) in rinfo]
-                    best = (stot[mode], _B_SUB_OF[(shape, mode)], parts)
-        st8, parts = best[1], best[2]
-        # commit the chosen sub-MB so the NEXT 8x8's probes see it
-        if st8 == 0:
-            by, bx = my * 4 + oy8 // 4, mx * 4 + ox8 // 4
-            for m, dmf in ((mvs0, dmv0), (mvs1, dmv1)):
-                m.mv[by:by + 2, bx:bx + 2] = \
-                    dmf[oy8 // 4:oy8 // 4 + 2, ox8 // 4:ox8 // 4 + 2]
-                m.ref[by:by + 2, bx:bx + 2] = 0
-        else:
-            shape, _mode = _B_SUB_INFO[st8]
-            for (ox, oy, w, h), (mv_0, mv_1) in zip(_P_SUB_GEOM[shape],
-                                                    parts):
-                gx, gy = ox8 + ox, oy8 + oy
-                for m, mv_i in ((mvs0, mv_0), (mvs1, mv_1)):
-                    m.set_rect(mx * 4 + gx // 4, my * 4 + gy // 4,
-                               w // 4, h // 4,
-                               mv_i if mv_i is not None else (0, 0),
-                               0 if mv_i is not None else -1)
-        subs.append((st8, parts))
-        tot += best[0]
-    for m, (smv, sref) in zip((mvs0, mvs1), saves):
-        m.mv[sl] = smv
-        m.ref[sl] = sref
-    return tot, subs
-
-
-def _b8x8_list_pass(subs, mvs0, mvs1, mx, my, dmv0, dmv1, mvd_io):
-    """Walk the per-list serialization order of a B_8x8 MB (7.3.5.1:
-    all mvd_l0 in sub-MB/rect order, then all mvd_l1), committing MV
-    state exactly as the bitstream does — shared by all four codec
-    paths (CAVLC enc/dec). subs[j] = (sub_mb_type, parts);
-    mvd_io(li, mvp) either writes the mvd for the already-chosen mv and
-    returns that mv (encoder) or reads the mvd and returns mvp + mvd
-    (decoder); the result lands in parts[k][li]. Direct sub-MBs commit
-    the per-4x4 direct field in both lists; sub-MBs not using a list
-    get ref -1 AFTER the list's mvd loop (matches _decode_mb_b_part)."""
-    for li, (mvsx, dmf) in enumerate(((mvs0, dmv0), (mvs1, dmv1))):
-        for (ox8, oy8), (st8, parts) in zip(_P8_GEOM, subs):
-            if st8 == 0:
-                by, bx = my * 4 + oy8 // 4, mx * 4 + ox8 // 4
-                mvsx.mv[by:by + 2, bx:bx + 2] = \
-                    dmf[oy8 // 4:oy8 // 4 + 2, ox8 // 4:ox8 // 4 + 2]
-                mvsx.ref[by:by + 2, bx:bx + 2] = 0
-                continue
-            shape, mode = _B_SUB_INFO[st8]
-            if mode != li and mode != 2:
-                continue
-            for k, (ox, oy, w, h) in enumerate(_P_SUB_GEOM[shape]):
-                gx, gy = ox8 + ox, oy8 + oy
-                mvp = mvsx.mvp_sub(mx * 4 + gx // 4, my * 4 + gy // 4,
-                                   w // 4)
-                mv = mvd_io(li, parts[k][li], mvp)
-                parts[k][li] = mv
-                mvsx.set_rect(mx * 4 + gx // 4, my * 4 + gy // 4,
-                              w // 4, h // 4, mv, 0)
-        for (ox8, oy8), (st8, _parts) in zip(_P8_GEOM, subs):
-            if st8 != 0:
-                _shape, mode = _B_SUB_INFO[st8]
-                if mode != li and mode != 2:
-                    mvsx.set_rect(mx * 4 + ox8 // 4, my * 4 + oy8 // 4,
-                                  2, 2, (0, 0), -1)
-
-
-def _b8x8_pred(subs, ref0, ref1, cref0, cref1, mx, my, dmv0, dmv1):
-    """(luma pred 16x16, chroma pred (2, 8, 8)) for a B_8x8 MB whose MV
-    state was committed by _b8x8_list_pass — recomputed identically on
-    both sides of the codec so decode == recon needs no shared arrays."""
-    pred = np.zeros((16, 16), np.int32)
-    cpred = np.zeros((2, 8, 8), np.int32)
-    for (ox8, oy8), (st8, parts) in zip(_P8_GEOM, subs):
-        if st8 == 0:  # B_Direct_8x8: field-driven bi-pred over the 8x8
-            pred[oy8:oy8 + 8, ox8:ox8 + 8] = _b_direct_pred(
-                ref0, ref1, mx, my, dmv0, dmv1, ox8, oy8, 8, 8)
-            for ci in range(2):
-                cpred[ci, oy8 // 2:oy8 // 2 + 4, ox8 // 2:ox8 // 2 + 4] = \
-                    _biblend(
-                        _direct_chroma_one(cref0[ci], mx, my, dmv0,
-                                           ox8 // 2, oy8 // 2, 4, 4),
-                        _direct_chroma_one(cref1[ci], mx, my, dmv1,
-                                           ox8 // 2, oy8 // 2, 4, 4))
-            continue
-        else:
-            shape, _mode = _B_SUB_INFO[st8]
-            rects = _P_SUB_GEOM[shape]
-            mvsel = parts
-        for (ox, oy, w, h), mvp in zip(rects, mvsel):
-            gx, gy = ox8 + ox, oy8 + oy
-            ps, cps = [], []
-            for mv, refx, crefx in ((mvp[0], ref0, cref0),
-                                    (mvp[1], ref1, cref1)):
-                if mv is None:
-                    continue
-                ps.append(_interp_luma(refx, mx * 16 + gx, my * 16 + gy,
-                                       mv[0], mv[1], w, h))
-                cps.append(np.stack([
-                    _interp_chroma(crefx[ci], mx * 8 + gx // 2,
-                                   my * 8 + gy // 2, mv[0], mv[1],
-                                   w // 2, h // 2) for ci in range(2)]))
-            pred[gy:gy + h, gx:gx + w] = \
-                ps[0] if len(ps) == 1 else _biblend(ps[0], ps[1])
-            cp = cps[0] if len(cps) == 1 else _biblend(cps[0], cps[1])
-            cpred[:, gy // 2:(gy + h) // 2, gx // 2:(gx + w) // 2] = cp
-    return pred, cpred
 
 
 # Table 9-4 (me mapping) coded_block_pattern for INTER: codeNum -> cbp
@@ -3488,10 +2740,6 @@ class _MvState:
         if len(present) == 1:
             return present[0]
         return _median_mv([a, b, c])
-
-    def mvp_8x8(self, mbx: int, mby: int, idx: int) -> tuple[int, int]:
-        return self.mvp_sub(mbx * 4 + (idx % 2) * 2,
-                            mby * 4 + (idx // 2) * 2, 2)
 
     def set_rect(self, bx: int, by: int, w4: int, h4: int, mv, ref: int):
         """Commit MVs for a sub-MB rectangle (4x4-block units)."""
@@ -3887,7 +3135,7 @@ def _parse_pps(rbsp: bytes) -> dict:
     r.ue()
     r.ue()
     weighted_pred = r.u(1)   # explicit WP in P slices (r7)
-    weighted_bipred = r.u(2)
+    r.u(2)  # weighted_bipred_idc (B slices only, which raise)
     pic_init_qp = 26 + r.se()
     r.se()  # pic_init_qs
     r.se()  # chroma_qp_index_offset (in-repo streams write 0)
@@ -3904,7 +3152,6 @@ def _parse_pps(rbsp: bytes) -> dict:
             "pic_init_qp": pic_init_qp, "deblock_ctrl": bool(deblock_ctrl),
             "redundant": bool(redundant),
             "weighted_pred": bool(weighted_pred),
-            "weighted_bipred_idc": weighted_bipred,
             "t8x8": t8x8}
 
 
@@ -4272,282 +3519,6 @@ def _decode_mb_p8x8(r, plane, refs, mx, my, qp, nnz, cc, modes, mvs,
                          t8_shape=all(st == 0 for st in sts))
 
 
-def _div_trunc(a: int, b: int) -> int:
-    """Integer division truncating toward zero — the spec's '/' on
-    possibly-negative operands (Python // floors instead)."""
-    q = abs(a) // abs(b)
-    return -q if (a < 0) != (b < 0) else q
-
-
-def _temporal_fields(col_mv, col_ref, cur_poc, poc0, poc1):
-    """8.4.1.2.3 temporal direct motion: whole-frame per-4x4 mvL0/mvL1
-    fields derived from the COLOCATED picture's (RefPicList1[0])
-    motion field, scaled by POC distances. Intra colocated blocks
-    (ref < 0) contribute mvCol = 0 with refIdxCol treated as 0.
-
-        td = Clip3(-128, 127, poc1 - poc0)
-        tb = Clip3(-128, 127, cur_poc - poc0)
-        tx = (16384 + Abs(td / 2)) / td          (truncating ops)
-        DistScaleFactor = Clip3(-1024, 1023, (tb * tx + 32) >> 6)
-        mvL0 = (DistScaleFactor * mvCol + 128) >> 8
-        mvL1 = mvL0 - mvCol
-
-    With one reference per list, refIdxL0 = refIdxCol = 0 always, so
-    only the MV scaling remains. Shared by encoder and decoder —
-    decode == recon is exact by construction, and the math IS the ISO
-    derivation (SPS codes direct_8x8_inference_flag = 0, so per-4x4
-    granularity is the spec-conformant shape). Returns (tf0, tf1),
-    each (H/4, W/4, 2) int32."""
-    mvcol = np.where((col_ref < 0)[:, :, None], 0, col_mv).astype(np.int64)
-    td = min(127, max(-128, poc1 - poc0))
-    tb = min(127, max(-128, cur_poc - poc0))
-    if td == 0:
-        return mvcol.astype(np.int32), np.zeros_like(mvcol, np.int32)
-    tx = _div_trunc(16384 + abs(td) // 2, td)
-    dsf = min(1023, max(-1024, (tb * tx + 32) >> 6))
-    tf0 = (dsf * mvcol + 128) >> 8  # arithmetic shift == spec '>>'
-    tf1 = tf0 - mvcol
-    return tf0.astype(np.int32), tf1.astype(np.int32)
-
-
-def _b_direct_mvs(mvs0, mvs1, mx, my, tf=None):
-    """Direct motion for one MB as a pair of (4, 4, 2) int32 fields.
-    tf=None — simplified SPATIAL direct (8.4.1.2.2 shape): per list,
-    the median predictor over the MB's neighbors (all-unavailable ->
-    zero), always bi-predictive, one MV for the whole MB (broadcast).
-    tf=(tf0, tf1) — TEMPORAL direct (8.4.1.2.3): the MB's slice of the
-    precomputed whole-frame fields, per-4x4 MVs. Both shapes are shared
-    by encoder and decoder, so round trips stay bit-exact."""
-    if tf is not None:
-        by, bx = my * 4, mx * 4
-        return (tf[0][by:by + 4, bx:bx + 4],
-                tf[1][by:by + 4, bx:bx + 4])
-    f0 = np.empty((4, 4, 2), np.int32)
-    f0[:] = mvs0.mvp_16x16(mx, my)
-    f1 = np.empty((4, 4, 2), np.int32)
-    f1[:] = mvs1.mvp_16x16(mx, my)
-    return f0, f1
-
-
-def _field_uniform(f):
-    """The single (x, y) MV if every 4x4 block of the field agrees,
-    else None. Spatial direct fields are always uniform — keeping the
-    one-call 16x16 MC fast path (bit-identical: the 6-tap filter is
-    position-invariant, so per-4x4 MC with equal MVs matches)."""
-    if (f == f[0, 0]).all():
-        return int(f[0, 0, 0]), int(f[0, 0, 1])
-    return None
-
-
-def _b_direct_pred(ref0, ref1, mx, my, f0, f1, ox=0, oy=0, w=16, h=16):
-    """Bi-predictive direct luma MC over a w x h region of the MB
-    (block-aligned): one MC call per list when the field is uniform,
-    per-4x4 otherwise."""
-    px, py = mx * 16 + ox, my * 16 + oy
-    preds = []
-    for f, ref in ((f0, ref0), (f1, ref1)):
-        sub = f[oy // 4:(oy + h) // 4, ox // 4:(ox + w) // 4]
-        mv = _field_uniform(sub)
-        if mv is not None:
-            preds.append(_interp_luma(ref, px, py, mv[0], mv[1], w, h))
-            continue
-        p = np.empty((h, w), np.int64)
-        for r_ in range(h // 4):
-            for c_ in range(w // 4):
-                mvb = sub[r_, c_]
-                p[r_ * 4:r_ * 4 + 4, c_ * 4:c_ * 4 + 4] = _interp_luma(
-                    ref, px + c_ * 4, py + r_ * 4,
-                    int(mvb[0]), int(mvb[1]), 4, 4)
-        preds.append(p)
-    return _biblend(preds[0], preds[1])
-
-
-def _b_commit_direct(mvs0, mvs1, mx, my, f0, f1):
-    by, bx = my * 4, mx * 4
-    for mvsx, f in ((mvs0, f0), (mvs1, f1)):
-        mvsx.mv[by:by + 4, bx:bx + 4] = f
-        mvsx.ref[by:by + 4, bx:bx + 4] = 0
-
-
-def _direct_chroma_one(cref, mx, my, f, ox=0, oy=0, w=8, h=8):
-    """One-list direct chroma MC over a w x h chroma region (half-res;
-    per-2x2 when the field varies — each 4x4 luma block owns a 2x2
-    chroma block)."""
-    px, py = mx * 8 + ox, my * 8 + oy
-    sub = f[oy // 2:(oy + h) // 2, ox // 2:(ox + w) // 2]
-    mv = _field_uniform(sub)
-    if mv is not None:
-        return _interp_chroma(cref, px, py, mv[0], mv[1], w, h)
-    p = np.empty((h, w), np.int64)
-    for r_ in range(h // 2):
-        for c_ in range(w // 2):
-            mvb = sub[r_, c_]
-            p[r_ * 2:r_ * 2 + 2, c_ * 2:c_ * 2 + 2] = _interp_chroma(
-                cref, px + c_ * 2, py + r_ * 2,
-                int(mvb[0]), int(mvb[1]), 2, 2)
-    return p
-
-
-def _b_chroma_bi(cc, mx, my, f0, f1):
-    """Decoder-side bi-predictive direct chroma for the whole MB."""
-    return np.stack([
-        _biblend(_direct_chroma_one(cc.ref[ci], mx, my, f0),
-                 _direct_chroma_one(cc.ref2[ci], mx, my, f1))
-        for ci in range(2)])
-
-
-def _b_chroma_direct_enc(cref0, cref1, mx, my, f0, f1):
-    """Encoder-side twin of _b_chroma_bi (references passed directly)."""
-    return np.stack([
-        _biblend(_direct_chroma_one(cref0[ci], mx, my, f0),
-                 _direct_chroma_one(cref1[ci], mx, my, f1))
-        for ci in range(2)])
-
-
-def _skip_mb_b(plane, ref0, ref1, mx, my, nnz, cc, modes, mvs0, mvs1,
-               tf=None):
-    """B_SKIP: direct bi-prediction (spatial, or temporal when tf is
-    the precomputed field pair), zero residual."""
-    mv0, mv1 = _b_direct_mvs(mvs0, mvs1, mx, my, tf)
-    pred = _b_direct_pred(ref0, ref1, mx, my, mv0, mv1)
-    plane[my * 16:my * 16 + 16, mx * 16:mx * 16 + 16] = \
-        np.clip(pred, 0, 255).astype(np.uint8)
-    cpred = _b_chroma_bi(cc, mx, my, mv0, mv1)
-    for ci in range(2):
-        cc.store(ci, mx, my, cpred[ci])
-    nnz[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = 0
-    cc.nnz[:, my * 2:my * 2 + 2, mx * 2:mx * 2 + 2] = 0
-    modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = -1
-    _b_commit_direct(mvs0, mvs1, mx, my, mv0, mv1)
-
-
-def _decode_mb_b16(r, mb_type, plane, ref0, ref1, mx, my, qp, nnz, cc,
-                   modes, mvs0, mvs1, tf=None):
-    """B_Direct_16x16 (0: spatial direct + residual) / B_L0_16x16 /
-    B_L1_16x16 / B_Bi_16x16 (1/2/3: one mvd per used list, per-list
-    median MV prediction); bi-prediction averages the two MC blocks
-    ((a + b + 1) >> 1, default weights)."""
-    if mb_type == 0:
-        mv0, mv1 = _b_direct_mvs(mvs0, mvs1, mx, my, tf)
-        pred = _b_direct_pred(ref0, ref1, mx, my, mv0, mv1)
-        cpred = _b_chroma_bi(cc, mx, my, mv0, mv1)
-        _b_commit_direct(mvs0, mvs1, mx, my, mv0, mv1)
-        return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes,
-                             cpred)
-    use = (mb_type in (1, 3), mb_type in (2, 3))  # (L0, L1)
-    preds = []
-    cpreds = []
-    for li, (u, mvsx, refx) in enumerate(zip(use, (mvs0, mvs1),
-                                             (ref0, ref1))):
-        if not u:
-            mvsx.set_mb(mx, my, (0, 0), -1)
-            continue
-        mvp = mvsx.mvp_16x16(mx, my)
-        mvd = (r.se(), r.se())
-        mv = (mvp[0] + mvd[0], mvp[1] + mvd[1])
-        preds.append(_interp_luma(refx, mx * 16, my * 16, mv[0], mv[1]))
-        cpreds.append(np.stack([cc.mc(ci, mx, my, mv, li)
-                                for ci in range(2)]))
-        mvsx.set_mb(mx, my, mv, 0)
-    pred = preds[0] if len(preds) == 1 else _biblend(preds[0], preds[1])
-    cpred = cpreds[0] if len(cpreds) == 1 else \
-        _biblend(cpreds[0], cpreds[1])
-    return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred,
-                         t8_shape=True)
-
-
-# Table 7-14 partitioned B mb_types 4..21: (geometry, part0 mode,
-# part1 mode) with modes 0 = L0, 1 = L1, 2 = Bi
-_B_PART_TYPES = {}
-for _i, (_m0, _m1) in enumerate(
-        ((0, 0), (1, 1), (0, 1), (1, 0), (0, 2), (1, 2), (2, 0), (2, 1),
-         (2, 2))):
-    _B_PART_TYPES[4 + 2 * _i] = ("16x8", _m0, _m1)
-    _B_PART_TYPES[5 + 2 * _i] = ("8x16", _m0, _m1)
-
-
-def _decode_mb_b_part(r, mb_type, plane, ref0, ref1, mx, my, qp, nnz, cc,
-                      modes, mvs0, mvs1):
-    """Partitioned B macroblocks (r7): two 16x8 / 8x16 partitions, each
-    predicting from L0, L1, or Bi. mvds are grouped BY LIST in the
-    bitstream (7.3.5.1: all mvd_l0 then all mvd_l1), so MV prediction
-    commits progressively per list — decoder state mirrors the
-    encoder's serialization order exactly."""
-    ptype, m0, m1 = _B_PART_TYPES[mb_type]
-    geom = _PART_GEOM[ptype]
-    pmodes = (m0, m1)
-    mvs_of = (mvs0, mvs1)
-    mv_sel: list[list] = [[None, None], [None, None]]  # [list][part]
-    for li in range(2):
-        for idx in range(2):
-            uses = pmodes[idx] == li or pmodes[idx] == 2
-            if not uses:
-                continue
-            mvp = mvs_of[li].mvp_part(mx, my, ptype, idx)
-            mvd = (r.se(), r.se())
-            mv = (mvp[0] + mvd[0], mvp[1] + mvd[1])
-            mv_sel[li][idx] = mv
-            ox, oy, w, h = geom[idx]
-            mvs_of[li].set_rect(mx * 4 + ox // 4, my * 4 + oy // 4,
-                                w // 4, h // 4, mv, 0)
-        # partitions not using this list are unavailable for prediction
-        for idx in range(2):
-            if mv_sel[li][idx] is None:
-                ox, oy, w, h = geom[idx]
-                mvs_of[li].set_rect(mx * 4 + ox // 4, my * 4 + oy // 4,
-                                    w // 4, h // 4, (0, 0), -1)
-    pred = np.zeros((16, 16), np.int32)
-    cpred = np.zeros((2, 8, 8), np.int32)
-    for idx, (ox, oy, w, h) in enumerate(geom):
-        preds = []
-        cpreds = []
-        for li, refx in ((0, ref0), (1, ref1)):
-            mv = mv_sel[li][idx]
-            if mv is None:
-                continue
-            preds.append(_interp_luma(refx, mx * 16 + ox, my * 16 + oy,
-                                      mv[0], mv[1], w, h))
-            cref = cc.ref if li == 0 else cc.ref2
-            cpreds.append(np.stack([
-                _interp_chroma(cref[ci], mx * 8 + ox // 2,
-                               my * 8 + oy // 2, mv[0], mv[1],
-                               w // 2, h // 2) for ci in range(2)]))
-        lp = preds[0] if len(preds) == 1 else _biblend(preds[0], preds[1])
-        cp = cpreds[0] if len(cpreds) == 1 else \
-            _biblend(cpreds[0], cpreds[1])
-        pred[oy:oy + h, ox:ox + w] = lp
-        cpred[:, oy // 2:(oy + h) // 2, ox // 2:(ox + w) // 2] = cp
-    return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred,
-                         t8_shape=True)
-
-
-def _decode_mb_b8x8(r, plane, ref0, ref1, mx, my, qp, nnz, cc, modes,
-                    mvs0, mvs1, tf=None):
-    """B_8x8 (mb_type 22): four sub_mb_type fields (Table 7-18 —
-    B_Direct_8x8 or {8x8, 8x4, 4x8, 4x4} x {L0, L1, Bi}), mvds grouped
-    BY LIST (7.3.5.1) with per-list progressive predictor commits via
-    the shared _b8x8_list_pass traversal."""
-    sts = []
-    for _ in range(4):
-        st = r.ue()
-        if st > 12:
-            raise ValueError("bad B sub_mb_type")
-        sts.append(st)
-    subs = [(st, [] if st == 0 else
-             [[None, None] for _ in _P_SUB_GEOM[_B_SUB_INFO[st][0]]])
-            for st in sts]
-    dmv0, dmv1 = _b_direct_mvs(mvs0, mvs1, mx, my, tf)
-
-    def mvd_io(_li, _mv, mvp):
-        mvd = (r.se(), r.se())
-        return (mvp[0] + mvd[0], mvp[1] + mvd[1])
-
-    _b8x8_list_pass(subs, mvs0, mvs1, mx, my, dmv0, dmv1, mvd_io)
-    pred, cpred = _b8x8_pred(subs, ref0, ref1, cc.ref, cc.ref2, mx, my,
-                             dmv0, dmv1)
-    return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred,
-                         t8_shape=all(s in (1, 2, 3) for s in sts))
-
 
 def _skip_mb(plane, ref, mx, my, nnz, cc, modes, mvs):
     mv = mvs.skip_mv(mx, my)
@@ -4566,20 +3537,22 @@ def _skip_mb(plane, ref, mx, my, nnz, cc, modes, mvs):
 def _parse_slice_header(r, sps, pps, nal_type, nal_ref_idc: int = 3) -> dict:
     """Slice header (7.3.3). first_mb
     lands in the returned dict (multi-slice pictures, r7); decode_sample
-    validates row alignment and ordering across a picture's slices."""
+    validates row alignment and ordering across a picture's slices.
+    A B slice raises as soon as its slice_type is read."""
     first_mb = r.ue()
     stype = r.ue()
+    if stype % 5 == 1:
+        raise ValueError("B slices are not supported (out of decode scope)")
     is_p = stype % 5 == 0
-    is_b = stype % 5 == 1
-    if not is_p and not is_b and stype % 5 != 2:
+    if not is_p and stype % 5 != 2:
         raise ValueError("SP/SI slice: out of decode scope")
     r.ue()  # pps_id
     r.u(sps["log2_mfn"])  # frame_num
     if nal_type == 5:
         r.ue()  # idr_pic_id
-    poc = None
+    # picture order fields: read past, pictures decode in decode order
     if sps["poc_type"] == 0:
-        poc = r.u(sps["log2_poc"])  # pic_order_cnt_lsb
+        r.u(sps["log2_poc"])  # pic_order_cnt_lsb
         if pps["pic_order_present"]:
             r.se()  # delta_pic_order_cnt_bottom
     elif sps["poc_type"] == 1 and not sps["delta_always_zero"]:
@@ -4588,32 +3561,17 @@ def _parse_slice_header(r, sps, pps, nal_type, nal_ref_idc: int = 3) -> dict:
             r.se()
     if pps["redundant"]:
         r.ue()
-    direct_spatial = True
-    if is_b:
-        direct_spatial = bool(r.u(1))  # 0 = temporal direct (8.4.1.2.3)
     nrefs = 1
-    if is_p or is_b:
+    wp_tab = None
+    if is_p:
         if r.u(1):  # num_ref_idx_active_override_flag
             nrefs = r.ue() + 1  # num_ref_idx_l0_active_minus1
             if nrefs > 16:
                 raise ValueError("bad num_ref_idx_l0_active")
-            if is_b:
-                if nrefs != 1:  # multi-ref stays P-only in this profile
-                    raise ValueError(
-                        "multiple L0 references in a B slice unsupported")
-                if r.ue() != 0:  # num_ref_idx_l1_active_minus1
-                    raise ValueError("multiple L1 references unsupported")
         if r.u(1):  # ref_pic_list_modification_flag_l0
             raise ValueError("ref pic list modification unsupported")
-        if is_b and r.u(1):  # ref_pic_list_modification_flag_l1
-            raise ValueError("ref pic list modification unsupported")
-    wp_tab = None
-    if is_p and pps.get("weighted_pred"):
-        wp_tab = _parse_pred_weight_table(r, nrefs)  # explicit WP (r7)
-    if is_b and pps.get("weighted_bipred_idc", 0) not in (0, 2):
-        # idc 2 (implicit, POC-derived weights) decodes since r7; idc 1
-        # (explicit B tables) stays out of profile, idc 3 is reserved
-        raise ValueError("explicit weighted bi-prediction unsupported")
+        if pps.get("weighted_pred"):
+            wp_tab = _parse_pred_weight_table(r, nrefs)  # explicit WP (r7)
     if nal_type == 5:
         r.u(1)  # no_output_of_prior_pics
         r.u(1)  # long_term_reference
@@ -4629,128 +3587,68 @@ def _parse_slice_header(r, sps, pps, nal_type, nal_ref_idc: int = 3) -> dict:
         elif idc != 2:  # idc 2 (no slice-crossing) == full filter here:
             off_a = 2 * r.se()  # single-slice pictures have no such edges
             off_b = 2 * r.se()
-    return {"is_p": is_p, "is_b": is_b, "qp": qp, "do_filter": do_filter,
-            "off_a": off_a, "off_b": off_b, "poc": poc,
-            "direct_spatial": direct_spatial, "nrefs": nrefs,
+    return {"is_p": is_p, "qp": qp, "do_filter": do_filter,
+            "off_a": off_a, "off_b": off_b, "nrefs": nrefs,
             "wp": wp_tab, "first_mb": first_mb}
 
 
 def _decode_islice(r, sps, pps, nal_type, ref: np.ndarray | None = None,
                    nal_ref_idc: int = 3,
-                   ref2: np.ndarray | None = None,
                    cref: np.ndarray | None = None,
-                   cref2: np.ndarray | None = None,
-                   col_motion=None, pocs=None, motion_out=None,
                    hdr=None, rows=None, pic=None):
     """Returns (luma FULL plane, chroma (2, H/2, W/2) FULL planes).
-    col_motion/pocs feed temporal-direct B slices (decode_samples
-    threads the L1 anchor's motion field + POCs); motion_out, when a
-    list, receives this picture's (mv, ref) 4x4 motion field so the
-    caller can keep it for later temporal-direct derivation.
     Multi-slice pictures (r7): decode_sample calls once per slice NAL
     with the pre-parsed `hdr`, the slice's MB-row range `rows`, and a
     shared `pic` state dict; non-final slices return None."""
     if hdr is None:
         hdr = _parse_slice_header(r, sps, pps, nal_type, nal_ref_idc)
-    is_p, is_b = hdr["is_p"], hdr["is_b"]
+    is_p = hdr["is_p"]
     if is_p and ref is None:
         raise ValueError("P slice without a decoded reference frame")
-    if is_b and (ref is None or ref2 is None):
-        raise ValueError("B slice without both reference frames")
-    tf = None
-    if is_b and not hdr["direct_spatial"]:
-        if col_motion is None or pocs is None:
-            raise ValueError(
-                "temporal direct B slice needs the colocated anchor's "
-                "motion field (decode via decode_samples)")
-        tf = _temporal_fields(col_motion[0], col_motion[1], *pocs)
-    if is_b:  # implicit weighted bi-prediction (8.4.2.3.1, r7)
-        if pps.get("weighted_bipred_idc", 0) == 2:
-            if pocs is None:
-                raise ValueError(
-                    "implicit weighted bi-prediction needs reference "
-                    "POCs (decode via decode_samples)")
-            _set_bipred(_implicit_bipred_weights(*pocs))
-        else:
-            _set_bipred(None)
     qp = hdr["qp"]
     do_filter, off_a, off_b = hdr["do_filter"], hdr["off_a"], hdr["off_b"]
     _set_t8(pps.get("t8x8", False))
     mbw, mbh = sps["mbw"], sps["mbh"]
     # L0 reference list: `ref` is one FULL plane or a most-recent-first
-    # list (multi-reference P slices, r7); B slices stay 1+1 (L0/L1)
+    # list (multi-reference P slices, r7)
     refs = _ref_list(ref) if ref is not None else None
     nrefs = hdr["nrefs"]
     if is_p and nrefs > len(refs):
         raise ValueError(
             f"slice needs {nrefs} reference frames, got {len(refs)}")
-    if is_b:
-        ref = refs[0]
     plane = np.zeros((mbh * 16, mbw * 16), np.uint8)
     plane_w = mbw * 16
     nnz = np.zeros((mbh * 4, mbw * 4), np.int32)
     # pre-chroma (gray) reference pictures: mid-grey chroma, matching
     # what their own decode produced
     crefs = None
-    if is_p or is_b:
+    if is_p:
         crefs = _ref_list(cref) if cref is not None else []
-        while len(crefs) < (nrefs if is_p else 1):
+        while len(crefs) < nrefs:
             crefs.append(np.full((2, mbh * 8, mbw * 8), 128, np.uint8))
-    if is_b and cref2 is None:
-        cref2 = np.full((2, mbh * 8, mbw * 8), 128, np.uint8)
     r0, r1 = rows if rows is not None else (0, mbh)
     _set_slice_top(r0)
     if pic:  # shared picture state across this picture's slices (r7)
         plane, nnz = pic["plane"], pic["nnz"]
         cc, modes, qp_map = pic["cc"], pic["modes"], pic["qp_map"]
-        mvs, mvs1 = pic["mvs"], pic["mvs1"]
-        t8m = pic["t8m"]
+        mvs, t8m = pic["mvs"], pic["t8m"]
     else:
-        cc = _ChromaState(mbw, mbh, ref=crefs, ref2=cref2)
+        cc = _ChromaState(mbw, mbh, ref=crefs)
         modes = np.full((mbh * 4, mbw * 4), -1, np.int32)
         qp_map = np.zeros((mbh, mbw), np.int32)
-        mvs = _MvState(mbw, mbh) if (is_p or is_b) else None
-        mvs1 = _MvState(mbw, mbh) if is_b else None  # L1 motion state
+        mvs = _MvState(mbw, mbh) if is_p else None
         t8m = np.zeros((mbh, mbw), np.int32) \
             if pps.get("t8x8") else None
         if pic is not None:
             pic.update(plane=plane, nnz=nnz, cc=cc, modes=modes,
-                       qp_map=qp_map, mvs=mvs, mvs1=mvs1, t8m=t8m)
+                       qp_map=qp_map, mvs=mvs, t8m=t8m)
     _set_t8map(t8m)  # per-MB flags feed the 8.7 edge derivation
     if is_p and hdr.get("wp") is not None:  # explicit WP (r7)
         mvs.wp = _resolve_wp(hdr["wp"], nrefs)
     run_pending = None  # skip run not yet read for the next coded MB
     for my in range(r0, r1):
         for mx in range(mbw):
-            if is_b:
-                if run_pending is None:
-                    run_pending = r.ue()  # mb_skip_run (B_SKIP = direct)
-                if run_pending > 0:
-                    run_pending -= 1
-                    _skip_mb_b(plane, ref, ref2, mx, my, nnz, cc, modes,
-                               mvs, mvs1, tf)
-                    qp_map[my, mx] = qp
-                    continue
-                run_pending = None  # this position is the coded MB
-                mb_type = r.ue()
-                if 0 <= mb_type <= 3:  # B_Direct / B_L0 / B_L1 / B_Bi 16x16
-                    qp = _decode_mb_b16(r, mb_type, plane, ref, ref2, mx, my,
-                                        qp, nnz, cc, modes, mvs, mvs1, tf)
-                    qp_map[my, mx] = qp
-                    continue
-                if mb_type < 22:  # partitioned 16x8 / 8x16 B types (r7)
-                    qp = _decode_mb_b_part(r, mb_type, plane, ref, ref2,
-                                           mx, my, qp, nnz, cc, modes,
-                                           mvs, mvs1)
-                    qp_map[my, mx] = qp
-                    continue
-                if mb_type == 22:  # B_8x8 (r7)
-                    qp = _decode_mb_b8x8(r, plane, ref, ref2, mx, my, qp,
-                                         nnz, cc, modes, mvs, mvs1, tf)
-                    qp_map[my, mx] = qp
-                    continue
-                mb_type -= 23  # intra in a B slice
-            elif is_p:
+            if is_p:
                 if run_pending is None:
                     run_pending = r.ue()  # mb_skip_run
                 if run_pending > 0:
@@ -4759,8 +3657,7 @@ def _decode_islice(r, sps, pps, nal_type, ref: np.ndarray | None = None,
                     qp_map[my, mx] = qp
                     continue
                 run_pending = None  # this position is the coded MB
-            if not is_b:
-                mb_type = r.ue()
+            mb_type = r.ue()
             if is_p:
                 if mb_type == 0:  # P_L0_16x16
                     qp = _decode_mb_p16(r, plane, refs, mx, my, qp, nnz,
@@ -4801,10 +3698,8 @@ def _decode_islice(r, sps, pps, nal_type, ref: np.ndarray | None = None,
                 qp_map[my, mx] = qp
             else:
                 raise ValueError(f"bad mb_type {mb_type}")
-            if is_p or is_b:
+            if is_p:
                 mvs.set_mb(mx, my, (0, 0), -1)  # intra: no motion
-                if is_b:
-                    mvs1.set_mb(mx, my, (0, 0), -1)
     _set_slice_top(0)
     if r1 < mbh:
         return None  # more slices of this picture follow (r7)
@@ -4813,10 +3708,7 @@ def _decode_islice(r, sps, pps, nal_type, ref: np.ndarray | None = None,
         # intra/inter prediction consumed the unfiltered plane above; the
         # OUTPUT picture is the filtered one (8.7). Below qp 16 every
         # alpha threshold is 0 (I_PCM pictures: qp 0), so skip.
-        if is_p or is_b:
-            # B pictures filter with the L0 motion state (in-repo
-            # approximation of the two-list bS rules; the in-repo encoder
-            # always disables the filter for B slices, so decode == recon)
+        if is_p:
             plane = _deblock_luma_inter(plane, qp_map, nnz, mvs, off_a,
                                         off_b, t8=t8m)
             cc.planes = _deblock_chroma(cc.planes, qp_map, off_a, off_b,
@@ -4824,160 +3716,72 @@ def _decode_islice(r, sps, pps, nal_type, ref: np.ndarray | None = None,
         else:
             plane = _deblock_luma(plane, qp_map, off_a, off_b, t8=t8m)
             cc.planes = _deblock_chroma(cc.planes, qp_map, off_a, off_b)
-    if motion_out is not None:
-        if mvs is not None:
-            motion_out.append((mvs.mv.copy(), mvs.ref.copy()))
-        else:  # I slice: all-intra colocated field (mvCol = 0)
-            motion_out.append((np.zeros((mbh * 4, mbw * 4, 2), np.int32),
-                               np.full((mbh * 4, mbw * 4), -1, np.int32)))
     # FULL (uncropped) planes: the DPB reference for motion compensation
     # is the decoded mb-aligned picture; cropping is display-only
     return plane, cc.planes
 
 
-def _peek_slice(sample: bytes, avcc: bytes, sps: dict, pps: dict):
-    """(nal_type, nal_ref_idc, parsed header) of the first slice NAL —
-    non-consuming: decode_sample re-parses."""
+def _peek_slice(sample: bytes, avcc: bytes) -> tuple[int, int]:
+    """(nal_type, nal_ref_idc) of the first slice NAL in a sample."""
     length_size = (avcc[4] & 3) + 1
     pos = 0
     while pos + length_size <= len(sample):
         ln = int.from_bytes(sample[pos: pos + length_size], "big")
         nal = sample[pos + length_size: pos + length_size + ln]
         pos += length_size + ln
-        if not nal:
-            continue
-        typ = nal[0] & 0x1F
-        if typ not in (1, 5):
-            continue
-        r = _BitReader(_ep_remove(nal[1:]))
-        try:
-            hdr = _parse_slice_header(r, sps, pps, typ, (nal[0] >> 5) & 3)
-        except (IndexError, TypeError, KeyError, struct.error) as e:
-            raise ValueError(f"corrupt H.264 sample ({type(e).__name__})")
-        return typ, (nal[0] >> 5) & 3, hdr
+        if nal and (nal[0] & 0x1F) in (1, 5):
+            return nal[0] & 0x1F, (nal[0] >> 5) & 3
     raise ValueError("no slice NAL in sample")
-
-
-def _poc_msb(lsb: int, prev_msb: int, prev_lsb: int, max_lsb: int) -> int:
-    """PicOrderCntMsb derivation (8.2.1.1) for poc_type 0: a big backward
-    jump of the lsb means it wrapped forward (+max_lsb), a big forward
-    jump means the reference was past a wrap (−max_lsb)."""
-    if lsb < prev_lsb and prev_lsb - lsb >= max_lsb // 2:
-        return prev_msb + max_lsb
-    if lsb > prev_lsb and lsb - prev_lsb > max_lsb // 2:
-        return prev_msb - max_lsb
-    return prev_msb
 
 
 def decode_samples(samples: list[bytes], avcc: bytes,
                    with_chroma: bool = False) -> list:
-    """Sequential GOP decode. poc_type-2 streams (I/P only): 1-deep DPB,
-    decode order == display order. poc_type-0 streams (B-enabled, r6):
-    a 2-deep reference DPB; each B picture predicts from the nearest
-    reference before (L0) and after (L1) its POC, IDRs reset the DPB
-    (closed GOPs), and the output is reordered to DISPLAY order by POC.
+    """Sequential GOP decode, in decode order. A sliding-window DPB
+    holds the last max_num_ref_frames (at least 1) REFERENCE pictures
+    (nal_ref_idc != 0); each P slice predicts from it most-recent-first
+    (multi-reference P slices read as many entries as their header's
+    num_ref_idx_l0_active, r7), and an IDR resets it (closed GOPs).
+    A non-reference picture is output but never predicted from.
     Returns cropped gray frames, or (gray, (2, h/2, w/2) chroma) pairs
-    when with_chroma=True (r7: chroma reconstructs for real)."""
-    sps, pps = _avcc_param_sets(avcc)
+    when with_chroma=True (r7: chroma reconstructs for real). B slices
+    raise ValueError."""
+    sps, _pps = _avcc_param_sets(avcc)
     h2, w2 = (sps["h"] + 1) // 2, (sps["w"] + 1) // 2
-
-    def crop(yc):
-        y, c = yc
-        return ((y[:sps["h"], :sps["w"]], c[:, :h2, :w2]) if with_chroma
-                else y[:sps["h"], :sps["w"]])
-
-    if sps["poc_type"] != 0:
-        # I/P-only streams: sliding-window DPB, most-recent-first L0
-        # (multi-reference P slices read as many entries as their
-        # header's num_ref_idx_l0_active, r7); IDRs reset the window
-        window = max(1, sps["max_refs"])
-        out = []
-        dpb0: list = []  # (luma FULL, chroma FULL), newest last
-        for s in samples:
-            typ, _ref_idc, _hdr = _peek_slice(s, avcc, sps, pps)
-            if typ == 5:
-                dpb0 = []  # IDR: closed GOP
-            refs = [e[0] for e in reversed(dpb0)] or None
-            crefs = [e[1] for e in reversed(dpb0)] or None
-            full = decode_sample(s, avcc, ref=refs, cref=crefs,
-                                 full_plane=True, with_chroma=True)
-            dpb0 = (dpb0 + [full])[-window:]
-            out.append(crop(full))
-        return out
-    dpb: list[tuple[int, tuple, tuple]] = []  # (poc, FULL (y, c), motion)
-    outputs: list[tuple[int, int, object]] = []  # (poc, seq, cropped)
-    # poc_type-0 PicOrderCntMsb derivation (8.2.1.1): the lsb wraps at
-    # MaxPicOrderCntLsb, so streams longer than MaxPicOrderCntLsb/2
-    # display frames would interleave GOPs if sorted by raw lsb;
-    # prev_{msb,lsb} track the previous REFERENCE picture in decode order
-    max_lsb = 1 << sps["log2_poc"]
-    prev_msb = prev_lsb = 0
-    for seq, s in enumerate(samples):
-        typ, ref_idc, hdr = _peek_slice(s, avcc, sps, pps)
+    window = max(1, sps["max_refs"])
+    out = []
+    dpb: list = []  # (luma FULL, chroma FULL) reference pictures, newest last
+    for s in samples:
+        typ, ref_idc = _peek_slice(s, avcc)
         if typ == 5:
-            dpb = []  # IDR: closed GOP, reset references
-            prev_msb = prev_lsb = 0  # POC restarts at an IDR
-        if hdr["poc"] is not None:
-            msb = _poc_msb(hdr["poc"], prev_msb, prev_lsb, max_lsb)
-            poc = msb + hdr["poc"]
-            if ref_idc:
-                prev_msb, prev_lsb = msb, hdr["poc"]
-        else:
-            poc = 2 * seq
-        mo: list = []
-        if hdr["is_b"]:
-            before = [e for e in dpb if e[0] < poc]
-            after = [e for e in dpb if e[0] > poc]
-            if not before or not after:
-                raise ValueError("B picture without surrounding references")
-            l0e = max(before, key=lambda e: e[0])
-            l1e = min(after, key=lambda e: e[0])
-            l0, l1 = l0e[1], l1e[1]
-            # temporal-direct slices scale the L1 anchor's (colocated)
-            # motion by POC distances; spatial slices ignore these
-            full = decode_sample(s, avcc, ref=l0[0], ref2=l1[0],
-                                 cref=l0[1], cref2=l1[1],
-                                 full_plane=True, with_chroma=True,
-                                 col_motion=l1e[2],
-                                 pocs=(poc, l0e[0], l1e[0]))
-        else:
-            ref = dpb[-1][1] if dpb else None
-            full = decode_sample(s, avcc, ref=ref[0] if ref else None,
-                                 cref=ref[1] if ref else None,
-                                 full_plane=True, with_chroma=True,
-                                 motion_out=mo)
+            dpb = []  # IDR: closed GOP
+        full = decode_sample(s, avcc,
+                             ref=[e[0] for e in reversed(dpb)] or None,
+                             cref=[e[1] for e in reversed(dpb)] or None,
+                             full_plane=True, with_chroma=True)
         if ref_idc:
-            dpb.append((poc, full, mo[0] if mo else None))
-            dpb = dpb[-2:]  # sliding window, 2-deep
-        outputs.append((poc, seq, crop(full)))
-    outputs.sort(key=lambda e: (e[0], e[1]))
-    return [p for _poc, _seq, p in outputs]
+            dpb = (dpb + [full])[-window:]
+        y, c = full
+        out.append((y[:sps["h"], :sps["w"]], c[:, :h2, :w2]) if with_chroma
+                   else y[:sps["h"], :sps["w"]])
+    return out
 
 
 def decode_sample(sample: bytes, avcc: bytes, ref: np.ndarray | None = None,
                   full_plane: bool = False,
-                  ref2: np.ndarray | None = None,
                   cref: np.ndarray | None = None,
-                  cref2: np.ndarray | None = None,
-                  with_chroma: bool = False,
-                  col_motion=None, pocs=None, motion_out=None):
+                  with_chroma: bool = False):
     """Length-prefixed NAL sample + avcC -> gray frame (or (gray,
     chroma) when with_chroma=True). Decodes I_PCM, CAVLC intra
     (I_4x4 / I_16x16), and CAVLC P slices (P_SKIP +
     P_L0_16x16 + 16x8/8x16 partitions, quarter-pel MC, `ref` =
-    previous FULL decoded plane, `cref` its chroma —
-    use decode_samples for GOP streams; B slices additionally take
-    `ref2`/`cref2` = the future reference). 4:2:0 chroma reconstructs
-    for real since r7 (intra DC/H/V prediction, 2x2 Hadamard DC + AC
-    residual, eighth-pel bilinear MC). P_8x8 decodes every
-    sub_mb_type shape (8x8/8x4/4x8/4x4, r7); partitioned B
-    macroblocks decode every 16x8/8x16 type 4..21 (r7); B_8x8
-    (mb_type 22, full Table 7-18) and TEMPORAL direct
-    (direct_spatial_mv_pred_flag 0, 8.4.1.2.3 POC scaling — needs
-    col_motion/pocs, threaded by decode_samples) decode since r7.
-    Out-of-profile features (CABAC, high-profile tools beyond the 8x8
-    transform) raise ValueError — the documented well-formed-unsupported
-    stub path in sample_frames."""
+    previous FULL decoded plane or a most-recent-first list of them,
+    `cref` its chroma — use decode_samples for GOP streams). 4:2:0
+    chroma reconstructs for real since r7 (intra DC/H/V prediction,
+    2x2 Hadamard DC + AC residual, eighth-pel bilinear MC). P_8x8
+    decodes every sub_mb_type shape (8x8/8x4/4x8/4x4, r7).
+    Out-of-profile features (B slices, CABAC, high-profile tools beyond
+    the 8x8 transform) raise ValueError — the documented
+    well-formed-unsupported stub path in sample_frames."""
     sps, pps = _avcc_param_sets(avcc)
     length_size = (avcc[4] & 3) + 1
     mbw, mbh = sps["mbw"], sps["mbh"]
@@ -5008,8 +3812,7 @@ def decode_sample(sample: bytes, avcc: bytes, ref: np.ndarray | None = None,
         raise ValueError(
             "unsupported slice layout: slices must start at MB-row "
             "boundaries, in raster order, starting at 0")
-    if any(s[2]["is_p"] != slices[0][2]["is_p"]
-           or s[2]["is_b"] != slices[0][2]["is_b"] for s in slices):
+    if any(s[2]["is_p"] != slices[0][2]["is_p"] for s in slices):
         raise ValueError("mixed slice types within a picture")
     ranges = [(firsts[i] // mbw,
                firsts[i + 1] // mbw if i + 1 < len(slices) else mbh)
@@ -5019,10 +3822,7 @@ def decode_sample(sample: bytes, avcc: bytes, ref: np.ndarray | None = None,
     for (typ, ref_idc, hdr, r), rows in zip(slices, ranges):
         try:
             full = _decode_islice(r, sps, pps, typ, ref=ref,
-                                  nal_ref_idc=ref_idc,
-                                  ref2=ref2, cref=cref, cref2=cref2,
-                                  col_motion=col_motion, pocs=pocs,
-                                  motion_out=motion_out,
+                                  nal_ref_idc=ref_idc, cref=cref,
                                   hdr=hdr, rows=rows, pic=pic)
         except (IndexError, TypeError, KeyError, struct.error) as e:
             # corrupted entropy payload desynced the parser: normalize to

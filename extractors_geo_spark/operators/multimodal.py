@@ -399,22 +399,21 @@ def sample_frames(videos: DataFrame, every_ms: int = 1000,
                         parsed = None
                     if parsed is not None and parsed.get("codec") == "h264":
                         # REAL pixels for CAVLC streams (..h264): I_PCM
-                        # bit-exact, intra + P + B entropy-decoded.
-                        # Out-of-profile streams (CABAC among them)
-                        # raise ValueError -> the well-formed-unsupported
-                        # contract below
+                        # bit-exact, intra + P entropy-decoded.
+                        # Out-of-profile streams (B slices and CABAC
+                        # among them) raise ValueError -> the
+                        # well-formed-unsupported contract below
                         try:
                             from .. import h264 as _h264
 
                             dur = parsed["duration_ms"]
-                            # decode_samples returns DISPLAY order; the
                             # container timestamps are per-sample
-                            # composition times in DECODE order — sorting
-                            # them yields the display-order timeline
-                            # (B-frame ctts reordering, r6)
+                            # composition times; sorting them keeps the
+                            # timeline monotone for a track with ctts
+                            # offsets
                             tss = sorted(parsed["timestamps_ms"])
                             # GOP-aware: decode the track sequentially so
-                            # P/B frames predict from their references (a
+                            # P frames predict from their references (a
                             # real deployment decodes per-GOP; fixture
                             # tracks are short)
                             arrs = _h264.decode_samples(

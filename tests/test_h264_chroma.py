@@ -1,4 +1,4 @@
-"""H.264 4:2:0 chroma residual coding (r7): CAVLC I/P/B + I_PCM.
+"""H.264 4:2:0 chroma residual coding (r7): CAVLC I/P + I_PCM.
 
 Gate, same as the luma matrix: decode(encode(x)) == the encoder's own
 reconstruction BIT-EXACTLY (shared dequant arithmetic), plus quality
@@ -113,7 +113,7 @@ def test_color_quality_monotone_with_qp():
     assert errs[0] < 0.5  # near-lossless at qp 6
 
 
-def test_color_p_and_b_decode_equals_recon():
+def test_color_p_decode_equals_recon():
     qp = 10
     y0, c0 = _mkframe(0)
     _, (ry0, rc0) = H.encode_idr_cavlc(y0, qp=qp, chroma=c0,
@@ -125,19 +125,6 @@ def test_color_p_and_b_decode_equals_recon():
     dy, dc = H.decode_sample(_one_sample(rb1, 0x41), avcc, ref=ry0,
                              cref=rc0, full_plane=True, with_chroma=True)
     assert np.array_equal(dy, ry1) and np.array_equal(dc, rc1)
-    # B between two references (bpoc SPS carries the poc field)
-    y2, c2 = _mkframe(2)
-    _, (ry2, rc2) = H.encode_p_cavlc(y2, ry1, qp=qp, chroma=c2, cref=rc1,
-                                     frame_num=2)
-    yb = ((y1.astype(int) + y2.astype(int)) // 2).astype(np.uint8)
-    cb = ((c1.astype(int) + c2.astype(int)) // 2).astype(np.uint8)
-    rbb, (ryb, rcb) = H.encode_b_cavlc(yb, ry1, ry2, qp=qp, chroma=cb,
-                                       cref0=rc1, cref1=rc2, poc_lsb=2)
-    avccb = H.build_avcc(48, 32, deblock_ctrl=True, bpoc=True)
-    dy, dc = H.decode_sample(_one_sample(rbb, 0x01), avccb, ref=ry1,
-                             ref2=ry2, cref=rc1, cref2=rc2,
-                             full_plane=True, with_chroma=True)
-    assert np.array_equal(dy, ryb) and np.array_equal(dc, rcb)
 
 
 def test_color_pgop_end_to_end():
@@ -150,21 +137,6 @@ def test_color_pgop_end_to_end():
         assert c.shape == (2, 16, 24)
         assert float(np.abs(c.astype(int) - cs[i].astype(int)).mean()) < 1.0
         assert float(np.abs(y.astype(int) - ys[i].astype(int)).mean()) < 1.0
-
-
-def test_color_bgop_display_reordering():
-    """Each displayed frame's chroma matches ITS OWN source (the rolling
-    pattern makes any reorder slip a large error)."""
-    ys, cs = zip(*[_mkframe(i) for i in range(9)])
-    avcc, samples, disp = H.encode_frames_bgop(list(ys), qp=10, gop=4,
-                                               bframes=1,
-                                               chromas=list(cs))
-    out = H.decode_samples(samples, avcc, with_chroma=True)
-    for i, (y, c) in enumerate(out):
-        own = float(np.abs(c.astype(int) - cs[i].astype(int)).mean())
-        other = float(np.abs(c.astype(int)
-                             - cs[(i + 1) % 9].astype(int)).mean())
-        assert own < 1.0 < other, (i, own, other)
 
 
 def test_ipcm_color_bit_exact():
@@ -192,15 +164,6 @@ def test_color_mp4_gray_pipeline_unaffected():
     colored = H.decode_samples(info["frames"], info["avcc"],
                                with_chroma=True)
     for i, (_, c) in enumerate(colored):
-        assert float(np.abs(c.astype(int) - cs[i].astype(int)).mean()) < 1.0
-
-
-def test_color_bgop():
-    ys, cs = zip(*[_mkframe(i) for i in range(9)])
-    avcc, samples, _ = H.encode_frames_bgop(list(ys), qp=10, gop=4,
-                                            bframes=1, chromas=list(cs))
-    out = H.decode_samples(samples, avcc, with_chroma=True)
-    for i, (y, c) in enumerate(out):
         assert float(np.abs(c.astype(int) - cs[i].astype(int)).mean()) < 1.0
 
 

@@ -293,7 +293,9 @@ def test_mp4_readers_reject_malformed_sample_tables():
     """Both MP4 readers raise ValueError on a missing stsz/stco/stsc/stts,
     a zero timescale and a chunk past the end of the bytes, instead of a
     TypeError, a ZeroDivisionError or quietly empty samples. So does a
-    fragmented clip whose trun sample size runs past the end."""
+    fragmented clip whose trun sample size runs past the end. A
+    well-formed ctts box moves each sample to its composition time:
+    dts + offset, shifted so the earliest is 0."""
     import struct
 
     from extractors_geo_spark import mp4 as _mp4
@@ -310,6 +312,15 @@ def test_mp4_readers_reject_malformed_sample_tables():
     caps = _mp4.write_mp4_with_captions(frames, fps=2, captions=["a", "b"])
     assert len(_mp4.read_mjpeg_mp4(video)["frames"]) == 3
     assert [t for _ms, t in _mp4.read_caption_track(caps)] == ["a", "b"]
+    # ctts: at fps 2 and timescale 90000 the dts are 0, 45000, 90000
+    jpegs = _mp4.read_mjpeg_mp4(video)["frames"]
+    offsets = [90000, 0, 45000]
+    reordered = _mp4.read_mjpeg_mp4(_mp4._assemble_mp4(
+        jpegs, 8, 8, 2, fourcc=b"jpeg", depth=24, ctts_offsets=offsets))
+    cts = [i * 45000 + o for i, o in enumerate(offsets)]
+    assert reordered["timestamps_ms"] == [
+        (c - min(cts)) * 1000 // 90000 for c in cts] == [500, 0, 1000]
+    assert reordered["frames"] == jpegs
     for read, data, last in ((_mp4.read_mjpeg_mp4, video, False),
                              (_mp4.read_caption_track, caps, True)):
         broken = _broken_sample_tables(data, last)
