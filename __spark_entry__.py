@@ -214,16 +214,15 @@ FROM p GROUP BY 1
 
 
 def q_cell_cover(spark, sf_dir):
-    """Covering cell set of a bbox (polygon_cells coarse phase). The
-    cover tree is memoized: building it is hundreds of py4j calls."""
-    keep, box, cover = memo_col(("q_cell_cover", RES), lambda: (
+    """Covering cell set of a bbox (polygon_cells coarse phase), through
+    cells.cover_cells, whose trees are memoized like this query's own."""
+    keep, box = memo_col(("q_cell_cover",), lambda: (
         F.col("point_id") % 17 == 3,
         [(F.col("lon") - 0.8).alias("minx"), (F.col("lat") - 0.8).alias("miny"),
          (F.col("lon") + 0.8).alias("maxx"), (F.col("lat") + 0.8).alias("maxy")],
-        F.explode(cells.cover_bbox(
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), RES)).alias("cell"),
     ))
-    return _points(spark, sf_dir).filter(keep).select("point_id", *box).select("point_id", cover)
+    boxes = _points(spark, sf_dir).filter(keep).select("point_id", *box)
+    return cells.cover_cells(boxes, "minx", "miny", "maxx", "maxy", RES, ["point_id"])
 
 
 def _sql_ixy(expr_lon, expr_lat, res):
@@ -247,12 +246,15 @@ FROM (SELECT point_id, {_ix0} AS ix0, {_ix1} AS ix1, {_iy0} AS iy0, {_iy1} AS iy
 
 
 def q_cell_children(spark, sf_dir):
-    """Adaptive-split primitive: 4 children at res+1."""
-    keep, kids = memo_col(("q_cell_children", RES), lambda: (
+    """Adaptive-split primitive: 4 children at res+1. The centre cell is
+    its own projection: inlined into the four children it made a
+    generated method past HotSpot's 8,000-byte JIT limit."""
+    keep, cell, kids = memo_col(("q_cell_children", RES), lambda: (
         F.col("point_id") % 37 == 5,
-        F.explode(cells.cell_children(cells.cell_id(F.col("lon"), F.col("lat"), RES))).alias("child"),
+        cells.cell_id(F.col("lon"), F.col("lat"), RES),
+        F.explode(cells.cell_children(F.col("cell"))).alias("child"),
     ))
-    return _points(spark, sf_dir).filter(keep).select("point_id", kids)
+    return _points(spark, sf_dir).filter(keep).select("point_id", cell).select("point_id", kids)
 
 
 _cix, _ciy = _sql_ixy("lon", "lat", RES)

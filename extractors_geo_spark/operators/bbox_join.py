@@ -28,23 +28,23 @@ def _side(df: DataFrame, id_col: str, cols: tuple[str, str, str, str], p: str,
     downstream (lmx <= rXx etc.) are meaningless for them, so each wrapped
     box splits into its two non-wrapping pieces ([minx, 180] and
     [-180, maxx]) in the same projection that renames the columns; other
-    rows inline a single piece. Two projections per side, both in codegen
-    (GenerateExec), built from memoized trees."""
+    rows inline a single piece. Then cells.cover_cells explodes each piece
+    to its cells with no lambda, so the whole side runs in whole-stage
+    codegen; both trees are memoized."""
     minx, miny, maxx, maxy = cols
 
-    def build() -> tuple[list[Column], Column]:
+    def build() -> list[Column]:
         x0, x1 = F.col(minx), F.col(maxx)
         pieces = F.when(x0 > x1, F.array(
             F.struct(x0.alias("x0"), F.lit(180.0).alias("x1")),
             F.struct(F.lit(-180.0).alias("x0"), x1.alias("x1")),
         )).otherwise(F.array(F.struct(x0.alias("x0"), x1.alias("x1"))))
-        split = [F.col(miny).alias(f"{p}{miny}"), F.col(maxy).alias(f"{p}{maxy}"),
-                 F.inline(pieces).alias(f"{p}{minx}", f"{p}{maxx}")]
-        cover = F.explode(cells.cover_bbox(*(F.col(f"{p}{c}") for c in cols), res)).alias("cell")
-        return split, cover
+        return [F.col(miny).alias(f"{p}{miny}"), F.col(maxy).alias(f"{p}{maxy}"),
+                F.inline(pieces).alias(f"{p}{minx}", f"{p}{maxx}")]
 
-    split, cover = memo_col(("bbox_side", cols, p, res), build)
-    return df.select(F.col(id_col), *split).select("*", cover)
+    split = memo_col(("bbox_side", cols, p), build)
+    keep = [id_col, *(f"{p}{c}" for c in (miny, maxy, minx, maxx))]
+    return cells.cover_cells(df.select(F.col(id_col), *split), *(f"{p}{c}" for c in cols), res, keep)
 
 
 def _refine(l_cols, r_cols, res: int) -> tuple[Column, list[Column]]:

@@ -20,9 +20,13 @@ pycsw.extractor/pycswutils.py:89-109).
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..exprcache import memo_col
 
 RES_SHIFT = 1 << 58
 Y_SHIFT = 1 << 29
@@ -63,28 +67,56 @@ def cell_id_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     return f"(CAST({res} AS BIGINT) * {RES_SHIFT} + {iy} * {Y_SHIFT} + {ix})"
 
 
-def cover_bbox(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int) -> Column:
-    """All cells intersecting a bbox, as an array column (explode to join).
-    Pure Catalyst: two sequences + a cartesian flatten. Cardinality is
-    bounded by the caller's choice of res (adaptive splitting handles the
-    hot ones).
+def cover_cells(df: DataFrame, minx: str, miny: str, maxx: str, maxy: str, res: int,
+                keep: list[str]) -> DataFrame:
+    """One row per (row of `df`, cell intersecting its bbox): the `keep`
+    columns plus the covering cell as `cell`. The box columns are given by
+    name; a NULL coordinate gives no rows. Cardinality is bounded by the
+    caller's choice of res (adaptive splitting handles the hot ones).
 
-    Antimeridian: a box given as minx > maxx is treated as wrapping across
-    the ±180 meridian and splits into two x-ranges ([x0, n-1] and [0, x1])
-    instead of silently stepping a negative sequence."""
-    return F.flatten(F.transform(cover_rows(miny, maxy, res), lambda iy: F.transform(
-        _cover_ixs(minx, maxx, res), lambda ix: _cell_at(iy, ix, res))))
+    Antimeridian: a box given as minx > maxx (judged on the clamped cell
+    columns) wraps across the ±180 meridian, covering columns [x0, n-1]
+    and [0, x1]. Rows span the two latitudes' cell rows in either order,
+    so a box given as miny > maxy covers the same rows as its flip.
+
+    Three plan steps, none with a lambda (higher-order functions run
+    interpreted): a projection stages the grid origin and size
+    (_x0, _y0, _nx, _ny), explode(sequence) numbers the cells k, and a
+    projection maps k to row _y0 + k div _nx, column
+    pmod(_x0 + k % _nx, n). Staging keeps the grid arithmetic out of the
+    per-cell code, whose method would otherwise pass HotSpot's 8,000-byte
+    JIT limit inside a larger plan."""
+
+    def build():
+        n = F.lit(_grid_n(res)).cast("long")
+        x0 = cell_ix(F.col(minx), res)
+        ya, yb = cell_iy(F.col(maxy), res), cell_iy(F.col(miny), res)
+        # cell_ix/cell_iy clamp a NULL to the grid edge (greatest/least
+        # skip NULLs), so a NULL coordinate must empty the sequence here
+        known = reduce(Column.__and__, (F.col(c).isNotNull() for c in (minx, miny, maxx, maxy)))
+        stage = [x0.alias("_x0"), F.least(ya, yb).alias("_y0"),
+                 (F.pmod(cell_ix(F.col(maxx), res) - x0, n) + 1).alias("_nx"),
+                 F.when(known, F.abs(yb - ya) + 1).alias("_ny")]
+        gen = F.explode(F.sequence(F.lit(0).cast("long"), F.col("_nx") * F.col("_ny") - 1)).alias("_k")
+        cell = _cell_at(F.col("_y0") + F.expr("_k div _nx"),
+                        F.pmod(F.col("_x0") + F.col("_k") % F.col("_nx"), n), res)
+        return stage, gen, cell
+
+    stage, gen, cell = memo_col(("cover_cells", minx, miny, maxx, maxy, res), build)
+    return (df.select(*keep, *stage)
+            .select(*keep, "_x0", "_y0", "_nx", gen)
+            .select(*keep, cell.alias("cell")))
 
 
 def cover_rows(miny: Column, maxy: Column, res: int) -> Column:
-    """The cell rows (iy, north to south) that cover_bbox spans."""
+    """The cell rows (iy, north to south) that cover_cells spans."""
     # lat decreases as iy increases -> maxy gives the smaller iy
     return F.sequence(cell_iy(maxy, res), cell_iy(miny, res))
 
 
 def cover_bbox_by_row(minx: Column, miny: Column, maxx: Column, maxy: Column, res: int,
                       row_values: Column) -> Column:
-    """cover_bbox's cells, each paired with its row's entry of
+    """cover_cells' cells, each paired with its row's entry of
     `row_values` (one per cover_rows row, in that order): an array of
     struct<cell, value> to `inline`. `row_values` is evaluated once per
     input row, however many cells share each value."""

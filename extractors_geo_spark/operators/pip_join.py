@@ -32,7 +32,7 @@ from . import cells
 
 DEFAULT_RES = 6  # 64x64 world grid ≈ 0.9 deg cells at CONUS; tune per layer
 
-# cover_bbox/cell_id expand to large expression trees whose construction is
+# the cover/cell_id trees are large expression trees whose construction is
 # hundreds of py4j round trips (~0.25 s per pip_join plan build, measured in
 # the flagship pipeline's timed region) — memoized via exprcache (r8).
 from ..exprcache import memo_col as _memo_col
@@ -52,8 +52,9 @@ def tag_point_cells(points: DataFrame, lon: str = "lon", lat: str = "lat", res: 
 
 
 def _cover_cells_n(minx: float, miny: float, maxx: float, maxy: float, res: int) -> int:
-    """Exact cardinality of cells.cover_bbox — the same clamped floor
-    arithmetic and antimeridian wrap (minx > maxx), evaluated driver-side."""
+    """Exact cardinality of cells.cover_cells — the same clamped floor
+    arithmetic, antimeridian wrap (minx > maxx) and row span (either
+    order of miny, maxy), evaluated driver-side."""
     n = 1 << res
 
     def _ix(lon):
@@ -64,7 +65,7 @@ def _cover_cells_n(minx: float, miny: float, maxx: float, maxy: float, res: int)
 
     x0, x1 = _ix(minx), _ix(maxx)
     nx = x1 - x0 + 1 if x0 <= x1 else n - x0 + x1 + 1
-    ny = _iy(miny) - _iy(maxy) + 1
+    ny = abs(_iy(miny) - _iy(maxy)) + 1
     return nx * ny
 
 
@@ -199,11 +200,9 @@ def pip_join(
     if "ring_lens" in polygons.columns:
         geom_cols.append("ring_lens")
     if exact:
-        pcs_cells = _cells_with_edges(res, "ring_lens" in geom_cols)
+        pcs = polygons.select(*poly_cols, *geom_cols, _cells_with_edges(res, "ring_lens" in geom_cols))
     else:
-        pcs_cells = _memo_col(("poly_cells", res), lambda: F.explode(cells.cover_bbox(
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res)).alias("cell"))
-    pcs = polygons.select(*poly_cols, *geom_cols, pcs_cells)
+        pcs = cells.cover_cells(polygons, "minx", "miny", "maxx", "maxy", res, [*poly_cols, *geom_cols])
 
     if broadcast_polys is None:
         # poly_cells_hint (expected EXPLODED polygon-cell row count) makes

@@ -96,7 +96,7 @@ def split_hot_cells(
     finer (4^levels children — pick levels ~ log4(hot_count/target)).
     `density` must be keyed by `cell`. Returns the input with `cell`
     replaced for hot rows. Join with a polygon side that exploded its
-    cover at BOTH resolutions (cells.cover_bbox at res and res+levels)."""
+    cover at BOTH resolutions (cells.cover_cells at res and res+levels)."""
     hot = density.filter(F.col("n") > hot_threshold).select("cell", F.lit(True).alias("is_hot"))
     out = tagged.join(F.broadcast(hot), "cell", "left")
     res_plus = (F.col("cell") / F.lit(_cells.RES_SHIFT)).cast("int") + levels

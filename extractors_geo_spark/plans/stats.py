@@ -52,8 +52,7 @@ def compute_poly_stats(polygons: DataFrame, res: int = 7) -> dict:
     from ..operators import cells
     from . import planner
 
-    n = polygons.select(F.explode(cells.cover_bbox(
-        F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res))).count()
+    n = cells.cover_cells(polygons, "minx", "miny", "maxx", "maxy", res, []).count()
     return {"res": res, "poly_cells": int(n),
             "all_rect": planner.all_rectangles(polygons)}
 

@@ -128,9 +128,16 @@ def test_bbox_join_wrapped_boxes_on_both_sides_match_brute_force(spark):
 
 
 def test_bbox_join_is_codegen_only(spark, boxes):
-    from tests.test_plans import explain_str
+    """No Python stage, and no higher-order function: Spark runs those
+    (transform, filter, aggregate, zip_with) interpreted, outside
+    whole-stage codegen. The driver queries' covers hold none either."""
+    from tests.test_literal_tables import SF, E
+    from tests.test_plans import explain_str, plan_of
 
     l, r, _, _ = boxes
-    s = explain_str(bbox_join.bbox_join(l, r))
+    df = bbox_join.bbox_join(l, r)
+    s = explain_str(df)
     assert "ArrowEvalPython" not in s and "MapInPandas" not in s
     assert "MapInArrow" not in s
+    for plan in (df, E.q_bbox_join(spark, SF), E.q_cell_cover(spark, SF)):
+        assert "lambdafunction" not in plan_of(plan)

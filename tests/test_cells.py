@@ -44,10 +44,62 @@ def test_sql_twin_matches(spark):
     assert got == exp
 
 
+def _cover(spark, boxes, res):
+    """cells.cover_cells of (minx, miny, maxx, maxy) boxes -> {box index:
+    [cells]}; a box with no rows is absent."""
+    df = spark.createDataFrame(
+        [(i, *b) for i, b in enumerate(boxes)],
+        "id int, minx double, miny double, maxx double, maxy double")
+    got = {}
+    for r in cells.cover_cells(df, "minx", "miny", "maxx", "maxy", res, ["id"]).collect():
+        got.setdefault(r["id"], []).append(r["cell"])
+    return got
+
+
+def _cover_np(box, res):
+    """Reference cover enumerated from cells.cell_np's clamped (iy, ix):
+    rows between the two latitudes' rows, columns x0..x1 or, when
+    x0 > x1, wrapped across the antimeridian; none for a NULL
+    coordinate."""
+    if any(v is None for v in box):
+        return []
+    minx, miny, maxx, maxy = box
+    _, iya, x0 = cells.cell_decode_np(cells.cell_np(minx, maxy, res))
+    _, iyb, x1 = cells.cell_decode_np(cells.cell_np(maxx, miny, res))
+    n = 1 << res
+    xs = range(x0, x1 + 1) if x0 <= x1 else [*range(x0, n), *range(0, x1 + 1)]
+    ys = range(min(iya, iyb), max(iya, iyb) + 1)
+    return [res * cells.RES_SHIFT + iy * cells.Y_SHIFT + ix for iy in ys for ix in xs]
+
+
+def test_cover_cells_matches_numpy_enumeration(spark):
+    rng = np.random.default_rng(8)
+    boxes = [
+        (170.0, -10.0, -170.0, 10.0),    # wraps the antimeridian
+        (179.9, -5.0, -179.9, 5.0),      # wraps, one column each side
+        (-500.0, -300.0, 500.0, 300.0),  # clamps to the whole grid
+        (175.0, 80.0, 400.0, 120.0),     # clamps past +180 / +90
+        (-190.0, -95.0, -185.0, -91.0),  # wholly off-grid: one edge cell
+        (10.0, 0.0, 10.0, 0.0),          # a point: one cell
+        (10.01, 20.01, 10.02, 20.02),    # inside one cell
+        (-100.0, 40.0, -90.0, 30.0),     # inverted: miny > maxy
+        (-90.0, 40.0, -100.0, 30.0),     # inverted and wrapped
+        (None, 0.0, 1.0, 1.0), (0.0, None, 1.0, 1.0),
+        (0.0, 0.0, None, 1.0), (0.0, 0.0, 1.0, None),
+    ]
+    for _ in range(40):
+        x, y = rng.uniform(-200, 200, 2), rng.uniform(-100, 100, 2)
+        boxes.append((float(x[0]), float(y[0]), float(x[1]), float(y[1])))
+    for res in (0, 4, 6):
+        got = _cover(spark, boxes, res)
+        for i, box in enumerate(boxes):
+            want = _cover_np(box, res)
+            assert sorted(got.get(i, [])) == sorted(set(want)) == sorted(want), (res, box)
+
+
 def test_cover_bbox_contains_member_points(spark):
-    df = spark.createDataFrame([(-110.0, 30.0, -100.0, 40.0)], ["minx", "miny", "maxx", "maxy"])
     res = 6
-    cover = df.select(cells.cover_bbox(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res).alias("c")).collect()[0]["c"]
+    cover = _cover(spark, [(-110.0, 30.0, -100.0, 40.0)], res)[0]
     rng = np.random.default_rng(1)
     lon = rng.uniform(-110, -100, 300)
     lat = rng.uniform(30, 40, 300)
@@ -105,16 +157,7 @@ def test_tile_xyz_matches_sql(spark):
 def test_cover_bbox_antimeridian_wraps(spark):
     # minx > maxx means the box crosses the +-180 meridian: the x cover is
     # [x0, n-1] ++ [0, x1], never a silent negative-step sequence.
-    from extractors_geo_spark.operators.cells import cover_bbox, cell_id
-
-    row = (
-        spark.range(1)
-        .select(cover_bbox(F.lit(170.0), F.lit(-10.0), F.lit(-170.0), F.lit(10.0), 4).alias("c"))
-        .collect()[0]
-    )
-    cells = set(row["c"])
+    got = set(_cover(spark, [(170.0, -10.0, -170.0, 10.0)], 4)[0])
     # the wrapped cover contains both an east-edge cell and a west-edge cell
-    east = spark.range(1).select(cell_id(F.lit(175.0), F.lit(0.0), 4).alias("c")).collect()[0]["c"]
-    west = spark.range(1).select(cell_id(F.lit(-175.0), F.lit(0.0), 4).alias("c")).collect()[0]["c"]
-    mid = spark.range(1).select(cell_id(F.lit(0.0), F.lit(0.0), 4).alias("c")).collect()[0]["c"]
-    assert east in cells and west in cells and mid not in cells
+    east, west, mid = cells.cell_np([175.0, -175.0, 0.0], [0.0, 0.0, 0.0], 4)
+    assert east in got and west in got and mid not in got

@@ -107,6 +107,73 @@ def test_non_reference_p_picture_stays_out_of_the_window():
     assert np.array_equal(out[2], r2[:32, :48])
 
 
+def _respliced(rbsp: bytes, at: int, drop: int, write) -> bytes:
+    """`rbsp` with the `drop` bits at bit `at` replaced by what `write`
+    puts into a _BitWriter, then re-terminated (rbsp_trailing_bits)."""
+    bits = "".join(f"{b:08b}" for b in rbsp)
+    body = bits[:bits.rindex("1")]  # drop rbsp_stop_one_bit + alignment
+    w = h264._BitWriter()
+    for c in body[:at]:
+        w.u(int(c), 1)
+    write(w)
+    for c in body[at + drop:]:
+        w.u(int(c), 1)
+    w.rbsp_trailing()
+    return bytes(w.buf)
+
+
+def _poc_type0(avcc: bytes, samples: list) -> tuple[bytes, list]:
+    """The stream re-signalled with pic_order_cnt_type 0 and 8-bit
+    pic_order_cnt_lsb fields (2 per frame). The SPS swaps ue(2) for
+    ue(0) ue(4); each slice header gains u(8) after frame_num (and
+    idr_pic_id). 8 inserted bits keep every later byte alignment."""
+    (sps_len,) = struct.unpack(">H", avcc[6:8])
+    sps = h264._ep_remove(avcc[9:8 + sps_len])  # past the 0x67 NAL byte
+    r = h264._BitReader(sps)
+    r.u(24), r.ue(), r.ue()  # profile/flags/level, sps_id, log2_max_frame_num
+    at = r.pos
+    assert r.ue() == 2  # pic_order_cnt_type
+    nal = bytes([0x67]) + h264._ep_insert(
+        _respliced(sps, at, r.pos - at, lambda w: (w.ue(0), w.ue(4))))
+    avcc0 = avcc[:6] + struct.pack(">H", len(nal)) + nal + avcc[8 + sps_len:]
+    out = []
+    for i, sample in enumerate(samples):
+        packed, pos = b"", 0
+        while pos < len(sample):
+            (ln,) = struct.unpack(">I", sample[pos:pos + 4])
+            nal, pos = sample[pos + 4:pos + 4 + ln], pos + 4 + ln
+            rbsp = h264._ep_remove(nal[1:])
+            r = h264._BitReader(rbsp)
+            r.ue(), r.ue(), r.ue(), r.u(4)  # first_mb, type, pps_id, frame_num
+            if nal[0] & 0x1F == 5:
+                r.ue()  # idr_pic_id
+            nal = nal[:1] + h264._ep_insert(
+                _respliced(rbsp, r.pos, 0, lambda w: w.u(2 * i, 8)))
+            packed += struct.pack(">I", len(nal)) + nal
+        out.append(packed)
+    return avcc0, out
+
+
+def test_poc_type0_stream_decodes_like_its_poc_type2_twin():
+    """Streams from outside the program may signal picture order with
+    pic_order_cnt_type 0: the SPS carries log2_max_pic_order_cnt_lsb and
+    every slice header a pic_order_cnt_lsb, which the decoder reads past
+    (pictures decode in decode order). The same I/P stream rewritten that
+    way decodes to the same frames."""
+    rng = np.random.default_rng(11)
+    base = rng.integers(0, 256, (32, 48), dtype=np.uint8)
+    frames = [np.roll(base, 2 * k, axis=1) for k in range(6)]
+    avcc, samples = h264.encode_frames(frames, qp=8, gop=4)
+    avcc0, samples0 = _poc_type0(avcc, samples)
+    sps, _ = h264._avcc_param_sets(avcc0)
+    assert (sps["poc_type"], sps["log2_poc"]) == (0, 8)
+    want = h264.decode_samples(samples, avcc)
+    got = h264.decode_samples(samples0, avcc0)
+    assert len(got) == len(want) == 6
+    for a, b in zip(want, got):
+        np.testing.assert_array_equal(a, b)
+
+
 def test_cabac_flag_mismatch_is_errors_as_data():
     """A CABAC-flagged PPS (entropy_coding_mode_flag 1) raises ValueError
     instead of garbling: CABAC is outside the decoder's scope, so the

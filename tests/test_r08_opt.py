@@ -211,15 +211,19 @@ def test_rect_layer_gen_stats_detects_rectangles(spark):
 
 
 def test_cover_cells_n_wraps_the_antimeridian(spark):
-    """The driver-side cover count mirrors cover_bbox's wrap (minx > maxx)."""
+    """The driver-side cover count mirrors cells.cover_cells: the wrap
+    (minx > maxx) and the row span of an inverted box (miny > maxy)."""
     from extractors_geo_spark.operators import cells
 
     boxes = [(170.0, 10.0, -170.0, 20.0), (179.9, -5.0, -179.9, 5.0),
-             (-100.0, 30.0, -90.0, 40.0), (10.0, 0.0, 10.0, 0.0)]
-    df = spark.createDataFrame(boxes, "minx double, miny double, maxx double, maxy double")
+             (-100.0, 30.0, -90.0, 40.0), (10.0, 0.0, 10.0, 0.0),
+             (-100.0, 40.0, -90.0, 30.0)]
+    df = spark.createDataFrame([(i, *b) for i, b in enumerate(boxes)],
+                               "id int, minx double, miny double, maxx double, maxy double")
     for res in (4, 6):
-        want = [r[0] for r in df.select(F.size(cells.cover_bbox(
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"), res))).collect()]
+        counts = dict(cells.cover_cells(df, "minx", "miny", "maxx", "maxy", res, ["id"])
+                      .groupBy("id").count().collect())
+        want = [counts[i] for i in range(len(boxes))]
         assert [pip_join._cover_cells_n(*b, res) for b in boxes] == want
 
 
