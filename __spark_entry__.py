@@ -225,15 +225,8 @@ def q_cell_cover(spark, sf_dir):
     return cells.cover_cells(boxes, "minx", "miny", "maxx", "maxy", RES, ["point_id"])
 
 
-def _sql_ixy(expr_lon, expr_lat, res):
-    n = 1 << res
-    ix = f"LEAST(GREATEST(CAST(FLOOR(({expr_lon} + 180.0) / 360.0 * {n}) AS BIGINT), 0), {n - 1})"
-    iy = f"LEAST(GREATEST(CAST(FLOOR((90.0 - ({expr_lat})) / 180.0 * {n}) AS BIGINT), 0), {n - 1})"
-    return ix, iy
-
-
-_ix0, _iy1 = _sql_ixy("lon - 0.8", "lat - 0.8", RES)  # minx -> ix0 ; miny -> iy1 (bottom)
-_ix1, _iy0 = _sql_ixy("lon + 0.8", "lat + 0.8", RES)  # maxx -> ix1 ; maxy -> iy0 (top)
+_ix0, _iy1 = cells.cell_ixy_sql("lon - 0.8", "lat - 0.8", RES)  # minx -> ix0 ; miny -> iy1 (bottom)
+_ix1, _iy0 = cells.cell_ixy_sql("lon + 0.8", "lat + 0.8", RES)  # maxx -> ix1 ; maxy -> iy0 (top)
 SQL_COVER = f"""
 WITH p AS ({_POINTS_SQL})
 SELECT point_id,
@@ -257,7 +250,7 @@ def q_cell_children(spark, sf_dir):
     return _points(spark, sf_dir).filter(keep).select("point_id", cell).select("point_id", kids)
 
 
-_cix, _ciy = _sql_ixy("lon", "lat", RES)
+_cix, _ciy = cells.cell_ixy_sql("lon", "lat", RES)
 SQL_CHILDREN = f"""
 WITH p AS ({_POINTS_SQL}),
 c AS (SELECT point_id, {_cix} AS ix, {_ciy} AS iy FROM p WHERE point_id % 37 = 5)
@@ -1547,10 +1540,8 @@ def q_h264_frames(spark, sf_dir):
     """REAL H.264 path (..h264, CAVLC): avc1 MP4s synthesized on
     executors, frame-sampled through sample_frames. Clips rotate
     through four coding shapes (i mod 4): bit-exact I_PCM; IDR+P GOPs
-    at qp 8; IDR+P GOPs at qp 12 (the i >= 12 halves of both P shapes
-    code MULTI-REFERENCE L0 with per-partition ref_idx_l0, r7);
-    all-IDR CAVLC clips at qp 8. The 8 <= i < 12 P legs code
-    the High-profile 8x8 TRANSFORM, and the i>=16 P legs are 32-px
+    at qp 8; IDR+P GOPs at qp 12 (gop 2 below i = 12, gop 4 from it);
+    all-IDR CAVLC clips at qp 8. The i>=16 P legs are 32-px
     MULTI-SLICE pictures (r7). Since r7 every clip is
     4:2:0 COLOR: chroma planes code real residuals (2x2 Hadamard DC +
     AC, intra chroma prediction, eighth-pel chroma MC); I_PCM carries
@@ -1590,19 +1581,11 @@ def q_h264_frames(spark, sf_dir):
                     data = _mp4.write_h264_mp4(frames, fps=1, qp=8,
                                                chromas=chromas)
                 else:
-                    # i >= 12 clips code multi-reference P GOPs (r7):
-                    # gop 4 keeps 2 refs live, every inter partition
-                    # carries ref_idx_l0
-                    # the 8<=i<12 legs code the High-profile 8x8
-                    # transform (r7): profile 100, per-MB adaptive
-                    # transform_size_8x8_flag
                     data = _mp4.write_h264_mp4(
                         frames, fps=1, qp=8 if kind == 1 else 12,
                         gop=4 if i >= 12 else 2,
-                        nrefs=2 if i >= 12 else 1,
                         chromas=chromas,
-                        slice_rows=1 if mslice else None,
-                        t8x8=kind in (1, 2) and 8 <= i < 12)
+                        slice_rows=1 if mslice else None)
                 rows.append({"video_id": f"h{i:04d}", "bytes": data})
             yield pd.DataFrame(rows, columns=["video_id", "bytes"])
 

@@ -17,39 +17,15 @@ I and P pictures (CABAC streams and B slices raise ValueError):
 3. **P slices** (r5-r7): IDR+P GOPs — P_SKIP with skip-run coding,
    motion-compensated quarter-pel 6-tap interpolation (8.4.2.2),
    median MV prediction + MVD coding, partitions 16x16/16x8/8x16/P_8x8
-   with sub-8x8 shapes (8x4/4x8/4x4), multi-reference L0 with
-   per-partition ref_idx_l0 (sliding-window DPB, nrefs<=16), inter CBP
-   mapping, dead-zone quantization, intra-in-P fallback, inter bS
-   deblocking. Static scenes collapse to ~10-byte all-skip frames.
+   with sub-8x8 shapes (8x4/4x8/4x4), one L0 reference (the previous
+   reference picture), inter CBP mapping, dead-zone quantization,
+   intra-in-P fallback, inter bS deblocking. Static scenes collapse to
+   ~10-byte all-skip frames.
 4. **4:2:0 chroma** (r7): real chroma residuals (2x2 DC Hadamard + AC),
    chroma intra prediction incl. plane mode, cbp_chroma, chroma
    deblocking. Gray clips stay bit-identical
    (flat-128 default source, cbpc=0 everywhere).
-
-5. **Weighted prediction** (r7): EXPLICIT for P slices —
-   pred_weight_table in the slice header, per-reference luma/chroma
-   gain+offset applied after interpolation (8.4.2.3.2) incl. P_SKIP,
-   least-squares weight estimation so fades collapse to skip runs.
-
-6. **High-profile 8x8 transform** (r7): profile_idc 100 SPS
-   (4:2:0, 8-bit, flat scaling), PPS transform_8x8_mode_flag, per-MB
-   transform_size_8x8_flag on 16x16/16x8/8x16 (and all-8x8-sub P_8x8)
-   inter macroblocks with a coefficient-count selection gate, the 8x8
-   integer transform as the EXACT basis-matrix product (the truncating
-   fast butterflies are not reproduced — in-repo convention, shared
-   both sides) with quant/dequant tables DERIVED numerically from the
-   basis norms (they reproduce the ISO LevelScale8x8 row
-   [20,18,32,19,25,24]), and CAVLC 8x8 residuals as the spec's four
-   interleaved 4x4 runs over the 8x8 zigzag. I_NxN macroblocks race
-   an I_8x8 candidate (8.3.2.2: all nine prediction modes over
-   low-pass-filtered reference samples, 8.3.2.2.1) against I_4x4 on
-   the same coefficient-count gate; pred modes serialize as prev/rem
-   pairs per 8x8. In-loop deblocking composes with the 8x8 transform
-   (late r7, 8.7.2): a per-picture transform-size map skips the
-   internal 4x4 edges (offsets 4/12) of 8x8-transformed MBs and tests
-   bS-2 "coded" status per 8x8 block. The 8x8 profile is COMPLETE.
-
-7. **Multi-slice pictures** (r7): slices covering whole MB rows
+5. **Multi-slice pictures** (r7): slices covering whole MB rows
    (first_mb_in_slice = row * PicWidthInMbs), the hardware-encoder /
    error-resilience shape — one NAL per slice in the sample, neighbour
    availability (intra prediction, nC contexts, MV prediction, skip
@@ -57,18 +33,24 @@ I and P pictures (CABAC streams and B slices raise ValueError):
    (encode_*(slice_rows=N)). Deblocking filters across slice
    boundaries (disable_deblocking_filter_idc 0 semantics).
 
+Every luma residual goes through the 4x4 transform. The encoder writes
+Baseline (profile_idc 66) parameter sets.
+
 Decode scope and honesty notes:
-- Remaining out-of-scope shapes raise a clear ValueError: high-profile
-  tools beyond the 8x8 transform + I_8x8 intra above (scaling matrices,
-  >8-bit, 4:2:2/4:4:4), FMO, slices at non-row-aligned first_mb
-  offsets, SP/SI slices, B slices (bi-prediction, direct modes and
+- Remaining out-of-scope shapes raise a clear ValueError: the 8x8
+  transform (PPS transform_8x8_mode_flag 1) and the other High-profile
+  tools (scaling matrices, >8-bit, 4:2:2/4:4:4), explicit weighted
+  prediction (PPS weighted_pred_flag 1), more than one active L0
+  reference (num_ref_idx_l0_active > 1, from the PPS default or the
+  slice override), FMO, slices at non-row-aligned first_mb offsets,
+  SP/SI slices, B slices (bi-prediction, direct modes and
   weighted_bipred_idc with them), ref-pic-list modification, MMCO
   adaptive marking, CABAC entropy coding (entropy_coding_mode_flag 1).
   `operators/multimodal.sample_frames` maps that to its documented
-  well-formed-unsupported-codec stub.
-- decode_samples decodes a stream in decode order through one
-  sliding-window reference list; only reference pictures
-  (nal_ref_idc != 0) enter it.
+  well-formed-unsupported-codec stub. A High-profile SPS of the 8-bit
+  4:2:0 flat-scaling shape still parses.
+- decode_samples decodes a stream in decode order and keeps one
+  reference: the last picture with nal_ref_idc != 0 (an IDR resets it).
 - The in-loop deblocking filter (8.7) IS applied for streams that
   request it (luma, all-intra bS 4/3, strong+normal filters, alpha/
   beta/tc0 threshold tables, per-MB QP averaging, I_PCM-as-QP-0);
@@ -397,25 +379,17 @@ def _read_vlc(r: "_BitReader", dec: dict):
 
 
 # ------------------------------------------------------------------ encoder
-def _sps(w: int, h: int, profile: int = 66, nrefs: int = 1) -> bytes:
+def _sps(w: int, h: int) -> bytes:
     mbw = -(-w // 16)
     mbh = -(-h // 16)
     bw = _BitWriter()
-    bw.u(profile, 8)   # profile_idc: 66 Baseline / 77 Main / 100 High (r7)
+    bw.u(66, 8)   # profile_idc: Baseline
     bw.u(0, 8)    # constraint flags + reserved
     bw.u(20, 8)   # level_idc 2.0
     bw.ue(0)      # sps_id
-    if profile == 100:  # High-profile SPS extras (7.3.2.1.1, r7)
-        bw.ue(1)  # chroma_format_idc: 4:2:0
-        bw.ue(0)  # bit_depth_luma_minus8
-        bw.ue(0)  # bit_depth_chroma_minus8
-        bw.u(0, 1)  # qpprime_y_zero_transform_bypass
-        bw.u(0, 1)  # seq_scaling_matrix_present (flat 16 scaling)
     bw.ue(0)      # log2_max_frame_num_minus4 -> frame_num is u(4)
     bw.ue(2)      # pic_order_cnt_type 2 (order = decode order)
-    # max_num_ref_frames: nrefs-deep for multi-reference P streams
-    # (r7), 0 for the 1-ref/I-only default
-    bw.ue(nrefs if nrefs > 1 else 0)
+    bw.ue(0)      # max_num_ref_frames (the decoder keeps one regardless)
     bw.u(0, 1)    # gaps_in_frame_num_value_allowed
     bw.ue(mbw - 1)
     bw.ue(mbh - 1)
@@ -436,8 +410,7 @@ def _sps(w: int, h: int, profile: int = 66, nrefs: int = 1) -> bytes:
     return bytes(bw.buf)
 
 
-def _pps(deblock_ctrl: bool = False,
-         wp: bool = False, t8x8: bool = False) -> bytes:
+def _pps(deblock_ctrl: bool = False) -> bytes:
     bw = _BitWriter()
     bw.ue(0)      # pps_id
     bw.ue(0)      # sps_id
@@ -446,7 +419,7 @@ def _pps(deblock_ctrl: bool = False,
     bw.ue(0)      # num_slice_groups_minus1
     bw.ue(0)      # num_ref_idx_l0_active_minus1
     bw.ue(0)      # num_ref_idx_l1_active_minus1
-    bw.u(1 if wp else 0, 1)  # weighted_pred (P slices, explicit, r7)
+    bw.u(0, 1)    # weighted_pred
     bw.u(0, 2)    # weighted_bipred_idc (B slices are out of scope)
     bw.se(0)      # pic_init_qp_minus26
     bw.se(0)      # pic_init_qs_minus26
@@ -454,10 +427,6 @@ def _pps(deblock_ctrl: bool = False,
     bw.u(1 if deblock_ctrl else 0, 1)  # deblocking_filter_control_present
     bw.u(0, 1)    # constrained_intra_pred
     bw.u(0, 1)    # redundant_pic_cnt_present
-    if t8x8:  # PPS extension (7.3.2.2 tail, High profile, r7)
-        bw.u(1, 1)   # transform_8x8_mode_flag
-        bw.u(0, 1)   # pic_scaling_matrix_present
-        bw.se(0)     # second_chroma_qp_index_offset
     bw.rbsp_trailing()
     return bytes(bw.buf)
 
@@ -471,122 +440,6 @@ _CF = np.array([[1, 1, 1, 1], [2, 1, -1, -2], [1, -1, -1, 1], [1, -2, 2, -1]],
 # Raster 4x4 of V / MF by coefficient class
 _V4 = [np.array([_V[m][c] for c in _POS_CLASS], np.int32).reshape(4, 4)
        for m in range(6)]
-
-
-# ----------------------------------------- 8x8 transform (High profile, r7)
-# The spec 8x8 basis (8.5.13's butterflies compute exactly these rows in
-# full precision; the in-repo convention uses the EXACT integer matrix
-# product instead of the truncating fast butterflies — shared by encoder
-# and decoder, and bit-exact ISO cross-decode is not claimed anyway, see
-# the module honesty notes).
-_C8 = np.array([
-    [8, 8, 8, 8, 8, 8, 8, 8],
-    [12, 10, 6, 3, -3, -6, -10, -12],
-    [8, 4, -4, -8, -8, -4, 4, 8],
-    [10, -3, -12, -6, 6, 12, 3, -10],
-    [8, -8, -8, 8, 8, -8, -8, 8],
-    [6, -12, 3, 10, -10, -3, 12, -6],
-    [4, -8, 8, -4, -4, 8, -8, 4],
-    [3, -6, 10, -12, 12, -10, 6, -3]], np.int64)
-# basis norms are {512, 578, 320}; the quant/dequant tables divide by
-# sqrt(n_i * n_j) so quantization is uniform in the orthonormal domain —
-# derived NUMERICALLY from the matrix rather than transcribed (the
-# derivation reproduces the ISO LevelScale8x8 row [20,18,32,19,25,24]
-# where rounding agrees; closure is asserted in tests/test_h264.py)
-_N8 = np.sqrt(np.outer(np.diag(_C8 @ _C8.T), np.diag(_C8 @ _C8.T)))
-_MF8 = [np.round((1 << 22) / (0.625 * 2 ** (m / 6) * _N8)).astype(np.int64)
-        for m in range(6)]
-_V8 = [np.round(0.625 * 2 ** (m / 6) * (1 << 14) / _N8).astype(np.int64)
-       for m in range(6)]
-
-
-def _zigzag8() -> list:
-    order, i, j = [], 0, 0
-    for _ in range(64):
-        order.append(i * 8 + j)
-        if (i + j) % 2 == 0:
-            if j == 7:
-                i += 1
-            elif i == 0:
-                j += 1
-            else:
-                i, j = i - 1, j + 1
-        else:
-            if i == 7:
-                j += 1
-            elif j == 0:
-                i += 1
-            else:
-                i, j = i + 1, j - 1
-    return order
-
-
-_ZZ8 = np.array(_zigzag8())
-
-
-def _fwd8(resid: np.ndarray) -> np.ndarray:
-    return _C8 @ resid.astype(np.int64) @ _C8.T
-
-
-def _quant8(w: np.ndarray, qp: int, intra: bool = False) -> np.ndarray:
-    qbits = 22 + qp // 6
-    f = (1 << qbits) // (3 if intra else 6)  # spec dead-zone rounding
-    return (np.sign(w) * ((np.abs(w) * _MF8[qp % 6] + f) >> qbits)
-            ).astype(np.int64)
-
-
-def _dequant8(q: np.ndarray, qp: int) -> np.ndarray:
-    return (q.astype(np.int64) * _V8[qp % 6]) << (qp // 6)
-
-
-def _inv8(wd: np.ndarray) -> np.ndarray:
-    return (_C8.T @ wd @ _C8 + (1 << 13)) >> 14
-
-
-def _scan8_sub(q8: np.ndarray) -> list:
-    """8x8 quantized block -> four 16-coeff interleaved runs (8.5.6
-    shape: CAVLC codes an 8x8 block as 4 interleaved 4x4 residuals over
-    the 8x8 zigzag scan: run k takes scan positions 4*n + k)."""
-    flat = q8.reshape(-1)[_ZZ8]
-    return [flat[k::4] for k in range(4)]
-
-
-def _unscan8_sub(runs: list) -> np.ndarray:
-    flat = np.zeros(64, np.int64)
-    for k, run in enumerate(runs):
-        flat[k::4] = run
-    out = np.zeros(64, np.int64)
-    out[_ZZ8] = flat
-    return out.reshape(8, 8)
-
-
-# Active PPS transform_8x8_mode_flag (multi-site, same single-threaded
-# module-global convention as _SLICE_TOP: every slice entry sets
-# it, encoder and decoder alike).
-_T8 = False
-
-
-def _set_t8(v: bool) -> None:
-    global _T8
-    _T8 = bool(v)
-
-
-# Per-picture transform_size_8x8_flag map (mbh x mbw), for the 8.7
-# deblocking edge derivation: inside an 8x8-transformed MB the internal
-# 4x4 edges (offsets 4 and 12) are NOT filtered, and "coded" status for
-# bS 2 is per 8x8 block. Same module-global convention as _T8; None when
-# the picture doesn't filter or the PPS has no 8x8 mode.
-_T8MAP = None
-
-
-def _set_t8map(m) -> None:
-    global _T8MAP
-    _T8MAP = m
-
-
-def _mark_t8(mx: int, my: int) -> None:
-    if _T8MAP is not None:
-        _T8MAP[my, mx] = 1
 _MF4 = [np.array([_MF[m][c] for c in _POS_CLASS], np.int32).reshape(4, 4)
         for m in range(6)]
 
@@ -774,12 +627,10 @@ def _pick_chroma_mode(crec, csrc_mb, cmx, cmy, al, aa):
 
 
 def _interp_chroma(cref: np.ndarray, px: int, py: int, mvx: int, mvy: int,
-                   w: int = 8, h: int = 8, wp=None) -> np.ndarray:
+                   w: int = 8, h: int = 8) -> np.ndarray:
     """8.4.2.2.2: w x h chroma MC block on the half-res plane. The luma
     quarter-pel MV is an eighth-pel chroma MV; bilinear weights with
-    (+32)>>6 rounding, edge-clamped. `wp` = (w, o, logWD) applies the
-    explicit weighted-prediction transform AFTER interpolation
-    (8.4.2.3.2 — the two do not commute on fractional positions)."""
+    (+32)>>6 rounding, edge-clamped."""
     H, W = cref.shape
     ix, fx = mvx >> 3, mvx & 7
     iy, fy = mvy >> 3, mvy & 7
@@ -791,9 +642,8 @@ def _interp_chroma(cref: np.ndarray, px: int, py: int, mvx: int, mvy: int,
     B = win[:h, 1:]
     C = win[1:, :w]
     D = win[1:, 1:]
-    out = ((8 - fx) * (8 - fy) * A + fx * (8 - fy) * B
-           + (8 - fx) * fy * C + fx * fy * D + 32) >> 6
-    return _wp_apply(out, wp)
+    return ((8 - fx) * (8 - fy) * A + fx * (8 - fy) * B
+            + (8 - fx) * fy * C + fx * fy * D + 32) >> 6
 
 
 def _encode_chroma_mb(csrc, cpred, qp_y, intra, max_coeffs=15):
@@ -899,147 +749,6 @@ def _decode_chroma_residual(r, cbpc, nnz_c, mx, my, qp_y):
     return out
 
 
-def _ref_list(ref):
-    """Normalize a reference argument: a single FULL plane (or chroma
-    pair) or an L0 list ordered most-recent-first (RefPicList0 for the
-    in-repo sliding-window streams) -> list."""
-    return list(ref) if isinstance(ref, (list, tuple)) else [ref]
-
-
-# ------------------------------------------ weighted prediction (8.4.2.3.2)
-def _wp_apply(pred, wp):
-    """Explicit single-list weighted sample prediction on an
-    interpolated block: Clip1(((pred * w + 2^(logWD-1)) >> logWD) + o)
-    for logWD >= 1, Clip1(pred * w + o) otherwise. numpy's >> is an
-    arithmetic shift, matching the spec's on negative products."""
-    if wp is None:
-        return pred
-    w_, o_, d_ = wp
-    if d_ >= 1:
-        out = ((pred * w_ + (1 << (d_ - 1))) >> d_) + o_
-    else:
-        out = pred * w_ + o_
-    return np.clip(out, 0, 255)
-
-
-def _resolve_wp(tab, nrefs):
-    """pred_weight_table dict -> (wl, wc): per-L0-ref luma (w, o, logWD)
-    and per-component chroma weight tuples; None entries mean the
-    flag-0 default = exact identity, so weighting is skipped there."""
-    if tab is None:
-        return None
-    ld, cd = tab["ld"], tab["cd"]
-    wl = [None if e is None else (e[0], e[1], ld) for e in tab["luma"]]
-    wc = [None if e is None else tuple((cw, co, cd) for cw, co in e)
-          for e in tab["chroma"]]
-    wl += [None] * (nrefs - len(wl))
-    wc += [None] * (nrefs - len(wc))
-    return wl, wc
-
-
-def _wpl(mvs, ridx):
-    """Luma weight tuple for reference `ridx` (None = unweighted)."""
-    return mvs.wp[0][ridx] if mvs.wp is not None else None
-
-
-def _wpc(mvs, ridx, ci):
-    """Chroma weight tuple for reference `ridx`, component `ci`."""
-    if mvs.wp is None or mvs.wp[1][ridx] is None:
-        return None
-    return mvs.wp[1][ridx][ci]
-
-
-def _write_pred_weight_table(bw, tab, nrefs):
-    """pred_weight_table (7.3.3.2) for a P slice with nrefs active L0
-    references; None entries write flag 0 (default weights)."""
-    bw.ue(tab["ld"])
-    bw.ue(tab["cd"])
-    for ri in range(nrefs):
-        lu = tab["luma"][ri] if ri < len(tab["luma"]) else None
-        bw.u(1 if lu is not None else 0, 1)
-        if lu is not None:
-            bw.se(lu[0])
-            bw.se(lu[1])
-        chp = tab["chroma"][ri] if ri < len(tab["chroma"]) else None
-        bw.u(1 if chp is not None else 0, 1)
-        if chp is not None:
-            for cw, co in chp:
-                bw.se(cw)
-                bw.se(co)
-
-
-def _parse_pred_weight_table(r, nrefs):
-    ld = r.ue()
-    cd = r.ue()
-    if ld > 7 or cd > 7:
-        raise ValueError("bad pred_weight_table denom")
-    luma, chroma = [], []
-    for _ in range(nrefs):
-        if r.u(1):
-            w_, o_ = r.se(), r.se()
-            if not (-128 <= w_ <= 127 and -128 <= o_ <= 127):
-                raise ValueError("luma weight/offset out of range")
-            luma.append((w_, o_))
-        else:
-            luma.append(None)
-        if r.u(1):
-            pair = []
-            for _ci in range(2):
-                cw, co = r.se(), r.se()
-                if not (-128 <= cw <= 127 and -128 <= co <= 127):
-                    raise ValueError("chroma weight/offset out of range")
-                pair.append((cw, co))
-            chroma.append(tuple(pair))
-        else:
-            chroma.append(None)
-    return {"ld": ld, "cd": cd, "luma": luma, "chroma": chroma}
-
-
-def _estimate_wp(src, refs, chroma=None, crefs=None, d=6):
-    """Per-reference least-squares gain/offset (fade detection): the
-    slice-level (w, o) minimizing |src - (w*ref/2^d + o)|^2, kept only
-    when it beats the unweighted zero-motion error by >= 2%. Returns a
-    pred_weight_table dict (entries None where identity wins)."""
-    a = np.asarray(src, np.float64)
-    out_l, out_c = [], []
-    for ri, rp in enumerate(refs):
-        rwin = rp[:a.shape[0], :a.shape[1]].astype(np.float64)
-        var = float(rwin.var())
-        gain = (float(((a - a.mean()) * (rwin - rwin.mean())).mean()) / var
-                if var > 1.0 else 1.0)
-        w_ = max(-128, min(127, int(round(gain * (1 << d)))))
-        o_ = max(-128, min(127, int(round(float(a.mean())
-                                          - w_ * float(rwin.mean())
-                                          / (1 << d)))))
-        ent = None
-        if (w_, o_) != (1 << d, 0):
-            ri32 = rp[:a.shape[0], :a.shape[1]].astype(np.int32)
-            base = float(np.abs(a - ri32).mean())
-            wmae = float(np.abs(a - _wp_apply(ri32, (w_, o_, d))).mean())
-            if wmae < 0.98 * base:
-                ent = (w_, o_)
-        out_l.append(ent)
-        cent = None
-        if chroma is not None and crefs is not None and ri < len(crefs):
-            pair = []
-            for ci in range(2):
-                cs = np.asarray(chroma[ci], np.float64)
-                cr = crefs[ri][ci][:cs.shape[0], :cs.shape[1]]
-                crf = cr.astype(np.float64)
-                cvar = float(crf.var())
-                cgain = (float(((cs - cs.mean()) * (crf - crf.mean())).mean())
-                         / cvar if cvar > 1.0 else 1.0)
-                cw = max(-128, min(127, int(round(cgain * (1 << d)))))
-                co = max(-128, min(127, int(round(float(cs.mean())
-                                                  - cw * float(crf.mean())
-                                                  / (1 << d)))))
-                pair.append((cw, co))
-            if any(p != (1 << d, 0) for p in pair):
-                cent = tuple(pair)
-        out_c.append(cent)
-    return {"ld": d, "cd": d, "luma": out_l, "chroma": out_c}
-
-
 # --------------------------------------- multi-slice pictures (r7, 7.3.3/7.4.3)
 # Active slice's first macroblock ROW. Neighbour availability (intra
 # prediction, nC contexts, MV prediction) treats
@@ -1068,13 +777,10 @@ class _ChromaState:
     def __init__(self, mbw, mbh, ref=None):
         self.planes = np.full((2, mbh * 8, mbw * 8), 128, np.uint8)
         self.nnz = np.zeros((2, mbh * 2, mbw * 2), np.int32)
-        # `ref` may be one (2, h/2, w/2) plane pair or an L0 LIST of
-        # them (multi-reference P slices, r7); refl is the list view
-        self.refl = _ref_list(ref) if ref is not None else None
+        self.ref = ref  # the (2, h/2, w/2) reference plane pair
 
-    def mc(self, ci, mx, my, mv, ridx=0, wp=None):
-        return _interp_chroma(self.refl[ridx][ci], mx * 8, my * 8, mv[0],
-                              mv[1], wp=wp)
+    def mc(self, ci, mx, my, mv):
+        return _interp_chroma(self.ref[ci], mx * 8, my * 8, mv[0], mv[1])
 
     def store(self, ci, mx, my, block):
         self.planes[ci, my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = \
@@ -1473,208 +1179,6 @@ def _mb_avail(blk, px, py, plane_w):
     return al, aa, aar, aal
 
 
-def _mb_avail8(b8, px, py, plane_w):
-    """(left, above, above-right, above-left) availability for the 8x8
-    luma block `b8` (Z order) whose top-left sample is (px, py) — the
-    8x8 analog of _mb_avail (8.3.2.2 neighbour derivation). b8 2's
-    above-right lies in this MB's already-decoded top-right 8x8; b8 3's
-    is the not-yet-decoded MB to the right."""
-    top = _SLICE_TOP * 16
-    al = px > 0
-    aa = py > top
-    aal = al and aa
-    if b8 == 2:
-        aar = True
-    elif b8 == 3:
-        aar = False
-    else:  # top row of the MB: needs the above MB row, within the plane
-        aar = aa and px + 16 <= plane_w
-    return al, aa, aar, aal
-
-
-def _pred8(plane, px, py, mode, al, aa, aar, aal):
-    """8.3.2.2: one 8x8 luma intra prediction (int64 8x8). Reference
-    samples are low-pass filtered FIRST (8.3.2.2.1, from the original
-    unfiltered neighbours), then the nine mode formulas (8.3.2.2.2-.10)
-    read only the filtered arrays. Unavailable above-right samples are
-    substituted with p[7,-1] before filtering, like the 4x4 path."""
-    if mode in (0, 3, 7) and not aa:
-        raise ValueError(f"intra 8x8 mode {mode} without above neighbour")
-    if mode in (1, 8) and not al:
-        raise ValueError(f"intra 8x8 mode {mode} without left neighbour")
-    if mode in (4, 5, 6) and not (aa and al):
-        raise ValueError(f"intra 8x8 mode {mode} without both neighbours")
-    L = plane[py:py + 8, px - 1].astype(np.int64) if al else None
-    X = int(plane[py - 1, px - 1]) if aal else 0
-    Af = Lf = None
-    Xf = 0
-    if aa:
-        A = plane[py - 1, px:px + 8].astype(np.int64)
-        if aar:
-            AR = plane[py - 1, px + 8:px + 16].astype(np.int64)
-        else:
-            AR = np.full(8, int(A[7]), np.int64)
-        A16 = np.concatenate([A, AR])
-        Af = np.empty(16, np.int64)
-        first = X if aal else int(A16[0])
-        Af[0] = (first + 2 * A16[0] + A16[1] + 2) >> 2
-        Af[1:15] = (A16[0:14] + 2 * A16[1:15] + A16[2:16] + 2) >> 2
-        Af[15] = (A16[14] + 3 * A16[15] + 2) >> 2
-    if al:
-        Lf = np.empty(8, np.int64)
-        first = X if aal else int(L[0])
-        Lf[0] = (first + 2 * L[0] + L[1] + 2) >> 2
-        Lf[1:7] = (L[0:6] + 2 * L[1:7] + L[2:8] + 2) >> 2
-        Lf[7] = (L[6] + 3 * L[7] + 2) >> 2
-    if aal:  # in this geometry aal implies aa and al (kept spec-shaped)
-        if aa and al:
-            Xf = (int(A16[0]) + 2 * X + int(L[0]) + 2) >> 2
-        elif aa:
-            Xf = (3 * X + int(A16[0]) + 2) >> 2
-        elif al:
-            Xf = (3 * X + int(L[0]) + 2) >> 2
-        else:
-            Xf = X
-    p = np.empty((8, 8), np.int64)
-    if mode == 0:  # vertical
-        p[:] = Af[:8]
-    elif mode == 1:  # horizontal
-        p[:] = Lf[:, None]
-    elif mode == 2:  # DC (8.3.2.2.4)
-        if aa and al:
-            p[:] = (int(Af[:8].sum()) + int(Lf.sum()) + 8) >> 4
-        elif aa:
-            p[:] = (int(Af[:8].sum()) + 4) >> 3
-        elif al:
-            p[:] = (int(Lf.sum()) + 4) >> 3
-        else:
-            p[:] = 128
-    elif mode == 3:  # diagonal down-left (8.3.2.2.5)
-        for y in range(8):
-            for x in range(8):
-                if x == 7 and y == 7:
-                    p[y, x] = (Af[14] + 3 * Af[15] + 2) >> 2
-                else:
-                    p[y, x] = (Af[x + y] + 2 * Af[x + y + 1]
-                               + Af[x + y + 2] + 2) >> 2
-    elif mode == 4:  # diagonal down-right (8.3.2.2.6)
-        for y in range(8):
-            for x in range(8):
-                if x > y:
-                    p[y, x] = (Af[x - y - 2] + 2 * Af[x - y - 1]
-                               + Af[x - y] + 2) >> 2
-                elif x < y:
-                    p[y, x] = (Lf[y - x - 2] + 2 * Lf[y - x - 1]
-                               + Lf[y - x] + 2) >> 2
-                else:
-                    p[y, x] = (Af[0] + 2 * Xf + Lf[0] + 2) >> 2
-    elif mode == 5:  # vertical-right (8.3.2.2.7); Lx carries the
-        # filtered corner at index 0 so z < -1 indexes stay in range
-        Lx = np.concatenate([[Xf], Lf])
-        for y in range(8):
-            for x in range(8):
-                z = 2 * x - y
-                if z >= 0 and z % 2 == 0:
-                    p[y, x] = (Af[x - (y >> 1) - 1] + Af[x - (y >> 1)]
-                               + 1) >> 1
-                elif z >= 0:
-                    p[y, x] = (Af[x - (y >> 1) - 2]
-                               + 2 * Af[x - (y >> 1) - 1]
-                               + Af[x - (y >> 1)] + 2) >> 2
-                elif z == -1:
-                    p[y, x] = (Lf[0] + 2 * Xf + Af[0] + 2) >> 2
-                else:
-                    # z < -1: left-column taps at rows y-2x-1, y-2x-2,
-                    # y-2x-3 (row -1 = the filtered corner, Lx[0])
-                    k = y - 2 * x
-                    p[y, x] = (Lx[k] + 2 * Lx[k - 1] + Lx[k - 2] + 2) >> 2
-    elif mode == 6:  # horizontal-down (8.3.2.2.8, mirror of mode 5)
-        T = np.concatenate([[Xf], Af])
-        for y in range(8):
-            for x in range(8):
-                z = 2 * y - x
-                if z >= 0 and z % 2 == 0:
-                    p[y, x] = (Lf[y - (x >> 1) - 1] + Lf[y - (x >> 1)]
-                               + 1) >> 1
-                elif z >= 0:
-                    p[y, x] = (Lf[y - (x >> 1) - 2]
-                               + 2 * Lf[y - (x >> 1) - 1]
-                               + Lf[y - (x >> 1)] + 2) >> 2
-                elif z == -1:
-                    p[y, x] = (Af[0] + 2 * Xf + Lf[0] + 2) >> 2
-                else:
-                    # z < -1: above-row taps at cols x-2y-1, x-2y-2,
-                    # x-2y-3 (col -1 = the filtered corner, T[0])
-                    k = x - 2 * y
-                    p[y, x] = (T[k] + 2 * T[k - 1] + T[k - 2] + 2) >> 2
-    elif mode == 7:  # vertical-left (8.3.2.2.9)
-        for y in range(8):
-            for x in range(8):
-                if y % 2 == 0:
-                    p[y, x] = (Af[x + (y >> 1)] + Af[x + (y >> 1) + 1]
-                               + 1) >> 1
-                else:
-                    p[y, x] = (Af[x + (y >> 1)] + 2 * Af[x + (y >> 1) + 1]
-                               + Af[x + (y >> 1) + 2] + 2) >> 2
-    elif mode == 8:  # horizontal-up (8.3.2.2.10)
-        for y in range(8):
-            for x in range(8):
-                z = x + 2 * y
-                if z < 13 and z % 2 == 0:
-                    p[y, x] = (Lf[y + (x >> 1)] + Lf[y + (x >> 1) + 1]
-                               + 1) >> 1
-                elif z < 13:
-                    p[y, x] = (Lf[y + (x >> 1)] + 2 * Lf[y + (x >> 1) + 1]
-                               + Lf[y + (x >> 1) + 2] + 2) >> 2
-                elif z == 13:
-                    p[y, x] = (Lf[6] + 3 * Lf[7] + 2) >> 2
-                else:
-                    p[y, x] = Lf[7]
-    else:
-        raise ValueError(f"bad intra 8x8 mode {mode}")
-    return p
-
-
-def _eval_mb_i8(plane, smb, mx, my, qp, plane_w):
-    """Evaluate the I_8x8 candidate for an I_NxN macroblock (8.3.2.2):
-    per-8x8 best-SSD mode over ALL available prediction modes (DC-first
-    iteration with strict < keeps flat sources on DC — the gray-fixture
-    bit-identity convention), intra-dead-zone 8x8 quantization,
-    progressive in-MB reconstruction. Writes recon into `plane` (the
-    caller restores the MB region if the 4x4 candidate wins) and
-    returns (total_coeffs, [(mode, q8)] in 8x8 Z order, cbp8)."""
-    blocks8, cbp8, n8 = [], 0, 0
-    for b8 in range(4):
-        ox8, oy8 = (b8 & 1) * 8, (b8 >> 1) * 8
-        px, py = mx * 16 + ox8, my * 16 + oy8
-        al, aa, aar, aal = _mb_avail8(b8, px, py, plane_w)
-        sblk = smb[oy8:oy8 + 8, ox8:ox8 + 8].astype(np.int64)
-        best = None
-        for mode in (2, 0, 1, 3, 4, 5, 6, 7, 8):
-            if mode in (0, 3, 7) and not aa:
-                continue
-            if mode in (1, 8) and not al:
-                continue
-            if mode in (4, 5, 6) and not (aa and al):
-                continue
-            pr = _pred8(plane, px, py, mode, al, aa, aar, aal)
-            ssd = int(((sblk - pr) ** 2).sum())
-            if best is None or ssd < best[0]:
-                best = (ssd, mode, pr)
-        _, mode, pred = best
-        q8 = _quant8(_fwd8(sblk - pred), qp, intra=True)
-        n8 += int(np.count_nonzero(q8))
-        if np.any(q8):
-            cbp8 |= 1 << b8
-            rec = pred + _inv8(_dequant8(q8, qp))
-        else:
-            rec = pred
-        np.clip(rec, 0, 255, rec)
-        plane[py:py + 8, px:px + 8] = rec.astype(np.uint8)
-        blocks8.append((mode, q8))
-    return n8, blocks8, cbp8
-
-
 def _pred_mode_for(modes, bx, by):
     """Predicted intra-4x4 mode (8.3.1.1): min(left, above); any
     unavailable or non-I4x4 neighbour counts as DC (2)."""
@@ -1725,8 +1229,7 @@ def _slice_ranges(mbh: int, slice_rows: int | None) -> list:
 def encode_idr_cavlc(gray: np.ndarray, qp: int = 10, max_coeffs: int = 16,
                      deblock: bool = False, full_recon: bool = False,
                      chroma: np.ndarray | None = None,
-                     slice_rows: int | None = None,
-                     t8x8: bool = False):
+                     slice_rows: int | None = None):
     """One frame -> (IDR slice RBSP, reconstructed plane).
 
     CAVLC intra encoding: near-flat macroblocks go I_16x16 (DC pred,
@@ -1755,9 +1258,6 @@ def encode_idr_cavlc(gray: np.ndarray, qp: int = 10, max_coeffs: int = 16,
     nnz_c = np.zeros((2, mbh * 2, mbw * 2), np.int32)
     ch = (csrc, crec, nnz_c)
 
-    _set_t8(t8x8)  # High-profile PPS: I_NxN MBs carry the 8x8 flag (r7)
-    t8m = np.zeros((mbh, mbw), np.int32) if t8x8 else None
-    _set_t8map(t8m)  # per-MB flags feed the 8.7 edge derivation
     rbsps = []
     for r0, r1 in _slice_ranges(mbh, slice_rows):
         _set_slice_top(r0)
@@ -1789,12 +1289,9 @@ def encode_idr_cavlc(gray: np.ndarray, qp: int = 10, max_coeffs: int = 16,
         bw.rbsp_trailing()
         rbsps.append(bytes(bw.buf))
     _set_slice_top(0)
-    _set_t8(False)
-    _set_t8map(None)
     out = plane
     if deblock and qp >= 16:
-        out = _deblock_luma(plane, np.full((mbh, mbw), qp, np.int32),
-                            t8=t8m)
+        out = _deblock_luma(plane, np.full((mbh, mbw), qp, np.int32))
         crec = _deblock_chroma(crec, np.full((mbh, mbw), qp, np.int32))
     y = out if full_recon else out[:h, :w].copy()
     rb = rbsps[0] if slice_rows is None else rbsps
@@ -1876,16 +1373,8 @@ def _i16_dc_dequant(dc_lv, qp):
 
 def _encode_mb_i4(bw, smb, plane, mx, my, qp, nnz, modes, max_coeffs,
                   plane_w, ch, mb_type_code=0):
-    """I_NxN macroblock: I_4x4 best-of-V/H/DC per block; under a High-
-    profile PPS (r7) an I_8x8 candidate (8.3.2.2, all nine modes)
-    competes on coefficient count — the same CAVLC bit-cost proxy the
-    inter transform selection uses. Residuals are CAVLC (8x8 blocks as
-    four interleaved 4x4 runs, 8.5.6); recon is decoder-identical."""
-    ys, xs = my * 16, mx * 16
-    if _T8:  # pre-state, to replay for the I_8x8 candidate
-        plane0 = plane[ys:ys + 16, xs:xs + 16].copy()
-        nnz0 = nnz[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4].copy()
-        modes0 = modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4].copy()
+    """I_4x4 macroblock: best-of-V/H/DC prediction per 4x4 block, CAVLC
+    residuals; recon is decoder-identical."""
     blocks = []  # (chosen_mode, scan, nC) in blkIdx order
     cbp = 0
     for blk in range(16):
@@ -1917,84 +1406,37 @@ def _encode_mb_i4(bw, smb, plane, mx, my, qp, nnz, modes, max_coeffs,
         rec = pred + _inv4(_dequant4(lv, qp)).astype(np.int32)
         np.clip(rec, 0, 255, rec)
         plane[py:py + 4, px:px + 4] = rec.astype(np.uint8)
-    use8 = False
-    if _T8:  # race the I_8x8 candidate on the same pre-state
-        plane4 = plane[ys:ys + 16, xs:xs + 16].copy()
-        nnz4 = nnz[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4].copy()
-        modes4 = modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4].copy()
-        plane[ys:ys + 16, xs:xs + 16] = plane0
-        nnz[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = nnz0
-        modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = modes0
-        n8, blocks8, cbp8 = _eval_mb_i8(plane, smb, mx, my, qp, plane_w)
-        use8 = n8 <= sum(b[3] for b in blocks)
-        if use8:
-            _mark_t8(mx, my)
-        else:
-            plane[ys:ys + 16, xs:xs + 16] = plane4
-            nnz[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = nnz4
-            modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = modes4
-    # chroma residual (r7): best-mode prediction from the recon plane,
-    # independent of the luma transform choice; a flat source picks
-    # DC / cbpc 0, reproducing the pre-r7 bitstream
+    # chroma residual (r7): best-mode prediction from the recon plane;
+    # a flat source picks DC / cbpc 0, reproducing the pre-r7 bitstream
     csrc, crec, nnz_c = ch
     csrc_mb = csrc[:, my * 8:my * 8 + 8, mx * 8:mx * 8 + 8]
     icp, cpred = _pick_chroma_mode(crec, csrc_mb, mx, my, mx > 0,
                                    my > _SLICE_TOP)
     cbpc, comps = _encode_chroma_mb(csrc_mb, cpred, qp, intra=True)
-    # serialize: mb_type, [t8 flag,] pred modes, chroma mode, cbp,
-    # qp_delta, residuals
+    # serialize: mb_type, pred modes, chroma mode, cbp, qp_delta,
+    # residuals
     bw.ue(mb_type_code)  # I_NxN (5 when inside a P slice)
-    if _T8:  # High-profile PPS: I_NxN carries transform_size_8x8_flag
-        bw.u(1 if use8 else 0, 1)
-    if use8:
-        for b8, (mode8, _q8) in enumerate(blocks8):
-            bx, by = mx * 4 + (b8 & 1) * 2, my * 4 + (b8 >> 1) * 2
-            pm = _pred_mode_for(modes, bx, by)
-            if mode8 == pm:
-                bw.u(1, 1)  # prev_intra8x8_pred_mode_flag
-            else:
-                bw.u(0, 1)
-                bw.u(mode8 - (1 if mode8 > pm else 0), 3)
-            # replicate into the 4x4 grid so later pred-mode and nC
-            # derivations see the 8x8 mode (decoder does the same)
-            modes[by:by + 2, bx:bx + 2] = mode8
-        cbp = cbp8
-    else:
-        for blk in range(16):
-            ox, oy = _BLK_XY[blk]
-            bx, by = (mx * 16 + ox) // 4, (my * 16 + oy) // 4
-            mode = blocks[blk][0]
-            # predicted mode must use the FINAL modes grid state as the
-            # decoder sees it: left/up blocks all precede in blkIdx
-            # order, already set
-            pm = _pred_mode_for_encoded(modes, bx, by, blk, mx, my)
-            if mode == pm:
-                bw.u(1, 1)
-            else:
-                bw.u(0, 1)
-                bw.u(mode - (1 if mode > pm else 0), 3)
+    for blk in range(16):
+        ox, oy = _BLK_XY[blk]
+        bx, by = (mx * 16 + ox) // 4, (my * 16 + oy) // 4
+        mode = blocks[blk][0]
+        # predicted mode must use the FINAL modes grid state as the
+        # decoder sees it: left/up blocks all precede in blkIdx
+        # order, already set
+        pm = _pred_mode_for_encoded(modes, bx, by, blk, mx, my)
+        if mode == pm:
+            bw.u(1, 1)
+        else:
+            bw.u(0, 1)
+            bw.u(mode - (1 if mode > pm else 0), 3)
     bw.ue(icp)  # intra_chroma_pred_mode
     bw.ue(_CBP_INTRA_INV[cbp | (cbpc << 4)])
     if cbp | cbpc:
         bw.se(0)  # mb_qp_delta
-    if use8:  # four 8x8 blocks, CAVLC-interleaved 4x4 runs (8.5.6)
-        for b8 in range(4):
-            cells = [(my * 4 + (b8 >> 1) * 2 + (k >> 1),
-                      mx * 4 + (b8 & 1) * 2 + (k & 1)) for k in range(4)]
-            if cbp & (1 << b8):
-                runs = _scan8_sub(blocks8[b8][1])
-                for k, (by, bx) in enumerate(cells):
-                    nc = _nc_luma(nnz, bx, by)
-                    _encode_residual(bw, [int(v) for v in runs[k]], nc)
-                    nnz[by, bx] = int(np.count_nonzero(runs[k]))
-            else:
-                for by, bx in cells:
-                    nnz[by, bx] = 0
-    else:
-        for blk in range(16):
-            if cbp & (1 << (blk >> 2)):
-                _, scan, nc, _tc = blocks[blk]
-                _encode_residual(bw, scan, nc)
+    for blk in range(16):
+        if cbp & (1 << (blk >> 2)):
+            _, scan, nc, _tc = blocks[blk]
+            _encode_residual(bw, scan, nc)
     _write_chroma_residual(bw, cbpc, comps, nnz_c, mx, my)
     for ci in range(2):
         crec[ci, my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = comps[ci]["recon"]
@@ -2012,35 +1454,22 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
                    search: int = 8, deblock: bool = False,
                    chroma: np.ndarray | None = None,
                    cref: np.ndarray | None = None,
-                   wp: dict | None = None,
-                   slice_rows: int | None = None,
-                   t8x8: bool = False):
+                   slice_rows: int | None = None):
     """One gray frame -> (P-slice RBSP, FULL reconstructed plane).
 
     Per macroblock: P_SKIP when the residual at the skip-predicted MV
     quantizes to all-zero; else P_L0_16x16 with an integer-pel full
     search (+/- `search` around the median predictor) and CAVLC inter
     residuals; intra (I_4x4-in-P) fallback when motion fails (SAD gate).
-    `ref_full` is the previous frame's FULL (mb-aligned) recon plane —
-    or a most-recent-first LIST of recon planes (multi-reference L0,
-    r7): the slice header then carries num_ref_idx_l0_active and every
-    inter partition a te(v) ref_idx_l0; the encoder picks the best
-    reference per MB by penalized SAD (all partitions of one MB share
-    it), P_SKIP stays refIdx 0 per 8.4.1.1.
-    `wp` (r7, explicit weighted prediction — the PPS must advertise
-    weighted_pred, see build_avcc(wp=True)) is a pred_weight_table
-    dict; the luma search runs on pre-weighted planes (bit-exact at
-    the encoder's integer-pel MVs) while chroma weights apply after
-    interpolation, exactly as the decoder does (8.4.2.3.2).
+    `ref_full` is the previous frame's FULL (mb-aligned) recon plane,
+    the slice's one L0 reference; `cref` its chroma pair (None: flat
+    mid-grey, as a gray stream's references decode).
     decode == recon bit-exact, same contract as the intra encoder."""
     a = np.asarray(gray, np.uint8)
     h, w = a.shape
     mbw = -(-w // 16)
     mbh = -(-h // 16)
-    refs = _ref_list(ref_full)
-    nrefs = len(refs)
-    for rp in refs:
-        assert rp.shape == (mbh * 16, mbw * 16), "reference plane mismatch"
+    assert ref_full.shape == (mbh * 16, mbw * 16), "reference plane mismatch"
     src = np.pad(a, ((0, mbh * 16 - h), (0, mbw * 16 - w)), mode="edge")
     plane = np.zeros((mbh * 16, mbw * 16), np.uint8)
     plane_w = mbw * 16
@@ -2049,40 +1478,25 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
     mvs = _MvState(mbw, mbh)
     qp_map = np.full((mbh, mbw), qp, np.int32)
     csrc = _pad_chroma(chroma, mbw, mbh, h, w)
-    crefs = _ref_list(cref) if cref is not None else []
-    while len(crefs) < nrefs:  # gray-stream references: flat chroma
-        crefs.append(np.full((2, mbh * 8, mbw * 8), 128, np.uint8))
-    cref = crefs[0]
+    if cref is None:
+        cref = np.full((2, mbh * 8, mbw * 8), 128, np.uint8)
     crec = np.full((2, mbh * 8, mbw * 8), 128, np.uint8)
     nnz_c = np.zeros((2, mbh * 2, mbw * 2), np.int32)
     ch = (csrc, crec, nnz_c)
-    # explicit WP (r7): luma search planes are pre-weighted — identical
-    # to interp-then-weight at the encoder's integer-pel MVs — while
-    # chroma (fractional MVs) weights after interpolation like decode
-    wl = wc = None
-    srefs = refs
-    if wp is not None:
-        wl, wc = _resolve_wp(wp, nrefs)
-        srefs = [rp if wl[ri] is None else
-                 _wp_apply(rp.astype(np.int32), wl[ri]).astype(np.uint8)
-                 for ri, rp in enumerate(refs)]
 
-    def cmc(mv, parts=None, ridx=0):
+    def cmc(mv, parts=None):
         """(2, 8, 8) chroma MC prediction for one MB; `parts` is a list
         of (ox, oy, w, h, mv) luma-geometry partitions."""
         out = np.empty((2, 8, 8), np.int32)
-        cref = crefs[ridx]
         for ci in range(2):
-            wpck = wc[ridx][ci] if wc is not None and wc[ridx] else None
             if parts is None:
-                out[ci] = _interp_chroma(cref[ci], mx * 8, my * 8, *mv,
-                                         wp=wpck)
+                out[ci] = _interp_chroma(cref[ci], mx * 8, my * 8, *mv)
             else:
                 for (ox, oy, pw, ph, pmv) in parts:
                     out[ci, oy // 2:(oy + ph) // 2,
                         ox // 2:(ox + pw) // 2] = _interp_chroma(
                             cref[ci], mx * 8 + ox // 2, my * 8 + oy // 2,
-                            pmv[0], pmv[1], pw // 2, ph // 2, wp=wpck)
+                            pmv[0], pmv[1], pw // 2, ph // 2)
         return out
 
     def _slice_bw(first_row):
@@ -2091,14 +1505,8 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
         bw.ue(5)      # slice_type: P (all slices in picture)
         bw.ue(0)      # pps_id
         bw.u(frame_num & 0xF, 4)
-        if nrefs > 1:  # multi-reference L0 (r7)
-            bw.u(1, 1)  # num_ref_idx_active_override_flag
-            bw.ue(nrefs - 1)
-        else:
-            bw.u(0, 1)  # num_ref_idx_active_override_flag
+        bw.u(0, 1)    # num_ref_idx_active_override_flag
         bw.u(0, 1)    # ref_pic_list_modification_flag_l0
-        if wp is not None:  # pred_weight_table (7.3.3.2, r7)
-            _write_pred_weight_table(bw, wp, nrefs)
         bw.u(0, 1)    # adaptive_ref_pic_marking_mode_flag (sliding window)
         bw.se(qp - 26)
         bw.ue(0 if deblock else 1)  # disable_deblocking_filter_idc
@@ -2107,9 +1515,6 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
             bw.se(0)
         return bw
 
-    _set_t8(t8x8)
-    t8m = np.zeros((mbh, mbw), np.int32) if t8x8 else None
-    _set_t8map(t8m)  # per-MB flags feed the 8.7 edge derivation
     starts = dict(_slice_ranges(mbh, slice_rows))
     rbsps = []
     bw = None
@@ -2128,7 +1533,7 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
             smb = src[my * 16:my * 16 + 16, mx * 16:mx * 16 + 16].astype(np.int32)
             # --- P_SKIP candidate
             smv = mvs.skip_mv(mx, my)
-            pred = _interp_luma(srefs[0], mx * 16, my * 16, *smv)
+            pred = _interp_luma(ref_full, mx * 16, my * 16, *smv)
             cpred_skip = cmc(smv)
             csrc_mb = csrc[:, my * 8:my * 8 + 8, mx * 8:mx * 8 + 8]
             if _all_zero_quant(smb - pred, qp) and \
@@ -2144,19 +1549,10 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
                 mvs.set_mb(mx, my, smv, 0)
                 modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = -1
                 continue
-            # --- integer-pel full search around the median predictor;
-            # with multiple references (r7) every reference is probed
-            # and the best penalized SAD wins (the penalty is the
-            # deterministic stand-in for the extra ref_idx bits)
+            # --- integer-pel full search around the median predictor
             mvp = mvs.mvp_16x16(mx, my)
-            sad, mv, pred = _search_block(srefs[0], smb, mx * 16, my * 16,
+            sad, mv, pred = _search_block(ref_full, smb, mx * 16, my * 16,
                                           mvp, search)
-            ridx = 0
-            for ri in range(1, nrefs):
-                sad_i, mv_i, pred_i = _search_block(
-                    srefs[ri], smb, mx * 16, my * 16, mvp, search)
-                if sad_i + 48 * ri < sad + 48 * ridx:
-                    sad, mv, pred, ridx = sad_i, mv_i, pred_i, ri
             if sad > 28 * 256:  # motion failed (scene cut): intra fallback
                 bw.ue(pending_skips)
                 pending_skips = 0
@@ -2167,14 +1563,13 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
                 continue
             # --- partition decision: 16x8 / 8x16 / 8x8 when they clearly
             # beat the 16x16 block (deterministic gates; finer partitions
-            # carry more mvd bits, so they must win by a larger margin).
-            # All partitions of one MB share the chosen reference.
+            # carry more mvd bits, so they must win by a larger margin)
             chosen = None    # 2-way: (ptype, parts)
             chosen8 = None   # 4-way 8x8: parts
             if sad > 6 * 256:
-                tot, ptype, parts = _eval_partitions(mvs, srefs[ridx], smb,
+                tot, ptype, parts = _eval_partitions(mvs, ref_full, smb,
                                                      mx, my, search)
-                tot8, parts8 = _eval_p8x8(mvs, srefs[ridx], smb, mx, my,
+                tot8, parts8 = _eval_p8x8(mvs, ref_full, smb, mx, my,
                                           search)
                 if tot8 < 0.85 * min(sad, tot):
                     chosen8 = parts8
@@ -2193,7 +1588,7 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
                         mvds.append((mv_i[0] - mvp_i[0],
                                      mv_i[1] - mvp_i[1]))
                         cparts.append((gx, gy, w_, h_, mv_i))
-                cpred = cmc(None, cparts, ridx)
+                cpred = cmc(None, cparts)
             elif chosen:
                 ptype, parts = chosen
                 mb_type_code = 1 if ptype == "16x8" else 2
@@ -2205,14 +1600,14 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
                     pred[oy:oy + h_, ox:ox + w_] = pred_i
                     mvds.append((mv_i[0] - mvp_i[0], mv_i[1] - mvp_i[1]))
                     cparts.append((ox, oy, w_, h_, mv_i))
-                cpred = cmc(None, cparts, ridx)
+                cpred = cmc(None, cparts)
             else:
                 mb_type_code = 0
                 mvds = [(mv[0] - mvp[0], mv[1] - mvp[1])]
-                cpred = cmc(mv, ridx=ridx)
+                cpred = cmc(mv)
             blocks = []
-            cbp4 = 0
-            out4 = pred.copy()
+            cbp = 0
+            out = pred.copy()
             for blk in range(16):
                 ox, oy = _BLK_XY[blk]
                 lv = _thin(_quant4(_fwd4(smb[oy:oy + 4, ox:ox + 4]
@@ -2220,35 +1615,9 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
                                    qp, intra=False), max_coeffs)
                 tc = int(np.count_nonzero(lv))
                 if tc:
-                    cbp4 |= 1 << (blk >> 2)
+                    cbp |= 1 << (blk >> 2)
                 blocks.append((lv, tc))
-                out4[oy:oy + 4, ox:ox + 4] += _inv4(_dequant4(lv, qp)).astype(np.int32)
-            use8 = False
-            if t8x8 and mb_type_code == 0:
-                # per-MB transform selection (r7): take the 8x8
-                # transform when it codes no more coefficients than the
-                # 4x4 one (coefficient count proxies the CAVLC bit cost)
-                blocks8 = []
-                cbp8 = 0
-                out8 = pred.copy()
-                for b8 in range(4):
-                    oy8, ox8 = (b8 >> 1) * 8, (b8 & 1) * 8
-                    q8 = _quant8(_fwd8(smb[oy8:oy8 + 8, ox8:ox8 + 8]
-                                       - pred[oy8:oy8 + 8, ox8:ox8 + 8]),
-                                 qp)
-                    if np.any(q8):
-                        cbp8 |= 1 << b8
-                        out8[oy8:oy8 + 8, ox8:ox8 + 8] += \
-                            _inv8(_dequant8(q8, qp)).astype(np.int64)
-                    blocks8.append(q8)
-                n8 = sum(int(np.count_nonzero(q8)) for q8 in blocks8)
-                n4 = sum(tc for _lv, tc in blocks)
-                use8 = n8 <= n4
-            if use8:
-                cbp, out = cbp8, out8
-                _mark_t8(mx, my)
-            else:
-                cbp, out = cbp4, out4
+                out[oy:oy + 4, ox:ox + 4] += _inv4(_dequant4(lv, qp)).astype(np.int32)
             cbpc, comps = _encode_chroma_mb(csrc_mb, cpred, qp, intra=False)
             bw.ue(pending_skips)
             pending_skips = 0
@@ -2256,45 +1625,20 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
             if chosen8:
                 for st8, _sp in chosen8:
                     bw.ue(st8)  # sub_mb_type per 8x8 (7.4.5.2)
-            if nrefs > 1:  # ref_idx_l0 per partition, before mvds (r7)
-                for _ in range(4 if chosen8 else 2 if chosen else 1):
-                    _write_ref_idx(bw, nrefs, ridx)
             for dx_, dy_ in mvds:
                 bw.se(dx_)
                 bw.se(dy_)
             bw.ue(_CBP_INTER_INV[cbp | (cbpc << 4)])
-            if t8x8 and (cbp & 15) and (
-                    mb_type_code in (0, 1, 2)
-                    or (chosen8 and all(st8 == 0 for st8, _ in chosen8))):
-                # transform_size_8x8_flag (7.3.5): present for 16x16 /
-                # 16x8 / 8x16 and all-8x8-sub P_8x8 shapes
-                bw.u(1 if use8 else 0, 1)
             if cbp | cbpc:
                 bw.se(0)  # mb_qp_delta
-            if use8:
-                for b8 in range(4):
-                    cells = [(my * 4 + (b8 >> 1) * 2 + (k >> 1),
-                              mx * 4 + (b8 & 1) * 2 + (k & 1))
-                             for k in range(4)]
-                    if cbp & (1 << b8):
-                        runs = _scan8_sub(blocks8[b8])
-                        for k, (by, bx) in enumerate(cells):
-                            nc = _nc_luma(nnz, bx, by)
-                            _encode_residual(bw, [int(v) for v in runs[k]],
-                                             nc)
-                            nnz[by, bx] = int(np.count_nonzero(runs[k]))
-                    else:
-                        for by, bx in cells:
-                            nnz[by, bx] = 0
-            else:
-                for blk in range(16):
-                    ox, oy = _BLK_XY[blk]
-                    bx, by = mx * 4 + ox // 4, my * 4 + oy // 4
-                    lv, tc = blocks[blk]
-                    if cbp & (1 << (blk >> 2)):
-                        nc = _nc_luma(nnz, bx, by)
-                        _encode_residual(bw, _scan16(lv), nc)
-                    nnz[by, bx] = tc
+            for blk in range(16):
+                ox, oy = _BLK_XY[blk]
+                bx, by = mx * 4 + ox // 4, my * 4 + oy // 4
+                lv, tc = blocks[blk]
+                if cbp & (1 << (blk >> 2)):
+                    nc = _nc_luma(nnz, bx, by)
+                    _encode_residual(bw, _scan16(lv), nc)
+                nnz[by, bx] = tc
             _write_chroma_residual(bw, cbpc, comps, nnz_c, mx, my)
             for ci in range(2):
                 crec[ci, my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = \
@@ -2307,28 +1651,26 @@ def encode_p_cavlc(gray: np.ndarray, ref_full: np.ndarray, qp: int = 10,
                             _P_SUB_GEOM[st8], sparts):
                         mvs.set_rect(mx * 4 + (ox8 + ox) // 4,
                                      my * 4 + (oy8 + oy) // 4,
-                                     w_ // 4, h_ // 4, mv_i, ridx)
+                                     w_ // 4, h_ // 4, mv_i, 0)
             elif chosen:
                 ptype, parts = chosen
                 for (ox, oy, w, h), (_mvp_i, mv_i, _p) in zip(
                         _PART_GEOM[ptype], parts):
                     mvs.set_rect(mx * 4 + ox // 4, my * 4 + oy // 4,
-                                 w // 4, h // 4, mv_i, ridx)
+                                 w // 4, h // 4, mv_i, 0)
             else:
-                mvs.set_mb(mx, my, mv, ridx)
+                mvs.set_mb(mx, my, mv, 0)
             modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = -1
     if pending_skips:
         bw.ue(pending_skips)  # trailing skip run
     bw.rbsp_trailing()
     rbsps.append(bytes(bw.buf))
     _set_slice_top(0)
-    _set_t8(False)
-    _set_t8map(None)
     rb = rbsps[0] if slice_rows is None else rbsps
     out_plane = plane
     if deblock and qp >= 16:
-        out_plane = _deblock_luma_inter(plane, qp_map, nnz, mvs, t8=t8m)
-        crec = _deblock_chroma(crec, qp_map, nnz=nnz, mvs=mvs, t8=t8m)
+        out_plane = _deblock_luma_inter(plane, qp_map, nnz, mvs)
+        crec = _deblock_chroma(crec, qp_map, nnz=nnz, mvs=mvs)
     if chroma is None:
         return rb, out_plane
     return rb, (out_plane, crec)
@@ -2350,16 +1692,11 @@ def _all_zero_quant(resid: np.ndarray, qp: int) -> bool:
     return True
 
 
-def build_avcc(w: int, h: int, deblock_ctrl: bool = False,
-               nrefs: int = 1, wp: bool = False,
-               t8x8: bool = False) -> bytes:
+def build_avcc(w: int, h: int, deblock_ctrl: bool = False) -> bytes:
     """avcC (AVCDecoderConfigurationRecord) for the MP4 sample entry."""
-    # Main profile: weighted prediction; High profile (100): the 8x8
-    # transform (r7)
-    profile = 100 if t8x8 else 77 if wp else 66
-    sps = _ep_insert(_sps(w, h, profile=profile, nrefs=nrefs))
-    pps = _ep_insert(_pps(deblock_ctrl, wp=wp, t8x8=t8x8))
-    return (bytes([1, profile, 0, 20, 0xFF, 0xE1])
+    sps = _ep_insert(_sps(w, h))
+    pps = _ep_insert(_pps(deblock_ctrl))
+    return (bytes([1, 66, 0, 20, 0xFF, 0xE1])
             + struct.pack(">H", len(sps) + 1) + bytes([0x67]) + sps
             + bytes([1]) + struct.pack(">H", len(pps) + 1) + bytes([0x68]) + pps)
 
@@ -2376,10 +1713,7 @@ def _pack_sample(rbsp, nal_byte: int) -> bytes:
 def encode_frames(frames: list[np.ndarray], qp: int | None = None,
                   deblock: bool = False, gop: int | None = None,
                   chromas: list | None = None,
-                  nrefs: int = 1,
-                  wp: bool = False,
-                  slice_rows: int | None = None,
-                  t8x8: bool = False) -> tuple[bytes, list[bytes]]:
+                  slice_rows: int | None = None) -> tuple[bytes, list[bytes]]:
     """Gray frames -> (avcC record, per-frame length-prefixed NAL samples
     ready for an 'avc1' MP4 track). qp=None keeps the bit-exact I_PCM
     path; an integer qp (0..51) switches to CAVLC transform coding.
@@ -2387,25 +1721,16 @@ def encode_frames(frames: list[np.ndarray], qp: int | None = None,
     IDR+P group-of-pictures structure: every Nth frame is an IDR, the
     rest are P slices (P_SKIP / P_L0_16x16 motion compensation / intra
     fallback) predicting from the previous frame — decode with
-    decode_samples. nrefs=N (r7) keeps a sliding window of up to N
-    reference recons per GOP: every P slice declares its true active
-    count and each inter partition carries a te(v)/unary ref_idx_l0.
-    wp=True (r7) enables explicit weighted prediction: the PPS
-    advertises weighted_pred, every P slice carries a pred_weight_table
-    with per-reference least-squares gain/offset estimates (identity
-    collapses to flag-0 defaults), and fades collapse to P_SKIP runs.
+    decode_samples.
     Dimensions must be even: 4:2:0 frame cropping works
     in 2-sample units, so odd sizes are unrepresentable in this chroma
     format (spec constraint, not an implementation one)."""
     h, w = np.asarray(frames[0]).shape
     if w % 2 or h % 2:
         raise ValueError("4:2:0 H.264 needs even dimensions (crop unit is 2 px)")
-    enc_idr, enc_p = encode_idr_cavlc, encode_p_cavlc
-    enc_ipcm = encode_idr_ipcm
     if chromas is not None:
         assert len(chromas) == len(frames), "one chroma pair per frame"
-    avcc = build_avcc(w, h, deblock_ctrl=qp is not None,
-                      nrefs=nrefs, wp=wp, t8x8=t8x8)
+    avcc = build_avcc(w, h, deblock_ctrl=qp is not None)
     samples = []
     ref_full = None
     cref_full = None
@@ -2413,48 +1738,24 @@ def encode_frames(frames: list[np.ndarray], qp: int | None = None,
     for i, f in enumerate(frames):
         cf = chromas[i] if chromas is not None else None
         if qp is None:
-            rbsp = enc_ipcm(f, chroma=cf)
+            rbsp = encode_idr_ipcm(f, chroma=cf)
             sample = _pack_sample(rbsp, 0x65)  # ref_idc 3, IDR
         elif gop is None or i % gop == 0:
-            if chromas is None:
-                rbsp, ref_full = enc_idr(f, qp=qp, deblock=deblock,
-                                         full_recon=True,
-                                         slice_rows=slice_rows,
-                                         **({"t8x8": True} if t8x8 else {}))
-            else:
-                rbsp, (ref_full, cref_full) = enc_idr(
-                    f, qp=qp, deblock=deblock, full_recon=True, chroma=cf,
-                    slice_rows=slice_rows,
-                    **({"t8x8": True} if t8x8 else {}))
+            rbsp, rec = encode_idr_cavlc(f, qp=qp, deblock=deblock,
+                                         full_recon=True, chroma=cf,
+                                         slice_rows=slice_rows)
             frame_num = 1
             sample = _pack_sample(rbsp, 0x65)
-            dpb = [ref_full]  # IDR: closed GOP, new reference window
-            cdpb = [cref_full]
         else:
-            # most-recent-first L0 window, bounded by the frames coded
-            # since the IDR (the header declares the true active count)
-            refs = dpb[-nrefs:][::-1]
-            crefs = cdpb[-nrefs:][::-1]
-            # the PPS advertises weighted_pred, so EVERY P slice must
-            # carry a table — identity refs write flag-0 defaults
-            wp_tab = (_estimate_wp(f, refs, chroma=cf, crefs=crefs)
-                      if wp else None)
-            if chromas is None:
-                rbsp, ref_full = enc_p(f, refs, qp=qp,
+            rbsp, rec = encode_p_cavlc(f, ref_full, qp=qp,
                                        frame_num=frame_num,
-                                       deblock=deblock, wp=wp_tab,
-                                       slice_rows=slice_rows,
-                                       **({"t8x8": True} if t8x8 else {}))
-            else:
-                rbsp, (ref_full, cref_full) = enc_p(
-                    f, refs, qp=qp, frame_num=frame_num,
-                    deblock=deblock, chroma=cf, cref=crefs, wp=wp_tab,
-                    slice_rows=slice_rows,
-                    **({"t8x8": True} if t8x8 else {}))
+                                       deblock=deblock, chroma=cf,
+                                       cref=cref_full,
+                                       slice_rows=slice_rows)
             frame_num = (frame_num + 1) & 0xF
             sample = _pack_sample(rbsp, 0x41)  # ref_idc 2, non-IDR
-            dpb = (dpb + [ref_full])[-max(1, nrefs):]
-            cdpb = (cdpb + [cref_full])[-max(1, nrefs):]
+        if qp is not None:  # this picture is the next one's reference
+            ref_full, cref_full = rec if cf is not None else (rec, None)
         samples.append(sample)
     return avcc, samples
 
@@ -2579,12 +1880,10 @@ _CBP_INTER_INV = {v: i for i, v in enumerate(_CBP_INTER)}
 
 
 def _interp_luma(ref: np.ndarray, px: int, py: int, mvx: int, mvy: int,
-                 w: int = 16, h: int = 16, wp=None) -> np.ndarray:
+                 w: int = 16, h: int = 16) -> np.ndarray:
     """Motion-compensated w x h luma block at quarter-pel MV (8.4.2.2.1):
     6-tap (1,-5,20,20,-5,1) half-pel filter + quarter-pel averaging.
-    Integer MVs take the fast path (plain shifted copy with edge clamp).
-    `wp` = (w, o, logWD) applies explicit weighted prediction AFTER
-    interpolation (8.4.2.3.2)."""
+    Integer MVs take the fast path (plain shifted copy with edge clamp)."""
     H, W = ref.shape
     ix, fx = mvx >> 2, mvx & 3
     iy, fy = mvy >> 2, mvy & 3
@@ -2592,7 +1891,7 @@ def _interp_luma(ref: np.ndarray, px: int, py: int, mvx: int, mvy: int,
     if fx == 0 and fy == 0:
         xs = np.clip(np.arange(x0, x0 + w), 0, W - 1)
         ys = np.clip(np.arange(y0, y0 + h), 0, H - 1)
-        return _wp_apply(ref[np.ix_(ys, xs)].astype(np.int32), wp)
+        return ref[np.ix_(ys, xs)].astype(np.int32)
     # padded integer window large enough for the 6-tap support
     xs = np.clip(np.arange(x0 - 2, x0 + w + 3), 0, W - 1)
     ys = np.clip(np.arange(y0 - 2, y0 + h + 3), 0, H - 1)
@@ -2634,7 +1933,7 @@ def _interp_luma(ref: np.ndarray, px: int, py: int, mvx: int, mvy: int,
         bb = bm if fy == 1 else b[1:, :]
         hx = hm if fx == 1 else hh[:, 1:]
         out = avg(bb, hx)
-    return _wp_apply(out.astype(np.int32), wp)
+    return out.astype(np.int32)
 
 
 def _median_mv(cands: list[tuple[int, int] | None]) -> tuple[int, int]:
@@ -2653,7 +1952,6 @@ class _MvState:
     def __init__(self, mbw: int, mbh: int):
         self.mv = np.zeros((mbh * 4, mbw * 4, 2), np.int32)
         self.ref = np.full((mbh * 4, mbw * 4), -1, np.int32)
-        self.wp = None  # resolved (wl, wc) weight tables (P slices, r7)
 
     def at(self, bx: int, by: int):
         if bx < 0 or by < _SLICE_TOP * 4 or by >= self.ref.shape[0] \
@@ -2825,13 +2123,10 @@ def _db_filter_line(p3, p2, p1, p0, q0, q1, q2, q3, bs, alpha, beta, tc0):
 
 
 def _deblock_luma(plane: np.ndarray, qp_map: np.ndarray,
-                  off_a: int = 0, off_b: int = 0,
-                  t8: np.ndarray | None = None) -> np.ndarray:
+                  off_a: int = 0, off_b: int = 0) -> np.ndarray:
     """In-loop deblocking (8.7) for an all-intra picture, luma only.
     bS = 4 on macroblock edges, 3 on internal 4x4 edges. Operates on a
-    copy; intra prediction must keep using the UNFILTERED plane.
-    t8 (mbh x mbw, late r7): inside an 8x8-transformed MB the internal
-    4x4 edges (offsets 4 and 12) are not filtered (8.7.2)."""
+    copy; intra prediction must keep using the UNFILTERED plane."""
     out = plane.astype(np.int32)
     mbh, mbw = qp_map.shape
 
@@ -2844,11 +2139,8 @@ def _deblock_luma(plane: np.ndarray, qp_map: np.ndarray,
     for my in range(mbh):
         for mx in range(mbw):
             qp_q = qp_map[my, mx]
-            in_t8 = t8 is not None and t8[my, mx]
             # vertical edges (filter columns), left to right
             for ex in range(4):
-                if in_t8 and ex in (1, 3):
-                    continue  # no 4x4 edges inside an 8x8 transform
                 x = mx * 16 + ex * 4
                 if x == 0:
                     continue
@@ -2865,8 +2157,6 @@ def _deblock_luma(plane: np.ndarray, qp_map: np.ndarray,
                     out[ys, x - 3 + i] = np.clip(v, 0, 255)
             # horizontal edges (filter rows), top to bottom
             for ey in range(4):
-                if in_t8 and ey in (1, 3):
-                    continue
                 y = my * 16 + ey * 4
                 if y == 0:
                     continue
@@ -2884,27 +2174,17 @@ def _deblock_luma(plane: np.ndarray, qp_map: np.ndarray,
     return np.clip(out, 0, 255).astype(np.uint8)
 
 
-def _deblock_luma_inter(plane, qp_map, nnz, mvs, off_a=0, off_b=0,
-                        t8=None):
+def _deblock_luma_inter(plane, qp_map, nnz, mvs, off_a=0, off_b=0):
     """8.7 for P pictures: per-4x4-segment bS — 4/3 when a side is intra
     (MB edge / internal), 2 when a side has coded residual, 1 on a
-    >= 1-integer-pel MV difference, else unfiltered. t8 (mbh x mbw,
-    late r7): 8x8-transformed MBs skip their internal 4x4 edges
-    (8.7.2) and test "coded" per 8x8 block for bS 2."""
+    >= 1-integer-pel MV difference, else unfiltered."""
     out = plane.astype(np.int32)
     mbh, mbw = qp_map.shape
-
-    def coded(bx, by):
-        # 8x8 transform: the whole 8x8 block is the coded unit
-        if t8 is not None and t8[by // 4, bx // 4]:
-            b0x, b0y = (bx >> 1) << 1, (by >> 1) << 1
-            return bool(nnz[b0y:b0y + 2, b0x:b0x + 2].any())
-        return bool(nnz[by, bx])
 
     def seg_bs(bxp, byp, bxq, byq, mb_edge):
         if mvs.ref[byp, bxp] < 0 or mvs.ref[byq, bxq] < 0:
             return 4 if mb_edge else 3
-        if coded(bxp, byp) or coded(bxq, byq):
+        if nnz[byp, bxp] or nnz[byq, bxq]:
             return 2
         dv = np.abs(mvs.mv[byp, bxp] - mvs.mv[byq, bxq])
         return 1 if int(dv.max()) >= 4 else 0
@@ -2912,11 +2192,8 @@ def _deblock_luma_inter(plane, qp_map, nnz, mvs, off_a=0, off_b=0,
     for my in range(mbh):
         for mx in range(mbw):
             qp_q = qp_map[my, mx]
-            in_t8 = t8 is not None and t8[my, mx]
             for vert in (True, False):
                 for e in range(4):
-                    if in_t8 and e in (1, 3):
-                        continue  # no 4x4 edges inside an 8x8 transform
                     x = mx * 16 + e * 4 if vert else mx * 16
                     y = my * 16 if vert else my * 16 + e * 4
                     if (vert and x == 0) or (not vert and y == 0):
@@ -2972,8 +2249,7 @@ def _db_chroma_line(p1, p0, q0, q1, bs, alpha, beta, tc0):
     return np.where(mask, np0, p0), np.where(mask, nq0, q0)
 
 
-def _deblock_chroma(cplanes, qp_map, off_a=0, off_b=0, nnz=None, mvs=None,
-                    t8=None):
+def _deblock_chroma(cplanes, qp_map, off_a=0, off_b=0, nnz=None, mvs=None):
     """8.7 chroma deblocking (4:2:0, r7): chroma edges exist only where
     luma edges 0 / 8 sit (chroma x|y 0 and 4 per MB). bS comes from the
     LUMA edge rules at the co-sited luma blocks — static 4 (MB edge) / 3
@@ -2984,19 +2260,12 @@ def _deblock_chroma(cplanes, qp_map, off_a=0, off_b=0, nnz=None, mvs=None,
     out = cplanes.astype(np.int32)
     mbh, mbw = qp_map.shape
 
-    def coded(bx, by):
-        # 8x8 luma transform: coded per 8x8 block (late r7)
-        if t8 is not None and t8[by // 4, bx // 4]:
-            b0x, b0y = (bx >> 1) << 1, (by >> 1) << 1
-            return bool(nnz[b0y:b0y + 2, b0x:b0x + 2].any())
-        return bool(nnz[by, bx])
-
     def seg_bs(bxp, byp, bxq, byq, mb_edge):
         if mvs is None:
             return 4 if mb_edge else 3
         if mvs.ref[byp, bxp] < 0 or mvs.ref[byq, bxq] < 0:
             return 4 if mb_edge else 3
-        if coded(bxp, byp) or coded(bxq, byq):
+        if nnz[byp, bxp] or nnz[byq, bxq]:
             return 2
         dv = np.abs(mvs.mv[byp, bxp] - mvs.mv[byq, bxq])
         return 1 if int(dv.max()) >= 4 else 0
@@ -3091,7 +2360,7 @@ def _parse_sps(rbsp: bytes) -> dict:
         r.se()
         for _ in range(r.ue()):
             r.se()
-    max_refs = r.ue()  # max_num_ref_frames (DPB window for P multi-ref)
+    r.ue()  # max_num_ref_frames (the decoder keeps one reference)
     r.u(1)
     mbw = r.ue() + 1
     mbh = r.ue() + 1
@@ -3106,8 +2375,7 @@ def _parse_sps(rbsp: bytes) -> dict:
     h = mbh * 16 - 2 * (crop[2] + crop[3])
     return {"profile": profile, "level": level, "mbw": mbw, "mbh": mbh,
             "w": w, "h": h, "log2_mfn": log2_mfn, "poc_type": poc_type,
-            "log2_poc": log2_poc, "delta_always_zero": delta_always_zero,
-            "max_refs": max_refs}
+            "log2_poc": log2_poc, "delta_always_zero": delta_always_zero}
 
 
 def _more_rbsp(r: "_BitReader") -> bool:
@@ -3132,9 +2400,12 @@ def _parse_pps(rbsp: bytes) -> dict:
     pic_order_present = r.u(1)
     if r.ue() != 0:  # num_slice_groups_minus1
         raise ValueError("FMO slice groups unsupported")
-    r.ue()
-    r.ue()
-    weighted_pred = r.u(1)   # explicit WP in P slices (r7)
+    nref_default = r.ue() + 1  # num_ref_idx_l0_default_active_minus1
+    r.ue()  # num_ref_idx_l1_default_active_minus1 (B slices only)
+    if r.u(1):
+        raise ValueError(
+            "explicit weighted prediction (weighted_pred_flag 1): out of "
+            "decode scope")
     r.u(2)  # weighted_bipred_idc (B slices only, which raise)
     pic_init_qp = 26 + r.se()
     r.se()  # pic_init_qs
@@ -3142,17 +2413,17 @@ def _parse_pps(rbsp: bytes) -> dict:
     deblock_ctrl = r.u(1)
     r.u(1)  # constrained_intra_pred (all-intra: no effect here)
     redundant = r.u(1)
-    t8x8 = False
-    if _more_rbsp(r):  # PPS extension tail (High profile, r7)
-        t8x8 = bool(r.u(1))  # transform_8x8_mode_flag
+    if _more_rbsp(r):  # PPS extension tail (High profile)
+        if r.u(1):
+            raise ValueError(
+                "8x8 transform (transform_8x8_mode_flag 1): out of decode "
+                "scope")
         if r.u(1):
             raise ValueError("pic scaling matrices: out of decode scope")
-        r.se()  # second_chroma_qp_index_offset (in-repo streams write 0)
+        r.se()  # second_chroma_qp_index_offset
     return {"pic_order_present": bool(pic_order_present),
             "pic_init_qp": pic_init_qp, "deblock_ctrl": bool(deblock_ctrl),
-            "redundant": bool(redundant),
-            "weighted_pred": bool(weighted_pred),
-            "t8x8": t8x8}
+            "redundant": bool(redundant), "nref_default": nref_default}
 
 
 def _avcc_param_sets(avcc: bytes) -> tuple[dict, dict]:
@@ -3211,9 +2482,6 @@ def _parse_chroma_residual(r, cbpc, nnz_c, mx, my):
 
 
 def _decode_mb_i4x4(r, plane, mx, my, qp, nnz, cc, modes, plane_w):
-    if _T8 and r.u(1):  # I_NxN transform_size_8x8_flag (7.3.5, r7)
-        return _decode_mb_i8x8(r, plane, mx, my, qp, nnz, cc, modes,
-                               plane_w)
     prev_flags = []
     for _blk in range(16):
         if r.u(1):
@@ -3250,66 +2518,6 @@ def _decode_mb_i4x4(r, plane, mx, my, qp, nnz, cc, modes, plane_w):
         nnz[by, bx] = tc
         np.clip(rec, 0, 255, rec)
         plane[py:py + 4, px:px + 4] = rec.astype(np.uint8)
-    cres = _decode_chroma_residual(r, cbp >> 4, cc.nnz, mx, my, qp)
-    for ci in range(2):
-        cpred = _pred_chroma8(cc.planes[ci], mx, my, icp, mx > 0,
-                              my > _SLICE_TOP)
-        cc.store(ci, mx, my, cpred + cres[ci])
-    return qp
-
-
-def _decode_mb_i8x8(r, plane, mx, my, qp, nnz, cc, modes, plane_w):
-    """I_8x8 intra MB (8.3.2.2, r7): four prev/rem pred modes, cbp over
-    8x8 blocks, residuals as CAVLC-interleaved 4x4 runs (8.5.6). The
-    transform_size_8x8_flag was already consumed by the caller."""
-    _mark_t8(mx, my)
-    prev_flags = []
-    for _b8 in range(4):
-        if r.u(1):
-            prev_flags.append(None)  # use predicted mode
-        else:
-            prev_flags.append(r.u(3))
-    icp = r.ue()
-    if icp > 3:
-        raise ValueError("bad intra_chroma_pred_mode")
-    cn = r.ue()
-    if cn > 47:
-        raise ValueError("bad coded_block_pattern")
-    cbp = _CBP_INTRA[cn]
-    if cbp:
-        qp = (qp + r.se() + 52) % 52
-    mode8s = []
-    for b8 in range(4):  # pred modes resolve against the 4x4 grid the
-        bx, by = mx * 4 + (b8 & 1) * 2, my * 4 + (b8 >> 1) * 2
-        pm = _pred_mode_for(modes, bx, by)  # encoder replicated into
-        rem = prev_flags[b8]
-        mode = pm if rem is None else rem + (1 if rem >= pm else 0)
-        if mode > 8:
-            raise ValueError("bad intra 8x8 pred mode")
-        modes[by:by + 2, bx:bx + 2] = mode
-        mode8s.append(mode)
-    for b8 in range(4):
-        ox8, oy8 = (b8 & 1) * 8, (b8 >> 1) * 8
-        px, py = mx * 16 + ox8, my * 16 + oy8
-        al, aa, aar, aal = _mb_avail8(b8, px, py, plane_w)
-        pred = _pred8(plane, px, py, mode8s[b8], al, aa, aar, aal)
-        cells = [(my * 4 + (b8 >> 1) * 2 + (k >> 1),
-                  mx * 4 + (b8 & 1) * 2 + (k & 1)) for k in range(4)]
-        if cbp & (1 << b8):
-            runs = []
-            for k, (by, bx) in enumerate(cells):
-                nc = _nc_luma(nnz, bx, by)
-                run = _decode_residual(r, nc, 16)
-                nnz[by, bx] = int(np.count_nonzero(run))
-                runs.append(run)
-            q8 = _unscan8_sub(runs)
-            rec = pred + _inv8(_dequant8(q8, qp))
-        else:
-            for by, bx in cells:
-                nnz[by, bx] = 0
-            rec = pred
-        np.clip(rec, 0, 255, rec)
-        plane[py:py + 8, px:px + 8] = rec.astype(np.uint8)
     cres = _decode_chroma_residual(r, cbp >> 4, cc.nnz, mx, my, qp)
     for ci in range(2):
         cpred = _pred_chroma8(cc.planes[ci], mx, my, icp, mx > 0,
@@ -3357,59 +2565,29 @@ def _decode_mb_i16(r, mb_type, plane, mx, my, qp, nnz, cc, modes):
     return qp
 
 
-def _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred,
-                  t8_shape=False):
+def _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred):
     """Shared inter-MB tail: cbp + mb_qp_delta + luma residuals over an
     already-built MC prediction, then reconstruction; `cpred` is the
-    (2, 8, 8) chroma MC prediction the chroma residual adds onto.
-    t8_shape: this MB shape may carry transform_size_8x8_flag when the
-    PPS enables the 8x8 transform (High profile, r7) — 16x16/16x8/8x16
-    partitions, and P_8x8 with all-8x8 sub-partitions."""
+    (2, 8, 8) chroma MC prediction the chroma residual adds onto."""
     cn = r.ue()
     if cn > 47:
         raise ValueError("bad coded_block_pattern")
     cbp = _CBP_INTER[cn]
-    use8 = False
-    if _T8 and (cbp & 15) and t8_shape:
-        use8 = bool(r.u(1))  # transform_size_8x8_flag (7.3.5)
-        if use8:
-            _mark_t8(mx, my)
     if cbp:
         qp = (qp + r.se() + 52) % 52
     out = pred.copy()
-    if use8:  # four 8x8 blocks, CAVLC-interleaved 4x4 runs (8.5.6)
-        for b8 in range(4):
-            oy8, ox8 = (b8 >> 1) * 8, (b8 & 1) * 8
-            cells = [(my * 4 + (b8 >> 1) * 2 + (k >> 1),
-                      mx * 4 + (b8 & 1) * 2 + (k & 1)) for k in range(4)]
-            if cbp & (1 << b8):
-                runs = []
-                for k, (by, bx) in enumerate(cells):
-                    nc = _nc_luma(nnz, bx, by)
-                    run = _decode_residual(r, nc, 16)
-                    nnz[by, bx] = int(np.count_nonzero(run))
-                    runs.append(run)
-                q8 = _unscan8_sub(runs)
-                out[oy8:oy8 + 8, ox8:ox8 + 8] += \
-                    _inv8(_dequant8(q8, qp)).astype(np.int64)
-            else:
-                for by, bx in cells:
-                    nnz[by, bx] = 0
-            for by, bx in cells:
-                modes[by, bx] = -1
-    else:
-        for blk in range(16):
-            ox, oy = _BLK_XY[blk]
-            bx, by = mx * 4 + ox // 4, my * 4 + oy // 4
-            if cbp & (1 << (blk >> 2)):
-                nc = _nc_luma(nnz, bx, by)
-                lv = _unscan16(_decode_residual(r, nc, 16))
-                tc = int(np.count_nonzero(lv))
-                out[oy:oy + 4, ox:ox + 4] += _inv4(_dequant4(lv, qp)).astype(np.int32)
-            else:
-                tc = 0
-            nnz[by, bx] = tc
-            modes[by, bx] = -1
+    for blk in range(16):
+        ox, oy = _BLK_XY[blk]
+        bx, by = mx * 4 + ox // 4, my * 4 + oy // 4
+        if cbp & (1 << (blk >> 2)):
+            nc = _nc_luma(nnz, bx, by)
+            lv = _unscan16(_decode_residual(r, nc, 16))
+            tc = int(np.count_nonzero(lv))
+            out[oy:oy + 4, ox:ox + 4] += _inv4(_dequant4(lv, qp)).astype(np.int32)
+        else:
+            tc = 0
+        nnz[by, bx] = tc
+        modes[by, bx] = -1
     np.clip(out, 0, 255, out)
     plane[my * 16:my * 16 + 16, mx * 16:mx * 16 + 16] = out.astype(np.uint8)
     cres = _decode_chroma_residual(r, cbp >> 4, cc.nnz, mx, my, qp)
@@ -3418,116 +2596,79 @@ def _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred,
     return qp
 
 
-def _read_ref_idx(r, nrefs):
-    """ref_idx_l0, te(v) (9.1): one INVERTED bit when exactly two
-    references are active, ue(v) otherwise."""
-    ridx = (1 - r.u(1)) if nrefs == 2 else r.ue()
-    if ridx >= nrefs:
-        raise ValueError("ref_idx_l0 out of range")
-    return ridx
-
-
-def _write_ref_idx(bw, nrefs, ridx):
-    if nrefs == 2:
-        bw.u(1 - ridx, 1)
-    else:
-        bw.ue(ridx)
-
-
-def _decode_mb_p16(r, plane, refs, mx, my, qp, nnz, cc, modes, mvs,
-                   nrefs=1):
-    """P_L0_16x16: ref_idx_l0 (te(v), only when >1 reference is active,
-    r7) + mvd + optional residual over the MC prediction."""
-    ridx = _read_ref_idx(r, nrefs) if nrefs > 1 else 0
+def _decode_mb_p16(r, plane, ref, mx, my, qp, nnz, cc, modes, mvs):
+    """P_L0_16x16: mvd + optional residual over the MC prediction."""
     mvp = mvs.mvp_16x16(mx, my)
     mvd = (r.se(), r.se())
     mv = (mvp[0] + mvd[0], mvp[1] + mvd[1])
-    pred = _interp_luma(refs[ridx], mx * 16, my * 16, mv[0], mv[1],
-                        wp=_wpl(mvs, ridx))
-    cpred = np.stack([cc.mc(ci, mx, my, mv, ridx=ridx,
-                            wp=_wpc(mvs, ridx, ci)) for ci in range(2)])
-    mvs.set_mb(mx, my, mv, ridx)
-    return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred,
-                         t8_shape=True)
+    pred = _interp_luma(ref, mx * 16, my * 16, mv[0], mv[1])
+    cpred = np.stack([cc.mc(ci, mx, my, mv) for ci in range(2)])
+    mvs.set_mb(mx, my, mv, 0)
+    return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred)
 
 
-def _decode_mb_p_part(r, mb_type, plane, refs, mx, my, qp, nnz, cc,
-                      modes, mvs, nrefs=1):
-    """P_L0_L0_16x8 / P_L0_L0_8x16 (mb_type 1 / 2): per-partition
-    ref_idx_l0 fields first (7.3.5.2 order, r7), then one mvd per
+def _decode_mb_p_part(r, mb_type, plane, ref, mx, my, qp, nnz, cc,
+                      modes, mvs):
+    """P_L0_L0_16x8 / P_L0_L0_8x16 (mb_type 1 / 2): one mvd per
     partition; the second partition's predictor sees the first's
     committed MVs (8.4.1.3)."""
     ptype = "16x8" if mb_type == 1 else "8x16"
-    ridxs = ([_read_ref_idx(r, nrefs) for _ in range(2)]
-             if nrefs > 1 else [0, 0])
     pred = np.zeros((16, 16), np.int32)
     cpred = np.zeros((2, 8, 8), np.int32)
     for idx, (ox, oy, w, h) in enumerate(_PART_GEOM[ptype]):
-        ridx = ridxs[idx]
         mvp = mvs.mvp_part(mx, my, ptype, idx)
         mvd = (r.se(), r.se())
         mv = (mvp[0] + mvd[0], mvp[1] + mvd[1])
         pred[oy:oy + h, ox:ox + w] = _interp_luma(
-            refs[ridx], mx * 16 + ox, my * 16 + oy, mv[0], mv[1], w, h,
-            wp=_wpl(mvs, ridx))
+            ref, mx * 16 + ox, my * 16 + oy, mv[0], mv[1], w, h)
         for ci in range(2):
             cpred[ci, oy // 2:(oy + h) // 2, ox // 2:(ox + w) // 2] = \
-                _interp_chroma(cc.refl[ridx][ci], mx * 8 + ox // 2,
+                _interp_chroma(cc.ref[ci], mx * 8 + ox // 2,
                                my * 8 + oy // 2, mv[0], mv[1],
-                               w // 2, h // 2, wp=_wpc(mvs, ridx, ci))
+                               w // 2, h // 2)
         mvs.set_rect(mx * 4 + ox // 4, my * 4 + oy // 4, w // 4, h // 4,
-                     mv, ridx)
-    return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred,
-                         t8_shape=True)
+                     mv, 0)
+    return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred)
 
 
-def _decode_mb_p8x8(r, plane, refs, mx, my, qp, nnz, cc, modes, mvs,
-                    nrefs=1, mb_type=3):
-    """P_8x8 / P_8x8ref0 (mb_type 3 / 4): per 8x8 sub-macroblock any of
-    the sub_mb_type shapes 8x8 / 8x4 / 4x8 / 4x4 (r7 — one mvd per
-    sub-partition, median predictors at sub-block granularity).
-    With multiple active references (r7), one ref_idx_l0 per 8x8 rides
-    between the sub_mb_type and mvd loops (7.3.5.2); P_8x8ref0 (4)
-    infers every ref_idx as 0."""
+def _decode_mb_p8x8(r, plane, ref, mx, my, qp, nnz, cc, modes, mvs):
+    """P_8x8 / P_8x8ref0 (mb_type 3 / 4, alike with one reference): per
+    8x8 sub-macroblock any of the sub_mb_type shapes 8x8 / 8x4 / 4x8 /
+    4x4 (r7 — one mvd per sub-partition, median predictors at sub-block
+    granularity)."""
     sts = []
     for _ in range(4):
         st = r.ue()
         if st > 3:
             raise ValueError("bad P sub_mb_type")
         sts.append(st)
-    ridxs = ([_read_ref_idx(r, nrefs) for _ in range(4)]
-             if nrefs > 1 and mb_type == 3 else [0] * 4)
     pred = np.zeros((16, 16), np.int32)
     cpred = np.zeros((2, 8, 8), np.int32)
-    for (ox8, oy8), st, ridx in zip(_P8_GEOM, sts, ridxs):
+    for (ox8, oy8), st in zip(_P8_GEOM, sts):
         for (ox, oy, w, h) in _P_SUB_GEOM[st]:
             gx, gy = ox8 + ox, oy8 + oy
             mvp = mvs.mvp_sub(mx * 4 + gx // 4, my * 4 + gy // 4, w // 4)
             mvd = (r.se(), r.se())
             mv = (mvp[0] + mvd[0], mvp[1] + mvd[1])
             pred[gy:gy + h, gx:gx + w] = _interp_luma(
-                refs[ridx], mx * 16 + gx, my * 16 + gy, mv[0], mv[1], w, h,
-                wp=_wpl(mvs, ridx))
+                ref, mx * 16 + gx, my * 16 + gy, mv[0], mv[1], w, h)
             for ci in range(2):
                 cpred[ci, gy // 2:(gy + h) // 2, gx // 2:(gx + w) // 2] = \
-                    _interp_chroma(cc.refl[ridx][ci], mx * 8 + gx // 2,
+                    _interp_chroma(cc.ref[ci], mx * 8 + gx // 2,
                                    my * 8 + gy // 2, mv[0], mv[1],
-                                   w // 2, h // 2, wp=_wpc(mvs, ridx, ci))
+                                   w // 2, h // 2)
             mvs.set_rect(mx * 4 + gx // 4, my * 4 + gy // 4,
-                         w // 4, h // 4, mv, ridx)
-    return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred,
-                         t8_shape=all(st == 0 for st in sts))
-
+                         w // 4, h // 4, mv, 0)
+    return _p_recon_tail(r, pred, plane, mx, my, qp, nnz, cc, modes, cpred)
 
 
 def _skip_mb(plane, ref, mx, my, nnz, cc, modes, mvs):
     mv = mvs.skip_mv(mx, my)
-    pred = _interp_luma(ref, mx * 16, my * 16, mv[0], mv[1],
-                        wp=_wpl(mvs, 0))  # P_SKIP is refIdx 0
+    pred = _interp_luma(ref, mx * 16, my * 16, mv[0], mv[1])
     plane[my * 16:my * 16 + 16, mx * 16:mx * 16 + 16] = \
         np.clip(pred, 0, 255).astype(np.uint8)
     for ci in range(2):
-        cc.store(ci, mx, my, cc.mc(ci, mx, my, mv, wp=_wpc(mvs, 0, ci)))
+        cc.store(ci, mx, my, cc.mc(ci, mx, my, mv))
     nnz[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = 0
     cc.nnz[:, my * 2:my * 2 + 2, mx * 2:mx * 2 + 2] = 0
     modes[my * 4:my * 4 + 4, mx * 4:mx * 4 + 4] = -1
@@ -3561,17 +2702,16 @@ def _parse_slice_header(r, sps, pps, nal_type, nal_ref_idc: int = 3) -> dict:
             r.se()
     if pps["redundant"]:
         r.ue()
-    nrefs = 1
-    wp_tab = None
     if is_p:
+        nrefs = pps["nref_default"]
         if r.u(1):  # num_ref_idx_active_override_flag
             nrefs = r.ue() + 1  # num_ref_idx_l0_active_minus1
-            if nrefs > 16:
-                raise ValueError("bad num_ref_idx_l0_active")
+        if nrefs > 1:
+            raise ValueError(
+                f"num_ref_idx_l0_active {nrefs}: multi-reference P slices "
+                "are out of decode scope")
         if r.u(1):  # ref_pic_list_modification_flag_l0
             raise ValueError("ref pic list modification unsupported")
-        if pps.get("weighted_pred"):
-            wp_tab = _parse_pred_weight_table(r, nrefs)  # explicit WP (r7)
     if nal_type == 5:
         r.u(1)  # no_output_of_prior_pics
         r.u(1)  # long_term_reference
@@ -3588,8 +2728,7 @@ def _parse_slice_header(r, sps, pps, nal_type, nal_ref_idc: int = 3) -> dict:
             off_a = 2 * r.se()  # single-slice pictures have no such edges
             off_b = 2 * r.se()
     return {"is_p": is_p, "qp": qp, "do_filter": do_filter,
-            "off_a": off_a, "off_b": off_b, "nrefs": nrefs,
-            "wp": wp_tab, "first_mb": first_mb}
+            "off_a": off_a, "off_b": off_b, "first_mb": first_mb}
 
 
 def _decode_islice(r, sps, pps, nal_type, ref: np.ndarray | None = None,
@@ -3607,44 +2746,27 @@ def _decode_islice(r, sps, pps, nal_type, ref: np.ndarray | None = None,
         raise ValueError("P slice without a decoded reference frame")
     qp = hdr["qp"]
     do_filter, off_a, off_b = hdr["do_filter"], hdr["off_a"], hdr["off_b"]
-    _set_t8(pps.get("t8x8", False))
     mbw, mbh = sps["mbw"], sps["mbh"]
-    # L0 reference list: `ref` is one FULL plane or a most-recent-first
-    # list (multi-reference P slices, r7)
-    refs = _ref_list(ref) if ref is not None else None
-    nrefs = hdr["nrefs"]
-    if is_p and nrefs > len(refs):
-        raise ValueError(
-            f"slice needs {nrefs} reference frames, got {len(refs)}")
     plane = np.zeros((mbh * 16, mbw * 16), np.uint8)
     plane_w = mbw * 16
     nnz = np.zeros((mbh * 4, mbw * 4), np.int32)
-    # pre-chroma (gray) reference pictures: mid-grey chroma, matching
-    # what their own decode produced
-    crefs = None
-    if is_p:
-        crefs = _ref_list(cref) if cref is not None else []
-        while len(crefs) < nrefs:
-            crefs.append(np.full((2, mbh * 8, mbw * 8), 128, np.uint8))
+    # a pre-chroma (gray) reference picture: mid-grey chroma, matching
+    # what its own decode produced
+    if is_p and cref is None:
+        cref = np.full((2, mbh * 8, mbw * 8), 128, np.uint8)
     r0, r1 = rows if rows is not None else (0, mbh)
     _set_slice_top(r0)
     if pic:  # shared picture state across this picture's slices (r7)
         plane, nnz = pic["plane"], pic["nnz"]
-        cc, modes, qp_map = pic["cc"], pic["modes"], pic["qp_map"]
-        mvs, t8m = pic["mvs"], pic["t8m"]
+        cc, modes, qp_map, mvs = pic["cc"], pic["modes"], pic["qp_map"], pic["mvs"]
     else:
-        cc = _ChromaState(mbw, mbh, ref=crefs)
+        cc = _ChromaState(mbw, mbh, ref=cref)
         modes = np.full((mbh * 4, mbw * 4), -1, np.int32)
         qp_map = np.zeros((mbh, mbw), np.int32)
         mvs = _MvState(mbw, mbh) if is_p else None
-        t8m = np.zeros((mbh, mbw), np.int32) \
-            if pps.get("t8x8") else None
         if pic is not None:
             pic.update(plane=plane, nnz=nnz, cc=cc, modes=modes,
-                       qp_map=qp_map, mvs=mvs, t8m=t8m)
-    _set_t8map(t8m)  # per-MB flags feed the 8.7 edge derivation
-    if is_p and hdr.get("wp") is not None:  # explicit WP (r7)
-        mvs.wp = _resolve_wp(hdr["wp"], nrefs)
+                       qp_map=qp_map, mvs=mvs)
     run_pending = None  # skip run not yet read for the next coded MB
     for my in range(r0, r1):
         for mx in range(mbw):
@@ -3653,25 +2775,25 @@ def _decode_islice(r, sps, pps, nal_type, ref: np.ndarray | None = None,
                     run_pending = r.ue()  # mb_skip_run
                 if run_pending > 0:
                     run_pending -= 1
-                    _skip_mb(plane, refs[0], mx, my, nnz, cc, modes, mvs)
+                    _skip_mb(plane, ref, mx, my, nnz, cc, modes, mvs)
                     qp_map[my, mx] = qp
                     continue
                 run_pending = None  # this position is the coded MB
             mb_type = r.ue()
             if is_p:
                 if mb_type == 0:  # P_L0_16x16
-                    qp = _decode_mb_p16(r, plane, refs, mx, my, qp, nnz,
-                                        cc, modes, mvs, nrefs)
+                    qp = _decode_mb_p16(r, plane, ref, mx, my, qp, nnz,
+                                        cc, modes, mvs)
                     qp_map[my, mx] = qp
                     continue
                 if mb_type in (1, 2):  # P_L0_L0_16x8 / P_L0_L0_8x16 (r6)
-                    qp = _decode_mb_p_part(r, mb_type, plane, refs, mx, my,
-                                           qp, nnz, cc, modes, mvs, nrefs)
+                    qp = _decode_mb_p_part(r, mb_type, plane, ref, mx, my,
+                                           qp, nnz, cc, modes, mvs)
                     qp_map[my, mx] = qp
                     continue
                 if mb_type in (3, 4):  # P_8x8 / P_8x8ref0 (r6)
-                    qp = _decode_mb_p8x8(r, plane, refs, mx, my, qp, nnz,
-                                         cc, modes, mvs, nrefs, mb_type)
+                    qp = _decode_mb_p8x8(r, plane, ref, mx, my, qp, nnz,
+                                         cc, modes, mvs)
                     qp_map[my, mx] = qp
                     continue
                 mb_type -= 5  # intra in a P slice
@@ -3703,18 +2825,17 @@ def _decode_islice(r, sps, pps, nal_type, ref: np.ndarray | None = None,
     _set_slice_top(0)
     if r1 < mbh:
         return None  # more slices of this picture follow (r7)
-    _set_t8map(None)
     if do_filter and int(qp_map.max()) + max(off_a, off_b, 0) >= 16:
         # intra/inter prediction consumed the unfiltered plane above; the
         # OUTPUT picture is the filtered one (8.7). Below qp 16 every
         # alpha threshold is 0 (I_PCM pictures: qp 0), so skip.
         if is_p:
             plane = _deblock_luma_inter(plane, qp_map, nnz, mvs, off_a,
-                                        off_b, t8=t8m)
+                                        off_b)
             cc.planes = _deblock_chroma(cc.planes, qp_map, off_a, off_b,
-                                        nnz=nnz, mvs=mvs, t8=t8m)
+                                        nnz=nnz, mvs=mvs)
         else:
-            plane = _deblock_luma(plane, qp_map, off_a, off_b, t8=t8m)
+            plane = _deblock_luma(plane, qp_map, off_a, off_b)
             cc.planes = _deblock_chroma(cc.planes, qp_map, off_a, off_b)
     # FULL (uncropped) planes: the DPB reference for motion compensation
     # is the decoded mb-aligned picture; cropping is display-only
@@ -3736,30 +2857,26 @@ def _peek_slice(sample: bytes, avcc: bytes) -> tuple[int, int]:
 
 def decode_samples(samples: list[bytes], avcc: bytes,
                    with_chroma: bool = False) -> list:
-    """Sequential GOP decode, in decode order. A sliding-window DPB
-    holds the last max_num_ref_frames (at least 1) REFERENCE pictures
-    (nal_ref_idc != 0); each P slice predicts from it most-recent-first
-    (multi-reference P slices read as many entries as their header's
-    num_ref_idx_l0_active, r7), and an IDR resets it (closed GOPs).
-    A non-reference picture is output but never predicted from.
+    """Sequential GOP decode, in decode order. The one reference is the
+    last REFERENCE picture (nal_ref_idc != 0); every P slice predicts
+    from it, and an IDR resets it (closed GOPs). A non-reference
+    picture is output but never predicted from.
     Returns cropped gray frames, or (gray, (2, h/2, w/2) chroma) pairs
-    when with_chroma=True (r7: chroma reconstructs for real). B slices
-    raise ValueError."""
+    when with_chroma=True (r7: chroma reconstructs for real). B slices,
+    and P slices with more than one active reference, raise
+    ValueError."""
     sps, _pps = _avcc_param_sets(avcc)
     h2, w2 = (sps["h"] + 1) // 2, (sps["w"] + 1) // 2
-    window = max(1, sps["max_refs"])
     out = []
-    dpb: list = []  # (luma FULL, chroma FULL) reference pictures, newest last
+    ref = (None, None)  # (luma FULL, chroma FULL) of the last reference
     for s in samples:
         typ, ref_idc = _peek_slice(s, avcc)
         if typ == 5:
-            dpb = []  # IDR: closed GOP
-        full = decode_sample(s, avcc,
-                             ref=[e[0] for e in reversed(dpb)] or None,
-                             cref=[e[1] for e in reversed(dpb)] or None,
+            ref = (None, None)  # IDR: closed GOP
+        full = decode_sample(s, avcc, ref=ref[0], cref=ref[1],
                              full_plane=True, with_chroma=True)
         if ref_idc:
-            dpb = (dpb + [full])[-window:]
+            ref = full
         y, c = full
         out.append((y[:sps["h"], :sps["w"]], c[:, :h2, :w2]) if with_chroma
                    else y[:sps["h"], :sps["w"]])
@@ -3773,14 +2890,16 @@ def decode_sample(sample: bytes, avcc: bytes, ref: np.ndarray | None = None,
     """Length-prefixed NAL sample + avcC -> gray frame (or (gray,
     chroma) when with_chroma=True). Decodes I_PCM, CAVLC intra
     (I_4x4 / I_16x16), and CAVLC P slices (P_SKIP +
-    P_L0_16x16 + 16x8/8x16 partitions, quarter-pel MC, `ref` =
-    previous FULL decoded plane or a most-recent-first list of them,
-    `cref` its chroma — use decode_samples for GOP streams). 4:2:0
-    chroma reconstructs for real since r7 (intra DC/H/V prediction,
-    2x2 Hadamard DC + AC residual, eighth-pel bilinear MC). P_8x8
-    decodes every sub_mb_type shape (8x8/8x4/4x8/4x4, r7).
-    Out-of-profile features (B slices, CABAC, high-profile tools beyond
-    the 8x8 transform) raise ValueError — the documented
+    P_L0_16x16 + 16x8/8x16 partitions, quarter-pel MC, `ref` = the
+    one reference: the previous reference picture's FULL decoded
+    plane, `cref` its chroma pair — use decode_samples for GOP
+    streams). 4:2:0 chroma reconstructs for real since r7 (intra
+    DC/H/V prediction, 2x2 Hadamard DC + AC residual, eighth-pel
+    bilinear MC). P_8x8 decodes every sub_mb_type shape
+    (8x8/8x4/4x8/4x4, r7).
+    Out-of-profile features (B slices, CABAC, the 8x8 transform and
+    the other High-profile tools, explicit weighted prediction, more
+    than one active L0 reference) raise ValueError — the documented
     well-formed-unsupported stub path in sample_frames."""
     sps, pps = _avcc_param_sets(avcc)
     length_size = (avcc[4] & 3) + 1

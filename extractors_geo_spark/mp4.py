@@ -511,22 +511,16 @@ def write_mp4_with_captions(frames: list, fps: int, captions: list[str],
 
 def write_h264_mp4(frames: list, fps: int = 10, qp: int | None = None,
                    gop: int | None = None,
-                   chromas: list | None = None, nrefs: int = 1,
-                   wp: bool = False,
-                   slice_rows: int | None = None,
-                   t8x8: bool = False) -> bytes:
+                   chromas: list | None = None,
+                   slice_rows: int | None = None) -> bytes:
     """Gray frames -> single-track 'avc1' MP4 whose samples are REAL
     H.264 (..h264.encode_frames): bit-exact I_PCM when qp is None,
     CAVLC at the given qp otherwise; gop=N emits a real IDR+P
-    group-of-pictures structure (motion-compensated P slices), and
-    gop=None codes every frame as an IDR. Samples are in display
-    order, so the track carries no ctts box. chromas= (one
-    (2, h/2, w/2) pair per frame) codes REAL 4:2:0 chroma residuals
-    (r7). nrefs=N (P GOPs, r7) encodes with a
-    sliding window of up to N L0 references and per-partition
-    ref_idx_l0. wp=True (P GOPs, r7) enables explicit weighted
-    prediction: per-slice least-squares gain/offset vs each reference,
-    so fades collapse to skip runs.
+    group-of-pictures structure (motion-compensated P slices, each
+    predicting from the previous picture), and gop=None codes every
+    frame as an IDR. Samples are in display order, so the track carries
+    no ctts box. chromas= (one (2, h/2, w/2) pair per frame) codes REAL
+    4:2:0 chroma residuals (r7).
     slice_rows=N (r7, I/P GOPs) emits MULTI-SLICE pictures: one slice
     NAL per N macroblock rows, the hardware-encoder/error-resilience
     shape — samples then carry several length-prefixed NALs."""
@@ -535,8 +529,7 @@ def write_h264_mp4(frames: list, fps: int = 10, qp: int | None = None,
     h, w = np.asarray(frames[0]).shape[:2]
     avcc, samples = _h264.encode_frames(frames, qp=qp, gop=gop,
                                         chromas=chromas,
-                                        nrefs=nrefs, wp=wp,
-                                        slice_rows=slice_rows, t8x8=t8x8)
+                                        slice_rows=slice_rows)
     return _assemble_mp4(samples, w, h, fps, fourcc=b"avc1", depth=24,
                          entry_extra=_box(b"avcC", avcc))
 

@@ -20,8 +20,6 @@ pycsw.extractor/pycswutils.py:89-109).
 
 from __future__ import annotations
 
-from functools import reduce
-
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -38,16 +36,23 @@ def _grid_n(res: int) -> int:
 
 
 # ---------------------------------------------------------------- Catalyst
+def _clamp(coord: Column, raw: Column, n: int) -> Column:
+    """`raw`, the grid index of `coord`, clamped to [0, n - 1]. A NULL
+    `coord` stays NULL: greatest/least skip NULLs, so unguarded it would
+    clamp to the grid edge. The guard tests `coord`, not `raw`, so that
+    inside a lambda (evaluated without common-subexpression reuse) the
+    index arithmetic still runs once."""
+    return F.when(coord.isNotNull(), F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1))).cast("long")
+
+
 def cell_ix(lon: Column, res: int) -> Column:
     n = _grid_n(res)
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1)).cast("long")
+    return _clamp(lon, F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)), n)
 
 
 def cell_iy(lat: Column, res: int) -> Column:
     n = _grid_n(res)
-    raw = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(n))
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(n - 1)).cast("long")
+    return _clamp(lat, F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(n)), n)
 
 
 def cell_id(lon: Column, lat: Column, res: int) -> Column:
@@ -59,11 +64,21 @@ def cell_id(lon: Column, lat: Column, res: int) -> Column:
     ).alias("cell")
 
 
+def cell_ixy_sql(lon_expr: str, lat_expr: str, res: int) -> tuple[str, str]:
+    """cell_ix and cell_iy as ANSI-SQL snippets for the DuckDB oracles.
+    LEAST/GREATEST skip NULLs there too, hence the CASE."""
+    n = _grid_n(res)
+
+    def clamp(raw: str) -> str:
+        return f"CASE WHEN {raw} IS NOT NULL THEN LEAST(GREATEST({raw}, 0), {n - 1}) END"
+
+    return (clamp(f"CAST(FLOOR(({lon_expr} + 180.0) / 360.0 * {n}) AS BIGINT)"),
+            clamp(f"CAST(FLOOR((90.0 - ({lat_expr})) / 180.0 * {n}) AS BIGINT)"))
+
+
 def cell_id_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     """The identical encoding as an ANSI-SQL snippet for the DuckDB oracle."""
-    n = _grid_n(res)
-    ix = f"LEAST(GREATEST(CAST(FLOOR(({lon_expr} + 180.0) / 360.0 * {n}) AS BIGINT), 0), {n - 1})"
-    iy = f"LEAST(GREATEST(CAST(FLOOR((90.0 - ({lat_expr})) / 180.0 * {n}) AS BIGINT), 0), {n - 1})"
+    ix, iy = cell_ixy_sql(lon_expr, lat_expr, res)
     return f"(CAST({res} AS BIGINT) * {RES_SHIFT} + {iy} * {Y_SHIFT} + {ix})"
 
 
@@ -91,12 +106,9 @@ def cover_cells(df: DataFrame, minx: str, miny: str, maxx: str, maxy: str, res: 
         n = F.lit(_grid_n(res)).cast("long")
         x0 = cell_ix(F.col(minx), res)
         ya, yb = cell_iy(F.col(maxy), res), cell_iy(F.col(miny), res)
-        # cell_ix/cell_iy clamp a NULL to the grid edge (greatest/least
-        # skip NULLs), so a NULL coordinate must empty the sequence here
-        known = reduce(Column.__and__, (F.col(c).isNotNull() for c in (minx, miny, maxx, maxy)))
         stage = [x0.alias("_x0"), F.least(ya, yb).alias("_y0"),
                  (F.pmod(cell_ix(F.col(maxx), res) - x0, n) + 1).alias("_nx"),
-                 F.when(known, F.abs(yb - ya) + 1).alias("_ny")]
+                 (F.abs(yb - ya) + 1).alias("_ny")]
         gen = F.explode(F.sequence(F.lit(0).cast("long"), F.col("_nx") * F.col("_ny") - 1)).alias("_k")
         cell = _cell_at(F.col("_y0") + F.expr("_k div _nx"),
                         F.pmod(F.col("_x0") + F.col("_k") % F.col("_nx"), n), res)

@@ -44,6 +44,25 @@ def test_sql_twin_matches(spark):
     assert got == exp
 
 
+def test_null_coordinate_has_no_cell(spark):
+    """A NULL lon or lat encodes to NULL, on Spark and in the DuckDB twin,
+    not to a cell at the grid edge; the non-NULL rows still match cell_np."""
+    pts = [(None, 10.0), (10.0, None), (None, None), (-124.7, 24.9),
+           (0.0, 0.0), (179.99, -89.99), (-500.0, 300.0)]
+    rows = [(i, *p) for i, p in enumerate(pts)]
+    df = spark.createDataFrame(rows, "i int, lon double, lat double")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE p(i INT, lon DOUBLE, lat DOUBLE)")
+    con.executemany("INSERT INTO p VALUES (?, ?, ?)", rows)
+    for res in (0, 4, 6):
+        got = [r[0] for r in df.orderBy("i").select(
+            cells.cell_id(F.col("lon"), F.col("lat"), res)).collect()]
+        sql = cells.cell_id_sql("lon", "lat", res)
+        twin = [r[0] for r in con.execute(f"SELECT {sql} FROM p ORDER BY i").fetchall()]
+        want = [None] * 3 + list(cells.cell_np([p[0] for p in pts[3:]], [p[1] for p in pts[3:]], res))
+        assert got == twin == want, res
+
+
 def _cover(spark, boxes, res):
     """cells.cover_cells of (minx, miny, maxx, maxy) boxes -> {box index:
     [cells]}; a box with no rows is absent."""

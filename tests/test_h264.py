@@ -122,56 +122,171 @@ def _respliced(rbsp: bytes, at: int, drop: int, write) -> bytes:
     return bytes(w.buf)
 
 
-def _poc_type0(avcc: bytes, samples: list) -> tuple[bytes, list]:
-    """The stream re-signalled with pic_order_cnt_type 0 and 8-bit
-    pic_order_cnt_lsb fields (2 per frame). The SPS swaps ue(2) for
-    ue(0) ue(4); each slice header gains u(8) after frame_num (and
-    idr_pic_id). 8 inserted bits keep every later byte alignment."""
+def _map_slices(sample: bytes, fn) -> bytes:
+    """The sample with every NAL's RBSP replaced by fn(rbsp, nal_type)."""
+    packed, pos = b"", 0
+    while pos < len(sample):
+        (ln,) = struct.unpack(">I", sample[pos:pos + 4])
+        nal, pos = sample[pos + 4:pos + 4 + ln], pos + 4 + ln
+        rbsp = fn(h264._ep_remove(nal[1:]), nal[0] & 0x1F)
+        nal = nal[:1] + h264._ep_insert(rbsp)
+        packed += struct.pack(">I", len(nal)) + nal
+    return packed
+
+
+def _poc_resignalled(avcc: bytes, samples: list, poc_type: int) -> tuple[bytes, list]:
+    """The stream re-signalled with pic_order_cnt_type 0 or 1. The SPS
+    swaps ue(2) for the type's fields: type 0 an 8-bit
+    log2_max_pic_order_cnt_lsb, type 1 delta_pic_order_always_zero_flag
+    0 and a one-entry cycle. Each slice header gains, after frame_num
+    (and idr_pic_id), an 8-bit pic_order_cnt_lsb (type 0) or an se(v)
+    delta_pic_order_cnt[0] (type 1)."""
     (sps_len,) = struct.unpack(">H", avcc[6:8])
     sps = h264._ep_remove(avcc[9:8 + sps_len])  # past the 0x67 NAL byte
     r = h264._BitReader(sps)
     r.u(24), r.ue(), r.ue()  # profile/flags/level, sps_id, log2_max_frame_num
     at = r.pos
     assert r.ue() == 2  # pic_order_cnt_type
-    nal = bytes([0x67]) + h264._ep_insert(
-        _respliced(sps, at, r.pos - at, lambda w: (w.ue(0), w.ue(4))))
-    avcc0 = avcc[:6] + struct.pack(">H", len(nal)) + nal + avcc[8 + sps_len:]
+
+    def sps_fields(w):
+        w.ue(poc_type)
+        if poc_type == 0:
+            w.ue(4)  # log2_max_pic_order_cnt_lsb_minus4
+        else:
+            w.u(0, 1)  # delta_pic_order_always_zero_flag
+            w.se(0), w.se(0)  # offset_for_non_ref_pic, _top_to_bottom_field
+            w.ue(1), w.se(2)  # num_ref_frames_in_pic_order_cnt_cycle, offset
+
+    nal = bytes([0x67]) + h264._ep_insert(_respliced(sps, at, r.pos - at, sps_fields))
+    avcc_t = avcc[:6] + struct.pack(">H", len(nal)) + nal + avcc[8 + sps_len:]
     out = []
     for i, sample in enumerate(samples):
-        packed, pos = b"", 0
-        while pos < len(sample):
-            (ln,) = struct.unpack(">I", sample[pos:pos + 4])
-            nal, pos = sample[pos + 4:pos + 4 + ln], pos + 4 + ln
-            rbsp = h264._ep_remove(nal[1:])
+        def field(rbsp, nal_type):
             r = h264._BitReader(rbsp)
             r.ue(), r.ue(), r.ue(), r.u(4)  # first_mb, type, pps_id, frame_num
-            if nal[0] & 0x1F == 5:
+            if nal_type == 5:
                 r.ue()  # idr_pic_id
-            nal = nal[:1] + h264._ep_insert(
-                _respliced(rbsp, r.pos, 0, lambda w: w.u(2 * i, 8)))
-            packed += struct.pack(">I", len(nal)) + nal
-        out.append(packed)
-    return avcc0, out
+            return _respliced(rbsp, r.pos, 0, lambda w: (
+                w.u(2 * i, 8) if poc_type == 0 else w.se(2 * i - 3)))
+
+        out.append(_map_slices(sample, field))
+    return avcc_t, out
 
 
 def test_poc_type0_stream_decodes_like_its_poc_type2_twin():
     """Streams from outside the program may signal picture order with
-    pic_order_cnt_type 0: the SPS carries log2_max_pic_order_cnt_lsb and
-    every slice header a pic_order_cnt_lsb, which the decoder reads past
-    (pictures decode in decode order). The same I/P stream rewritten that
-    way decodes to the same frames."""
+    pic_order_cnt_type 0 or 1: the SPS carries the type's fields and
+    every slice header a pic_order_cnt_lsb (type 0) or a
+    delta_pic_order_cnt[0] (type 1), which the decoder reads past
+    (pictures decode in decode order). The same I/P stream rewritten
+    either way decodes to the same frames."""
     rng = np.random.default_rng(11)
     base = rng.integers(0, 256, (32, 48), dtype=np.uint8)
     frames = [np.roll(base, 2 * k, axis=1) for k in range(6)]
     avcc, samples = h264.encode_frames(frames, qp=8, gop=4)
-    avcc0, samples0 = _poc_type0(avcc, samples)
-    sps, _ = h264._avcc_param_sets(avcc0)
-    assert (sps["poc_type"], sps["log2_poc"]) == (0, 8)
     want = h264.decode_samples(samples, avcc)
-    got = h264.decode_samples(samples0, avcc0)
-    assert len(got) == len(want) == 6
-    for a, b in zip(want, got):
+    for poc_type in (0, 1):
+        avcc_t, samples_t = _poc_resignalled(avcc, samples, poc_type)
+        sps, _ = h264._avcc_param_sets(avcc_t)
+        assert sps["poc_type"] == poc_type
+        assert (sps["log2_poc"], sps["delta_always_zero"]) == \
+            ((8, True) if poc_type == 0 else (0, False))
+        got = h264.decode_samples(samples_t, avcc_t)
+        assert len(got) == len(want) == 6
+        for a, b in zip(want, got):
+            np.testing.assert_array_equal(a, b)
+
+
+def _pps_respliced(avcc: bytes, skip, drop: int, write) -> bytes:
+    """The avcC with its PPS RBSP respliced (see _respliced) at the bit
+    where `skip` leaves a _BitReader over it."""
+    (sps_len,) = struct.unpack(">H", avcc[6:8])
+    at = 8 + sps_len  # numOfPictureParameterSets
+    (pps_len,) = struct.unpack(">H", avcc[at + 1:at + 3])
+    pps = h264._ep_remove(avcc[at + 4:at + 3 + pps_len])  # past the 0x68 byte
+    r = h264._BitReader(pps)
+    skip(r)
+    nal = bytes([0x68]) + h264._ep_insert(_respliced(pps, r.pos, drop, write))
+    return (avcc[:at + 1] + struct.pack(">H", len(nal)) + nal
+            + avcc[at + 3 + pps_len:])
+
+
+def _to_nref_default(r):
+    r.ue(), r.ue(), r.u(1), r.u(1), r.ue()  # ids, entropy, poc, slice groups
+
+
+def _to_weighted_pred(r):
+    _to_nref_default(r)
+    r.ue(), r.ue()  # num_ref_idx_l0/l1_default_active_minus1
+
+
+def _to_pps_end(r):
+    _to_weighted_pred(r)
+    r.u(1), r.u(2), r.se(), r.se(), r.se(), r.u(1), r.u(1), r.u(1)
+
+
+def _pgop():
+    rng = np.random.default_rng(13)
+    base = rng.integers(0, 256, (32, 48), dtype=np.uint8)
+    frames = [np.roll(base, 2 * k, axis=1) for k in range(3)]
+    return h264.encode_frames(frames, qp=8, gop=4)
+
+
+def test_pps_default_of_two_references_raises():
+    """A PPS whose num_ref_idx_l0_default_active is 2 gives every P slice
+    that does not override it two active references, which the decoder
+    does not keep: the P slice raises instead of decoding without its
+    ref_idx_l0 fields. The I picture alone still decodes."""
+    avcc, samples = _pgop()
+    avcc2 = _pps_respliced(avcc, _to_nref_default, 1, lambda w: w.ue(1))
+    assert h264._avcc_param_sets(avcc2)[1]["nref_default"] == 2
+    np.testing.assert_array_equal(h264.decode_samples(samples[:1], avcc2)[0],
+                                  h264.decode_samples(samples[:1], avcc)[0])
+    with pytest.raises(ValueError, match="num_ref_idx_l0_active 2"):
+        h264.decode_samples(samples, avcc2)
+
+
+def test_slice_override_of_two_references_raises():
+    """num_ref_idx_active_override_flag 1 with num_ref_idx_l0_active_minus1
+    1 in a P slice header raises ValueError."""
+    avcc, samples = _pgop()
+
+    def override(rbsp, _nal_type):
+        r = h264._BitReader(rbsp)
+        r.ue(), r.ue(), r.ue(), r.u(4)  # first_mb, type, pps_id, frame_num
+        return _respliced(rbsp, r.pos, 1, lambda w: (w.u(1, 1), w.ue(1)))
+
+    bad = [samples[0], _map_slices(samples[1], override), samples[2]]
+    with pytest.raises(ValueError, match="num_ref_idx_l0_active 2"):
+        h264.decode_samples(bad, avcc)
+
+
+def test_weighted_pred_flag_raises():
+    """A PPS with weighted_pred_flag 1 (explicit weighted prediction)
+    raises ValueError."""
+    avcc, samples = _pgop()
+    avcc_wp = _pps_respliced(avcc, _to_weighted_pred, 1, lambda w: w.u(1, 1))
+    with pytest.raises(ValueError, match="weighted prediction"):
+        h264.decode_samples(samples, avcc_wp)
+
+
+def test_transform_8x8_flag_raises():
+    """A PPS extension with transform_8x8_mode_flag 1 raises ValueError;
+    the same extension with the flag 0 parses, and the stream decodes to
+    the same frames."""
+    avcc, samples = _pgop()
+
+    def ext(flag):
+        # transform_8x8_mode_flag, pic_scaling_matrix_present_flag,
+        # second_chroma_qp_index_offset
+        return _pps_respliced(avcc, _to_pps_end, 0,
+                              lambda w: (w.u(flag, 1), w.u(0, 1), w.se(0)))
+
+    want = h264.decode_samples(samples, avcc)
+    for a, b in zip(want, h264.decode_samples(samples, ext(0))):
         np.testing.assert_array_equal(a, b)
+    with pytest.raises(ValueError, match="8x8 transform"):
+        h264.decode_samples(samples, ext(1))
 
 
 def test_cabac_flag_mismatch_is_errors_as_data():
@@ -674,252 +789,6 @@ def test_mvp_sub_parity_random_gop():
         assert float(np.abs(got.astype(int) - want.astype(int)).mean()) < 8.0
 
 
-# --------------------------------------------- r7: multi-reference P
-def _spy_ref_idx(monkeypatch) -> list:
-    """Record every ref_idx_l0 the decoder reads from the bitstream."""
-    seen = []
-    orig = h264._read_ref_idx
-
-    def spy(r, nrefs):
-        ridx = orig(r, nrefs)
-        seen.append(ridx)
-        return ridx
-
-    monkeypatch.setattr(h264, "_read_ref_idx", spy)
-    return seen
-
-
-def test_multiref_p_decode_equals_recon(monkeypatch):
-    """P slices with num_ref_idx_l0_active = 2: per-partition
-    ref_idx_l0 (te(v) in CAVLC),
-    decode == recon bit-exact, and ref 1 is genuinely chosen."""
-
-    rng = np.random.default_rng(21)
-    base = rng.integers(30, 225, (48, 64)).astype(np.uint8)
-    f0, f1, f2 = base, np.roll(base, 6, axis=1), np.roll(base, 1, axis=0)
-    ch = [rng.integers(0, 256, (2, 24, 32)).astype(np.uint8)
-          for _ in range(3)]
-    enc_i, enc_p = h264.encode_idr_cavlc, h264.encode_p_cavlc
-    avcc = h264.build_avcc(64, 48, deblock_ctrl=True,
-                           nrefs=2)
-    _, r0 = enc_i(f0, qp=10, full_recon=True, chroma=ch[0])
-    _, r1 = enc_p(f1, r0[0], qp=10, frame_num=1, chroma=ch[1],
-                  cref=r0[1])
-    rb2, r2 = enc_p(f2, [r1[0], r0[0]], qp=10, frame_num=2,
-                    chroma=ch[2], cref=[r1[1], r0[1]])
-    nal = bytes([0x41]) + h264._ep_insert(rb2)
-    sample = struct.pack(">I", len(nal)) + nal
-    seen = _spy_ref_idx(monkeypatch)
-    dy, dc = h264.decode_sample(sample, avcc, ref=[r1[0], r0[0]],
-                                cref=[r1[1], r0[1]], full_plane=True,
-                                with_chroma=True)
-    assert 1 in seen, "ref 1 never chosen"
-    assert np.array_equal(dy, r2[0]) and np.array_equal(dc, r2[1])
-    # decoding with fewer references than the header declares raises
-    with pytest.raises(ValueError, match="reference"):
-        h264.decode_sample(sample, avcc, ref=r1[0], full_plane=True)
-
-
-def test_multiref_p_partitioned_macroblocks(monkeypatch):
-    """Multi-ref ref_idx fields ride through partitioned P macroblocks
-    (16x8/8x16 and P_8x8 sub-shapes): content
-    with a moving seam forces partitions while the flickering
-    background forces ref 1."""
-
-    yy, xx = np.mgrid[0:48, 0:64]
-
-    def fr(f):
-        a = np.clip(128 + 90 * np.sin((xx + 4 * f) / 5), 0, 255)
-        b = np.clip(128 + 90 * np.sin((xx - 4 * f) / 5 + 1), 0, 255)
-        return np.where(yy < 24, a, b).astype(np.uint8)
-
-    frames = [fr(0), fr(2), fr(1)]  # frame 2 sits between its refs
-    enc_i, enc_p = h264.encode_idr_cavlc, h264.encode_p_cavlc
-    avcc = h264.build_avcc(64, 48, deblock_ctrl=True,
-                           nrefs=2)
-    _, r0 = enc_i(frames[0], qp=12, full_recon=True)
-    _, r1 = enc_p(frames[1], r0, qp=12, frame_num=1)
-    rb2, r2 = enc_p(frames[2], [r1, r0], qp=12, frame_num=2)
-    nal = bytes([0x41]) + h264._ep_insert(rb2)
-    sample = struct.pack(">I", len(nal)) + nal
-    seen = _spy_ref_idx(monkeypatch)
-    d = h264.decode_sample(sample, avcc, ref=[r1, r0],
-                           full_plane=True)
-    assert 1 in seen
-    assert np.array_equal(d, r2)
-
-
-def test_multiref_gop_end_to_end_flicker():
-    """encode_frames(nrefs=2) through decode_samples: flickering A/B/A
-    content makes the 2-back reference the perfect match — later P
-    slices collapse to skip-dominated slices (< 100 bytes) and the
-    whole clip decodes at >= 45 dB; nrefs=1 on
-    the same content stays large (the niche is real)."""
-    rng = np.random.default_rng(22)
-    a = rng.integers(30, 225, (48, 64)).astype(np.uint8)
-    b = rng.integers(30, 225, (48, 64)).astype(np.uint8)  # independent:
-    fl = [a, b, a, b, a, b]  # 1-back motion search cannot predict it
-    sz1 = None
-    avcc, samples = h264.encode_frames(fl, qp=8, gop=8,
-                                       nrefs=2)
-    tail = [len(s) for s in samples[2:]]
-    assert all(t < 100 for t in tail), tail
-    for d, f in zip(h264.decode_samples(samples, avcc), fl):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
-    sz1 = sum(len(s) for s in
-              h264.encode_frames(fl, qp=8, gop=8, nrefs=1)[1])
-    assert sz1 > 2 * sum(len(s) for s in samples)
-    # mp4 end-to-end via the real sample_frames decode path
-    data = mp4.write_h264_mp4(fl, fps=2, qp=8, gop=8, nrefs=2)
-    parsed = mp4.read_mjpeg_mp4(data)
-    decs = h264.decode_samples(list(parsed["frames"]), parsed["avcc"])
-    for d, f in zip(decs, fl):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
-
-
-def test_multiref_fuzz_never_escapes_valueerror():
-    """Corrupted multi-ref P samples decode or raise ValueError."""
-    import random
-
-    rng = np.random.default_rng(23)
-    a = rng.integers(30, 225, (32, 48)).astype(np.uint8)
-    fl = [a, np.roll(a, 5, axis=1), a, np.roll(a, 2, axis=0)]
-    avcc, samples = h264.encode_frames(fl, qp=10, gop=8,
-                                       nrefs=2)
-    random.seed(11)
-    for _ in range(40):
-        mut = list(samples)
-        k = random.randrange(1, len(mut))
-        s = bytearray(mut[k])
-        for _j in range(random.randint(1, 3)):
-            s[random.randrange(8, len(s))] = random.randrange(256)
-        mut[k] = bytes(s)
-        try:
-            h264.decode_samples(mut, avcc)
-        except ValueError:
-            pass
-
-
-# ------------------------------------------ r7: weighted prediction (P)
-def _fade_frames(n=5, shape=(48, 64), seed=7):
-    rng = np.random.default_rng(seed)
-    base = rng.integers(40, 200, shape).astype(np.uint8)
-    return [np.clip(base.astype(np.float64) * (1 - 0.12 * i) + 6 * i,
-                    0, 255).astype(np.uint8) for i in range(n)]
-
-
-def test_weighted_prediction_fade():
-    """encode_frames(wp=True) on a global fade: explicit per-slice
-    gain/offset makes the P slices collapse (< 0.6x the unweighted
-    stream) while the decode stays >= 45 dB."""
-    fl = _fade_frames()
-    avcc, samples = h264.encode_frames(fl, qp=8, gop=8,
-                                       wp=True)
-    for d, f in zip(h264.decode_samples(samples, avcc), fl):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
-    sz_wp = sum(len(s) for s in samples)
-    sz_no = sum(len(s) for s in
-                h264.encode_frames(fl, qp=8, gop=8)[1])
-    assert sz_wp < 0.6 * sz_no, (sz_wp, sz_no)
-
-
-def test_weighted_prediction_decode_equals_recon_with_chroma():
-    """Explicit WP slice (luma + per-component chroma weights): decode
-    == encoder recon BIT-EXACT, and the estimated
-    table is genuinely non-identity."""
-
-    rng = np.random.default_rng(9)
-    f0 = rng.integers(40, 200, (48, 64)).astype(np.uint8)
-    f1 = np.clip(f0.astype(np.float64) * 0.72 + 12, 0, 255).astype(np.uint8)
-    ch0 = rng.integers(30, 220, (2, 24, 32)).astype(np.uint8)
-    ch1 = np.clip(ch0.astype(np.float64) * 0.80 + 8, 0, 255).astype(np.uint8)
-    enc_i = h264.encode_idr_cavlc
-    enc_p = h264.encode_p_cavlc
-    avcc = h264.build_avcc(64, 48, deblock_ctrl=True,
-                           wp=True)
-    _, r0 = enc_i(f0, qp=10, full_recon=True, chroma=ch0)
-    tab = h264._estimate_wp(f1, [r0[0]], chroma=ch1, crefs=[r0[1]])
-    assert tab["luma"][0] is not None and tab["chroma"][0] is not None
-    rb1, r1 = enc_p(f1, r0[0], qp=10, frame_num=1, chroma=ch1,
-                    cref=r0[1], wp=tab)
-    nal = bytes([0x41]) + h264._ep_insert(rb1)
-    sample = struct.pack(">I", len(nal)) + nal
-    dy, dc = h264.decode_sample(sample, avcc, ref=r0[0], cref=r0[1],
-                                full_plane=True, with_chroma=True)
-    assert np.array_equal(dy, r1[0]) and np.array_equal(dc, r1[1])
-
-
-def test_weighted_prediction_multiref_per_ref_weights():
-    """nrefs=2 + wp=True: each reference gets its own weight entry and
-    the whole clip still decodes >= 45 dB (table-per-slice, te(v)
-    ref_idx + WP compose)."""
-    rng = np.random.default_rng(13)
-    a = rng.integers(40, 200, (48, 64)).astype(np.uint8)
-    fl = [a]
-    for i in range(1, 6):
-        fl.append(np.clip(a.astype(np.float64) * (1 - 0.1 * i) + 4 * i,
-                          0, 255).astype(np.uint8))
-    avcc, samples = h264.encode_frames(fl, qp=8, gop=8,
-                                       nrefs=2, wp=True)
-    for d, f in zip(h264.decode_samples(samples, avcc), fl):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
-
-
-def test_weighted_prediction_identity_table_roundtrip():
-    """_estimate_wp on an unchanged scene returns all-None entries; the
-    flag-0 table still rides the slice header and decodes bit-exact
-    (the PPS advertises weighted_pred for the whole stream)."""
-    rng = np.random.default_rng(15)
-    f0 = rng.integers(40, 200, (48, 64)).astype(np.uint8)
-    fl = [f0, f0.copy(), f0.copy()]
-    tab = h264._estimate_wp(f0, [f0.astype(np.uint8)])
-    assert tab["luma"] == [None] and tab["chroma"] == [None]
-    avcc, samples = h264.encode_frames(fl, qp=8, gop=8, wp=True)
-    plain = h264.encode_frames(fl, qp=8, gop=8)[1]
-    # identity tables cost ~1 byte per P slice over the unweighted stream
-    for s, p in zip(samples[1:], plain[1:]):
-        assert len(s) <= len(p) + 4, (len(s), len(p))
-    for d in h264.decode_samples(samples, avcc):
-        mse = float(np.mean((d.astype(np.float64) - f0) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
-
-
-def test_weighted_prediction_mp4_end_to_end():
-    """write_h264_mp4(wp=True) through the real MP4 sample decode."""
-    fl = _fade_frames(4)
-    data = mp4.write_h264_mp4(fl, fps=2, qp=8, gop=8, wp=True)
-    parsed = mp4.read_mjpeg_mp4(data)
-    for d, f in zip(h264.decode_samples(list(parsed["frames"]),
-                                        parsed["avcc"]), fl):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 45
-
-
-def test_weighted_prediction_fuzz_never_escapes_valueerror():
-    """Corrupted WP samples decode or raise ValueError only."""
-    import random
-
-    fl = _fade_frames(4, shape=(32, 48), seed=23)
-    avcc, samples = h264.encode_frames(fl, qp=10, gop=8,
-                                       wp=True)
-    random.seed(17)
-    for _ in range(40):
-        mut = list(samples)
-        k = random.randrange(1, len(mut))
-        s = bytearray(mut[k])
-        for _j in range(random.randint(1, 3)):
-            s[random.randrange(8, len(s))] = random.randrange(256)
-        mut[k] = bytes(s)
-        try:
-            h264.decode_samples(mut, avcc)
-        except ValueError:
-            pass
-
-
 # --------------------------------- r7: multi-slice pictures
 def _grad_frame(h=64, w=80, seed=17):
     rng = np.random.default_rng(seed)
@@ -1033,239 +902,3 @@ def test_multislice_layout_validation():
     bad = bytes(bw.buf) + rbsps[0][1:]
     with pytest.raises(ValueError):
         h264.decode_sample(pack([rbsps[0], bad]), avcc)
-
-
-# --------------------------------- r7: High-profile 8x8 transform (CAVLC)
-def test_t8x8_table_closure():
-    """The numerically-derived MF8/V8 quant tables close the 8x8
-    transform round trip to ~qstep accuracy at every qp%6 class, and
-    the derived dequant row 0 reproduces the ISO LevelScale8x8 values."""
-    assert sorted(set(h264._V8[0].flatten().tolist())) == \
-        [18, 19, 20, 24, 25, 32]
-    rng = np.random.default_rng(3)
-    for qp in (0, 8, 14, 22, 30, 38):
-        qstep = 0.625 * 2 ** (qp / 6)
-        for _ in range(20):
-            x = rng.integers(-255, 256, (8, 8)).astype(np.int64)
-            r = h264._inv8(h264._dequant8(h264._quant8(h264._fwd8(x), qp),
-                                          qp))
-            assert np.abs(r - x).max() <= max(2.0 * qstep, 8), qp
-
-
-def test_t8x8_p_gop_decode_equals_recon():
-    """High-profile (t8x8) IDR+P GOP: per-MB adaptive transform
-    selection, decode == encoder recon BIT-EXACT,
-    and the avcC carries profile 100 + the PPS transform_8x8_mode_flag."""
-
-    rng = np.random.default_rng(7)
-    yy, xx = np.mgrid[0:48, 0:64]
-    base = np.clip((xx * 3 + yy * 2) % 256
-                   + rng.integers(-25, 25, (48, 64)), 0, 255).astype(np.uint8)
-    frames = [np.roll(base, (2 * i, 3 * i), (0, 1)) for i in range(4)]
-    avcc = h264.build_avcc(64, 48, deblock_ctrl=True, t8x8=True)
-    sps, pps = h264._avcc_param_sets(avcc)
-    assert sps["profile"] == 100 and pps["t8x8"]
-    for qp in (6, 10, 16):
-        _, ref = h264.encode_idr_cavlc(frames[0], qp=qp, full_recon=True,
-                                       t8x8=True)
-        rb, rec = h264.encode_p_cavlc(frames[1], ref, qp=qp, t8x8=True)
-        nal = bytes([0x41]) + h264._ep_insert(rb)
-        dy = h264.decode_sample(struct.pack(">I", len(nal)) + nal, avcc,
-                                ref=ref, full_plane=True)
-        assert np.array_equal(dy, rec), qp
-    # whole-GOP PSNR through encode_frames/decode_samples, with chroma
-    cy, cx = np.mgrid[0:24, 0:32]
-    chromas = [np.stack([((cx * 9 + i) % 250).astype(np.uint8),
-                         ((cy * 5 + 2 * i) % 250).astype(np.uint8)])
-               for i in range(4)]
-    avcc2, samples = h264.encode_frames(frames, qp=8, gop=4, t8x8=True,
-                                        chromas=chromas)
-    for d, f in zip(h264.decode_samples(samples, avcc2), frames):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
-
-
-def test_t8x8_adaptive_selection_never_hurts():
-    """The per-MB coefficient-count gate: a t8x8 stream is never larger
-    than the 4x4-only one on smooth content, and stays decodable on
-    noisy content."""
-    yy, xx = np.mgrid[0:48, 0:64]
-    sm = [np.clip(((xx + yy + 3 * i) // 3), 0, 255).astype(np.uint8)
-          for i in range(4)]
-    a8, s8 = h264.encode_frames(sm, qp=4, gop=4, t8x8=True)
-    _, s4 = h264.encode_frames(sm, qp=4, gop=4)
-    assert sum(map(len, s8)) <= sum(map(len, s4))
-    dec = h264.decode_samples(s8, a8)
-    for d, f in zip(dec, sm):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
-
-
-def test_t8x8_composes_with_multislice_and_multiref():
-    rng = np.random.default_rng(15)
-    yy, xx = np.mgrid[0:48, 0:64]
-    base = np.clip((xx * 2 + yy) % 256
-                   + rng.integers(-15, 15, (48, 64)), 0, 255).astype(np.uint8)
-    frames = [np.roll(base, (i, 2 * i), (0, 1)) for i in range(5)]
-    avcc, samples = h264.encode_frames(frames, qp=8, gop=5, t8x8=True,
-                                       slice_rows=1, nrefs=2)
-    for d, f in zip(h264.decode_samples(samples, avcc), frames):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
-
-
-def test_t8x8_boundaries_and_fuzz():
-    import random
-
-    yy, xx = np.mgrid[0:48, 0:64]
-    frames = [np.clip((xx * 2 + yy + i) % 256, 0, 255).astype(np.uint8)
-              for i in range(3)]
-    avcc, samples = h264.encode_frames(frames, qp=8, gop=3, t8x8=True)
-    random.seed(51)
-    for _ in range(150):
-        mut = [bytearray(s) for s in samples]
-        tgt = mut[random.randrange(len(mut))]
-        for _k in range(random.randint(1, 6)):
-            tgt[random.randrange(4, len(tgt))] = random.randrange(256)
-        try:
-            h264.decode_samples([bytes(m) for m in mut], avcc)
-        except ValueError:
-            pass
-
-
-def test_t8x8_mp4_end_to_end():
-    rng = np.random.default_rng(19)
-    yy, xx = np.mgrid[0:48, 0:64]
-    base = np.clip((xx + 2 * yy) % 256
-                   + rng.integers(-10, 10, (48, 64)), 0, 255).astype(np.uint8)
-    fl = [np.roll(base, (i, 3 * i), (0, 1)) for i in range(4)]
-    data = mp4.write_h264_mp4(fl, fps=4, qp=8, gop=4, t8x8=True)
-    parsed = mp4.read_mjpeg_mp4(data)
-    for d, f in zip(h264.decode_samples(list(parsed["frames"]),
-                                        parsed["avcc"]), fl):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
-
-
-# --------------------------------- r7: High-profile I_8x8 intra (8.3.2.2)
-def test_i8x8_intra_decode_equals_recon_and_fires():
-    """I_8x8 intra prediction: the per-MB I_4x4 vs I_8x8 coefficient
-    race selects 8x8 on smooth/directional content, all nine 8.3.2.2
-    prediction modes get exercised across the sources, and decode ==
-    encoder recon BIT-EXACT at several QPs."""
-    fired = []
-    modes_seen = set()
-    o_cavlc, o_pred8 = h264._decode_mb_i8x8, h264._pred8
-
-    def s_cavlc(*a, **k):
-        fired.append(1)
-        return o_cavlc(*a, **k)
-
-    def s_pred8(plane, px, py, mode, *a):
-        modes_seen.add(mode)
-        return o_pred8(plane, px, py, mode, *a)
-
-    h264._decode_mb_i8x8 = s_cavlc
-    h264._pred8 = s_pred8
-    try:
-        rng = np.random.default_rng(5)
-        yy, xx = np.mgrid[0:48, 0:64]
-        srcs = [
-            np.clip((xx * 3 + yy * 2) % 256
-                    + rng.integers(-6, 6, (48, 64)), 0, 255).astype(np.uint8),
-            ((xx * 5) % 256).astype(np.uint8),
-            ((yy * 7) % 256).astype(np.uint8),
-            np.clip(np.abs(xx - yy) * 4 % 256, 0, 255).astype(np.uint8),
-            np.clip((np.minimum(xx, yy) * 6) % 256
-                    + rng.integers(-4, 4, (48, 64)), 0, 255).astype(np.uint8),
-        ]
-        for src in srcs:
-            for qp in (6, 10):
-                rb, rec = h264.encode_idr_cavlc(
-                    src, qp=qp, full_recon=True, t8x8=True)
-                av = h264.build_avcc(64, 48, deblock_ctrl=True,
-                                     t8x8=True)
-                nal = bytes([0x65]) + h264._ep_insert(rb)
-                dy = h264.decode_sample(
-                    struct.pack(">I", len(nal)) + nal, av,
-                    full_plane=True)
-                assert np.array_equal(dy, rec), qp
-    finally:
-        h264._decode_mb_i8x8 = o_cavlc
-        h264._pred8 = o_pred8
-    assert len(fired) > 10
-    assert modes_seen == set(range(9))
-
-
-def test_i8x8_intra_composes_with_multislice_gop():
-    """I_8x8 at slice boundaries: _mb_avail8 must gate above-row access
-    per slice. Full GOP with slice_rows=1."""
-    rng = np.random.default_rng(23)
-    yy, xx = np.mgrid[0:48, 0:64]
-    base = np.clip((xx * 3 + yy * 2) % 256
-                   + rng.integers(-8, 8, (48, 64)), 0, 255).astype(np.uint8)
-    frames = [np.roll(base, (i, 2 * i), (0, 1)) for i in range(4)]
-    avcc, samples = h264.encode_frames(frames, qp=8, gop=4, t8x8=True,
-                                       slice_rows=1)
-    for d, f in zip(h264.decode_samples(samples, avcc), frames):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 40
-
-
-def test_i8x8_gray_fixture_bits_unchanged():
-    """The DC-first strict-< mode search keeps flat sources on the DC
-    mode everywhere and I_16x16 handles them, so a flat t8x8 stream
-    never selects I_8x8 and non-t8x8 streams are byte-identical to the
-    pre-I8x8 encoder (the flag simply stays 0)."""
-    flat = np.full((32, 32), 77, np.uint8)
-    rb_t8, _ = h264.encode_idr_cavlc(flat, qp=10, t8x8=True)
-    rb, _ = h264.encode_idr_cavlc(flat, qp=10)
-    # flat content: every MB is I_16x16 -> identical bits either way
-    assert rb_t8 == rb
-
-
-def test_t8x8_with_inloop_deblocking_decode_equals_recon():
-    """late r7: 8.7 deblocking composed with the 8x8 transform — inside
-    an 8x8-transformed MB the internal 4x4 edges (offsets 4/12) are not
-    filtered and bS-2 'coded' status is per 8x8 block. decode ==
-    encoder recon BIT-EXACT at filter-active QPs,
-    the filter demonstrably fires, and 8x8 MBs demonstrably exist."""
-
-    rng = np.random.default_rng(29)
-    yy, xx = np.mgrid[0:48, 0:64]
-    base = np.clip((xx * 3 + yy * 2) % 256
-                   + rng.integers(-25, 25, (48, 64)), 0, 255).astype(np.uint8)
-    frames = [np.roll(base, (2 * i, 3 * i), (0, 1)) for i in range(3)]
-    enc_i = h264.encode_idr_cavlc
-    enc_p = h264.encode_p_cavlc
-    for qp in (20, 28):
-        _, ref = enc_i(frames[0], qp=qp, full_recon=True, t8x8=True,
-                       deblock=True)
-        _, ref_nof = enc_i(frames[0], qp=qp, full_recon=True,
-                           t8x8=True)
-        assert not np.array_equal(ref, ref_nof), qp  # filter on
-        t8_marks = []
-        orig_mark = h264._mark_t8
-
-        def spy(mx, my):
-            t8_marks.append((mx, my))
-            orig_mark(mx, my)
-
-        h264._mark_t8 = spy
-        try:
-            rb, rec = enc_p(frames[1], ref, qp=qp, t8x8=True,
-                            deblock=True)
-        finally:
-            h264._mark_t8 = orig_mark
-        assert t8_marks, qp  # 8x8 MBs present under the filter
-        av = h264.build_avcc(64, 48, deblock_ctrl=True, t8x8=True)
-        nal = bytes([0x41]) + h264._ep_insert(rb)
-        dy = h264.decode_sample(struct.pack(">I", len(nal)) + nal, av,
-                                ref=ref, full_plane=True)
-        assert np.array_equal(dy, rec), qp
-    # whole-GOP end-to-end with the filter
-    avcc, samples = h264.encode_frames(frames, qp=20, gop=3, t8x8=True,
-                                       deblock=True)
-    for d, f in zip(h264.decode_samples(samples, avcc), frames):
-        mse = float(np.mean((d.astype(np.float64) - f) ** 2))
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-9)) >= 28

@@ -1,6 +1,8 @@
 """Local stand-in for the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() twin on DuckDB over the same parquet,
 compare row count + sorted column names + order-insensitive value hash.
+First prints one `contract:` line with the sha256 digests of the driver
+contract, so two checkouts can be compared by diffing that line.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 """
@@ -8,6 +10,7 @@ Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import sys
 import time
@@ -43,7 +46,21 @@ def value_hash(rows, cols):
     return h.hexdigest()[:16]
 
 
+def contract_digests() -> str:
+    """sha256 of DRIVER_WINDOW (as a JSON list), of oracle_sql() (JSON,
+    sorted keys) and of every SQL_* text (each hashed, then the
+    name -> digest map hashed as JSON, sorted keys)."""
+    def sha(text):
+        return hashlib.sha256(text.encode()).hexdigest()
+
+    sql = {k: sha(v) for k, v in vars(E).items() if k.startswith("SQL_") and isinstance(v, str)}
+    return (f"contract: DRIVER_WINDOW {sha(json.dumps(list(E.DRIVER_WINDOW)))}"
+            f" oracle_sql {sha(json.dumps(E.oracle_sql(), sort_keys=True))}"
+            f" SQL_*[{len(sql)}] {sha(json.dumps(sql, sort_keys=True))}")
+
+
 def main():
+    print(contract_digests(), flush=True)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
     spark = get_spark(app_name="oracle_check", master="local[16]", shuffle_partitions=16)
