@@ -363,7 +363,7 @@ def q_knn(spark, sf_dir):
     p = _points(spark, sf_dir)
     q = local_table(spark, _KNN_QUERIES, _KNN_SCHEMA)
     out = knn.knn_join(q, p, k=3, res=7, ring=1, t_id="point_id",
-                       q_size_hint=len(_KNN_QUERIES))
+                       broadcast_queries=True)
     return out.select("query_id", "point_id", "rank")
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from . import tiff
 from .functions import geo as _geo
+from .plans import planner
 
 SEED = 42
 CONUS = (-124.731422, 24.955967, -66.969849, 49.371735)  # states.zip bbox
@@ -286,47 +287,17 @@ def make_polygons(nx: int = 10, ny: int = 5) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def _poly_gen_stats(pdf: pd.DataFrame) -> dict:
-    """Generation-time planner stats for a generated polygon layer (r8,
-    the ingest-time-stats idea of plans/stats.py applied to the in-memory
-    datagen path): computed driver-side from the pandas frame the layer is
-    built from — ZERO Spark probe jobs when pip_join later plans a join
-    against this layer. `all_rect` replicates planner.all_rectangles
-    (closed 5-point ring, axis-parallel edges, vertices on the bbox, at
-    most one ring in `ring_lens`);
-    `bboxes` lets pip_join count exploded cover cells for ITS resolution
-    with pure arithmetic."""
-    all_rect = True
-    lens = pdf["ring_lens"] if "ring_lens" in pdf.columns else [None] * len(pdf)
-    for xs, ys, mnx, mny, mxx, mxy, rl in zip(pdf["xs"], pdf["ys"], pdf["minx"],
-                                              pdf["miny"], pdf["maxx"], pdf["maxy"], lens):
-        if rl is not None and len(rl) > 1:  # multi-ring: holes need the ray cast
-            all_rect = False
-            break
-        if len(xs) != 5 or xs[0] != xs[4] or ys[0] != ys[4]:
-            all_rect = False
-            break
-        if min(xs) != mnx or max(xs) != mxx or min(ys) != mny or max(ys) != mxy:
-            all_rect = False
-            break
-        if not all((xs[i] == xs[i + 1]) != (ys[i] == ys[i + 1]) for i in range(4)):
-            all_rect = False
-            break
-    return {
-        "all_rect": all_rect,
-        "bboxes": [(float(a), float(b), float(c), float(d))
-                   for a, b, c, d in zip(pdf["minx"], pdf["miny"],
-                                         pdf["maxx"], pdf["maxy"])],
-    }
-
-
 def polygons_df(spark: SparkSession, nx: int = 10, ny: int = 5) -> DataFrame:
     pdf = make_polygons(nx, ny)
     df = spark.createDataFrame(pdf, POLY_SCHEMA)
     # generation-time stats ride the DataFrame object so pip_join's
     # planner decisions (exact refine, broadcast, cover cardinality) are
-    # driver-side lookups instead of probe jobs (~0.3 s/pipeline run)
-    df._egs_poly_stats = _poly_gen_stats(pdf)
+    # driver-side lookups instead of probe jobs (~0.3 s/pipeline run);
+    # `bboxes` is (minx, miny, maxx, maxy) per row, for cells.cover_cells_n
+    df._egs_poly_stats = {
+        "all_rect": planner.all_rectangles_pdf(pdf),
+        "bboxes": pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64),
+    }
     return df
 
 

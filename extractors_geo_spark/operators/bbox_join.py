@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..exprcache import memo_col
+from ..plans import planner
 from . import cells
 
 
@@ -71,7 +72,6 @@ def bbox_join(
     l_cols: tuple[str, str, str, str] = ("minx", "miny", "maxx", "maxy"),
     r_cols: tuple[str, str, str, str] = ("minx", "miny", "maxx", "maxy"),
     broadcast_right: bool | None = None,
-    r_size_hint: int | None = None,
 ) -> DataFrame:
     """One row per DISJOINT INTERSECTION RECTANGLE of a (left, right)
     pair — exactly one row for ordinary pairs; an antimeridian-wrapped box
@@ -79,16 +79,15 @@ def bbox_join(
     rectangle). Touch-only boundaries count as intersecting (closed
     boxes, >= / <=), matching SQL BETWEEN semantics so the oracle is
     declarative. Consumers that need pair-level uniqueness over wrapped
-    data should dropDuplicates([l_id, r_id])."""
+    data should dropDuplicates([l_id, r_id]).
+
+    broadcast_right comes from the caller, or else from one bounded probe
+    of the right side: broadcast it when it has at most
+    planner.BBOX_BROADCAST_ROWS boxes."""
     l_cols, r_cols = tuple(l_cols), tuple(r_cols)
     if broadcast_right is None:
-        # probe BEFORE the cover explode (VERDICT r01 #6); assume a modest
-        # cover fan-out when budgeting the broadcast. r_size_hint (known
-        # right-side count) makes the decision free.
-        if r_size_hint is not None:
-            broadcast_right = r_size_hint <= 250_000
-        else:
-            broadcast_right = right.limit(250_001).count() <= 250_000
+        # probe BEFORE the cover explode (VERDICT r01 #6)
+        broadcast_right = planner.should_broadcast(right, planner.BBOX_BROADCAST_ROWS)
     l = _side(left, l_id, l_cols, "l_", res)
     r = _side(right, r_id, r_cols, "r_", res)
     joined = l.join(F.broadcast(r) if broadcast_right else r, "cell")

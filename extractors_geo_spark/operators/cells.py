@@ -89,10 +89,11 @@ def cover_cells(df: DataFrame, minx: str, miny: str, maxx: str, maxy: str, res: 
     name; a NULL coordinate gives no rows. Cardinality is bounded by the
     caller's choice of res (adaptive splitting handles the hot ones).
 
-    Antimeridian: a box given as minx > maxx (judged on the clamped cell
-    columns) wraps across the ±180 meridian, covering columns [x0, n-1]
-    and [0, x1]. Rows span the two latitudes' cell rows in either order,
-    so a box given as miny > maxy covers the same rows as its flip.
+    Antimeridian: a box given as minx > maxx wraps across the ±180
+    meridian, covering columns [x0, n-1] and [0, x1] — every column when
+    both fall in one. Rows span the two latitudes' cell rows in either
+    order, so a box given as miny > maxy covers the same rows as its flip.
+    cover_cells_n counts the same cells with numpy.
 
     Three plan steps, none with a lambda (higher-order functions run
     interpreted): a projection stages the grid origin and size
@@ -107,7 +108,7 @@ def cover_cells(df: DataFrame, minx: str, miny: str, maxx: str, maxy: str, res: 
         x0 = cell_ix(F.col(minx), res)
         ya, yb = cell_iy(F.col(maxy), res), cell_iy(F.col(miny), res)
         stage = [x0.alias("_x0"), F.least(ya, yb).alias("_y0"),
-                 (F.pmod(cell_ix(F.col(maxx), res) - x0, n) + 1).alias("_nx"),
+                 _cover_nx(F.col(minx), F.col(maxx), res).alias("_nx"),
                  (F.abs(yb - ya) + 1).alias("_ny")]
         gen = F.explode(F.sequence(F.lit(0).cast("long"), F.col("_nx") * F.col("_ny") - 1)).alias("_k")
         cell = _cell_at(F.col("_y0") + F.expr("_k div _nx"),
@@ -138,16 +139,23 @@ def cover_bbox_by_row(minx: Column, miny: Column, maxx: Column, maxy: Column, re
             _cell_at(r["iy"], ix, res).alias("cell"), r["value"].alias("value")))))
 
 
-def _cover_ixs(minx: Column, maxx: Column, res: int) -> Column:
+def _cover_nx(minx: Column, maxx: Column, res: int) -> Column:
+    """The number of cell columns a box covers, from column cell_ix(minx)
+    on. The wrap is decided on the raw minx > maxx: a wrapped box whose
+    two longitudes share a column covers all n columns."""
     n = _grid_n(res)
     x0, x1 = cell_ix(minx, res), cell_ix(maxx, res)
+    return F.when(minx > maxx, F.least(F.lit(n) - x0 + x1 + 1, F.lit(n))).otherwise(x1 - x0 + 1)
+
+
+def _cover_ixs(minx: Column, maxx: Column, res: int) -> Column:
     # wrap via a MODULAR index sequence, never a when()-guarded array: a
     # conditional array as a higher-order-function input drops the whole
     # expression out of codegen (measured 12x on the ngram index)
-    nx = F.when(x0 <= x1, x1 - x0 + 1).otherwise(F.lit(n) - x0 + x1 + 1).cast("long")
+    n = F.lit(_grid_n(res)).cast("long")
     return F.transform(
-        F.sequence(F.lit(0).cast("long"), nx - 1),
-        lambda i: F.pmod(x0 + i, F.lit(n).cast("long")),
+        F.sequence(F.lit(0).cast("long"), _cover_nx(minx, maxx, res) - 1),
+        lambda i: F.pmod(cell_ix(minx, res) + i, n),
     )
 
 
@@ -199,6 +207,23 @@ def cell_np(lon, lat, res: int):
     return res * RES_SHIFT + iy * Y_SHIFT + ix
 
 
+def cover_cells_n(minx, miny, maxx, maxy, res: int):
+    """The number of cells cover_cells gives each box (scalars or
+    arrays): the same clamped columns and rows, and the same wrap."""
+    n = _grid_n(res)
+    minx, maxx = np.asarray(minx, np.float64), np.asarray(maxx, np.float64)
+
+    def ix(lon):
+        return np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
+
+    def iy(lat):
+        return np.clip(np.floor((90.0 - np.asarray(lat, np.float64)) / 180.0 * n), 0, n - 1).astype(np.int64)
+
+    x0, x1 = ix(minx), ix(maxx)
+    nx = np.where(minx > maxx, np.minimum(n - x0 + x1 + 1, n), x1 - x0 + 1)
+    return nx * (np.abs(iy(miny) - iy(maxy)) + 1)
+
+
 def cell_decode_np(cell):
     cell = np.asarray(cell, np.int64)
     res = cell // RES_SHIFT
@@ -230,19 +255,20 @@ def tile_xyz(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
     """Web-Mercator slippy-map tile (x, y) at zoom z (OSM convention) —
     the engine's z/x/y addressing for the tile pyramid (SURVEY.md T1)."""
     n = 1 << z
-    tx = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)), F.lit(0)), F.lit(n - 1)).cast("long")
+    tx = _clamp(lon, F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)), n)
     lat_r = F.radians(lat)
     merc = F.log(F.tan(lat_r) + F.lit(1.0) / F.cos(lat_r))
-    ty = F.least(
-        F.greatest(F.floor((F.lit(1.0) - merc / F.lit(np.pi)) / F.lit(2.0) * F.lit(n)), F.lit(0)),
-        F.lit(n - 1),
-    ).cast("long")
+    ty = _clamp(lat, F.floor((F.lit(1.0) - merc / F.lit(np.pi)) / F.lit(2.0) * F.lit(n)), n)
     return tx, ty
 
 
 def tile_xyz_sql(lon_expr: str, lat_expr: str, z: int) -> tuple[str, str]:
+    """tile_xyz as ANSI-SQL snippets, NULL-in/NULL-out like cell_ixy_sql."""
     n = 1 << z
-    tx = f"LEAST(GREATEST(CAST(FLOOR(({lon_expr} + 180.0) / 360.0 * {n}) AS BIGINT), 0), {n - 1})"
+
+    def clamp(raw: str) -> str:
+        return f"CASE WHEN {raw} IS NOT NULL THEN LEAST(GREATEST({raw}, 0), {n - 1}) END"
+
     merc = f"LN(TAN(RADIANS({lat_expr})) + 1.0 / COS(RADIANS({lat_expr})))"
-    ty = f"LEAST(GREATEST(CAST(FLOOR((1.0 - {merc} / PI()) / 2.0 * {n}) AS BIGINT), 0), {n - 1})"
-    return tx, ty
+    return (clamp(f"CAST(FLOOR(({lon_expr} + 180.0) / 360.0 * {n}) AS BIGINT)"),
+            clamp(f"CAST(FLOOR((1.0 - {merc} / PI()) / 2.0 * {n}) AS BIGINT)"))

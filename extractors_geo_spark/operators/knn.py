@@ -23,6 +23,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans import planner
 from . import cells
 
 
@@ -93,13 +94,13 @@ def knn_join(
     t_lat: str = "lat",
     t_cols: tuple[str, ...] = (),
     broadcast_queries: bool | None = None,
-    q_size_hint: int | None = None,
     ensure_k: bool = False,
     min_res: int = 0,
 ) -> DataFrame:
     """Top-k targets per query. Output: (query_id, image_id, dist_sq, rank,
-    *t_cols). `q_size_hint` (known query count) makes the broadcast
-    decision free (no probe job).
+    *t_cols). broadcast_queries comes from the caller, or else from one
+    bounded probe of the query side: broadcast it when it has at most
+    planner.KNN_BROADCAST_ROWS // (2*ring+1)**2 rows (its ring cells).
 
     ``ensure_k=True``: after the main pass, queries with fewer than k
     neighbors (sparse regions) escalate through coarser resolutions
@@ -115,15 +116,11 @@ def knn_join(
     q_base = queries.select(
         F.col(q_id), F.col(q_lon).alias("_qlon"), F.col(q_lat).alias("_qlat")
     )
-    ring_rows = (2 * ring + 1) ** 2
-    cap = 1_000_000 // ring_rows
+    cap = planner.KNN_BROADCAST_ROWS // (2 * ring + 1) ** 2
     if broadcast_queries is None:
         # size probe BEFORE the (2k+1)^2 ring explode — counting after it
         # costs a ~9x-inflated extra job on the hot path (VERDICT r01 #6)
-        if q_size_hint is not None:
-            broadcast_queries = q_size_hint <= cap
-        else:
-            broadcast_queries = q_base.limit(cap + 1).count() <= cap
+        broadcast_queries = planner.should_broadcast(q_base, cap)
     t_sel = targets.select(
         F.col(t_id), F.col(t_lon).alias("_tlon"), F.col(t_lat).alias("_tlat"), *t_cols
     )

@@ -12,7 +12,7 @@ records (pycsw.extractor/pycswutils.py:89-109) with a native two-phase plan:
            to those meeting the cell's latitude band) — no Python stage,
            so the candidate pairs' vertex arrays never cross to a worker
 
-Physical strategy is chosen by plans.planner.choose_pip_strategy:
+Physical strategy is chosen by pip_join's planner decisions (plans/planner.py):
   * broadcast  — polygon side small (the common dims-vs-facts shape; the
     states layer is 49 rows): exploded polygon-cells are broadcast, the
     point side never shuffles AT ALL.
@@ -23,11 +23,10 @@ Physical strategy is chosen by plans.planner.choose_pip_strategy:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans import planner
 from . import cells
 
 DEFAULT_RES = 6  # 64x64 world grid ≈ 0.9 deg cells at CONUS; tune per layer
@@ -49,24 +48,6 @@ def tag_point_cells(points: DataFrame, lon: str = "lon", lat: str = "lat", res: 
     cell = _memo_col(("point_cell", lon, lat, res),
                      lambda: cells.cell_id(F.col(lon), F.col(lat), res))
     return points.withColumn("cell", cell)
-
-
-def _cover_cells_n(minx: float, miny: float, maxx: float, maxy: float, res: int) -> int:
-    """Exact cardinality of cells.cover_cells — the same clamped floor
-    arithmetic, antimeridian wrap (minx > maxx) and row span (either
-    order of miny, maxy), evaluated driver-side."""
-    n = 1 << res
-
-    def _ix(lon):
-        return min(max(math.floor((lon + 180.0) / 360.0 * n), 0), n - 1)
-
-    def _iy(lat):
-        return min(max(math.floor((90.0 - lat) / 180.0 * n), 0), n - 1)
-
-    x0, x1 = _ix(minx), _ix(maxx)
-    nx = x1 - x0 + 1 if x0 <= x1 else n - x0 + x1 + 1
-    ny = abs(_iy(miny) - _iy(maxy)) + 1
-    return nx * ny
 
 
 def _cells_with_edges(res: int, has_lens: bool) -> Column:
@@ -144,50 +125,31 @@ def pip_join(
     poly_cols: tuple[str, ...] = ("poly_id", "name"),
     exact: bool | str = "auto",
     salt: int | None = None,
-    poly_cells_hint: int | None = None,
-    cell_stats: dict | None = None,
-    poly_stats: dict | None = None,
 ) -> DataFrame:
     """Return one row per (point, containing polygon).
 
-    broadcast_polys=None lets the planner decide from the polygon count.
-    exact='auto' (default) drops the per-edge ray cast when the layer
-    is all axis-aligned rectangles (bbox refine is then already exact) —
-    a plan rewrite, not an approximation. Pass True/False to force.
-    `salt` (partitioned path only) spreads each hot cell over `salt`
-    shuffle keys; the polygon side is duplicated per salt value, the point
-    side picks pmod(phash-or-hash, salt). `poly_cells_hint` (expected
-    exploded polygon-cell rows) skips the broadcast-probe job entirely.
-
-    `cell_stats` / `poly_stats` (r7): ingest-time stats from
-    plans.stats.stored_cell_stats / stored_poly_stats. With both
-    provided, EVERY planner decision (exact, broadcast, salt) is a
-    driver-side lookup — the plan builds with zero probe jobs; the
-    probes remain the fallback for stat-less inputs. Stats taken at a
-    finer res than the join's scale `max_cell_n` by 4 per level; a
-    `poly_cells` taken at a coarser res is not a bound and is ignored."""
-    from ..plans import planner
-
-    if poly_stats is not None:
-        if exact == "auto":
-            exact = not poly_stats["all_rect"]
-        # a cover at a finer res has at least as many cells as at this
-        # one, so only a count at res or finer bounds the broadcast side
-        if poly_cells_hint is None and poly_stats["res"] >= res:
-            poly_cells_hint = poly_stats["poly_cells"]
+    Each planner decision comes from one of three sources, in this order:
+    the caller's argument; the generation-time stats that
+    datagen.polygons_df attaches to its DataFrame (pure driver
+    arithmetic, no Spark job); or one bounded probe (plans.planner).
+    broadcast_polys=None broadcasts the exploded polygon cells when they
+    number at most planner.PIP_BROADCAST_ROWS. exact='auto' (default)
+    drops the per-edge ray cast when the layer is all axis-aligned
+    rectangles (bbox refine is then already exact) — a plan rewrite, not
+    an approximation. Pass True/False to force. `salt` (partitioned path
+    only) spreads each hot cell over `salt` shuffle keys; the polygon
+    side is duplicated per salt value, the point side picks
+    pmod(phash-or-hash, salt)."""
     # generation-time stats riding the DataFrame (datagen.polygons_df, r8):
-    # same contract as poly_stats, but the cover cardinality is counted
-    # here for THIS res from the stored bboxes — pure driver arithmetic,
-    # zero probe jobs (measured ~0.3 s/plan on the flagship pipeline)
+    # the cover cardinality is counted for THIS res from the stored bboxes
+    # — zero probe jobs (measured ~0.3 s/plan on the flagship pipeline)
     gen_stats = getattr(polygons, "_egs_poly_stats", None)
     if gen_stats is not None:
         if exact == "auto":
             exact = not gen_stats["all_rect"]
-        if poly_cells_hint is None:
-            poly_cells_hint = sum(
-                _cover_cells_n(mnx, mny, mxx, mxy, res)
-                for mnx, mny, mxx, mxy in gen_stats["bboxes"]
-            )
+        if broadcast_polys is None:
+            n = int(cells.cover_cells_n(*gen_stats["bboxes"].T, res).sum())
+            broadcast_polys = n <= planner.PIP_BROADCAST_ROWS
     if exact == "auto":
         exact = not planner.all_rectangles(polygons)
     # single select per side (r8): select-then-withColumn costs one extra
@@ -205,16 +167,7 @@ def pip_join(
         pcs = cells.cover_cells(polygons, "minx", "miny", "maxx", "maxy", res, [*poly_cols, *geom_cols])
 
     if broadcast_polys is None:
-        # poly_cells_hint (expected EXPLODED polygon-cell row count) makes
-        # the decision free; otherwise a bounded count probes it
-        broadcast_polys = planner.should_broadcast(pcs, size_hint=poly_cells_hint)
-    if (salt is None and not broadcast_polys and cell_stats is not None
-            and cell_stats.get("max_cell_n")):
-        # stored hottest-cell bound -> salt factor with no probe job; a
-        # cell here holds up to 4**d cells of stats d levels finer
-        max_n = cell_stats["max_cell_n"] * 4 ** max(cell_stats["res"] - res, 0)
-        s_ = planner.salt_factor(None, max_hint=max_n)
-        salt = s_ if s_ > 1 else None
+        broadcast_polys = planner.should_broadcast(pcs, planner.PIP_BROADCAST_ROWS)
 
     if broadcast_polys:
         joined = pts.join(F.broadcast(pcs), "cell")

@@ -1,11 +1,20 @@
 """Planner functions — the engine's 'optimizer' choices that Catalyst
-cannot make for us (SURVEY.md §4.2). PySpark cannot register Strategy
-rules, so physical decisions are encoded as plan-emitting functions:
+cannot make for us (SURVEY.md §4.2), and the one home of the planner
+rules. PySpark cannot register Strategy rules, so physical decisions are
+encoded as plan-emitting functions:
 
-  * should_broadcast      — broadcast-vs-partitioned spatial join
+  * should_broadcast      — the one bounded probe: does a join side fit
+                            its broadcast cap (*_BROADCAST_ROWS)?
+  * all_rectangles(_pdf)  — is the bbox refine exact? (Catalyst probe,
+                            and its driver-side twin for generated layers)
   * salt_factor           — salt hot cells from observed density (A5)
   * split_hot_cells       — adaptive cell-splitting: re-encode rows in hot
                             cells at finer resolution before joining
+
+Each spatial join takes every decision from one of three sources: an
+explicit argument from its caller, the generation-time stats that
+datagen.polygons_df attaches (pip_join), or a bounded probe here
+(should_broadcast; all_rectangles for pip_join's exact='auto').
 
 Skew policy (measured, BENCH/SKEW.md): SALTING is the default hot-cell
 mitigation — on polygon-sparse layers it beats adaptive splitting at
@@ -24,20 +33,16 @@ from pyspark.sql import functions as F
 
 from ..operators import cells as _cells
 
-BROADCAST_ROW_LIMIT = 2_000_000  # exploded polygon-cell rows; ~100 B/row → well under 32 MB
+# broadcast caps, each in the rows its join probes
+PIP_BROADCAST_ROWS = 2_000_000  # exploded polygon-cell rows; ~100 B/row → well under 32 MB
+BBOX_BROADCAST_ROWS = 250_000  # right-side boxes BEFORE the cover explode (modest fan-out assumed)
+KNN_BROADCAST_ROWS = 1_000_000  # query ring cells: the query cap is this // (2*ring+1)**2
 
 
-def should_broadcast(exploded_poly_cells: DataFrame, limit: int = BROADCAST_ROW_LIMIT,
-                     size_hint: int | None = None) -> bool:
-    """Cheap bounded count: is the exploded polygon-cell side small enough
-    to broadcast? Uses a LIMIT-ed count so the decision itself never scans
-    more than `limit+1` rows. A caller that already knows the side's
-    cardinality passes `size_hint` and the decision costs ZERO jobs
-    (VERDICT r02 #10)."""
-    if size_hint is not None:
-        return size_hint <= limit
-    n = exploded_poly_cells.limit(limit + 1).count()
-    return n <= limit
+def should_broadcast(df: DataFrame, limit: int = PIP_BROADCAST_ROWS) -> bool:
+    """The bounded probe: does `df` have at most `limit` rows? A LIMIT-ed
+    count, so the decision never scans more than `limit + 1` rows."""
+    return df.limit(limit + 1).count() <= limit
 
 
 def all_rectangles(polygons: DataFrame) -> bool:
@@ -47,7 +52,8 @@ def all_rectangles(polygons: DataFrame) -> bool:
 
     Rectangle test (no bowties): closed 5-point ring, xs/ys take exactly
     the two bbox values, and each edge is axis-parallel (consecutive
-    vertices differ in exactly one coordinate)."""
+    vertices differ in exactly one coordinate); at most one ring in
+    `ring_lens`. all_rectangles_pdf is the same rule, driver-side."""
     xs, ys = F.col("xs"), F.col("ys")
     axis_edges = None
     for i in range(1, 5):
@@ -68,19 +74,29 @@ def all_rectangles(polygons: DataFrame) -> bool:
     return polygons.filter(~is_rect).limit(1).count() == 0
 
 
-def salt_factor(density: DataFrame | None,
-                target_rows_per_task: int = 2_000_000,
-                max_hint: int | None = None) -> int:
+def all_rectangles_pdf(pdf) -> bool:
+    """all_rectangles over a pandas polygon frame (the rows a generated
+    layer is built from): the same rule, with no Spark job."""
+    lens = pdf["ring_lens"] if "ring_lens" in pdf.columns else [None] * len(pdf)
+    for xs, ys, mnx, mny, mxx, mxy, rl in zip(pdf["xs"], pdf["ys"], pdf["minx"],
+                                              pdf["miny"], pdf["maxx"], pdf["maxy"], lens):
+        if rl is not None and len(rl) > 1:  # multi-ring: holes need the ray cast
+            return False
+        if len(xs) != 5 or xs[0] != xs[4] or ys[0] != ys[4]:
+            return False
+        if min(xs) != mnx or max(xs) != mxx or min(ys) != mny or max(ys) != mxy:
+            return False
+        if not all((xs[i] == xs[i + 1]) != (ys[i] == ys[i + 1]) for i in range(4)):
+            return False
+    return True
+
+
+def salt_factor(density: DataFrame, target_rows_per_task: int = 2_000_000) -> int:
     """Pick a salt factor that caps the hottest cell at ~target rows per
-    task. `max_hint` (the hottest-cell count, e.g. from
-    plans.stats.stored_cell_stats) makes the decision pure arithmetic —
-    ZERO Spark jobs; otherwise one aggregation over the per-cell density
-    table (cells.cell_density output) probes it (r7, VERDICT r06 #5)."""
-    if max_hint is None:
-        row = density.agg(F.max("n").alias("mx")).collect()[0]
-        max_hint = row["mx"] or 0
-    return max(1, int((max_hint + target_rows_per_task - 1)
-                      // target_rows_per_task))
+    task, from one aggregation over the per-cell density table
+    (cells.cell_density output)."""
+    mx = density.agg(F.max("n").alias("mx")).collect()[0]["mx"] or 0
+    return max(1, int((mx + target_rows_per_task - 1) // target_rows_per_task))
 
 
 def split_hot_cells(

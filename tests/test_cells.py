@@ -63,14 +63,21 @@ def test_null_coordinate_has_no_cell(spark):
         assert got == twin == want, res
 
 
-def _cover(spark, boxes, res):
-    """cells.cover_cells of (minx, miny, maxx, maxy) boxes -> {box index:
-    [cells]}; a box with no rows is absent."""
+def _cover(spark, boxes, res, by_row=False):
+    """cells.cover_cells (or, with by_row, the cells of
+    cells.cover_bbox_by_row) of (minx, miny, maxx, maxy) boxes -> {box
+    index: [cells]}; a box with no rows is absent."""
     df = spark.createDataFrame(
         [(i, *b) for i, b in enumerate(boxes)],
         "id int, minx double, miny double, maxx double, maxy double")
+    if by_row:
+        box = [F.col(c) for c in ("minx", "miny", "maxx", "maxy")]
+        rows = df.select("id", F.inline(cells.cover_bbox_by_row(
+            *box, res, cells.cover_rows(box[1], box[3], res))))
+    else:
+        rows = cells.cover_cells(df, "minx", "miny", "maxx", "maxy", res, ["id"])
     got = {}
-    for r in cells.cover_cells(df, "minx", "miny", "maxx", "maxy", res, ["id"]).collect():
+    for r in rows.collect():
         got.setdefault(r["id"], []).append(r["cell"])
     return got
 
@@ -78,15 +85,18 @@ def _cover(spark, boxes, res):
 def _cover_np(box, res):
     """Reference cover enumerated from cells.cell_np's clamped (iy, ix):
     rows between the two latitudes' rows, columns x0..x1 or, when
-    x0 > x1, wrapped across the antimeridian; none for a NULL
-    coordinate."""
+    minx > maxx, wrapped across the antimeridian (every column when
+    x0 == x1); none for a NULL coordinate."""
     if any(v is None for v in box):
         return []
     minx, miny, maxx, maxy = box
     _, iya, x0 = cells.cell_decode_np(cells.cell_np(minx, maxy, res))
     _, iyb, x1 = cells.cell_decode_np(cells.cell_np(maxx, miny, res))
     n = 1 << res
-    xs = range(x0, x1 + 1) if x0 <= x1 else [*range(x0, n), *range(0, x1 + 1)]
+    if minx <= maxx:
+        xs = range(x0, x1 + 1)
+    else:
+        xs = [*range(x0, n), *range(0, x1 + 1 if x0 > x1 else x0)]
     ys = range(min(iya, iyb), max(iya, iyb) + 1)
     return [res * cells.RES_SHIFT + iy * cells.Y_SHIFT + ix for iy in ys for ix in xs]
 
@@ -103,6 +113,7 @@ def test_cover_cells_matches_numpy_enumeration(spark):
         (10.01, 20.01, 10.02, 20.02),    # inside one cell
         (-100.0, 40.0, -90.0, 30.0),     # inverted: miny > maxy
         (-90.0, 40.0, -100.0, 30.0),     # inverted and wrapped
+        (10.0, 0.0, 9.99, 1.0),          # wraps within one column: all columns
         (None, 0.0, 1.0, 1.0), (0.0, None, 1.0, 1.0),
         (0.0, 0.0, None, 1.0), (0.0, 0.0, 1.0, None),
     ]
@@ -110,10 +121,11 @@ def test_cover_cells_matches_numpy_enumeration(spark):
         x, y = rng.uniform(-200, 200, 2), rng.uniform(-100, 100, 2)
         boxes.append((float(x[0]), float(y[0]), float(x[1]), float(y[1])))
     for res in (0, 4, 6):
-        got = _cover(spark, boxes, res)
+        got, by_row = _cover(spark, boxes, res), _cover(spark, boxes, res, by_row=True)
         for i, box in enumerate(boxes):
             want = _cover_np(box, res)
             assert sorted(got.get(i, [])) == sorted(set(want)) == sorted(want), (res, box)
+            assert sorted(by_row.get(i, [])) == sorted(want), (res, box)
 
 
 def test_cover_bbox_contains_member_points(spark):
@@ -161,16 +173,24 @@ def test_ring_clipped_at_edge(spark):
 def test_tile_xyz_matches_sql(spark):
     rng = np.random.default_rng(9)
     pts = [(float(a), float(b)) for a, b in zip(rng.uniform(-179, 179, 100), rng.uniform(-84, 84, 100))]
-    df = spark.createDataFrame(pts, ["lon", "lat"])
+    # a NULL coordinate has no tile on that axis (NULL-in/NULL-out, not 0)
+    pts += [(None, 10.0), (10.0, None)]
+    df = spark.createDataFrame(pts, "lon double, lat double")
     z = 8
     tx, ty = cells.tile_xyz(F.col("lon"), F.col("lat"), z)
-    got = [(r["x"], r["y"]) for r in df.select(tx.alias("x"), ty.alias("y")).orderBy("lon").collect()]
+    order = [F.col("lon").asc_nulls_first(), F.col("lat").asc_nulls_first()]
+    rows = df.select(tx.alias("x"), ty.alias("y"), "lon", "lat").orderBy(*order).collect()
+    got = [(r["x"], r["y"]) for r in rows]
     con = duckdb.connect()
     con.execute("CREATE TABLE p(lon DOUBLE, lat DOUBLE)")
     con.executemany("INSERT INTO p VALUES (?, ?)", pts)
     sx, sy = cells.tile_xyz_sql("lon", "lat", z)
-    exp = con.execute(f"SELECT {sx}, {sy} FROM p ORDER BY lon").fetchall()
+    exp = con.execute(f"SELECT {sx}, {sy} FROM p ORDER BY lon NULLS FIRST, lat NULLS FIRST").fetchall()
     assert got == [tuple(e) for e in exp]
+    nulls = {(r["lon"], r["lat"]): (r["x"], r["y"]) for r in rows
+             if r["lon"] is None or r["lat"] is None}
+    assert nulls[(None, 10.0)][0] is None and nulls[(None, 10.0)][1] is not None
+    assert nulls[(10.0, None)][0] is not None and nulls[(10.0, None)][1] is None
 
 
 def test_cover_bbox_antimeridian_wraps(spark):

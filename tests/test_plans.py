@@ -170,11 +170,10 @@ def test_flagship_transform_no_joinback_single_python_stage(spark, images_small,
     assert r and all(x["poly_id"] is not None for x in r)
 
 
-def test_size_hints_skip_probe_jobs(spark):
-    """VERDICT r02 #10: with size hints, building the join plan triggers
-    ZERO Spark jobs (the probe count is skipped entirely)."""
-    import numpy as np
-
+def _joins(spark, **decisions):
+    """Builders of the three spatial joins over one-row fixtures, each
+    given its own entries of `decisions` (pip_join's, bbox_join's,
+    knn_join's argument names)."""
     from extractors_geo_spark.operators import bbox_join as BJ
     from extractors_geo_spark.operators import knn as KNN
     from extractors_geo_spark.operators import pip_join as PJ
@@ -188,20 +187,86 @@ def test_size_hints_skip_probe_jobs(spark):
     boxes = spark.createDataFrame(
         [("q1", -101.0, 39.0, -99.0, 41.0)], ["query_id", "minx", "miny", "maxx", "maxy"]
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("size-hint-test", "plan building must be job-free")
-    try:
-        # exact=False also skips the all_rectangles probe
-        PJ.pip_join(pts, polys, poly_cells_hint=100, exact=False)
-        KNN.knn_join(boxes.selectExpr("query_id", "minx as lon", "miny as lat"),
-                     pts, q_size_hint=1)
-        BJ.bbox_join(pts.selectExpr("image_id", "lon as minx", "lat as miny",
-                                    "lon + 1 as maxx", "lat + 1 as maxy"),
-                     boxes, r_size_hint=1)
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("size-hint-test")
-    assert len(jobs) == 0, f"plan building ran {len(jobs)} probe jobs"
+
+    def args(*names):
+        return {k: v for k, v in decisions.items() if k in names}
+
+    return {
+        "pip_join": lambda: PJ.pip_join(pts, polys, **args("broadcast_polys", "exact")),
+        "knn": lambda: KNN.knn_join(boxes.selectExpr("query_id", "minx as lon", "miny as lat"),
+                                    pts, **args("broadcast_queries")),
+        "bbox_join": lambda: BJ.bbox_join(
+            pts.selectExpr("image_id", "lon as minx", "lat as miny",
+                           "lon + 1 as maxx", "lat + 1 as maxy"),
+            boxes, **args("broadcast_right")),
+    }
+
+
+def test_size_hints_skip_probe_jobs(spark):
+    """VERDICT r02 #10: with the caller's decision arguments, building the
+    join plan triggers ZERO Spark jobs (no probe count at all)."""
+    from tests.test_scan import jobs_started
+
+    # exact=False also skips the all_rectangles probe
+    builds = _joins(spark, broadcast_polys=True, exact=False,
+                    broadcast_queries=True, broadcast_right=True)
+    for name, build in builds.items():
+        out, n_jobs = jobs_started(spark, build)
+        assert n_jobs == 0, f"{name}: plan building ran {n_jobs} probe jobs"
+        assert "strategy=broadcast" in out._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.mark.parametrize("name,cap", [("pip_join", "PIP_BROADCAST_ROWS"),
+                                      ("bbox_join", "BBOX_BROADCAST_ROWS"),
+                                      ("knn", "KNN_BROADCAST_ROWS")])
+def test_join_without_decision_arguments_probes_once(spark, monkeypatch, name, cap):
+    """With no decision argument, each join calls the one bounded probe
+    (planner.should_broadcast) exactly once against its planner constant:
+    the one-row fixtures broadcast, and a cap of 0 gives the shuffled
+    plan. pip_join's exact='auto' adds the all_rectangles probe; each
+    probe is a LIMIT-ed count (a map stage and a result stage)."""
+    from extractors_geo_spark.plans import planner
+    from tests.test_scan import jobs_started
+
+    probe, rect = planner.should_broadcast, planner.all_rectangles
+    calls = []
+
+    def spy_probe(df, limit):
+        calls.append(("should_broadcast", limit))
+        return probe(df, limit)
+
+    def spy_rect(df):
+        calls.append(("all_rectangles",))
+        return rect(df)
+
+    monkeypatch.setattr(planner, "should_broadcast", spy_probe)
+    monkeypatch.setattr(planner, "all_rectangles", spy_rect)
+    for limit, broadcast in ((getattr(planner, cap), True), (0, False)):
+        monkeypatch.setattr(planner, cap, limit)
+        calls.clear()
+        out, n_jobs = jobs_started(spark, _joins(spark)[name])
+        probes = [c for c in calls if c[0] == "should_broadcast"]
+        assert len(probes) == 1 and (probes[0][1] == 0) == (limit == 0)
+        assert len(calls) == (2 if name == "pip_join" else 1)
+        assert 0 < n_jobs <= 2 * len(calls)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("strategy=broadcast" in plan) == broadcast
+
+
+@pytest.mark.parametrize("res", [6, 8])
+def test_pip_join_against_polygons_df_builds_with_zero_jobs(spark, polygons, res):
+    """perfbench ingest plans pip_join against datagen.polygons_df: its
+    generation-time stats decide exact and broadcast, so building the plan
+    starts no Spark job at all, and the decisions match the probes'."""
+    from extractors_geo_spark.operators import pip_join as PJ
+    from tests.test_scan import jobs_started
+
+    pts = spark.createDataFrame([("p1", -100.0, 40.0)], ["image_id", "lon", "lat"])
+    out, n_jobs = jobs_started(spark, lambda: PJ.pip_join(pts, polygons, res=res))
+    assert n_jobs == 0
+    probed = PJ.pip_join(pts, polygons.select("*"), res=res)  # no stats: probes
+    plans = [df._jdf.queryExecution().optimizedPlan().toString() for df in (out, probed)]
+    assert [("strategy=broadcast" in p, "aggregate" in p) for p in plans] == [(True, True)] * 2
 
 
 def test_near_dup_pairs_candidate_exchange_carries_no_vectors(spark):

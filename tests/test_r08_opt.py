@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from extractors_geo_spark import datagen
 from extractors_geo_spark.functions import text as X
 from extractors_geo_spark.operators import dedup, pip_join, similarity
 
@@ -186,6 +185,7 @@ def test_scan_parallelism_reprobes_a_table_rewritten_at_one_path(tmp_path):
 
 # -------------------------------------------- pip_join generation-time stats
 def test_polygons_gen_stats_match_probes(spark, polygons):
+    from extractors_geo_spark.operators import cells
     from extractors_geo_spark.plans import planner
 
     st = polygons._egs_poly_stats
@@ -194,37 +194,41 @@ def test_polygons_gen_stats_match_probes(spark, polygons):
     for res in (5, 6, 7):
         want = pip_join.polygon_cells(
             polygons.select("poly_id", "xs", "ys", "minx", "miny", "maxx", "maxy"), res).count()
-        got = sum(pip_join._cover_cells_n(a, b, c, d, res) for a, b, c, d in st["bboxes"])
+        got = sum(cells.cover_cells_n(a, b, c, d, res) for a, b, c, d in st["bboxes"])
         assert got == want
 
 
 def test_rect_layer_gen_stats_detects_rectangles(spark):
     import pandas as pd
 
+    from extractors_geo_spark.plans import planner
+
     pdf = pd.DataFrame([
         {"poly_id": "r1", "name": "r1",
          "xs": [0.0, 1.0, 1.0, 0.0, 0.0], "ys": [0.0, 0.0, 1.0, 1.0, 0.0],
          "minx": 0.0, "miny": 0.0, "maxx": 1.0, "maxy": 1.0, "attrs": {}},
     ])
-    st = datagen._poly_gen_stats(pdf)
-    assert st["all_rect"] is True
+    assert planner.all_rectangles_pdf(pdf) is True
 
 
 def test_cover_cells_n_wraps_the_antimeridian(spark):
-    """The driver-side cover count mirrors cells.cover_cells: the wrap
-    (minx > maxx) and the row span of an inverted box (miny > maxy)."""
+    """The numpy cover count mirrors cells.cover_cells: the wrap
+    (minx > maxx) and the row span of an inverted box (miny > maxy). A
+    wrapped box whose two longitudes share a cell column covers every
+    column."""
     from extractors_geo_spark.operators import cells
 
     boxes = [(170.0, 10.0, -170.0, 20.0), (179.9, -5.0, -179.9, 5.0),
              (-100.0, 30.0, -90.0, 40.0), (10.0, 0.0, 10.0, 0.0),
-             (-100.0, 40.0, -90.0, 30.0)]
+             (-100.0, 40.0, -90.0, 30.0), (10.0, 0.0, 9.99, 1.0)]
     df = spark.createDataFrame([(i, *b) for i, b in enumerate(boxes)],
                                "id int, minx double, miny double, maxx double, maxy double")
     for res in (4, 6):
         counts = dict(cells.cover_cells(df, "minx", "miny", "maxx", "maxy", res, ["id"])
                       .groupBy("id").count().collect())
         want = [counts[i] for i in range(len(boxes))]
-        assert [pip_join._cover_cells_n(*b, res) for b in boxes] == want
+        assert [cells.cover_cells_n(*b, res) for b in boxes] == want
+        assert want[-1] == (1 << res) * 2  # every column, 2 rows
 
 
 def test_gen_stats_multi_ring_is_not_rect(spark):
@@ -242,7 +246,7 @@ def test_gen_stats_multi_ring_is_not_rect(spark):
         df = spark.createDataFrame(
             pdf, "poly_id string, name string, xs array<double>, ys array<double>, "
                  "minx double, miny double, maxx double, maxy double, ring_lens array<int>")
-        assert datagen._poly_gen_stats(pdf)["all_rect"] is want
+        assert planner.all_rectangles_pdf(pdf) is want
         assert planner.all_rectangles(df) is want
 
 

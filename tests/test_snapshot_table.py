@@ -334,6 +334,27 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert got["c"] == (31, None) and got["a"] == (10, "x")
 
 
+def test_overwrite_with_summary_extra_commits_once(spark, table, monkeypatch):
+    """overwrite(df, summary_extra=...) writes the extra keys in its own
+    commit: no committed snapshot manifest is rewritten after the fact."""
+    from extractors_geo_spark import fs as xfs
+
+    replaced = []
+    replace_text = xfs.replace_text
+
+    def spy_replace_text(fs, path, text):
+        replaced.append(path)
+        return replace_text(fs, path, text)
+
+    monkeypatch.setattr(xfs, "replace_text", spy_replace_text)
+    v = table.overwrite(spark.createDataFrame([("a", 1), ("b", 2)], ["k", "v"]),
+                        summary_extra={"note": {"rows": 2}})
+    assert [p for p in replaced if "snapshots/" in p] == []
+    snap = table.snapshot(v)
+    assert snap["operation"] == "overwrite" and snap["summary"]["note"] == {"rows": 2}
+    assert table.read().count() == 2
+
+
 def test_snapshot_zero_is_the_empty_table(spark, table):
     """Version 0 is the empty table, not an alias for the latest one."""
     table.append(spark.createDataFrame([("a", 1)], ["k", "v"]))
