@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from extractors_geo_spark import datagen
-from extractors_geo_spark.exprcache import memo_col
+from extractors_geo_spark.exprcache import memo_col, memo_df
 from extractors_geo_spark.functions import geo, text as X
 from extractors_geo_spark.operators import (
     cells,
@@ -64,7 +64,7 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(-124.0) + (F.col("l_orderkey") * 7 + F.col("l_linenumber")) % 5700 / 100.0).alias("lon"),
         (F.lit(25.0) + (F.col("l_orderkey") * 13 + F.col("l_linenumber")) % 2400 / 100.0).alias("lat"),
     ])
-    return _t(spark, sf_dir, "lineitem").select(*cols)
+    return memo_df(_t(spark, sf_dir, "lineitem"), ("q_points",), lambda d: d.select(*cols))
 
 
 def _fq(col, scale: int):
@@ -225,17 +225,10 @@ def q_cell_cover(spark, sf_dir):
     return cells.cover_cells(boxes, "minx", "miny", "maxx", "maxy", RES, ["point_id"])
 
 
-_ix0, _iy1 = cells.cell_ixy_sql("lon - 0.8", "lat - 0.8", RES)  # minx -> ix0 ; miny -> iy1 (bottom)
-_ix1, _iy0 = cells.cell_ixy_sql("lon + 0.8", "lat + 0.8", RES)  # maxx -> ix1 ; maxy -> iy0 (top)
 SQL_COVER = f"""
 WITH p AS ({_POINTS_SQL})
-SELECT point_id,
-       CAST({RES} AS BIGINT) * {cells.RES_SHIFT} + iy * {cells.Y_SHIFT} + ix AS cell
-FROM (SELECT point_id, {_ix0} AS ix0, {_ix1} AS ix1, {_iy0} AS iy0, {_iy1} AS iy1
-      FROM p WHERE point_id % 17 = 3),
-     UNNEST(generate_series(iy0, iy1)) AS ty(iy),
-     UNNEST(generate_series(ix0, ix1)) AS tx(ix)
-"""
+{cells.cover_cells_sql("(SELECT * FROM p WHERE point_id % 17 = 3)", "lon - 0.8", "lat - 0.8",
+                       "lon + 0.8", "lat + 0.8", RES, ["point_id"])}"""
 
 
 def q_cell_children(spark, sf_dir):
@@ -278,10 +271,7 @@ def q_pip_join(spark, sf_dir):
     layer, a LocalRelation typed `datagen.POLY_SCHEMA` with `attrs` NULL;
     the oracle states the same containment declaratively."""
     p = _points(spark, sf_dir)
-    polys = local_table(spark, [
-        (pid, pid, [x0, x1, x1, x0, x0], [y0, y0, y1, y1, y0], x0, y0, x1, y1, None)
-        for pid, x0, y0, x1, y1 in _RECTS
-    ], datagen.POLY_SCHEMA)
+    polys = _layer(spark, "rects")
     # literal rectangle layer: broadcast is trivially right and bbox
     # refine is already exact for rects -> both probe jobs skipped
     out = pip_join.pip_join(
@@ -320,6 +310,27 @@ _WINDOW_SCHEMA = T.StructType(
     + [T.StructField(c, T.DoubleType()) for c in ("minx", "miny", "maxx", "maxy")]
 )
 
+# the constant literal layers, by name: (rows, schema)
+_LAYERS = {
+    "rects": ([(pid, pid, [x0, x1, x1, x0, x0], [y0, y0, y1, y1, y0], x0, y0, x1, y1, None)
+               for pid, x0, y0, x1, y1 in _RECTS], datagen.POLY_SCHEMA),
+    "windows": (_WINDOWS, _WINDOW_SCHEMA),
+    "knn_queries": (_KNN_QUERIES, _KNN_SCHEMA),
+}
+_LAYER_MEMO: dict = {}  # name -> (SparkSession, DataFrame)
+
+
+def _layer(spark: SparkSession, name: str) -> DataFrame:
+    """The constant layer `name` of `_LAYERS` as a LocalRelation
+    (session.local_table), built once per session: a rebuild of the query
+    makes no Arrow conversion and no `createDataFrame` round trip. The
+    session is compared by object, as sources/scan.read does; the memo
+    holds one entry per name."""
+    hit = _LAYER_MEMO.get(name)
+    if hit is None or hit[0] is not spark:
+        hit = _LAYER_MEMO[name] = (spark, local_table(spark, *_LAYERS[name]))
+    return hit[1]
+
 
 def q_bbox_join(spark, sf_dir):
     """J1 general form: bbox intersection range join of per-point
@@ -334,7 +345,7 @@ def q_bbox_join(spark, sf_dir):
         (F.col("lat") + (F.col("point_id") % 5 + 1) / 10.0).alias("maxy"),
     ])
     boxes = _points(spark, sf_dir).select("point_id", *box)
-    wins = local_table(spark, _WINDOWS, _WINDOW_SCHEMA)
+    wins = _layer(spark, "windows")
     # output columns: point_id, query_id, ix_minx, ix_miny, ix_maxx, ix_maxy
     return bbox_join.bbox_join(boxes, wins, res=6, l_id="point_id", broadcast_right=True)
 
@@ -361,7 +372,7 @@ def q_knn(spark, sf_dir):
     `_KNN_QUERIES` LocalRelation against the derived points, vs
     brute-force SQL ranking."""
     p = _points(spark, sf_dir)
-    q = local_table(spark, _KNN_QUERIES, _KNN_SCHEMA)
+    q = _layer(spark, "knn_queries")
     out = knn.knn_join(q, p, k=3, res=7, ring=1, t_id="point_id",
                        broadcast_queries=True)
     return out.select("query_id", "point_id", "rank")

@@ -11,7 +11,9 @@ reference — even one whose gateway object reuses a dead one's id().
 
 This caches expression OBJECTS, never data or results: every query still
 computes from its inputs; only the driver-side tree construction is
-amortized.
+amortized. `memo_df` does the same one level up: a DataFrame derived from
+an input DataFrame OBJECT (a reused table read or constant layer) is
+built, and eagerly analysed, once.
 
 Users: pip_join, knn, tiles, dedup, similarity, bbox_join (both sides'
 antimeridian split and cover, the refine) and the cell_ops/points
@@ -47,3 +49,33 @@ def memo_col(key: tuple, build):
     if col is None:
         col = _COL_MEMO[key] = build()
     return col
+
+
+def memo_cols(names) -> list:
+    """`F.col(name)` for each of `names`, memoized like memo_col. A
+    select given a column by its string name makes PySpark build a fresh
+    Column: three py4j round trips (the `functions` class, its `col`
+    member, the call) and a fourth when Python frees it."""
+    from pyspark.sql import functions as F
+
+    names = tuple(names)
+    return memo_col(("cols", *names), lambda: [F.col(n) for n in names])
+
+
+# input DataFrame -> {key: DataFrame derived from it}
+_DF_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def memo_df(df, key: tuple, build):
+    """build(df) memoized on the DataFrame object `df`, under `key`.
+    DataFrames are immutable, so a derivation of the same input object
+    with the same arguments is the same plan: the memo skips its eager
+    Catalyst analysis, the larger part of a plan build. It pays only for
+    inputs that are reused as objects, such as a table read
+    (sources/scan.read) or a constant layer, each reused per session. The
+    entries live as long as `df` does."""
+    memo = _DF_MEMO.setdefault(df, {})
+    out = memo.get(key)
+    if out is None:
+        out = memo[key] = build(df)
+    return out

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..exprcache import memo_col
+from ..exprcache import memo_col, memo_df
 from ..plans import planner
 from . import cells
 
@@ -45,7 +45,8 @@ def _side(df: DataFrame, id_col: str, cols: tuple[str, str, str, str], p: str,
 
     split = memo_col(("bbox_side", cols, p), build)
     keep = [id_col, *(f"{p}{c}" for c in (miny, maxy, minx, maxx))]
-    return cells.cover_cells(df.select(F.col(id_col), *split), *(f"{p}{c}" for c in cols), res, keep)
+    return cells.cover_cells(memo_df(df, ("bbox_side", id_col, cols, p), lambda d: d.select(F.col(id_col), *split)),
+                             *(f"{p}{c}" for c in cols), res, keep)
 
 
 def _refine(l_cols, r_cols, res: int) -> tuple[Column, list[Column]]:

@@ -24,7 +24,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..exprcache import memo_col
+from ..exprcache import memo_col, memo_cols, memo_df
 
 RES_SHIFT = 1 << 58
 Y_SHIFT = 1 << 29
@@ -56,12 +56,23 @@ def cell_iy(lat: Column, res: int) -> Column:
 
 
 def cell_id(lon: Column, lat: Column, res: int) -> Column:
-    """Encode a point to its geocell at resolution ``res`` (pure Catalyst)."""
-    return (
-        F.lit(res).cast("long") * F.lit(RES_SHIFT)
-        + cell_iy(lat, res) * F.lit(Y_SHIFT)
-        + cell_ix(lon, res)
-    ).alias("cell")
+    """Encode a point to its geocell at resolution ``res`` (pure Catalyst).
+    A NULL coordinate gives a NULL cell."""
+    return _cell_at(cell_iy(lat, res), cell_ix(lon, res), res).alias("cell")
+
+
+def cell_key(lon: Column, lat: Column, res: int) -> Column:
+    """cell_id as an equi-join key, where a NULL coordinate gives -1."""
+    return _join_key(_cell_at(cell_iy(lat, res), cell_ix(lon, res), res)).alias("cell")
+
+
+def _join_key(cell: Column) -> Column:
+    """`cell` made non-nullable for an equi-join. No real cell is
+    negative, so a -1 row joins nothing, as a NULL would. A nullable key
+    makes Catalyst infer an isnotnull(cell) filter for the join, which it
+    pushes below the projection with the whole cell expression inlined:
+    a second evaluation of the cell per row."""
+    return F.coalesce(cell, F.lit(-1).cast("long"))
 
 
 def cell_ixy_sql(lon_expr: str, lat_expr: str, res: int) -> tuple[str, str]:
@@ -86,14 +97,16 @@ def cover_cells(df: DataFrame, minx: str, miny: str, maxx: str, maxy: str, res: 
                 keep: list[str]) -> DataFrame:
     """One row per (row of `df`, cell intersecting its bbox): the `keep`
     columns plus the covering cell as `cell`. The box columns are given by
-    name; a NULL coordinate gives no rows. Cardinality is bounded by the
+    name; a NULL coordinate gives no rows, so `cell` is never NULL and is
+    typed non-nullable (a join key). Cardinality is bounded by the
     caller's choice of res (adaptive splitting handles the hot ones).
 
     Antimeridian: a box given as minx > maxx wraps across the ±180
     meridian, covering columns [x0, n-1] and [0, x1] — every column when
     both fall in one. Rows span the two latitudes' cell rows in either
     order, so a box given as miny > maxy covers the same rows as its flip.
-    cover_cells_n counts the same cells with numpy.
+    cover_cells_n counts the same cells with numpy; cover_cells_sql is
+    the DuckDB twin.
 
     Three plan steps, none with a lambda (higher-order functions run
     interpreted): a projection stages the grid origin and size
@@ -111,14 +124,35 @@ def cover_cells(df: DataFrame, minx: str, miny: str, maxx: str, maxy: str, res: 
                  _cover_nx(F.col(minx), F.col(maxx), res).alias("_nx"),
                  (F.abs(yb - ya) + 1).alias("_ny")]
         gen = F.explode(F.sequence(F.lit(0).cast("long"), F.col("_nx") * F.col("_ny") - 1)).alias("_k")
-        cell = _cell_at(F.col("_y0") + F.expr("_k div _nx"),
-                        F.pmod(F.col("_x0") + F.col("_k") % F.col("_nx"), n), res)
-        return stage, gen, cell
+        cell = _join_key(_cell_at(F.col("_y0") + F.expr("_k div _nx"),
+                                  F.pmod(F.col("_x0") + F.col("_k") % F.col("_nx"), n), res))
+        return stage, [F.col("_x0"), F.col("_y0"), F.col("_nx"), gen], cell.alias("cell")
 
-    stage, gen, cell = memo_col(("cover_cells", minx, miny, maxx, maxy, res), build)
-    return (df.select(*keep, *stage)
-            .select(*keep, "_x0", "_y0", "_nx", gen)
-            .select(*keep, cell.alias("cell")))
+    key = ("cover_cells", minx, miny, maxx, maxy, res)
+    stage, gen, cell = memo_col(key, build)
+    kept = memo_cols(keep)
+    return memo_df(df, (*key, *keep), lambda d: d.select(*kept, *stage).select(*kept, *gen).select(*kept, cell))
+
+
+def cover_cells_sql(src: str, minx: str, miny: str, maxx: str, maxy: str, res: int,
+                    keep: list[str]) -> str:
+    """cover_cells as an ANSI-SQL query for the DuckDB oracles: the same
+    staged origin and size, the same wrap on the raw minx > maxx and the
+    same cell order k over `src` (a relation), with box expressions over
+    its columns."""
+    n = _grid_n(res)
+    x0, ya = cell_ixy_sql(minx, maxy, res)
+    x1, yb = cell_ixy_sql(maxx, miny, res)
+    cols = "".join(f"{c}, " for c in keep)
+    return f"""
+SELECT {cols}CAST({res} AS BIGINT) * {RES_SHIFT} + (_y0 + _k // _nx) * {Y_SHIFT} + (_x0 + _k % _nx) % {n} AS cell
+FROM (SELECT {cols}{x0} AS _x0, LEAST({ya}, {yb}) AS _y0,
+             CASE WHEN ({minx}) > ({maxx}) THEN LEAST({n} - {x0} + {x1} + 1, {n})
+                  ELSE {x1} - {x0} + 1 END AS _nx,
+             ABS({yb} - {ya}) + 1 AS _ny
+      FROM {src}),
+     UNNEST(generate_series(0, _nx * _ny - 1)) AS t(_k)
+"""
 
 
 def cover_rows(miny: Column, maxy: Column, res: int) -> Column:

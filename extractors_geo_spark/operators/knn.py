@@ -23,6 +23,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..exprcache import memo_col, memo_df
 from ..plans import planner
 from . import cells
 
@@ -44,8 +45,6 @@ def _ring_topk(q_base, t_sel, k, res, ring, q_id, t_id, t_cols, broadcast_querie
     # query). Materializing the center cell as a column first keeps the
     # ring tree 9x smaller; CollapseProject does not re-inline a non-cheap
     # alias referenced more than once, so the staged shape survives.
-    from ..exprcache import memo_col
-
     center_col = memo_col(
         ("knn_center", res),
         lambda: cells.cell_id(F.col("_qlon"), F.col("_qlat"), res).alias("_qcell"),
@@ -55,11 +54,11 @@ def _ring_topk(q_base, t_sel, k, res, ring, q_id, t_id, t_cols, broadcast_querie
         lambda: F.explode(cells.cell_ring(F.col("_qcell"), ring)).alias("cell"),
     )
     tcell_col = memo_col(
-        ("knn_tcell", res),
-        lambda: cells.cell_id(F.col("_tlon"), F.col("_tlat"), res).alias("cell"),
+        ("knn_tcell_key", res),
+        lambda: cells.cell_key(F.col("_tlon"), F.col("_tlat"), res),
     )
-    q = (q_base.select(q_id, "_qlon", "_qlat", center_col)
-         .select(q_id, "_qlon", "_qlat", ring_col))
+    q = memo_df(q_base, ("knn_ring", q_id, res, ring), lambda d: (
+        d.select(q_id, "_qlon", "_qlat", center_col).select(q_id, "_qlon", "_qlat", ring_col)))
     t = t_sel.select(t_id, "_tlon", "_tlat", *t_cols, tcell_col)
     joined = t.join(F.broadcast(q) if broadcast_queries else q, "cell")
 
@@ -113,9 +112,9 @@ def knn_join(
     superset of the finer one, so replacing an escalated query's rows
     keeps the candidate semantics.  Note the grid-kNN caveat is unchanged:
     within one pass, top-k is exact over the ring-block candidates."""
-    q_base = queries.select(
+    q_base = memo_df(queries, ("knn_q", q_id, q_lon, q_lat), lambda d: d.select(
         F.col(q_id), F.col(q_lon).alias("_qlon"), F.col(q_lat).alias("_qlat")
-    )
+    ))
     cap = planner.KNN_BROADCAST_ROWS // (2 * ring + 1) ** 2
     if broadcast_queries is None:
         # size probe BEFORE the (2k+1)^2 ring explode — counting after it

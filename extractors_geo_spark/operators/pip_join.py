@@ -155,8 +155,8 @@ def pip_join(
     # single select per side (r8): select-then-withColumn costs one extra
     # eagerly-analyzed Dataset op per side — fused into one projection
     # (~0.05 s/plan build; the flagship times plan construction)
-    cell_col = _memo_col(("point_cell", lon, lat, res),
-                         lambda: cells.cell_id(F.col(lon), F.col(lat), res))
+    cell_col = _memo_col(("point_cell_key", lon, lat, res),
+                         lambda: cells.cell_key(F.col(lon), F.col(lat), res))
     pts = points.select(*point_cols, lon, lat, cell_col.alias("cell"))
     geom_cols = ["xs", "ys", "minx", "miny", "maxx", "maxy"]
     if "ring_lens" in polygons.columns:

@@ -15,6 +15,7 @@ import os
 from collections.abc import Iterable, Sequence
 
 import pyarrow as pa
+from py4j.java_gateway import java_import
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -62,21 +63,35 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # single imports: py4j resolves `sc._jvm.<name>` against single
+    # imports first, then tries each star-imported package in turn (a
+    # failed Class.forName over the whole class path per miss). PySpark
+    # looks these two up on nearly every Column and DataFrame call; JVM
+    # CPU per lookup 207 -> 90 us on 4 cores.
+    for name in ("org.apache.spark.sql.functions", "org.apache.spark.api.python.PythonUtils"):
+        java_import(spark.sparkContext._jvm, name)
     return spark
 
 
 def local_table(spark: SparkSession, rows: Iterable[Sequence], schema: StructType) -> DataFrame:
     """A literal table of `rows` (tuples in `schema` order) as a
-    LocalRelation: the rows ride inside the plan, so running it starts no
-    Python worker. `spark.createDataFrame(<list>)` instead parallelizes
-    the list into a PythonRDD, a Python-worker job on every execution of
-    every plan that reads it. An Arrow table takes the LocalRelation path
-    below `spark.sql.execution.arrow.localRelationThreshold`, whatever the
-    `arrow.pyspark` settings are."""
+    one-partition LocalRelation: the rows ride inside the plan, so running
+    it starts no Python worker. `spark.createDataFrame(<list>)` instead
+    parallelizes the list into a PythonRDD, a Python-worker job on every
+    execution of every plan that reads it. An Arrow table takes the
+    LocalRelation path below
+    `spark.sql.execution.arrow.localRelationThreshold`, whatever the
+    `arrow.pyspark` settings are. Its scan would split the rows over
+    min(rows, cores) tasks; `coalesce(1)` (no shuffle) reads a literal
+    layer of a few dozen rows, such as a broadcast side, in one task.
+
+    Each call converts the rows to Arrow and ships them to the JVM: a
+    caller that reads the same constant rows on every plan build keeps
+    the result per session."""
     names = schema.names
     rows = list(rows)
     if any(len(r) != len(names) for r in rows):
         raise ValueError(f"local_table: every row needs {len(names)} values {names}")
     table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows],
                                  schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(table, schema).coalesce(1)

@@ -193,6 +193,36 @@ def test_tile_xyz_matches_sql(spark):
     assert nulls[(10.0, None)][0] is not None and nulls[(10.0, None)][1] is None
 
 
+def test_cover_cells_sql_twin_matches_spark(spark):
+    """cover_cells_sql in DuckDB gives cover_cells' cells in Spark, box by
+    box, on wrapped, inverted, clamped and NULL boxes. The `cell_ops`
+    oracle is built from the twin."""
+    boxes = [
+        (170.0, -10.0, -170.0, 10.0),    # wraps the antimeridian
+        (179.9, -5.0, -179.9, 5.0),      # wraps, one column each side
+        (10.0, 0.0, 9.99, 1.0),          # wraps within one column: all columns
+        (-90.0, 40.0, -100.0, 30.0),     # inverted and wrapped
+        (-100.0, 40.0, -90.0, 30.0),     # inverted: miny > maxy
+        (-500.0, -300.0, 500.0, 300.0),  # clamps to the whole grid
+        (10.0, 0.0, 10.0, 0.0),          # a point: one cell
+        (None, 0.0, 1.0, 1.0), (0.0, 0.0, 1.0, None),
+    ]
+    rng = np.random.default_rng(11)
+    for _ in range(20):
+        x, y = rng.uniform(-200, 200, 2), rng.uniform(-100, 100, 2)
+        boxes.append((float(x[0]), float(y[0]), float(x[1]), float(y[1])))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE b(id INT, minx DOUBLE, miny DOUBLE, maxx DOUBLE, maxy DOUBLE)")
+    con.executemany("INSERT INTO b VALUES (?, ?, ?, ?, ?)", [(i, *box) for i, box in enumerate(boxes)])
+    for res in (0, 4, 6):
+        got = _cover(spark, boxes, res)
+        twin = {}
+        for i, cell in con.execute(cells.cover_cells_sql("b", "minx", "miny", "maxx", "maxy", res, ["id"])).fetchall():
+            twin.setdefault(i, []).append(cell)
+        for i, box in enumerate(boxes):
+            assert sorted(twin.get(i, [])) == sorted(got.get(i, [])) == sorted(_cover_np(box, res)), (res, box)
+
+
 def test_cover_bbox_antimeridian_wraps(spark):
     # minx > maxx means the box crosses the +-180 meridian: the x cover is
     # [x0, n-1] ++ [0, x1], never a silent negative-step sequence.

@@ -1,10 +1,13 @@
 """Driver-side literal tables are LocalRelations (`session.local_table`):
 no driver query plan reads a Python RDD, which would start a Python-worker
 job every time the plan runs, and each literal table keeps exactly the
-schema and rows that `spark.createDataFrame(<list>)` gave it."""
+schema and rows that `spark.createDataFrame(<list>)` gave it. A literal
+table is read in one task, and a query's constant layer is built once
+per session."""
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,6 +30,7 @@ def test_no_query_plan_reads_a_python_rdd(spark):
 
 
 def test_query_literal_tables_match_the_list_path(spark, monkeypatch):
+    monkeypatch.setattr(E, "_LAYER_MEMO", {})  # build each layer here
     made = []
 
     def recording(spark, rows, schema):
@@ -58,6 +62,36 @@ def test_query_literal_tables_match_the_list_path(spark, monkeypatch):
         assert "LocalRelation" in _optimized(got), op
         assert got.schema == want.schema, op
         assert got.collect() == want.collect(), op
+
+
+def _tasks_run(spark, fn) -> int:
+    """The number of tasks the Spark jobs that fn() starts ran."""
+    sc = spark.sparkContext
+    group = f"tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count tasks")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return sum(tracker.getStageInfo(s).numTasks
+               for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds)
+
+
+@pytest.mark.parametrize("op,name", [("pip_join", "rects"), ("bbox_join", "windows"),
+                                     ("knn", "knn_queries")])
+def test_query_layer_is_built_once_per_session_and_read_in_one_task(spark, monkeypatch, op, name):
+    layer = E._layer(spark, name)
+    made = []
+    monkeypatch.setattr(E, "local_table", lambda *a: made.append(a) or session.local_table(*a))
+    E.queries()[op](spark, SF)
+    assert made == [] and E._layer(spark, name) is layer  # no rebuild in the session
+    other = spark.newSession()
+    assert E._layer(other, name) is not layer and len(made) == 1  # a new session's own
+    assert len(E._LAYER_MEMO) <= len(E._LAYERS)
+    # 6-20 rows: one task, not min(rows, cores)
+    assert _tasks_run(spark, lambda: layer.write.format("noop").mode("overwrite").save()) == 1
 
 
 def test_empty_dropped_shingles_frame_is_a_local_relation(spark):

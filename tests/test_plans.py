@@ -291,3 +291,29 @@ def test_near_dup_pairs_candidate_exchange_carries_no_vectors(spark):
     for ex in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", s):
         key = ex.split(",")[0].split("#")[0].strip()
         assert key in {"bucket", "id", "a", "b", "vec_id"}, ex
+
+
+def _join_nodes(node) -> list:
+    """The Join nodes of a logical plan tree (JVM objects), root first."""
+    out = [node] if node.nodeName() == "Join" else []
+    kids = node.children()
+    for i in range(kids.size()):
+        out += _join_nodes(kids.apply(i))
+    return out
+
+
+@pytest.mark.parametrize("op,res", [("knn", 7), ("pip_join", 6), ("bbox_join", 6)])
+def test_each_join_side_computes_its_cell_once(spark, op, res):
+    """A cell expression packs res * 2^58 + iy * 2^29 + ix, so the
+    constant res * 2^58 marks one. Each side of the driver query's cell
+    join holds one in its optimized plan: a nullable join key would add
+    an inferred isnotnull(cell) filter with the whole cell expression
+    inlined, a second evaluation per row. The point sides give a NULL
+    coordinate a -1 key, which joins nothing."""
+    from extractors_geo_spark.operators import cells
+    from tests.test_literal_tables import SF, E
+
+    plan = E.queries()[op](spark, SF)._jdf.queryExecution().optimizedPlan()
+    (join,) = _join_nodes(plan)
+    mark = str(res * cells.RES_SHIFT)
+    assert [join.left().toString().count(mark), join.right().toString().count(mark)] == [1, 1]

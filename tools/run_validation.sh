@@ -8,12 +8,19 @@
 #      benchmark unseen;
 #   3. tools/check_oracles.py (the oracle window) at sf0.001 and sf0.01.
 # Every step runs; the exit status is non-zero if any of them failed.
+# It first prints the line counts of the package, the tests and
+# __spark_entry__.py, so a change's net line delta is the difference of
+# two runs' first lines.
 #
 # Usage: tools/run_validation.sh TESTDATA_DIR   (holding sf0.001/ and sf0.01/)
 set -u
 cd "$(dirname "$0")/.."
 data="${1:?usage: tools/run_validation.sh TESTDATA_DIR (holding sf0.001/ and sf0.01/)}"
 failed=()
+
+pylines() { find "$@" -name '*.py' -print0 | xargs -0 cat | wc -l; }
+echo "lines: package $(pylines extractors_geo_spark) tests $(pylines tests)" \
+  "__spark_entry__.py $(wc -l < __spark_entry__.py)"
 
 echo "=== tier-1 pytest ==="
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
