@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 from . import tiff
 from .functions import geo as _geo
 from .plans import planner
+from .session import local_table
 
 SEED = 42
 CONUS = (-124.731422, 24.955967, -66.969849, 49.371735)  # states.zip bbox
@@ -289,7 +290,8 @@ def make_polygons(nx: int = 10, ny: int = 5) -> pd.DataFrame:
 
 def polygons_df(spark: SparkSession, nx: int = 10, ny: int = 5) -> DataFrame:
     pdf = make_polygons(nx, ny)
-    df = spark.createDataFrame(pdf, POLY_SCHEMA)
+    # a one-partition LocalRelation: its broadcast stage runs one task
+    df = local_table(spark, pdf[POLY_SCHEMA.names].itertuples(index=False), POLY_SCHEMA)
     # generation-time stats ride the DataFrame object so pip_join's
     # planner decisions (exact refine, broadcast, cover cardinality) are
     # driver-side lookups instead of probe jobs (~0.3 s/pipeline run);

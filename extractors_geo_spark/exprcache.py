@@ -11,9 +11,19 @@ reference — even one whose gateway object reuses a dead one's id().
 
 This caches expression OBJECTS, never data or results: every query still
 computes from its inputs; only the driver-side tree construction is
-amortized. `memo_df` does the same one level up: a DataFrame derived from
-an input DataFrame OBJECT (a reused table read or constant layer) is
-built, and eagerly analysed, once.
+amortized.
+
+`memo_plan` does the same for a whole driver query (the `queries()`
+registry of `__spark_entry__`): a repeat build in the same SparkSession
+object over the same table states returns the DataFrame built before,
+so it makes no DataFrame call and no Catalyst analysis. It is valid when
+every `sources/scan.read` the build made (each reports itself through
+`note_read`) returns the same relation now, and every leaf of the
+analyzed plan is one of those reads or a literal relation; any other
+build, say one over a Python RDD or a plain `spark.read`, is not cached.
+Execution is untouched: each write of the DataFrame optimizes, plans and
+reads afresh (an action on the object itself, such as `collect`, uses its
+one QueryExecution, as any DataFrame does).
 
 Users: pip_join, knn, tiles, dedup, similarity, bbox_join (both sides'
 antimeridian split and cover, the refine) and the cell_ops/points
@@ -27,6 +37,7 @@ bbox_join 3,906 -> 149 round trips (1.02 -> 0.31 s), cell_ops
 
 from __future__ import annotations
 
+import os
 import weakref
 
 _COL_MEMO: dict = {}
@@ -62,20 +73,65 @@ def memo_cols(names) -> list:
     return memo_col(("cols", *names), lambda: [F.col(n) for n in names])
 
 
-# input DataFrame -> {key: DataFrame derived from it}
-_DF_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# (query name, sf_dir) -> (SparkSession, reads, DataFrame), where reads
+# holds (path, relation, current) for each sources/scan.read of the build
+_PLANS: dict = {}
+_BUILDS: list[list] = []  # the reads of each build in progress
+_LITERAL_LEAVES = frozenset({"LocalRelation", "Range", "OneRowRelation"})
 
 
-def memo_df(df, key: tuple, build):
-    """build(df) memoized on the DataFrame object `df`, under `key`.
-    DataFrames are immutable, so a derivation of the same input object
-    with the same arguments is the same plan: the memo skips its eager
-    Catalyst analysis, the larger part of a plan build. It pays only for
-    inputs that are reused as objects, such as a table read
-    (sources/scan.read) or a constant layer, each reused per session. The
-    entries live as long as `df` does."""
-    memo = _DF_MEMO.setdefault(df, {})
-    out = memo.get(key)
-    if out is None:
-        out = memo[key] = build(df)
+def note_read(path: str, df, current) -> None:
+    """sources/scan.read reports each reusable read here: the relation it
+    returned and `current()`, the relation the same read returns now (or
+    None when it would build a new one)."""
+    for reads in _BUILDS:
+        reads.append((path, df, current))
+
+
+def memo_plan(name: str, spark, sf_dir: str, build):
+    """build(spark, sf_dir), the driver query `name`, memoized per
+    (name, sf_dir): the DataFrame built before is returned when the
+    session is the same object, every scan.read the build made returns
+    the same relation now (same table state), and the build's analyzed
+    plan reads nothing else (_reads_only). A build that fails any test is
+    returned as is, uncached. One entry per key: a new session replaces
+    it."""
+    key = (name, sf_dir)
+    hit = _PLANS.get(key)
+    if hit is not None and hit[0] is spark and all(cur() is df for _, df, cur in hit[1]):
+        return hit[2]
+    _PLANS.pop(key, None)
+    reads: list = []
+    _BUILDS.append(reads)
+    try:
+        out = build(spark, sf_dir)
+    finally:
+        _BUILDS.pop()
+    if _reads_only(out, {os.path.abspath(p) for p, _, _ in reads}):
+        _PLANS[key] = (spark, reads, out)
     return out
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _reads_only(df, paths: set) -> bool:
+    """Every leaf of df's analyzed plan, subqueries included, is a
+    literal relation or a file relation rooted at one of `paths`. Leaves
+    are matched by root path, not counted: a self-join analyses one read
+    into two leaves."""
+    plan = df._jdf.queryExecution().analyzed()
+    for p in [plan, *_seq(plan.subqueriesAll())]:
+        for leaf in _seq(p.collectLeaves()):
+            kind = leaf.nodeName()
+            if kind in _LITERAL_LEAVES:
+                continue
+            if kind != "LogicalRelation":
+                return False
+            rel = leaf.relation()
+            if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                return False
+            if any(r.toUri().getPath() not in paths for r in _seq(rel.location().rootPaths())):
+                return False
+    return True

@@ -24,7 +24,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..exprcache import memo_col, memo_cols, memo_df
+from ..exprcache import memo_col, memo_cols
 
 RES_SHIFT = 1 << 58
 Y_SHIFT = 1 << 29
@@ -131,7 +131,7 @@ def cover_cells(df: DataFrame, minx: str, miny: str, maxx: str, maxy: str, res: 
     key = ("cover_cells", minx, miny, maxx, maxy, res)
     stage, gen, cell = memo_col(key, build)
     kept = memo_cols(keep)
-    return memo_df(df, (*key, *keep), lambda d: d.select(*kept, *stage).select(*kept, *gen).select(*kept, cell))
+    return df.select(*kept, *stage).select(*kept, *gen).select(*kept, cell)
 
 
 def cover_cells_sql(src: str, minx: str, miny: str, maxx: str, maxy: str, res: int,

@@ -38,6 +38,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..exprcache import note_read
+
 _SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 _SPLITTABLE = 1 << 30  # "as parallel as the cluster": never repartition
 _FOOTER_CAP = 64  # this many part files are parallel enough: skip footers
@@ -135,21 +137,28 @@ def read(spark: SparkSession, path: str, spread: bool = False,
     local constant."""
     keys = tuple(keys)
     ent = _entry(path)
-    if ent is None:
-        df = spark.read.parquet(path)
-    else:
-        hit = ent["rels"].get((spread, keys))
-        if hit is not None and hit[0] is spark:
-            return hit[1]
+    if ent is None:  # unkeyed: scan_parallelism is unknown, so no repartition
+        return spark.read.parquet(path)
+    hit = ent["rels"].get((spread, keys))
+    if hit is None or hit[0] is not spark:
         if "schema" in ent:
             df = spark.read.schema(ent["schema"]).parquet(path)
         else:
             df = spark.read.parquet(path)
             ent["schema"] = df.schema
-    if spread or keys:
-        par = spark.sparkContext.defaultParallelism
-        if scan_parallelism(path) < par:
-            df = df.repartition(par, *[F.col(k) for k in keys])
-    if ent is not None:
-        ent["rels"][(spread, keys)] = (spark, df)
-    return df
+        if spread or keys:
+            par = spark.sparkContext.defaultParallelism
+            if scan_parallelism(path) < par:
+                df = df.repartition(par, *[F.col(k) for k in keys])
+        hit = ent["rels"][(spread, keys)] = (spark, df)
+    note_read(path, hit[1], lambda: reused(spark, path, spread, keys))
+    return hit[1]
+
+
+def reused(spark: SparkSession, path: str, spread: bool, keys: tuple[str, ...]) -> DataFrame | None:
+    """The relation `read(spark, path, spread, keys)` would return now if
+    it returns one built before (same session, table state and choice),
+    else None. Reads nothing and builds nothing."""
+    ent = _entry(path)
+    hit = ent["rels"].get((spread, keys)) if ent is not None else None
+    return hit[1] if hit is not None and hit[0] is spark else None

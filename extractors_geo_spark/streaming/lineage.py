@@ -179,14 +179,10 @@ def run_with_lineage(
         except (ValueError, TypeError):
             p = out.sparkSession.sparkContext.defaultParallelism or 200
         files_per_bucket = max(1, -(-p // n_buckets))
-        out = (
-            out.withColumn(
-                "_salt",
-                F.pmod(F.xxhash64(F.col(key_col), F.lit(17)), F.lit(files_per_bucket)),
-            )
-            .repartition(F.col("bucket"), F.col("_salt"))
-            .drop("_salt")
-        )
+        # one eagerly analysed op: the salt is a partition expression, not
+        # a column, so the partition hash sees the same values
+        out = out.repartition(
+            F.col("bucket"), F.pmod(F.xxhash64(F.col(key_col), F.lit(17)), F.lit(files_per_bucket)))
         (
             out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

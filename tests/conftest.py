@@ -11,6 +11,15 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _empty_plan_cache():
+    """Each test builds the driver queries it calls afresh: one that
+    monkeypatches a query's inputs never gets an earlier test's plan."""
+    from extractors_geo_spark import exprcache
+
+    exprcache._PLANS.clear()
+
+
 @pytest.fixture(scope="session")
 def images_small(spark):
     from extractors_geo_spark import datagen

@@ -105,3 +105,34 @@ def test_empty_dropped_shingles_frame_is_a_local_relation(spark):
 def test_local_table_rejects_a_row_of_the_wrong_width(spark):
     with pytest.raises(ValueError, match="3 values"):
         session.local_table(spark, [("q0", 1.0)], E._KNN_SCHEMA)
+
+
+def test_polygon_layer_broadcast_runs_one_task(spark):
+    """datagen.polygons_df is a one-partition LocalRelation that keeps its
+    rows, schema and generation-time stats, so the broadcast job of a
+    pip_join over it runs one task (it split 50 rows over the cores)."""
+    from extractors_geo_spark.operators import pip_join
+
+    polys = datagen.polygons_df(spark)
+    assert "LocalRelation" in _optimized(polys) and "LogicalRDD" not in _optimized(polys)
+    want = spark.createDataFrame(datagen.make_polygons(), datagen.POLY_SCHEMA)
+    assert polys.schema == want.schema and polys.collect() == want.collect()
+    assert set(polys._egs_poly_stats) == {"all_rect", "bboxes"}
+
+    pts = spark.range(0, 400, 1, 4).selectExpr(
+        "id AS point_id", "-120.0 + id % 50 AS lon", "30.0 + id % 15 AS lat")
+    out = pip_join.pip_join(pts, polys, point_cols=("point_id",), poly_cols=("poly_id",),
+                            broadcast_polys=True, exact=True)
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def jobs():
+        seq = store.jobsList(None)
+        return {j.jobId(): j for j in (seq.apply(i) for i in range(seq.size()))}
+
+    before = set(jobs())
+    out.write.format("noop").mode("overwrite").save()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    # the broadcast job runs off the action's thread: it is not "save at ..."
+    bcast = [j.numTasks() for i, j in jobs().items()
+             if i not in before and not j.name().startswith("save at")]
+    assert bcast == [1]

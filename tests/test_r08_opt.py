@@ -296,29 +296,3 @@ def test_exprcache_drops_trees_of_a_replaced_gateway(monkeypatch):
         first = exprcache.memo_col(("t_gw",), build)
         assert exprcache.memo_col(("t_gw",), build) is first
     assert len(built) == 3, ids
-
-
-def test_memo_df_follows_the_input_object(spark):
-    """A derivation of the same DataFrame object with the same arguments
-    is built once (cover_cells here); another object or another argument
-    is built afresh, and the entries go with their input."""
-    import gc
-
-    from extractors_geo_spark import exprcache
-    from extractors_geo_spark.operators import cells
-    from extractors_geo_spark.session import local_table
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField("id", T.StringType())]
-                          + [T.StructField(c, T.DoubleType()) for c in ("minx", "miny", "maxx", "maxy")])
-    rows = [("a", 10.0, 0.0, 12.0, 2.0), ("b", 170.0, -1.0, -170.0, 1.0)]
-    layer, twin = local_table(spark, rows, schema), local_table(spark, rows, schema)
-    cover = cells.cover_cells(layer, "minx", "miny", "maxx", "maxy", 4, ["id"])
-    assert cells.cover_cells(layer, "minx", "miny", "maxx", "maxy", 4, ["id"]) is cover
-    assert cells.cover_cells(layer, "minx", "miny", "maxx", "maxy", 5, ["id"]) is not cover
-    other = cells.cover_cells(twin, "minx", "miny", "maxx", "maxy", 4, ["id"])
-    assert other is not cover and sorted(other.collect()) == sorted(cover.collect())
-    n = len(exprcache._DF_MEMO)
-    del layer, cover
-    gc.collect()
-    assert len(exprcache._DF_MEMO) == n - 1
