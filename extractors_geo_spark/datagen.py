@@ -8,8 +8,6 @@
   interior point falls in exactly one polygon → unambiguous PIP oracle),
   mirroring the states.zip layer (preview.geoshp/tests/states.zip: 49
   polygons, bbox -124.73..-66.97 / 24.96..49.37).
-- events:  ~5% of image_ids get a later 'removed' activity
-  (file.removed analog — preview.geotiff/ncsa.geo.tiff.py:41-66).
 
 Generation is distributed: `spark.range(n)` + mapInPandas, each row derived
 only from its index + the global seed, so any subset of partitions
@@ -29,7 +27,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import tiff
@@ -42,8 +39,6 @@ CONUS = (-124.731422, 24.955967, -66.969849, 49.371735)  # states.zip bbox
 METROS = ((-118.24, 34.05), (-87.63, 41.88), (-74.01, 40.71))  # LA, CHI, NYC
 METRO_FRAC = 0.20
 METRO_SIGMA = 0.35  # degrees
-REMOVED_FRAC = 0.05
-
 IMAGE_SCHEMA = T.StructType(
     [
         T.StructField("image_id", T.StringType()),
@@ -301,32 +296,3 @@ def polygons_df(spark: SparkSession, nx: int = 10, ny: int = 5) -> DataFrame:
         "bboxes": pdf[["minx", "miny", "maxx", "maxy"]].to_numpy(np.float64),
     }
     return df
-
-
-# -------------------------------------------------------------------- events
-EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("activity", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ]
-)
-
-
-def events_df(spark: SparkSession, n_images: int) -> DataFrame:
-    """'added' for every image, later 'removed' for ~5% — drives the
-    anti-join removal semantics (SURVEY.md ST2/J3)."""
-    base = spark.range(0, n_images, 1, max(8, n_images // 50000 or 8))
-    img = F.format_string("img%08d", F.col("id").cast("int"))
-    added = base.select(
-        img.alias("image_id"), F.lit("added").alias("activity"),
-        (F.lit("2024-01-01 00:00:00").cast("timestamp") + F.make_interval(secs=F.col("id") % 86400)).alias("ts"),
-    )
-    removed = (
-        base.filter(F.pmod(F.xxhash64(F.col("id"), F.lit(SEED)), F.lit(100)) < F.lit(int(REMOVED_FRAC * 100)))
-        .select(
-            img.alias("image_id"), F.lit("removed").alias("activity"),
-            (F.lit("2024-01-02 00:00:00").cast("timestamp") + F.make_interval(secs=F.col("id") % 86400)).alias("ts"),
-        )
-    )
-    return added.unionByName(removed)

@@ -15,9 +15,8 @@ Two layers:
    (preview.geotiff/geotiffutils.py:131-151), bbox reorder
    (metadata.geotiff/ncsa.image.geotiff.py:70), GeoJSON closed ring
    (metadata.geotiff/ncsa.image.geotiff.py:115-117), WMS GetMap URL
-   (preview.geotiff/gsclient.py:69-79) and CSW record URL
-   (pycsw.extractor/ncsa.geo.pycsw.py:278-285) minting, and the CSW corner
-   axis swap (pycsw.extractor/pycswutils.py:100-107,130-136).
+   (preview.geotiff/gsclient.py:69-79) minting, and the CSW record
+   document (pycsw.extractor/pycswutils.py:26-65).
 """
 
 from __future__ import annotations
@@ -728,15 +727,6 @@ def wms_getmap_url(
                     maxx.cast("string"), maxy.cast("string")),
         F.lit(f"&width={width}&height={height}&srs=EPSG:3857&format=image%2Fpng"),
     )
-
-
-def csw_corners(minx3857: Column, miny3857: Column, maxx3857: Column, maxy3857: Column) -> tuple[Column, Column]:
-    """CSW lower/upper corner strings: inverse-Mercator to 4326, then the
-    reference's axis swap to 'lat lon' (pycsw.extractor/pycswutils.py:100-107,
-    130-136; consumed at ncsa.geo.pycsw.py:239-240)."""
-    lo = F.concat_ws(" ", inv_merc_lat(miny3857).cast("string"), inv_merc_lon(minx3857).cast("string"))
-    hi = F.concat_ws(" ", inv_merc_lat(maxy3857).cast("string"), inv_merc_lon(maxx3857).cast("string"))
-    return lo, hi
 
 
 def bbox_from_url(url: Column) -> tuple[Column, Column, Column, Column]:

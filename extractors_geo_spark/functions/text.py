@@ -31,12 +31,6 @@ def words(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
 
 
-def lang_marker_hits(text: Column, lang: str) -> Column:
-    """Count of tokens that are stopword markers for ``lang``."""
-    markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-    return F.size(F.filter(words(text), lambda w: F.array_contains(markers, w)))
-
-
 def marker_hits_array(words_col: Column) -> Column:
     """Per-language marker-hit counts as ONE array column (order:
     LANG_MARKERS key order). Project this once, then derive lang_id —
@@ -60,14 +54,6 @@ def lang_id_from_hits(hits: Column) -> Column:
         mx > 0,
         F.element_at(langs, F.array_position(hits, mx).cast("int")),
     ).otherwise(F.lit("und"))
-
-
-def lang_id(text: Column) -> Column:
-    """argmax over marker-hit counts; 'und' (undetermined) when all zero.
-    Ties break by the fixed language order en,de,fr,es. Single-column
-    form; when scoring many rows, project marker_hits_array first and
-    use lang_id_from_hits (the hits array appears twice here)."""
-    return lang_id_from_hits(marker_hits_array(words(text)))
 
 
 def n_tokens_ws(text: Column) -> Column:
@@ -100,23 +86,15 @@ def punct_ratio(text: Column) -> Column:
     return (F.length(text) - kept) / F.greatest(F.length(text), F.lit(1))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    return lang_marker_hits(text, lang) / F.greatest(n_tokens_ws(text), F.lit(1))
-
-
-def mean_word_len(text: Column) -> Column:
-    w = words(text)
-    return F.aggregate(w, F.lit(0).cast("double"), lambda acc, x: acc + F.length(x)) / F.greatest(
-        F.size(w), F.lit(1)
-    )
-
-
 def quality_score_from(words_col: Column, text: Column) -> Column:
-    """quality_score over a PRE-PROJECTED words array. The single-column
-    form re-evaluates the lower+split+filter per component (Catalyst CSE
-    does not collapse them across when-branches — measured 2.57 -> 2.02 s
-    at sf1.0 for the two-stage shape); callers that can project
-    `words(text)` first should use this."""
+    """Composite [0,1] quality heuristic over a PRE-PROJECTED words
+    array: rewards reasonable length, a healthy stopword ratio, sane
+    mean word length and low punctuation density. Deterministic and
+    SQL-expressible; thresholds are the usual web-corpus filters
+    (Gopher/C4-style rules, public). Pass `words(text)` projected once:
+    inlined, the lower+split+filter re-evaluates per component (Catalyst
+    CSE does not collapse them across when-branches — measured 2.57 ->
+    2.02 s at sf1.0 for the two-stage shape)."""
     nt = F.size(words_col)
     len_ok = F.when((nt >= 5) & (nt <= 100000), F.lit(1.0)).otherwise(F.lit(0.0))
     markers = F.array(*[F.lit(m) for m in LANG_MARKERS["en"]])
@@ -129,14 +107,6 @@ def quality_score_from(words_col: Column, text: Column) -> Column:
         / F.greatest(nt, F.lit(1))
     mwl_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
     return (len_ok + sw_ok + punct_ok + mwl_ok) / F.lit(4.0)
-
-
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality heuristic: rewards reasonable length, a
-    healthy stopword ratio, and low punctuation density. Deterministic and
-    SQL-expressible; thresholds are the usual web-corpus filters
-    (Gopher/C4-style rules, public)."""
-    return quality_score_from(words(text), text)
 
 
 def content_hash64(text: Column) -> Column:

@@ -389,7 +389,7 @@ def _sps(w: int, h: int) -> bytes:
     bw.ue(0)      # sps_id
     bw.ue(0)      # log2_max_frame_num_minus4 -> frame_num is u(4)
     bw.ue(2)      # pic_order_cnt_type 2 (order = decode order)
-    bw.ue(0)      # max_num_ref_frames (the decoder keeps one regardless)
+    bw.ue(1)      # max_num_ref_frames: each P slice predicts from one
     bw.u(0, 1)    # gaps_in_frame_num_value_allowed
     bw.ue(mbw - 1)
     bw.ue(mbh - 1)
@@ -701,7 +701,7 @@ def _encode_chroma_mb(csrc, cpred, qp_y, intra, max_coeffs=15):
 def _write_chroma_residual(bw, cbpc, comps, nnz_c, mx, my):
     """CAVLC chroma residual serialization (DC both components, then AC
     both components) + TotalCoeff context upkeep — the exact mirror of
-    _decode_chroma_residual / _parse_chroma_residual."""
+    _decode_chroma_residual."""
     if cbpc == 0:
         nnz_c[:, my * 2:my * 2 + 2, mx * 2:mx * 2 + 2] = 0
         return
@@ -2360,7 +2360,7 @@ def _parse_sps(rbsp: bytes) -> dict:
         r.se()
         for _ in range(r.ue()):
             r.se()
-    r.ue()  # max_num_ref_frames (the decoder keeps one reference)
+    max_refs = r.ue()  # the decoder keeps one reference regardless
     r.u(1)
     mbw = r.ue() + 1
     mbh = r.ue() + 1
@@ -2375,7 +2375,8 @@ def _parse_sps(rbsp: bytes) -> dict:
     h = mbh * 16 - 2 * (crop[2] + crop[3])
     return {"profile": profile, "level": level, "mbw": mbw, "mbh": mbh,
             "w": w, "h": h, "log2_mfn": log2_mfn, "poc_type": poc_type,
-            "log2_poc": log2_poc, "delta_always_zero": delta_always_zero}
+            "log2_poc": log2_poc, "delta_always_zero": delta_always_zero,
+            "max_num_ref_frames": max_refs}
 
 
 def _more_rbsp(r: "_BitReader") -> bool:
@@ -2459,26 +2460,6 @@ def _nc_chroma(nnz_comp, bx, by):
     if b is not None:
         return b
     return 0
-
-
-def _parse_chroma_residual(r, cbpc, nnz_c, mx, my):
-    """Parse (advance past) chroma residuals, tracking TotalCoeff for
-    nC contexts. Chroma samples are not reconstructed: callers only
-    consume luma (sample_frames converts to grey anyway)."""
-    if cbpc == 0:
-        nnz_c[:, my * 2:my * 2 + 2, mx * 2:mx * 2 + 2] = 0
-        return
-    for _comp in range(2):  # ChromaDCLevel, nC = -1 for 4:2:0
-        _decode_residual(r, -1, 4)
-    if cbpc == 2:
-        for comp in range(2):
-            for blk in range(4):
-                bx, by = mx * 2 + blk % 2, my * 2 + blk // 2
-                nc = _nc_chroma(nnz_c[comp], bx, by)
-                scan = _decode_residual(r, nc, 15)
-                nnz_c[comp, by, bx] = sum(1 for v in scan if v)
-    else:
-        nnz_c[:, my * 2:my * 2 + 2, mx * 2:mx * 2 + 2] = 0
 
 
 def _decode_mb_i4x4(r, plane, mx, my, qp, nnz, cc, modes, plane_w):

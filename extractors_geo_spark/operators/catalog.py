@@ -1,43 +1,19 @@
-"""Catalog table maintenance — the pycsw/GeoServer bookkeeping as table ops.
+"""Catalog table maintenance — the pycsw transactions as table ops.
 
-The reference maintains derived artifacts in external services:
+The reference maintains its catalog in an external CSW service:
   * CSW Transaction insert  (pycsw.extractor/pycswutils.py:26-65)  -> upsert
   * CSW Transaction delete  (pycsw.extractor/pycswutils.py:70-84)  -> delete
-  * GetRecordById            (ncsa.geo.pycsw.py:278-285)           -> point lookup
-  * file.removed teardown    (preview.geotiff/ncsa.geo.tiff.py:41-66,154-170)
-                                                                    -> anti-join
 
 Here the catalog is a columnar table; MERGE semantics are expressed as
-latest-wins window dedup (works on plain parquet; swaps to real Iceberg
-MERGE INTO when a catalog supporting it is attached — the writer interface
-is isolated in write_catalog)."""
+latest-wins window dedup, DELETE as a left-anti join. SnapshotTable's
+merge and delete commits are built on these two. The removal anti-join
+and the catalog-record document are driver queries
+(`__spark_entry__.q_removal_antijoin`, `q_catalog_record_json`)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..functions import geo
-
-
-def build_catalog_records(meta: DataFrame, workspace: str = "clowder",
-                          wms_base: str = "http://localhost/geoserver") -> DataFrame:
-    """meta (valid rows of extract_meta) -> catalog records with the
-    reference's record fields (identifier, title, corner strings in
-    'lat lon' order after the axis swap, WMS url)."""
-    e = F.col("extent_3857")
-    lo, hi = geo.csw_corners(e.minx, e.miny, e.maxx, e.maxy)
-    store = geo.storename(F.col("image_id"), F.xxhash64("image_id").cast("string"))
-    return meta.select(
-        F.concat(F.lit(workspace), F.lit(":"), store).alias("identifier"),
-        F.col("image_id"),
-        F.col("caption").alias("title"),
-        lo.alias("lower_corner"),
-        hi.alias("upper_corner"),
-        geo.wms_getmap_url(wms_base, workspace, F.col("image_id"),
-                           e.minx, e.miny, e.maxx, e.maxy).alias("wms_url"),
-        F.current_timestamp().alias("updated_at"),
-    )
 
 
 def upsert(catalog: DataFrame, updates: DataFrame, key: str = "identifier",
@@ -55,22 +31,3 @@ def delete(catalog: DataFrame, identifiers: DataFrame, key: str = "identifier") 
     return catalog.join(identifiers.select(key).distinct(), key, "left_anti")
 
 
-def apply_removals(df: DataFrame, events: DataFrame, key: str = "image_id") -> DataFrame:
-    """file.removed propagation (ST2): drop rows whose LAST event is
-    'removed'. 'Last' matters: an image re-added after removal stays."""
-    w = Window.partitionBy(key).orderBy(F.col("ts").desc())
-    last = (
-        events.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("activity") == "removed"))
-        .select(key)
-    )
-    return df.join(last, key, "left_anti")
-
-
-def lookup(catalog: DataFrame, identifier: str, key: str = "identifier") -> DataFrame:
-    """GetRecordById — a point filter; pushed to the scan by Catalyst."""
-    return catalog.filter(F.col(key) == identifier)
-
-
-def write_catalog(catalog: DataFrame, path: str) -> None:
-    catalog.write.mode("overwrite").parquet(path)

@@ -7,9 +7,8 @@ is oracle-checkable bit-for-bit.
   exact_dedup     hash-groupBy, keep first doc per normalized-text hash
   minhash_lsh     word-shingle MinHash signatures + banded LSH candidate
                   pairs + exact Jaccard verification
-  simhash         32-bit SimHash + hamming-distance near-dup pairs
+  simhash_df      SimHash signature per document
   ngram_jaccard   exact n-gram Jaccard between candidate pairs
-  embedding近dup  see similarity.near_dup_pairs (cosine threshold)
 
 Scale notes: every stage is groupBy/join on int keys (hash-partitioned,
 AQE-skew-splittable); signatures are fixed-width arrays so shuffle rows are
@@ -18,7 +17,7 @@ small; candidate verification only touches pairs that share an LSH bucket.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -84,12 +83,6 @@ def shingles_from_words(w: Column, n: int = 3) -> Column:
     return F.when(F.size(w) >= n, _shingles_unguarded(w, n)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingle strings (distinct). Prefer materializing
-    norm_words() in a projection and calling shingles_from_words."""
-    return shingles_from_words(norm_words(text), n)
 
 
 def shingle_hashes_from_words(w: Column, shingle_n: int = 3) -> Column:
@@ -216,24 +209,6 @@ def word_hashes(text: Column) -> Column:
     return F.transform(norm_words(text), lambda x: content_hash64(x))
 
 
-def simhash_from_hashes(hs: Column, bits: int = 32) -> Column:
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        vote = F.aggregate(
-            hs,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + F.when(F.shiftright(h, b) % 2 == 1, F.lit(1)).otherwise(F.lit(-1)),
-        )
-        out = out + F.when(vote > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
-
-
-def simhash(text: Column, bits: int = 32) -> Column:
-    """SimHash over word hashes: bit b of the result = 1 iff the sum over
-    words of (+1 if bit b of h(word) else -1) is positive."""
-    return simhash_from_hashes(word_hashes(text), bits)
-
-
 def simhash_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                bits: int = 32) -> DataFrame:
     """(id, sh) via explode + codegen aggregation — ~2x the per-bit
@@ -241,7 +216,9 @@ def simhash_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     codegen; conditional sums do). Scale-safe: a document's exploded
     word hashes are contiguous in one partition, so map-side partial
     aggregation collapses each doc locally and the exchange carries one
-    row per DOCUMENT, not per word. Bit-identical to simhash()."""
+    row per DOCUMENT, not per word. Bit b of `sh` is 1 iff the sum over
+    the document's words of (+1 if bit b of the word hash is set, else
+    -1) is positive."""
     from ..exprcache import memo_col
 
     def _build():
@@ -262,44 +239,6 @@ def simhash_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     w = df.select(F.col(id_col).alias("id"), h)
     agg = w.groupBy("id").agg(*sums)
     return agg.select("id", sh)
-
-
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 32,
-    max_hamming: int = 3,
-    block_bits: int = 8,
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance <= max_hamming.
-    Blocking: two fixed byte-blocks of the hash (pigeonhole: any pair
-    within hamming<=3 agrees on at least one of 4 blocks of an 8-bit
-    split); candidates verified exactly with bit_count(xor)."""
-    d = simhash_df(df, text_col, id_col, bits)
-    n_blocks = bits // block_bits
-    blocks = F.explode(
-        F.array(*[
-            F.struct(F.lit(i).alias("blk"),
-                     F.shiftright(F.col("sh"), i * block_bits).bitwiseAND(F.lit((1 << block_bits) - 1)).alias("bv"))
-            for i in range(n_blocks)
-        ])
-    ).alias("bk")
-    banded = d.select("id", "sh", blocks).select("id", "sh", "bk.blk", "bk.bv")
-    left, right = banded.alias("l"), banded.alias("r")
-    cand = (
-        # shuffle_hash: broadcasting a side would re-run the simhash
-        # aggregation through a driver-side build (same pathology as the
-        # minhash/ngram self-joins; impossible shape at 100 TB anyway)
-        left.join(right.hint("shuffle_hash"),
-                  (F.col("l.blk") == F.col("r.blk")) & (F.col("l.bv") == F.col("r.bv"))
-                  & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"),
-                F.col("l.sh").alias("sa"), F.col("r.sh").alias("sb"))
-        .dropDuplicates(["a", "b"])
-    )
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    return cand.withColumn("hamming", ham).filter(F.col("hamming") <= max_hamming).select("a", "b", "hamming")
 
 
 def ngram_jaccard_pairs(

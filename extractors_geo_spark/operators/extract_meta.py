@@ -629,12 +629,3 @@ def geo_positions(images: DataFrame) -> DataFrame:
     j_pos = (jp.filter(F.col("error").isNull() & F.col("lon").isNotNull())
              .select("image_id", "lon", "lat", F.lit("exif").alias("src")))
     return t_pos.unionByName(j_pos)
-
-
-def with_box_and_ring(meta_df: DataFrame) -> DataFrame:
-    """Attach the reference's reordered `box` + closed GeoJSON ring
-    (metadata.geotiff/ncsa.image.geotiff.py:70,115-117) as columns."""
-    m = F.col("meta")
-    return meta_df.withColumn(
-        "box", geo.box_reordered(m.minx, m.miny, m.maxx, m.maxy)
-    ).withColumn("ring", geo.geojson_ring(m.minx, m.miny, m.maxx, m.maxy))

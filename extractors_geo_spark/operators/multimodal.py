@@ -2,26 +2,22 @@
 
 The engine treats non-TIFF payloads the way a 100 TB training-data
 pipeline does: bytes stay an opaque `binary` column, typed metadata
-travels beside them, and decode/feature stages are Arrow-batched
-mapInPandas operators. Every decode is REAL (pure-Python codecs in
-..tiff/..png/..jpeg/..avi/..mp4/..h264): TIFF (+BigTIFF), PNG, JPEG
-(baseline + progressive), video as MJPEG (AVI and MP4 jpeg-codec
-tracks), uncompressed MP4 ('raw '/'Y800') and CAVLC H.264 MP4, and
-tx3g caption tracks. Bytes no codec here can decode never turn into
-made-up pixels: an image gets an error row (or no feature/thumbnail
-row), a malformed video clip yields no rows, and a well-formed stream
-in a codec (or coding tools) the engine does not carry raises
-NotImplementedError.
+travels beside them, and every stage is an Arrow-batched mapInPandas
+operator. Every parse is REAL (pure-Python codecs in
+..png/..jpeg/..exif/..avi/..mp4/..h264/..subtitles): video as MJPEG
+(AVI and MP4 jpeg-codec tracks), uncompressed MP4 ('raw '/'Y800') and
+CAVLC H.264 MP4, and tx3g caption tracks. Bytes no codec here can
+parse never turn into made-up values: a malformed image or clip yields
+an error row or no rows, and a well-formed stream in a codec (or coding
+tools) the engine does not carry raises NotImplementedError.
 
 Operators:
-  sniff_format       magic-byte detection (the reference's
-                     `file -b --mime-type` check, preview.geoshp/
-                     ncsa.geo.shp.py:184-189) — pure column expression
-  decode_image_meta  (w, h, ok, error) per image
-  image_features     fixed-length float feature vector per image
-  resize_image       (w, h) -> (tw, th) thumbnail bytes
+  exif_geo           JPEG EXIF GPS position + orientation per image
+  image_text_meta    PNG text chunks / EXIF description -> (key, value) rows
   sample_frames      video bytes -> one row per sampled frame (UDTF-style
                      1->N explode, like the tile pyramid)
+  video_captions     MP4 caption track -> timed caption rows
+  sidecar_captions   SRT / WebVTT documents -> timed caption rows
 """
 
 from __future__ import annotations
@@ -31,89 +27,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import jpeg as _jpeg
 from .. import png as _png
-from .. import tiff
-
-MAGIC = {
-    "png": b"\x89PNG\r\n\x1a\n",
-    "jpeg": b"\xff\xd8\xff",
-    "tiff_le": b"II*\x00",
-    "tiff_be": b"MM\x00*",
-    "bigtiff_le": b"II+\x00",  # BigTIFF (version 43)
-    "bigtiff_be": b"MM\x00+",
-    "riff": b"RIFF",  # avi container
-    "zip": b"PK\x03\x04",
-    "sevenz": b"7z\xbc\xaf\x27\x1c",  # application/x-7z-compressed (P3)
-}
-
-
-def sniff_format(data: Column) -> Column:
-    """Magic-byte format detection as a pure column expression (stays in
-    codegen; no Python)."""
-    head8 = F.substring(data, 1, 8)
-    head4 = F.substring(data, 1, 4)
-    head3 = F.substring(data, 1, 3)
-    return (
-        F.when(head8 == F.lit(MAGIC["png"]), F.lit("png"))
-        .when(head3 == F.lit(MAGIC["jpeg"]), F.lit("jpeg"))
-        .when(head4 == F.lit(MAGIC["tiff_le"]), F.lit("tiff"))
-        .when(head4 == F.lit(MAGIC["tiff_be"]), F.lit("tiff"))
-        .when(head4 == F.lit(MAGIC["bigtiff_le"]), F.lit("tiff"))
-        .when(head4 == F.lit(MAGIC["bigtiff_be"]), F.lit("tiff"))
-        .when(head4 == F.lit(MAGIC["riff"]), F.lit("riff"))
-        .when(head4 == F.lit(MAGIC["zip"]), F.lit("zip"))
-        .when(F.substring(data, 1, 6) == F.lit(MAGIC["sevenz"]), F.lit("7z"))
-        .otherwise(F.lit("unknown"))
-    )
-
-
-def _decode(data: bytes, fmt: str) -> tuple[np.ndarray | None, str | None]:
-    if fmt == "tiff":
-        try:
-            info = tiff.read_info(data)
-            return tiff.read_pixels(data, info).astype(np.float64), None
-        except Exception:
-            return None, "bad tiff"
-    if fmt == "png":
-        # REAL decode (stdlib zlib codec in ..png); luminance for color
-        try:
-            arr = _png.decode(data)
-            if arr.ndim == 3:
-                # gray+alpha (color type 4) is (h, w, 2): the pixel value is
-                # channel 0 alone — averaging alpha in corrupts the stats
-                arr = arr[:, :, 0] if arr.shape[2] == 2 else arr[:, :, :3].mean(axis=2)
-            return arr.astype(np.float64), None
-        except Exception:
-            return None, "bad png"
-    if fmt == "jpeg":
-        # REAL decode (pure-Python baseline codec in ..jpeg); luminance for
-        # color. Swap for libjpeg-turbo at scale — same two functions.
-        try:
-            arr = _jpeg.decode(data)
-            if arr.ndim == 3:
-                arr = arr.astype(np.float64).mean(axis=2)
-            return arr.astype(np.float64), None
-        except Exception:
-            return None, "bad jpeg"
-    return None, f"unsupported format {fmt}"
-
-
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("fmt_sniffed", T.StringType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
 
 EXIF_SCHEMA = T.StructType(
     [
@@ -186,104 +105,6 @@ def image_text_meta(images: DataFrame, id_col: str = "image_id") -> DataFrame:
             yield pd.DataFrame(rows, columns=["image_id", "key", "value"])
 
     return images.select(F.col(id_col), "bytes").mapInPandas(run, IMAGE_TEXT_SCHEMA)
-
-
-def decode_image_meta(images: DataFrame) -> DataFrame:
-    """Narrow Arrow stage: bytes -> (w, h, ok, error). Bytes pruned from
-    the output."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data in zip(b["image_id"], b["bytes"]):
-                data = bytes(data)
-                fmt = _sniff_py(data)
-                arr, err = _decode(data, fmt)
-                rows.append({
-                    "image_id": iid, "fmt_sniffed": fmt,
-                    "w": arr.shape[1] if arr is not None else None,
-                    "h": arr.shape[0] if arr is not None else None,
-                    "ok": arr is not None, "error": err,
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in META_SCHEMA.fields])
-
-    return images.select("image_id", "bytes").mapInPandas(run, META_SCHEMA)
-
-
-def _sniff_py(data: bytes) -> str:
-    if data[:8] == MAGIC["png"]:
-        return "png"
-    if data[:3] == MAGIC["jpeg"]:
-        return "jpeg"
-    if data[:4] in (MAGIC["tiff_le"], MAGIC["tiff_be"],
-                    MAGIC["bigtiff_le"], MAGIC["bigtiff_be"]):
-        return "tiff"
-    if data[:4] == MAGIC["riff"]:
-        return "riff"
-    return "unknown"
-
-
-FEAT_DIM = 16
-FEAT_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def image_features(images: DataFrame) -> DataFrame:
-    """Fixed-length feature vector per image (histogram of pixel
-    intensities — a deterministic, codec-independent featurizer; swap in a
-    CNN embedding UDF on a real cluster with the same schema)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data in zip(b["image_id"], b["bytes"]):
-                data = bytes(data)
-                arr, _err = _decode(data, _sniff_py(data))
-                if arr is None:
-                    continue
-                finite = arr[np.isfinite(arr)]
-                lo, hi = float(finite.min()), float(finite.max())
-                hist, _ = np.histogram(finite, bins=FEAT_DIM, range=(lo, hi + 1e-9))
-                feat = (hist / max(finite.size, 1)).astype(np.float32)
-                rows.append({"image_id": iid, "features": feat.tolist()})
-            yield pd.DataFrame(rows, columns=["image_id", "features"])
-
-    return images.select("image_id", "bytes").mapInPandas(run, FEAT_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("tw", T.IntegerType()),
-        T.StructField("th", T.IntegerType()),
-        T.StructField("thumb", T.BinaryType()),
-    ]
-)
-
-
-def resize_image(images: DataFrame, tw: int = 8, th: int = 8) -> DataFrame:
-    """Nearest-neighbor thumbnail (same kernel as tiles.render_gray)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data in zip(b["image_id"], b["bytes"]):
-                data = bytes(data)
-                arr, _err = _decode(data, _sniff_py(data))
-                if arr is None:
-                    continue
-                h, w = arr.shape
-                yi = np.clip((np.arange(th) + 0.5) * h / th, 0, h - 1).astype(np.int64)
-                xi = np.clip((np.arange(tw) + 0.5) * w / tw, 0, w - 1).astype(np.int64)
-                rows.append({"image_id": iid, "tw": tw, "th": th,
-                             "thumb": arr[yi][:, xi].astype("<f8").tobytes()})
-            yield pd.DataFrame(rows, columns=["image_id", "tw", "th", "thumb"])
-
-    return images.select("image_id", "bytes").mapInPandas(run, RESIZE_SCHEMA)
 
 
 def mp4_meta(data: bytes) -> dict:

@@ -148,89 +148,6 @@ def lsh_topk(
     )
 
 
-def ivf_centroids(corpus: DataFrame, n_centroids: int = 16, c_vec: str = "embedding",
-                  sample: int = 2048, iters: int = 5, seed: int = 42,
-                  c_id: str = "vec_id") -> np.ndarray:
-    """Deterministic IVF codebook: k-means (fixed seed, fixed-size
-    deterministic sample ordered by id) run driver-side on a small sample —
-    the standard IVF recipe; the expensive assignment stays distributed.
-    The sample is orderBy(id).limit(): limit without an ordering is
-    partition-order dependent and would make the codebook vary run-to-run."""
-    pdf = corpus.select(F.col(c_id), F.col(c_vec)).orderBy(c_id).limit(sample).toPandas()
-    X = np.array([np.asarray(v, np.float64) for v in pdf[c_vec]])
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    h = hashlib.sha256(f"ivf:{seed}:{n_centroids}".encode()).digest()
-    rng = np.random.Generator(np.random.PCG64(int.from_bytes(h[:8], "little")))
-    C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
-    for _ in range(iters):
-        assign = np.argmax(X @ C.T, axis=1)
-        for k in range(len(C)):
-            m = X[assign == k]
-            if len(m):
-                c = m.mean(axis=0)
-                C[k] = c / max(np.linalg.norm(c), 1e-12)
-    return C
-
-
-def _centroid_id(vec: Column, C: np.ndarray) -> Column:
-    """argmax-dot-product centroid assignment as a Catalyst expression
-    (literal codebook — no UDF). Built as array_max over (dot, -i) structs:
-    each dot appears ONCE in the tree. A chained when(dot > best, ...)
-    fold embeds `best` twice per step — 2^n expression nodes, which OOMs
-    the JVM at the default 16 centroids (found in round-2 verification)."""
-    vf = F.transform(vec, lambda x: x.cast("double"))
-    pairs = []
-    for i, c in enumerate(C):
-        lit = F.array(*[F.lit(float(v)) for v in c])
-        dot = F.aggregate(F.zip_with(vf, lit, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-        # negative id: struct max breaks dot ties toward the SMALLEST i,
-        # matching the strict-greater fold this replaces
-        pairs.append(F.struct(dot.alias("dot"), F.lit(-i).alias("nid")))
-    return (-F.array_max(F.array(*pairs))["nid"]).cast("int")
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    q_id: str = "query_id",
-    c_id: str = "vec_id",
-    q_vec: str = "embedding",
-    c_vec: str = "embedding",
-    centroids: np.ndarray | None = None,
-) -> DataFrame:
-    """IVF approximate top-k: corpus partitioned into centroid lists
-    (equi-join key), queries probe their nprobe nearest lists, exact rank
-    inside. The scale path when the corpus holds distance structure; LSH
-    (lsh_topk) when it doesn't. Recall measured in tests."""
-    C = centroids if centroids is not None else ivf_centroids(corpus, n_centroids, c_vec, c_id=c_id)
-    c = corpus.select(F.col(c_id), F.col(c_vec).alias("_cv")).withColumn(
-        "list_id", _centroid_id(F.col("_cv"), C)
-    )
-    # query probes: top-nprobe centroid ids as an array -> explode
-    qf = queries.select(F.col(q_id), F.col(q_vec).alias("_qv"))
-    probes = []
-    vf = F.transform(F.col("_qv"), lambda x: x.cast("double"))
-    dots = []
-    for i, cen in enumerate(C):
-        lit = F.array(*[F.lit(float(v)) for v in cen])
-        dots.append(F.aggregate(F.zip_with(vf, lit, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v))
-    pairs = F.array(*[F.struct(d.alias("dot"), F.lit(i).alias("cid")) for i, d in enumerate(dots)])
-    top = F.slice(F.reverse(F.array_sort(pairs)), 1, nprobe)
-    q = qf.withColumn("list_id", F.explode(F.transform(top, lambda s: s.cid)))
-    joined = c.join(F.broadcast(q), "list_id")
-    cos = cosine_expr(F.col("_qv"), F.col("_cv")).alias("cosine")
-    w = Window.partitionBy(q_id).orderBy(F.col("cosine").desc(), F.col(c_id).asc())
-    return (
-        joined.select(q_id, c_id, cos)
-        .dropDuplicates([q_id, c_id])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,

@@ -5,14 +5,13 @@ Three operators re-expressing the reference's raster pipeline:
   * overview_pyramid — the gdaladdo analog (preview.geotiff/
     ncsa.geo.tiff.py:186-189; levels 2..1024 from Dockerfile:36-37).
     One mapInPandas stage: decode bytes once, emit one row per level with
-    2x-reduced pixels. Narrow (no shuffle); bytes never cross a shuffle —
-    output tiles are written straight to the sink partitioned by level.
+    2x-reduced pixels. Narrow (no shuffle); bytes never cross a shuffle.
     Resampling is area-mean (the engine's deterministic stand-in for
     cubic; PSNR vs the oracle's identical reducer is exact).
 
   * xyz_tiles — slippy z/x/y tile ASSIGNMENT: which web-mercator tiles an
     image footprint intersects per zoom. Pure Catalyst (sequence+explode),
-    SQL-expressible, feeds the tiles sink partitioned by (z, x).
+    SQL-expressible.
 
   * tile_render — WMS GetMap analog (preview.geotiff/gsclient.py:75-76):
     render a w x h window from an image's pixels with the mu+/-2sigma
@@ -350,10 +349,3 @@ def tile_render(images: DataFrame, out_w: int = 640, out_h: int = 480) -> DataFr
             yield pd.DataFrame(rows, columns=["image_id", "rw", "rh", "png"])
 
     return images.select("image_id", "bytes", "fmt").mapInPandas(run, RENDER_SCHEMA)
-
-
-def write_tiles(tiles: DataFrame, path: str, partition_cols=("z", "x")) -> None:
-    """Tile sink partitioned by (z, x) — the engine's stand-in for the
-    GeoServer coverage store (K2). Partition pruning then serves bbox
-    reads for free."""
-    tiles.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)

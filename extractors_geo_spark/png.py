@@ -3,7 +3,9 @@
 Closes the reference's PNG contract: GetMap requests format=image%2Fpng
 (preview.geotiff/gsclient.py:75-76) and the thumbnail path streams a PNG
 (gsclient.py:249-291). The engine's tile_render emits real PNG bytes via
-encode(); multimodal.decode_image_meta reads PNGs via decode().
+encode(), and multimodal.image_text_meta reads PNG captions via
+read_text_chunks(). decode() is the oracle the tile tests check those
+PNG bytes against; no engine stage decodes PNG pixels.
 
 Encoder: 8-bit gray / gray+alpha / RGB / RGBA, filter 0 rows, one zlib
 IDAT — small and valid everywhere. Decoder: critical chunks, bit depth 8,

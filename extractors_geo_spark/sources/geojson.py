@@ -20,12 +20,10 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .shapefile import INGEST_SCHEMA, _reproject_to_4326
+from .shapefile import _reproject_to_4326, ingest_features
 
 _EPSG_RE = re.compile(r"EPSG:?:?(\d+)$", re.IGNORECASE)
 
@@ -143,49 +141,9 @@ def read_geojson(text: str | bytes) -> dict:
 
 
 def ingest_geojson(binary_files: DataFrame, name_attr: str = "name") -> DataFrame:
-    """binaryFile rows (path, content) -> feature table (INGEST_SCHEMA) —
-    identical contract to shapefile.ingest_zips: invalid documents emit
-    one error row; valid ones one row per feature."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for path, content in zip(b["path"], b["content"]):
-                try:
-                    parsed = read_geojson(bytes(content))
-                except Exception:  # absolute backstop: never kill the job
-                    parsed = {"errors": ["BAD_GEOJSON"], "epsg": None,
-                              "features": []}
-                if parsed["errors"] or not parsed["features"]:
-                    rows.append({
-                        "source": path, "poly_id": None, "kind": None, "name": None,
-                        "xs": None, "ys": None, "ring_lens": None,
-                        "minx": None, "miny": None, "maxx": None, "maxy": None,
-                        "epsg": parsed["epsg"], "attrs": None,
-                        "errors": parsed["errors"] or ["EMPTY"],
-                    })
-                    continue
-                for i, f in enumerate(parsed["features"]):
-                    xs, ys, lens = [], [], []
-                    for ring in f["rings"]:
-                        xs.extend(p[0] for p in ring)
-                        ys.extend(p[1] for p in ring)
-                        lens.append(len(ring))
-                    rows.append({
-                        "source": path,
-                        "poly_id": f"{path.rsplit('/', 1)[-1]}:{i:05d}",
-                        "kind": f["kind"],
-                        "name": str(f["attrs"].get(name_attr, i)),
-                        "xs": xs, "ys": ys, "ring_lens": lens,
-                        "minx": f["bbox"][0], "miny": f["bbox"][1],
-                        "maxx": f["bbox"][2], "maxy": f["bbox"][3],
-                        "epsg": parsed["epsg"],
-                        "attrs": {k: str(v) for k, v in f["attrs"].items()},
-                        "errors": [],
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in INGEST_SCHEMA.fields])
-
-    return binary_files.select("path", "content").mapInPandas(run, INGEST_SCHEMA)
+    """GeoJSON documents -> feature table (shapefile.ingest_features); a
+    document the reader cannot parse becomes one BAD_GEOJSON error row."""
+    return ingest_features(binary_files, read_geojson, name_attr, error="BAD_GEOJSON")
 
 
 def ingest_geojson_dir(spark: SparkSession, path: str) -> DataFrame:

@@ -23,12 +23,10 @@ import os
 import sqlite3
 import struct
 import tempfile
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .shapefile import INGEST_SCHEMA, _reproject_to_4326
+from .shapefile import _reproject_to_4326, ingest_features
 
 _WKB_KIND = {1: "point", 2: "polyline", 3: "polygon",
              4: "point", 5: "polyline", 6: "polygon"}
@@ -187,47 +185,9 @@ def read_geopackage(data: bytes, layer: str | None = None) -> dict:
 
 
 def ingest_gpkg(binary_files: DataFrame, name_attr: str = "name") -> DataFrame:
-    """binaryFile rows (path, content) -> feature table (INGEST_SCHEMA),
-    same contract as the shapefile/GeoJSON sources."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for path, content in zip(b["path"], b["content"]):
-                try:
-                    parsed = read_geopackage(bytes(content))
-                except Exception:  # backstop: never kill the job
-                    parsed = {"errors": ["BAD_GPKG"], "epsg": None, "features": []}
-                if parsed["errors"] or not parsed["features"]:
-                    rows.append({
-                        "source": path, "poly_id": None, "kind": None, "name": None,
-                        "xs": None, "ys": None, "ring_lens": None,
-                        "minx": None, "miny": None, "maxx": None, "maxy": None,
-                        "epsg": parsed["epsg"], "attrs": None,
-                        "errors": parsed["errors"] or ["EMPTY"],
-                    })
-                    continue
-                for i, f in enumerate(parsed["features"]):
-                    xs, ys, lens = [], [], []
-                    for ring in f["rings"]:
-                        xs.extend(p[0] for p in ring)
-                        ys.extend(p[1] for p in ring)
-                        lens.append(len(ring))
-                    rows.append({
-                        "source": path,
-                        "poly_id": f"{path.rsplit('/', 1)[-1]}:{i:05d}",
-                        "kind": f["kind"],
-                        "name": str(f["attrs"].get(name_attr, i)),
-                        "xs": xs, "ys": ys, "ring_lens": lens,
-                        "minx": f["bbox"][0], "miny": f["bbox"][1],
-                        "maxx": f["bbox"][2], "maxy": f["bbox"][3],
-                        "epsg": parsed["epsg"],
-                        "attrs": {k: str(v) for k, v in f["attrs"].items()},
-                        "errors": [],
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in INGEST_SCHEMA.fields])
-
-    return binary_files.select("path", "content").mapInPandas(run, INGEST_SCHEMA)
+    """GeoPackage files -> feature table (shapefile.ingest_features); a
+    file the reader cannot parse becomes one BAD_GPKG error row."""
+    return ingest_features(binary_files, read_geopackage, name_attr, error="BAD_GPKG")
 
 
 def ingest_gpkg_dir(spark: SparkSession, path: str) -> DataFrame:

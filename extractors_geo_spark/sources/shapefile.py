@@ -413,26 +413,36 @@ INGEST_SCHEMA = T.StructType(
 )
 
 
-def ingest_zips(binary_files: DataFrame, name_attr: str = "STATE_NAME") -> DataFrame:
-    """binaryFile rows (path, content) -> feature table. Invalid zips emit
-    one row with the error list (P6 projection: errors as data, not
-    exceptions); valid ones emit one row per feature. `kind` is
-    'polygon' | 'polyline' | 'point' — spatial join operators expecting
-    polygons filter kind == 'polygon'; point layers join via cell_id on
-    their single vertex."""
+def ingest_features(binary_files: DataFrame, parse, name_attr: str,
+                    error: str | None = None) -> DataFrame:
+    """binaryFile rows (path, content) -> feature table: the one body of
+    every vector source. `parse(bytes)` returns the source's reader dict
+    ({"features", "errors", "epsg"}). A file with errors or no features
+    emits one row with its error list (P6 projection: errors as data,
+    not exceptions); a valid one emits one row per feature. `error` is
+    the code an exception in `parse` becomes (the backstop that keeps a
+    bad file from killing the job); with None the exception propagates.
+    `kind` is 'polygon' | 'polyline' | 'point' — spatial join operators
+    expecting polygons filter kind == 'polygon'; point layers join via
+    cell_id on their single vertex."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             rows = []
             for path, content in zip(b["path"], b["content"]):
-                parsed = read_zip_shapefile(bytes(content))
+                try:
+                    parsed = parse(bytes(content))
+                except Exception:
+                    if error is None:
+                        raise
+                    parsed = {"errors": [error], "epsg": None, "features": []}
                 if parsed["errors"] or not parsed["features"]:
                     rows.append({
                         "source": path, "poly_id": None, "kind": None, "name": None,
                         "xs": None, "ys": None, "ring_lens": None,
-                        "minx": None, "miny": None,
-                        "maxx": None, "maxy": None, "epsg": parsed["epsg"],
-                        "attrs": None, "errors": parsed["errors"] or ["EMPTY"],
+                        "minx": None, "miny": None, "maxx": None, "maxy": None,
+                        "epsg": parsed["epsg"], "attrs": None,
+                        "errors": parsed["errors"] or ["EMPTY"],
                     })
                     continue
                 for i, f in enumerate(parsed["features"]):
@@ -446,7 +456,7 @@ def ingest_zips(binary_files: DataFrame, name_attr: str = "STATE_NAME") -> DataF
                     rows.append({
                         "source": path,
                         "poly_id": f"{path.rsplit('/', 1)[-1]}:{i:05d}",
-                        "kind": f.get("kind", "polygon"),
+                        "kind": f["kind"],
                         "name": str(f["attrs"].get(name_attr, i)),
                         "xs": xs, "ys": ys, "ring_lens": lens,
                         "minx": f["bbox"][0], "miny": f["bbox"][1],
@@ -458,6 +468,12 @@ def ingest_zips(binary_files: DataFrame, name_attr: str = "STATE_NAME") -> DataF
             yield pd.DataFrame(rows, columns=[f.name for f in INGEST_SCHEMA.fields])
 
     return binary_files.select("path", "content").mapInPandas(run, INGEST_SCHEMA)
+
+
+def ingest_zips(binary_files: DataFrame, name_attr: str = "STATE_NAME") -> DataFrame:
+    """Zipped shapefiles -> feature table (ingest_features). A bad zip
+    gets read_zip_shapefile's own error codes."""
+    return ingest_features(binary_files, read_zip_shapefile, name_attr)
 
 
 def ingest_zip_dir(spark: SparkSession, path: str) -> DataFrame:

@@ -4,9 +4,10 @@
         --images /data/images_parquet --polygons /data/polygons_parquet \
         --out /data/derived --buckets 64 --resume
 
-Stages: decode+stats -> PIP join -> catalog records + xyz tile assignment,
-written bucket-by-bucket with the lineage manifest so a killed job resumes
-where it stopped (north rule: checkpoint per-partition lineage + metrics).
+Stages: decode+stats -> PIP join -> xyz tile assignment (one row per
+image, polygon and tile, carrying the caption), written bucket-by-bucket
+with the lineage manifest so a killed job resumes where it stopped (north
+rule: checkpoint per-partition lineage + metrics).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from extractors_geo_spark import datagen  # noqa: E402
-from extractors_geo_spark.operators import catalog, extract_meta, pip_join, tiles
+from extractors_geo_spark.operators import extract_meta, pip_join, tiles
 from extractors_geo_spark.session import get_spark
 from extractors_geo_spark.sources import scan
 from extractors_geo_spark.streaming.lineage import run_with_lineage

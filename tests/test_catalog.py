@@ -1,11 +1,10 @@
-"""Catalog MERGE/DELETE/removal semantics (SURVEY.md K5/K6/J3/ST2)."""
+"""Catalog MERGE/DELETE semantics (SURVEY.md K5/K6/J3). The removal
+anti-join (J3/ST2) is the driver's removal_antijoin query, checked by the
+oracle window."""
 
 import datetime
 
-from pyspark.sql import functions as F
-
-from extractors_geo_spark import datagen
-from extractors_geo_spark.operators import catalog, extract_meta
+from extractors_geo_spark.operators import catalog
 
 
 def _ts(s):
@@ -37,46 +36,3 @@ def test_delete(spark):
     dels = spark.createDataFrame([("b",), ("zz",)], ["identifier"])
     out = {r["identifier"] for r in catalog.delete(cat, dels).collect()}
     assert out == {"a", "c"}
-
-
-def test_apply_removals_last_event_wins(spark):
-    df = spark.createDataFrame([("i1", 1), ("i2", 2), ("i3", 3)], ["image_id", "v"])
-    events = spark.createDataFrame(
-        [
-            ("i1", "added", _ts("2024-01-01")),
-            ("i1", "removed", _ts("2024-01-02")),  # stays removed
-            ("i2", "removed", _ts("2024-01-01")),
-            ("i2", "added", _ts("2024-01-02")),  # re-added -> kept
-            ("i3", "added", _ts("2024-01-01")),
-        ],
-        ["image_id", "activity", "ts"],
-    )
-    out = {r["image_id"] for r in catalog.apply_removals(df, events).collect()}
-    assert out == {"i2", "i3"}
-
-
-def test_lookup_point_filter(spark):
-    cat = spark.createDataFrame([("a", 1), ("b", 2)], ["identifier", "v"])
-    assert catalog.lookup(cat, "a").count() == 1
-    assert catalog.lookup(cat, "zzz").count() == 0
-
-
-def test_build_catalog_records(spark, images_small):
-    meta = extract_meta.valid_meta(extract_meta.extract_meta(images_small, with_stats=False))
-    recs = catalog.build_catalog_records(meta).cache()
-    r = recs.first()
-    assert r["identifier"].startswith("clowder:img")
-    assert "_" in r["identifier"]  # storename mangling filename_fileid
-    lat, lon = (float(x) for x in r["lower_corner"].split(" "))
-    assert 24 < lat < 50 and -126 < lon < -66  # 'lat lon' order
-    assert "&width=640&height=480&srs=EPSG:3857&format=image%2Fpng" in r["wms_url"]
-    assert recs.count() == meta.count()
-
-
-def test_removals_against_datagen_events(spark, images_small):
-    events = datagen.events_df(spark, 400)
-    kept = catalog.apply_removals(images_small, events)
-    removed = events.filter(F.col("activity") == "removed").select("image_id").distinct()
-    n_removed = removed.join(images_small, "image_id").count()
-    assert kept.count() == images_small.count() - n_removed
-    assert kept.join(removed, "image_id").count() == 0

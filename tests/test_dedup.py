@@ -62,23 +62,25 @@ def test_ngram_jaccard_exact(spark, docs):
     assert got == exp
 
 
-def test_simhash_pairs_verified(spark, docs):
-    out = dedup.simhash_pairs(docs, max_hamming=6).collect()
-    # exact verification: recompute hamming from signatures
-    sig = {r["doc_id"]: r["sh"] for r in
-           docs.select("doc_id", dedup.simhash(F.col("text")).alias("sh")).collect()}
-    for r in out:
-        ham = bin(sig[r["a"]] ^ sig[r["b"]]).count("1")
-        assert ham == r["hamming"] and ham <= 6
-
-
 def test_simhash_identical_docs_zero_distance(spark):
-    d = spark.createDataFrame(
-        [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"), (3, "utterly different words entirely here")],
-        ["doc_id", "text"],
-    )
-    pairs = dedup.simhash_pairs(d, max_hamming=0).collect()
-    assert {(r["a"], r["b"]) for r in pairs} == {(1, 2)}
+    """simhash_df (the driver's simhash operator) equals a pure-Python
+    SimHash over the same md5-prefix word hashes, so identical documents
+    sit at hamming distance 0 and different ones do not."""
+    import hashlib
+
+    texts = {1: "the quick brown fox jumps", 2: "the  Quick brown fox jumps",
+             3: "utterly different words entirely here"}
+    d = spark.createDataFrame(list(texts.items()), ["doc_id", "text"])
+    got = {r["id"]: r["sh"] for r in dedup.simhash_df(d).collect()}
+
+    def ref(text, bits=32):
+        hs = [int(hashlib.md5(w.encode()).hexdigest()[:15], 16) for w in text.lower().split()]
+        return sum(1 << b for b in range(bits)
+                   if sum(1 if (h >> b) & 1 else -1 for h in hs) > 0)
+
+    assert got == {i: ref(t) for i, t in texts.items()}
+    assert bin(got[1] ^ got[2]).count("1") == 0
+    assert bin(got[1] ^ got[3]).count("1") > 0
 
 
 def test_keep_canonical(spark, docs):

@@ -71,10 +71,13 @@ def test_caption_passthrough_byte_equal(spark, images_small):
 
 
 def test_box_ring_columns(spark, images_small):
-    meta = extract_meta.with_box_and_ring(
-        extract_meta.valid_meta(extract_meta.extract_meta(images_small, with_stats=False))
-    )
-    r = meta.select("meta", "box", "ring").first()
+    meta = extract_meta.valid_meta(extract_meta.extract_meta(images_small, with_stats=False))
+    m = F.col("meta")
+    r = meta.select(
+        "meta",
+        geo.box_reordered(m.minx, m.miny, m.maxx, m.maxy).alias("box"),
+        geo.geojson_ring(m.minx, m.miny, m.maxx, m.maxy).alias("ring"),
+    ).first()
     m = r["meta"]
     assert r["box"] == [m["minx"], m["maxy"], m["maxx"], m["miny"]]
     assert r["ring"][0] == r["ring"][4] == [m["minx"], m["miny"]]

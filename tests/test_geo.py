@@ -62,18 +62,6 @@ def test_wms_url_literal_shape(spark):
     assert url.endswith("&width=640&height=480&srs=EPSG:3857&format=image%2Fpng")
 
 
-def test_csw_corner_axis_swap(spark):
-    x, y = geo.merc_forward_np(np.array([-100.0, -90.0]), np.array([30.0, 40.0]))
-    df = spark.createDataFrame([(float(x[0]), float(y[0]), float(x[1]), float(y[1]))],
-                               ["minx", "miny", "maxx", "maxy"])
-    lo, hi = geo.csw_corners(F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"))
-    r = df.select(lo.alias("lo"), hi.alias("hi")).collect()[0]
-    lat, lon = (float(v) for v in r["lo"].split(" "))
-    assert abs(lat - 30.0) < 1e-9 and abs(lon + 100.0) < 1e-9  # 'lat lon' order
-    lat, lon = (float(v) for v in r["hi"].split(" "))
-    assert abs(lat - 40.0) < 1e-9 and abs(lon + 90.0) < 1e-9
-
-
 def test_style_range_and_nodata_placement(spark):
     df = spark.createDataFrame(
         [(5.0, 1.0, -9999.0), (5.0, 1.0, 5.5), (5.0, 1.0, 9999.0), (5.0, 1.0, None), (5.0, 1.0, 0.0)],

@@ -546,6 +546,22 @@ def test_gop_idr_p_roundtrip_bit_exact():
         assert 10 * np.log10(255.0 ** 2 / max(mse, 1e-9)) >= 40.0, i
 
 
+def test_sps_declares_the_one_reference_p_slices_use():
+    """Every P slice predicts from one reference, so the SPS must say
+    max_num_ref_frames 1 (a strict decoder sizes its DPB from it). The
+    decoder keeps one reference whatever the field says: the decoded
+    frames equal those of the stream that wrote 0 (digest pinned)."""
+    import hashlib
+
+    f = (np.add.outer(np.arange(32) * 3, np.arange(48) * 5) % 256).astype(np.uint8)
+    avcc, samples = h264.encode_frames([f] * 2, qp=8, gop=2)
+    sps, _pps = h264._avcc_param_sets(avcc)
+    assert sps["max_num_ref_frames"] == 1
+    dec = h264.decode_samples(samples, avcc)
+    digest = hashlib.sha256(b"".join(d.tobytes() for d in dec)).hexdigest()
+    assert digest == "adb817957407e84b38a44a7c5f4fca99ba728a9c5babd974ea486c82dec02eef"
+
+
 def test_gop_static_scene_collapses_to_skip_runs():
     yy, xx = np.mgrid[0:48, 0:64]
     img = np.clip(xx * 3 + yy * 2, 0, 255).astype(np.uint8)

@@ -57,16 +57,6 @@ def test_odd_dims_and_errors():
         jpeg.decode(jpeg.encode(odd, 90)[:40])  # truncated before scan
 
 
-def test_distributed_decode_real_jpeg(spark):
-    from extractors_geo_spark.operators import multimodal as M
-
-    g = _smooth(18, 26)
-    df = spark.createDataFrame(
-        [("j1", bytearray(jpeg.encode(g, quality=92)))], "image_id string, bytes binary")
-    r = M.decode_image_meta(df).collect()[0]
-    assert r["ok"] and (r["w"], r["h"]) == (26, 18) and r["fmt_sniffed"] == "jpeg"
-
-
 # ------------------------------------------------------- progressive (SOF2)
 
 
@@ -114,14 +104,3 @@ def test_progressive_odd_dims_all_subsamplings():
         got = jpeg.decode(jpeg.encode_progressive(img, quality=85, subsampling=sub))
         want = jpeg.decode(jpeg.encode(img, quality=85, subsampling=sub))
         assert np.array_equal(got, want), (shape, sub)
-
-
-def test_multimodal_decodes_progressive_jpeg_for_real():
-    """VERDICT r02 #4 'done': progressive inputs decode for real in
-    multimodal._decode."""
-    from extractors_geo_spark.operators.multimodal import _decode
-
-    g = _smooth(24, 32)
-    arr, err = _decode(jpeg.encode_progressive(g, quality=90), "jpeg")
-    assert err is None
-    assert psnr(g, arr) > 40

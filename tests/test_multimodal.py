@@ -1,111 +1,12 @@
 """Multimodal operators over real bytes from the in-repo encoders
-(TIFF via datagen, png.encode, jpeg.encode, mp4/avi writers): schema,
-shape, explode fan-out, determinism, and how undecodable bytes are
-reported."""
+(png.encode, jpeg.encode, mp4/avi writers): schema, explode fan-out,
+determinism, and how undecodable bytes are reported."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from extractors_geo_spark.operators import multimodal as M
-
-
-@pytest.fixture(scope="module")
-def mixed(spark, images_small):
-    return images_small.cache()
-
-
-@pytest.fixture(scope="module")
-def real_images(spark, mixed):
-    """Decodable images in all three formats: datagen's TIFFs plus
-    PNG and JPEG bytes from the in-repo encoders (id, w, h known)."""
-    from extractors_geo_spark import jpeg as _jpeg
-    from extractors_geo_spark import png as _png
-
-    rng = np.random.default_rng(7)
-    rows = [(r["image_id"], bytearray(r["bytes"]))
-            for r in mixed.filter(F.col("fmt") == "tiff").limit(3).collect()]
-    for i in range(3):
-        h, w = 10 + 2 * i, 20 - 2 * i
-        g = (rng.random((h, w)) * 255).astype(np.uint8)
-        rows.append((f"png{i}", bytearray(_png.encode(g))))
-        rows.append((f"jpg{i}", bytearray(_jpeg.encode(g, quality=90))))
-    return spark.createDataFrame(rows, "image_id string, bytes binary").cache()
-
-
-def test_sniff_format_expr(spark, mixed):
-    out = mixed.select("fmt", M.sniff_format(F.col("bytes")).alias("sniffed"))
-    rows = out.collect()
-    for r in rows:
-        if r["fmt"] == "tiff":
-            assert r["sniffed"] == "tiff"
-        else:  # datagen png/jpeg rows carry a PNG magic prefix
-            assert r["sniffed"] == "png"
-
-
-def test_decode_image_meta(spark, real_images):
-    out = M.decode_image_meta(real_images).cache()
-    assert out.count() == real_images.count()
-    assert "bytes" not in out.columns
-    assert out.filter(~F.col("ok")).count() == 0
-    rows = {r["image_id"]: r for r in out.collect()}
-    assert {r["fmt_sniffed"] for r in rows.values()} == {"tiff", "png", "jpeg"}
-    for iid, r in rows.items():
-        if r["fmt_sniffed"] == "tiff":
-            assert (r["w"], r["h"]) == (16, 16)
-        else:
-            i = int(iid[-1])
-            assert (r["w"], r["h"]) == (20 - 2 * i, 10 + 2 * i), iid
-
-
-def test_decode_garbage_png_errors(spark, mixed):
-    # datagen's pseudo-pngs are PNG magic + noise: the REAL png decoder
-    # rejects them explicitly
-    pngs = mixed.filter(F.col("fmt") != "tiff").limit(2)
-    out = M.decode_image_meta(pngs)
-    rows = out.collect()
-    assert rows and all(r["error"] == "bad png" for r in rows)
-    assert all(not r["ok"] for r in rows)
-
-
-def test_decode_real_png_end_to_end(spark):
-    """A real PNG (engine's own zlib codec) decodes through the
-    distributed operator with true dimensions — one non-TIFF format is
-    real end-to-end (VERDICT r01 missing #5)."""
-    import numpy as np
-    from extractors_geo_spark import png as _png
-
-    rng = np.random.default_rng(5)
-    imgs = [(f"p{i}", bytearray(_png.encode((rng.random((12, 20)) * 255).astype(np.uint8))))
-            for i in range(4)]
-    df = spark.createDataFrame(imgs, "image_id string, bytes binary")
-    out = M.decode_image_meta(df).collect()
-    assert all(r["ok"] and r["w"] == 20 and r["h"] == 12 and r["fmt_sniffed"] == "png"
-               for r in out)
-
-
-def test_image_features_histogram(spark, real_images, mixed):
-    rows = M.image_features(real_images).collect()
-    assert len(rows) == real_images.count()
-    for r in rows:
-        feat = np.array(r["features"])
-        assert feat.shape == (M.FEAT_DIM,)
-        assert abs(feat.sum() - 1.0) < 1e-5  # normalized histogram
-        assert (feat >= 0).all()
-    # deterministic: the same bytes give the same vector
-    again = {r["image_id"]: r["features"] for r in M.image_features(real_images).collect()}
-    assert all(again[r["image_id"]] == r["features"] for r in rows)
-    # undecodable bytes (datagen's pseudo-pngs) get no feature row
-    pngs = mixed.filter(F.col("fmt") != "tiff").limit(3)
-    assert M.image_features(pngs).count() == 0
-
-
-def test_resize_shapes(spark, real_images):
-    rows = M.resize_image(real_images, tw=4, th=6).collect()
-    assert len(rows) == real_images.count()
-    for r in rows:
-        arr = np.frombuffer(r["thumb"], dtype="<f8")
-        assert arr.size == 4 * 6 and r["tw"] == 4 and r["th"] == 6
 
 
 def test_sample_frames_explode(spark):
@@ -180,22 +81,6 @@ def test_sample_frames_wellformed_unsupported_codec_raises(spark):
     df = spark.createDataFrame([("v1", bytearray(mp4))], "video_id string, bytes binary")
     with _pt.raises(Exception, match="NotImplementedError|codec"):
         M.sample_frames(df, every_ms=500).collect()
-
-
-def test_gray_alpha_png_luminance_ignores_alpha():
-    """ADVICE r02: for a 2-channel (gray+alpha) PNG the pixel value is
-    channel 0 alone; averaging alpha in corrupts stats/features."""
-    import numpy as np
-
-    from extractors_geo_spark import png as _png
-    from extractors_geo_spark.operators.multimodal import _decode
-
-    gray = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    alpha = np.full((8, 8), 255, dtype=np.uint8)
-    data = _png.encode(np.dstack([gray, alpha]))
-    arr, err = _decode(bytes(data), "png")
-    assert err is None
-    np.testing.assert_array_equal(arr, gray.astype(np.float64))
 
 
 def test_sample_frames_mjpeg_avi_real_pixels(spark):

@@ -224,20 +224,14 @@ def test_bigtiff_roundtrip_all_layouts():
 
 def test_bigtiff_through_extract_meta(spark):
     """BigTIFF rows flow through the distributed decode path like classic
-    TIFFs (sniffed as 'tiff', meta extracted)."""
-    from pyspark.sql import functions as F
-
+    TIFFs (meta extracted)."""
     from extractors_geo_spark.operators import extract_meta as EM
-    from extractors_geo_spark.operators import multimodal as M
 
     arr = np.arange(1200, dtype=np.float64).reshape(30, 40)
     data = tiff.write_geotiff(arr, origin=(-100.0, 45.0), pixel_size=(0.01, 0.01),
                               epsg=4326, big=True)
     df = spark.createDataFrame([("b0", bytearray(data), 40, 30, "tiff", "cap", 1)],
                                "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long")
-    assert M.sniff_format(F.col("bytes")) is not None
-    sniffed = df.select(M.sniff_format(F.col("bytes")).alias("s")).collect()[0]["s"]
-    assert sniffed == "tiff"
     meta = EM.extract_meta(df, with_stats=True).collect()[0]
     assert meta["error"] is None
     assert meta["meta"]["epsg"] == 4326

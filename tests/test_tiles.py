@@ -91,21 +91,6 @@ def test_render_known_gradient():
     assert img[1, 5] == 0
 
 
-def test_write_tiles_partitioned(spark, images_small, tmp_path):
-    meta = extract_meta.valid_meta(extract_meta.extract_meta(images_small, with_stats=False))
-    flat = meta.select("image_id",
-                       F.col("meta.minx").alias("minx"), F.col("meta.miny").alias("miny"),
-                       F.col("meta.maxx").alias("maxx"), F.col("meta.maxy").alias("maxy"))
-    out = tiles.xyz_tiles(flat, zooms=(6,))
-    path = str(tmp_path / "tiles")
-    tiles.write_tiles(out, path)
-    back = spark.read.parquet(path)
-    assert back.count() == out.count()
-    # partition pruning: a z/x filter reads only matching directories
-    one = back.filter((F.col("z") == 6)).limit(1).collect()
-    assert one
-
-
 def test_slice_xyz_tiles_pixels(spark):
     """slice_xyz_tiles: tile pixels equal an independent nearest-neighbor
     computation; tiles reassemble the footprint; nodata outside."""
